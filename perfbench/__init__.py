@@ -1,0 +1,3 @@
+"""Benchmark harness for hive_dwrf_spark: three workloads, end-to-end and
+per-layer metrics. Run ``python3 perfbench/run.py --help``; see
+``perfbench/README.md``."""
