@@ -117,7 +117,8 @@ def _cmd_lookup(args: list[str]) -> int:
     print(
         f"# {table.num_rows} rows; files {trace['files_pruned']}/"
         f"{trace['files_total']} pruned, strides "
-        f"{trace['strides_scanned']}/{trace['strides_total']} scanned",
+        f"{trace['strides_scanned']}/{trace['strides_total']} scanned, "
+        f"{trace['files_opened']} files opened",
         file=sys.stderr,
     )
     return 0

@@ -1006,9 +1006,10 @@ def _compress_pool():
         import os
         from concurrent.futures import ThreadPoolExecutor
 
-        env = os.environ.get("SPARK_GRAFT_COMPRESS_THREADS")
-        workers = (
-            max(1, int(env)) if env else min(4, os.cpu_count() or 2)
+        from .env import env_int
+
+        workers = max(
+            1, env_int("SPARK_GRAFT_COMPRESS_THREADS", min(4, os.cpu_count() or 2))
         )
         _COMPRESS_POOL = ThreadPoolExecutor(
             max_workers=workers,

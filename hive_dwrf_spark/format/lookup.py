@@ -2,23 +2,42 @@
 directory of DWRF files.
 
 Reference parity (SURVEY §2 A5): the reference exposes seekToRow on one
-open reader (RecordReaderImpl.java:494-543) and leaves file routing to
-the host engine, which prunes files/stripes with the footer statistics
-(ReaderImpl.java:204-260). At serving scale the table is thousands of
-range-sorted files and callers look up key BATCHES, so this module does
-both halves in one pass:
+long-lived reader (RecordReaderImpl.java:494-543), which parses the footer
+once (ReaderImpl.java:204-260), and leaves file routing to the host
+engine, which prunes files/stripes with the footer statistics. At serving
+scale the table is thousands of range-sorted files and callers look up
+key BATCHES, so this module does both halves in one pass:
 
   file level   : each file's footer column statistics (min/max of the
                  key column — zero data bytes read) prune files that
                  cannot contain any requested key;
   stride level : within a surviving file, the key column's ROW_INDEX
                  per-stride statistics prune strides the same way;
-  decode level : each candidate stride of the key column is decoded
-                 ONCE, matched vectorized (arrow is_in), and only the
-                 matching rows' projected columns are gathered — via the
-                 same LRU point-decoder cache DwrfFile.read_row uses, so
-                 footer / stripe-footer / index parses amortize across
-                 the whole batch.
+  decode level : each candidate stride of the key column is decoded,
+                 matched vectorized (arrow is_in), and only the matching
+                 rows' projected columns are gathered.
+
+Parses and decodes amortize across CALLS, not only within one batch:
+every file is served from a process-wide open DwrfFile handle, so its
+footer, stripe footers and ROW_INDEX are parsed once, and stride decodes
+go through the handle's decoded-stride LRU (the one DwrfFile.read_row
+uses) — a hot stride is decoded once for all calls and threads.
+
+  identity : a handle is reused while (path, get_fs(path).stat_key(path))
+             — size and mtime — is unchanged, the identity of the
+             DataSource's footer plan cache (_PLAN_CACHE). Like that cache
+             it assumes files are written once: a replacement or rewrite
+             changes size or mtime and is reopened, but an in-place
+             rewrite keeping both would be served from the stale handle.
+  bounds   : at most _HANDLES_MAX handles stay open (least recently used
+             dropped first), and the decoded strides held by all of them
+             stay within one SPARK_GRAFT_STRIDE_CACHE_MB budget — after
+             each file a call decodes from, the least recently used
+             handles' strides are evicted first.
+  lifetime : the cache owns its handles; callers never close them. An
+             evicted handle is dropped, not closed, because another
+             thread may be mid-read; its file closes with the last
+             reference.
 
 On a range-sorted 100 TB table a k-key batch therefore touches
 O(files-holding-keys) footers + O(strides-holding-keys) stride decodes,
@@ -28,19 +47,65 @@ independent of table width and row count.
 from __future__ import annotations
 
 import bisect
+import threading
+from collections import OrderedDict
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .reader import DwrfFile, NoStridePositions, _corrupt_guard
+from .fs import get_fs
+from .reader import DwrfFile, NoStridePositions, _corrupt_guard, stride_cache_budget
 from .stats import stats_from_proto
 from .types import TypeKind
 
+#: open handles kept across calls, one per file
+_HANDLES_MAX = 128
+# path -> (stat identity, handle), least recently used first. OrderedDict
+# mutation is not thread-safe, so every touch holds the lock; opens and
+# reads stay outside it.
+_HANDLES: "OrderedDict[str, tuple[tuple, DwrfFile]]" = OrderedDict()
+_HANDLES_LOCK = threading.Lock()
+
+
+def shared_handle(path: str) -> tuple[DwrfFile, bool]:
+    """The process-wide open handle of the DWRF file `path`, and whether
+    this call had to open it. The cache owns the handle: never close it."""
+    ident = get_fs(path).stat_key(path)
+    with _HANDLES_LOCK:
+        hit = _HANDLES.get(path)
+        if hit is not None and hit[0] == ident:
+            _HANDLES.move_to_end(path)
+            return hit[1], False
+    f = DwrfFile(path)  # a failed open raises here and caches nothing
+    with _HANDLES_LOCK:
+        hit = _HANDLES.get(path)
+        if hit is not None and hit[0] == ident:  # a concurrent open won
+            winner = hit[1]
+        else:
+            winner = f
+            _HANDLES[path] = (ident, f)
+            _HANDLES.move_to_end(path)
+            while len(_HANDLES) > _HANDLES_MAX:
+                _HANDLES.popitem(last=False)  # dropped, not closed
+    if winner is not f:
+        f.close()  # never shared: no other thread can hold it
+    return winner, True
+
+
+def _trim_decoded() -> None:
+    """Hold the decoded strides of all cached handles within one stride
+    cache budget, evicting from the least recently used handles first."""
+    with _HANDLES_LOCK:
+        handles = [f for _, f in _HANDLES.values()]
+    excess = sum(f._stride_bytes for f in handles) - stride_cache_budget()
+    for f in handles:
+        if excess <= 0:
+            break
+        excess -= f._stride_cache_trim(excess)
+
 
 def _list_files(path: str) -> list[str]:
-    from .fs import get_fs
-
     out = get_fs(path).list_files(path, (".dwrf", ".orc"))
     if not out:
         raise FileNotFoundError(f"no .dwrf files under {path}")
@@ -76,7 +141,9 @@ def lookup_keys(
     returns none). `columns` projects the output (the key column is
     decoded for matching regardless and appears in the output only if
     projected). Pass a dict as `trace` to observe the pruning decisions
-    ({files_total, files_pruned, strides_total, strides_scanned}).
+    ({files_total, files_pruned, strides_total, strides_scanned}) and
+    the handles this call had to open ({files_opened}, 0 when every file's
+    handle was reused).
     """
     # NULL keys match no row (SQL equality semantics) — drop them before
     # sorting, where None is unorderable; mixed int/string keys likewise
@@ -97,150 +164,136 @@ def lookup_keys(
         trace.update(
             files_total=len(files),
             files_pruned=0,
+            files_opened=0,
             strides_total=0,
             strides_scanned=0,
         )
     out_chunks: dict[str, list[pa.Array]] = {}
     schema: pa.Schema | None = None
     for fp in files:
-        with DwrfFile(fp) as f:
-            key_tid = f._top_level_id(key_column)
-            if key_tid is None:
-                raise KeyError(f"{key_column!r} not in {fp}")
-            if columns is not None:
-                tops, include_ids = f._parse_projection(columns)
-                if schema is None:
-                    schema = f.projected_schema(columns)
-                # the key column must reach the decoder even when the
-                # projection drops it from the output
-                if include_ids is not None and key_tid not in include_ids:
-                    from .types import subtree_ids
+        f, opened = shared_handle(fp)
+        if opened and trace is not None:
+            trace["files_opened"] += 1
+        key_tid = f._top_level_id(key_column)
+        if key_tid is None:
+            raise KeyError(f"{key_column!r} not in {fp}")
+        if columns is not None:
+            tops, include_ids = f._parse_projection(columns)
+            if schema is None:
+                schema = f.projected_schema(columns)
+            # the key column must reach the decoder even when the
+            # projection drops it from the output
+            if include_ids is not None and key_tid not in include_ids:
+                from .types import subtree_ids
 
-                    include_ids = include_ids | set(
-                        subtree_ids(f.types, key_tid)
-                    )
-            else:
-                root = f.types[0]
-                tops = list(zip(root.fieldNames, root.subtypes))
-                include_ids = None
-                if schema is None:
-                    schema = f.schema
-            if f.num_rows == 0:
-                continue
-            # --- file-level pruning: footer stats only, no data bytes ---
-            st = f.file_stats(key_tid)
-            if not _any_key_in_range(key_list, st.minimum, st.maximum):
+                include_ids = include_ids | set(subtree_ids(f.types, key_tid))
+        else:
+            root = f.types[0]
+            tops = list(zip(root.fieldNames, root.subtypes))
+            include_ids = None
+            if schema is None:
+                schema = f.schema
+        if f.num_rows == 0:
+            continue
+        # --- file-level pruning: footer stats only, no data bytes ---
+        st = f.file_stats(key_tid)
+        if not _any_key_in_range(key_list, st.minimum, st.maximum):
+            if trace is not None:
+                trace["files_pruned"] += 1
+            continue
+        kind = TypeKind(f.types[key_tid].kind)
+        stride = f.footer.rowIndexStride
+        index_ids = {tid for _, tid in tops} | {key_tid}
+        with _corrupt_guard(fp):
+            for i, stripe in enumerate(f.footer.stripes):
+                n_rows = stripe.numberOfRows
+                if n_rows == 0:
+                    continue
+                dec = f._point_decoder(i, include_ids, index_ids)
+                n_strides = (n_rows + stride - 1) // stride if stride else 1
                 if trace is not None:
-                    trace["files_pruned"] += 1
-                continue
-            kind = TypeKind(f.types[key_tid].kind)
-            stride = f.footer.rowIndexStride
-            index_ids = {tid for _, tid in tops} | {key_tid}
-            with _corrupt_guard(fp):
-                for i, stripe in enumerate(f.footer.stripes):
-                    n_rows = stripe.numberOfRows
-                    if n_rows == 0:
-                        continue
-                    dec = f._point_decoder(i, include_ids, index_ids)
-                    n_strides = (n_rows + stride - 1) // stride if stride else 1
+                    trace["strides_total"] += n_strides
+
+                def emit(offs_global: np.ndarray, karr, k_base: int, in_stride: bool):
+                    """Gather every projected column at stripe-global row
+                    offsets `offs_global`; `karr` (the decoded key window
+                    starting at `k_base`) is reused when projected.
+                    `in_stride`: offsets all fall in the single stride the
+                    key was decoded from, so other columns may seek to it;
+                    False means a whole-stripe pass (offsets may span
+                    strides), so other columns decode whole-stripe too."""
+                    for name, tid in tops:
+                        if tid == key_tid:
+                            piece = karr.take(
+                                pa.array(offs_global - k_base, type=pa.int64())
+                            )
+                        else:
+                            piece = None
+                            if in_stride:
+                                s_idx0 = int(offs_global[0]) // stride
+                                try:
+                                    arr = f._cached_stride_column(
+                                        dec, i, tid, s_idx0, stride, n_rows
+                                    )
+                                    piece = arr.take(
+                                        pa.array(
+                                            offs_global - s_idx0 * stride,
+                                            type=pa.int64(),
+                                        )
+                                    )
+                                except NoStridePositions:
+                                    piece = None
+                            if piece is None:
+                                piece = f._cached_whole_column(
+                                    dec, i, tid, n_rows
+                                ).take(pa.array(offs_global, type=pa.int64()))
+                        out_chunks.setdefault(name, []).append(piece)
+
+                # --- stride-level pruning via the key's ROW_INDEX stats ---
+                alive = list(range(n_strides))
+                ri = dec.row_index(key_tid) if stride else None
+                if ri is not None and len(ri.entry) >= n_strides:
+                    kept = []
+                    for s in alive:
+                        e = ri.entry[s].statistics
+                        if e is None:
+                            kept.append(s)
+                            continue
+                        cs = stats_from_proto(kind, e)
+                        if _any_key_in_range(key_list, cs.minimum, cs.maximum):
+                            kept.append(s)
+                    alive = kept
+                if not alive:
+                    continue
+                if not stride:
+                    # legacy file without a row index: one whole-stripe pass
                     if trace is not None:
-                        trace["strides_total"] += n_strides
-
-                    stripe_cols: dict[int, pa.Array] = {}
-
-                    def whole(tid):
-                        col = stripe_cols.get(tid)
-                        if col is None:
-                            col = dec.decode_column(tid, n_rows)
-                            stripe_cols[tid] = col
-                        return col
-
-                    def emit(offs_global: np.ndarray, karr, k_base: int, in_stride: bool):
-                        """Gather every projected column at stripe-global row
-                        offsets `offs_global`; `karr` (the decoded key window
-                        starting at `k_base`) is reused when projected.
-                        `in_stride`: offsets all fall in the single stride the
-                        key was decoded from, so other columns may seek to it;
-                        False means a whole-stripe pass (offsets may span
-                        strides), so other columns decode whole-stripe too."""
-                        for name, tid in tops:
-                            if tid == key_tid:
-                                piece = karr.take(
-                                    pa.array(
-                                        offs_global - k_base, type=pa.int64()
-                                    )
-                                )
-                            else:
-                                piece = None
-                                if in_stride:
-                                    s_idx0 = int(offs_global[0]) // stride
-                                    try:
-                                        arr = dec.decode_stride_column(
-                                            tid, s_idx0, stride, n_rows
-                                        )
-                                        piece = arr.take(
-                                            pa.array(
-                                                offs_global - s_idx0 * stride,
-                                                type=pa.int64(),
-                                            )
-                                        )
-                                    except NoStridePositions:
-                                        piece = None
-                                if piece is None:
-                                    piece = whole(tid).take(
-                                        pa.array(offs_global, type=pa.int64())
-                                    )
-                            out_chunks.setdefault(name, []).append(piece)
-
-                    # --- stride-level pruning via the key's ROW_INDEX stats ---
-                    alive = list(range(n_strides))
-                    ri = dec.row_index(key_tid) if stride else None
-                    if ri is not None and len(ri.entry) >= n_strides:
-                        kept = []
-                        for s in alive:
-                            e = ri.entry[s].statistics
-                            if e is None:
-                                kept.append(s)
-                                continue
-                            cs = stats_from_proto(kind, e)
-                            if _any_key_in_range(key_list, cs.minimum, cs.maximum):
-                                kept.append(s)
-                        alive = kept
-                    if not alive:
-                        continue
-                    if not stride:
-                        # legacy file without a row index: one whole-stripe pass
-                        if trace is not None:
-                            trace["strides_scanned"] += 1
-                        karr = whole(key_tid)
+                        trace["strides_scanned"] += 1
+                    karr = f._cached_whole_column(dec, i, key_tid, n_rows)
+                    hits = _match_offsets(karr, key_set)
+                    if len(hits):
+                        emit(hits, karr, 0, in_stride=False)
+                    continue
+                for s_idx in alive:
+                    if trace is not None:
+                        trace["strides_scanned"] += 1
+                    base = s_idx * stride
+                    try:
+                        karr = f._cached_stride_column(
+                            dec, i, key_tid, s_idx, stride, n_rows
+                        )
+                    except NoStridePositions:
+                        karr = f._cached_whole_column(dec, i, key_tid, n_rows)
+                        # stats pruning already ran; scanning the whole
+                        # stripe once covers every remaining stride
                         hits = _match_offsets(karr, key_set)
                         if len(hits):
                             emit(hits, karr, 0, in_stride=False)
-                        continue
-                    for s_idx in alive:
-                        if trace is not None:
-                            trace["strides_scanned"] += 1
-                        base = s_idx * stride
-                        try:
-                            karr = dec.decode_stride_column(
-                                key_tid, s_idx, stride, n_rows
-                            )
-                        except NoStridePositions:
-                            karr, base = whole(key_tid), 0
-                            # stats pruning already ran; scanning the whole
-                            # stripe once covers every remaining stride
-                            hits = _match_offsets(karr, key_set)
-                            if len(hits):
-                                emit(hits, karr, 0, in_stride=False)
-                            break
-                        hits = _match_offsets(karr, key_set)
-                        if len(hits):
-                            emit(hits + base, karr, base, in_stride=True)
-    if schema is None:  # no files had rows and none set a schema
-        with DwrfFile(files[0]) as f:
-            schema = (
-                f.projected_schema(columns) if columns is not None else f.schema
-            )
+                        break
+                    hits = _match_offsets(karr, key_set)
+                    if len(hits):
+                        emit(hits + base, karr, base, in_stride=True)
+        _trim_decoded()
     cols = []
     for field in schema:
         parts = out_chunks.get(field.name, [])

@@ -28,6 +28,7 @@ from .constants import (
     StreamKind,
     TypeKind,
 )
+from .env import env_int
 from .stats import ColumnStats, stats_from_proto
 from .types import arrow_type_of as _arrow_type_of
 from .types import type_tree_to_schema
@@ -970,6 +971,12 @@ def _resolve_field(name: str, names: list[str]) -> str | None:
     return None
 
 
+def stride_cache_budget() -> int:
+    """Byte budget of a handle's decoded-stride LRU
+    (SPARK_GRAFT_STRIDE_CACHE_MB, default 64)."""
+    return env_int("SPARK_GRAFT_STRIDE_CACHE_MB", 64) << 20
+
+
 class DwrfFile:
     """Random-access DWRF file reader."""
 
@@ -1004,9 +1011,7 @@ class DwrfFile:
 
         self._stride_arrays: dict = {}
         self._stride_bytes = 0
-        self._stride_budget = (
-            int(os.environ.get("SPARK_GRAFT_STRIDE_CACHE_MB", 64)) << 20
-        )
+        self._stride_budget = stride_cache_budget()
         self._stride_lock = _threading.Lock()
         try:
             # local files: positional os.pread, safe under the stripe pool
@@ -1718,11 +1723,23 @@ class DwrfFile:
                 return
             self._stride_arrays[key] = arr
             self._stride_bytes += nbytes
-            # evict from the FRONT (dict preserves insertion order; a hit
-            # reinserts at the back, so the front is least-recent)
-            while self._stride_bytes > self._stride_budget and self._stride_arrays:
-                old = self._stride_arrays.pop(next(iter(self._stride_arrays)))
-                self._stride_bytes -= old.nbytes
+            self._stride_evict_to(self._stride_budget)
+
+    def _stride_evict_to(self, target: int) -> None:
+        """Evict from the FRONT until at most `target` bytes stay (dict
+        preserves insertion order; a hit reinserts at the back, so the
+        front is least-recent). Caller holds _stride_lock."""
+        while self._stride_bytes > target and self._stride_arrays:
+            old = self._stride_arrays.pop(next(iter(self._stride_arrays)))
+            self._stride_bytes -= old.nbytes
+
+    def _stride_cache_trim(self, nbytes: int) -> int:
+        """Evict least-recent arrays until `nbytes` are freed or the cache
+        is empty; returns the bytes freed."""
+        with self._stride_lock:
+            before = self._stride_bytes
+            self._stride_evict_to(before - nbytes)
+            return before - self._stride_bytes
 
     def _cached_stride_column(
         self, dec, stripe_index: int, tid: int, s_idx: int, stride: int,

@@ -59,6 +59,7 @@ from .constants import (
     StreamKind,
     TypeKind,
 )
+from .env import env_int
 from .stats import ColumnStats
 from .types import collect_arrow_types, schema_to_type_tree
 from pyarrow import types as patypes
@@ -127,9 +128,8 @@ def _encode_pool():
     if _ENCODE_POOL is None:
         from concurrent.futures import ThreadPoolExecutor
 
-        env = os.environ.get("SPARK_GRAFT_ENCODE_THREADS")
-        workers = (
-            max(1, int(env)) if env else min(8, os.cpu_count() or 4)
+        workers = max(
+            1, env_int("SPARK_GRAFT_ENCODE_THREADS", min(8, os.cpu_count() or 4))
         )
         _ENCODE_POOL = ThreadPoolExecutor(
             max_workers=workers,

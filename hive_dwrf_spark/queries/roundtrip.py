@@ -10,6 +10,7 @@ import os
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..format.env import env_int
 from ..tables import load
 from . import ORACLE, query
 
@@ -564,10 +565,8 @@ def _write_range_sorted(spark, df, path, key, n_files, presorted=False):
     # (env override) with a local-sane default; production justification
     # in OPTIMIZATION_r13.md.
     total_bytes = sum(os.path.getsize(fp) for fp in parts)
-    min_distribute = int(
-        os.environ.get(
-            "SPARK_GRAFT_MERGE_DISTRIBUTE_MIN_BYTES", str(256 * 1024 * 1024)
-        )
+    min_distribute = env_int(
+        "SPARK_GRAFT_MERGE_DISTRIBUTE_MIN_BYTES", 256 * 1024 * 1024
     )
     if total_bytes >= min_distribute:
         from ..format.fs import fs_env_overlay

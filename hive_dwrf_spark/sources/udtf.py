@@ -53,8 +53,7 @@ class DwrfLookupUDTF:
         from pyspark.sql.types import StructField, StructType
 
         from ..format.fs import strip_file_uri
-        from ..format.lookup import _list_files
-        from ..format.reader import DwrfFile
+        from ..format.lookup import _list_files, shared_handle
         from .dwrf_datasource import _arrow_to_spark_type
 
         if not (path.isConstantExpression and isinstance(path.value, str)):
@@ -67,20 +66,19 @@ class DwrfLookupUDTF:
         ):
             raise ValueError("dwrf_lookup: key_col must be a constant string")
         first = _list_files(strip_file_uri(path.value))[0]
-        with DwrfFile(first) as f:
-            if f._top_level_id(key_col.value) is None:
-                raise ValueError(
-                    f"dwrf_lookup: no column {key_col.value!r} in {first}"
-                )
-            fields = [
-                StructField(fl.name, _arrow_to_spark_type(fl.type))
-                for fl in f.schema
-            ]
+        f, _ = shared_handle(first)
+        if f._top_level_id(key_col.value) is None:
+            raise ValueError(
+                f"dwrf_lookup: no column {key_col.value!r} in {first}"
+            )
+        fields = [
+            StructField(fl.name, _arrow_to_spark_type(fl.type))
+            for fl in f.schema
+        ]
         return AnalyzeResult(schema=StructType(fields))
 
     def eval(self, path, key_col, keys):
-        import os
-
+        from ..format.env import env_int
         from ..format.fs import strip_file_uri
         from ..format.lookup import lookup_keys
 
@@ -89,9 +87,7 @@ class DwrfLookupUDTF:
         keys = [k for k in (keys or []) if k is not None]
         if not keys:
             return
-        max_keys = int(
-            os.environ.get("SPARK_GRAFT_LOOKUP_MAX_KEYS", self.MAX_KEYS)
-        )
+        max_keys = env_int("SPARK_GRAFT_LOOKUP_MAX_KEYS", self.MAX_KEYS)
         if len(keys) > max_keys:
             raise ValueError(
                 f"dwrf_lookup: {len(keys)} keys exceeds the serving-path "
@@ -109,9 +105,9 @@ def register_udtfs(spark) -> None:
     """Register the SQL TVFs (idempotent per session)."""
     if getattr(spark, "_dwrf_udtfs_registered", False):
         return
-    import os
-
     from pyspark.sql.functions import udtf
+
+    from ..format.env import env_int
 
     # snapshot the driver's key-batch ceiling into the shipped class —
     # see DwrfLookupUDTF.MAX_KEYS for why env alone can't cross into
@@ -120,8 +116,8 @@ def register_udtfs(spark) -> None:
         "DwrfLookupUDTF",
         (DwrfLookupUDTF,),
         {
-            "MAX_KEYS": int(
-                os.environ.get("SPARK_GRAFT_LOOKUP_MAX_KEYS", 1_000_000)
+            "MAX_KEYS": env_int(
+                "SPARK_GRAFT_LOOKUP_MAX_KEYS", DwrfLookupUDTF.MAX_KEYS
             )
         },
     )

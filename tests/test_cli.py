@@ -49,6 +49,9 @@ def test_lookup(table_dir, capsys):
     assert sorted(r["k"] for r in rows) == [5, 150]
     # keys span both files: neither may be pruned
     assert "files 0/2 pruned" in cap.err
+    # a repeat call in the same process reuses the open handles
+    assert main(["lookup", table_dir, "k", "5,150"]) == 0
+    assert "0 files opened" in capsys.readouterr().err
 
 
 def test_lookup_prunes_files(table_dir, capsys):

@@ -426,3 +426,27 @@ class TestWriteRangeSorted:
         assert got_e == got_d
         assert [r[0] for r in got_e] == sorted(r[0] for r in got_e)
         assert len(got_e) == 4000
+
+    def test_malformed_merge_threshold_uses_default(self, spark, tmp_path, monkeypatch):
+        """A malformed SPARK_GRAFT_MERGE_DISTRIBUTE_MIN_BYTES falls back to
+        the 256 MiB default: this small table merges on the driver, and
+        the executor path (which ships the package first) never runs."""
+        from hive_dwrf_spark import shipping
+        from hive_dwrf_spark.queries.roundtrip import _write_range_sorted
+        from hive_dwrf_spark.sources import register
+
+        register(spark)
+
+        def no_ship(_spark):
+            raise AssertionError("executor merge chosen below the default")
+
+        monkeypatch.setattr(shipping, "ensure_shipped", no_ship)
+        monkeypatch.setenv("SPARK_GRAFT_MERGE_DISTRIBUTE_MIN_BYTES", "256MB")
+        out = str(tmp_path / "bad_env")
+        with pytest.warns(RuntimeWarning, match="MERGE_DISTRIBUTE_MIN_BYTES"):
+            _write_range_sorted(spark, self._frame(spark, 2000), out, "rn", 1)
+        import glob
+
+        (fp,) = glob.glob(out + "/*.dwrf")
+        with DwrfFile(fp) as f:
+            assert f.read().column("rn").to_pylist() == list(range(2000))

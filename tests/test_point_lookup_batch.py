@@ -8,12 +8,15 @@ statistics, ReaderImpl.java:204-260)."""
 from __future__ import annotations
 
 import os
+import sys
+import threading
+from collections import Counter, OrderedDict
 
 import numpy as np
 import pyarrow as pa
 import pytest
 
-from hive_dwrf_spark.format import DwrfFile, write_arrow_table
+from hive_dwrf_spark.format import DwrfFile, lookup, write_arrow_table
 from hive_dwrf_spark.format.lookup import lookup_keys
 
 
@@ -340,3 +343,225 @@ class TestLookupKeys:
         # bare TypeError from sorted()
         with pytest.raises(ValueError, match="orderable type"):
             lookup_keys(serving_dir, "k", [1, "one"])
+
+
+def _write_part(path: str, base: int, n: int, prefix: str = "s", **options):
+    t = pa.table(
+        {
+            "k": pa.array(np.arange(base, base + n, dtype=np.int64)),
+            "v": pa.array([f"{prefix}{i:06d}" for i in range(base, base + n)]),
+        }
+    )
+    write_arrow_table(path, t, stripe_rows=4_000, row_index_stride=500, **options)
+
+
+def _reference(d: str, key_column: str, keys) -> pa.Table:
+    """Full reads of every file, filtered: the answer lookup_keys must
+    give, computed without the lookup path or its handle cache."""
+    tables = []
+    for fn in sorted(os.listdir(d)):
+        if fn.endswith(".dwrf"):
+            with DwrfFile(os.path.join(d, fn)) as f:
+                tables.append(f.read())
+    t = pa.concat_tables(tables)
+    return t.filter(pa.compute.is_in(t[key_column], value_set=pa.array(keys)))
+
+
+class TestLookupHandleCache:
+    """lookup_keys serves every file from a process-wide open handle keyed
+    by (path, stat identity): parses and stride decodes amortize across
+    calls, while changed, added and removed files are seen at once."""
+
+    @pytest.fixture(autouse=True)
+    def fresh_cache(self, monkeypatch):
+        monkeypatch.setattr(lookup, "_HANDLES", OrderedDict())
+
+    @pytest.fixture
+    def opens(self, monkeypatch):
+        """path -> number of DwrfFile.__init__ calls (failed ones too)."""
+        counts: Counter = Counter()
+        orig = DwrfFile.__init__
+
+        def counting(self, path, *a, **kw):
+            counts[path] += 1
+            orig(self, path, *a, **kw)
+
+        monkeypatch.setattr(DwrfFile, "__init__", counting)
+        return counts
+
+    @pytest.fixture
+    def four_parts(self, tmp_path):
+        d = str(tmp_path / "parts")
+        os.makedirs(d)
+        for i in range(4):
+            _write_part(os.path.join(d, f"part-{i}.dwrf"), i * 10_000, 10_000)
+        return d
+
+    def test_unchanged_directory_opens_each_file_once(self, four_parts, opens):
+        batches = [[5, 12_345, 39_999], [7, 8, 9], [20_000, 25_000, 31_001]]
+        for n in range(6):
+            keys = batches[n % len(batches)]
+            trace = {}
+            got = lookup_keys(four_parts, "k", keys, trace=trace)
+            assert got.equals(_reference(four_parts, "k", keys))
+            assert trace["files_opened"] == (4 if n == 0 else 0), trace
+        lookup_opens = {p: c for p, c in opens.items() if "part-" in p}
+        # _reference's own opens are one per file per call; the lookup
+        # path adds exactly one per file over all six calls
+        assert set(lookup_opens.values()) == {6 + 1}, lookup_opens
+        # cached handles answer like fresh ones
+        cached = lookup_keys(four_parts, "k", batches[0], columns=["v"])
+        lookup._HANDLES = OrderedDict()
+        assert cached.equals(lookup_keys(four_parts, "k", batches[0], columns=["v"]))
+
+    def test_replaced_member_is_reread(self, four_parts):
+        from hive_dwrf_spark.format.fs import get_fs
+
+        target = os.path.join(four_parts, "part-1.dwrf")
+        keys = [10_001, 19_999]
+        # uncompressed, so a same-length prefix gives a same-size file
+        _write_part(target, 10_000, 10_000, prefix="s", compression="none")
+        assert lookup_keys(four_parts, "k", keys).column("v").to_pylist() == [
+            "s010001", "s019999",
+        ]
+        before = get_fs(target).stat_key(target)
+        incoming = os.path.join(four_parts, "_incoming")
+        _write_part(incoming, 10_000, 10_000, prefix="t", compression="none")
+        os.replace(incoming, target)
+        after = get_fs(target).stat_key(target)
+        assert after[0] == before[0] and after != before
+        assert lookup_keys(four_parts, "k", keys).column("v").to_pylist() == [
+            "t010001", "t019999",
+        ]
+        # rewritten in place at a different size
+        _write_part(target, 10_000, 5_000, prefix="u")
+        assert lookup_keys(four_parts, "k", keys).column("v").to_pylist() == [
+            "u010001",
+        ]
+
+    def test_added_and_removed_files_are_seen(self, four_parts):
+        keys = [3, 45_000]
+        assert lookup_keys(four_parts, "k", keys).column("k").to_pylist() == [3]
+        _write_part(os.path.join(four_parts, "part-4.dwrf"), 40_000, 10_000)
+        assert lookup_keys(four_parts, "k", keys).column("k").to_pylist() == [
+            3, 45_000,
+        ]
+        os.remove(os.path.join(four_parts, "part-0.dwrf"))
+        assert lookup_keys(four_parts, "k", keys).column("k").to_pylist() == [
+            45_000,
+        ]
+
+    def test_concurrent_calls_match_serial(self, four_parts, monkeypatch):
+        """4 threads x 20 calls on shared handles, under a 1 MB budget so
+        evictions race with reads, give the serial answers."""
+        monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
+        rng = np.random.default_rng(7)
+        batches = [
+            sorted(int(k) for k in rng.integers(0, 40_000, 24)) for _ in range(80)
+        ]
+        serial = [lookup_keys(four_parts, "k", b) for b in batches]
+
+        monkeypatch.setattr(lookup, "_HANDLES", OrderedDict())
+        results: dict[int, pa.Table] = {}
+        errors: list[BaseException] = []
+
+        def client(c: int) -> None:
+            try:
+                for j in range(c, len(batches), 4):
+                    results[j] = lookup_keys(four_parts, "k", batches[j])
+            except BaseException as e:  # reported below
+                errors.append(e)
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            threads = [threading.Thread(target=client, args=(c,)) for c in range(4)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert len(results) == len(batches)
+        for j, want in enumerate(serial):
+            assert results[j].equals(want), j
+        assert len(lookup._HANDLES) == 4
+
+    def test_decoded_bytes_bounded_across_handles(self, tmp_path, monkeypatch):
+        """Each handle alone fills its own budget, so only the shared bound
+        keeps the sum over all cached handles under one budget."""
+        d = str(tmp_path / "wide")
+        os.makedirs(d)
+        for i in range(4):  # ~100 KB of decoded strings per stride
+            _write_part(os.path.join(d, f"{i}.dwrf"), i * 10_000, 10_000, "x" * 200)
+        monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
+        keys = list(range(0, 40_000, 97))  # a key in every stride
+        want = _reference(d, "k", keys)
+        for _ in range(2):
+            assert lookup_keys(d, "k", keys).equals(want)
+            held = [f._stride_bytes for _, f in lookup._HANDLES.values()]
+            assert len(held) == 4 and sum(held) <= 1 << 20, held
+            assert max(held) > 0
+
+    def test_handle_count_bounded(self, four_parts, monkeypatch):
+        monkeypatch.setattr(lookup, "_HANDLES_MAX", 2)
+        keys = [1, 15_000, 25_000, 35_000]
+        for _ in range(2):
+            trace = {}
+            assert lookup_keys(four_parts, "k", keys, trace=trace).equals(
+                _reference(four_parts, "k", keys)
+            )
+            assert len(lookup._HANDLES) == 2
+            # an LRU of 2 over a 4-file scan reuses nothing
+            assert trace["files_opened"] == 4
+
+    def test_corrupt_member_raises_every_call(self, four_parts, opens):
+        from hive_dwrf_spark.format.reader import DwrfCorruptError
+
+        bad = os.path.join(four_parts, "part-2.dwrf")
+        with open(bad, "rb") as fh:
+            raw = fh.read()
+        with DwrfFile(bad) as f:
+            s = f.footer.stripes[0]
+            lo, hi = s.offset + s.indexLength, s.offset + s.indexLength + s.dataLength
+        # truncated: the open fails, so nothing is cached and every call
+        # opens (and fails) again
+        with open(bad, "wb") as fh:
+            fh.write(raw[: len(raw) // 2])
+        for n in range(3):
+            with pytest.raises(DwrfCorruptError):
+                lookup_keys(four_parts, "k", [25_000])
+            assert bad not in lookup._HANDLES
+            assert opens[bad] == 1 + n + 1
+        # damaged data bytes: the open succeeds and the handle is cached,
+        # but every decode through it still fails
+        damaged = raw[:lo] + bytes([0xAA]) * (hi - lo) + raw[hi:]
+        with open(bad, "wb") as fh:
+            fh.write(damaged)
+        for _ in range(3):
+            with pytest.raises(DwrfCorruptError):
+                lookup_keys(four_parts, "k", [20_001])
+            assert bad in lookup._HANDLES
+        # healthy members keep serving
+        assert lookup_keys(four_parts, "k", [5]).column("k").to_pylist() == [5]
+
+    def test_udtf_analyze_shares_the_handle(self, four_parts):
+        """The dwrf_lookup TVF reads its schema from the shared handle and
+        leaves it open for the lookups that follow."""
+        from types import SimpleNamespace
+
+        from hive_dwrf_spark.sources.udtf import DwrfLookupUDTF
+
+        def const(v):
+            return SimpleNamespace(isConstantExpression=True, value=v)
+
+        res = DwrfLookupUDTF.analyze(const(four_parts), const("k"), None)
+        assert res.schema.fieldNames() == ["k", "v"]
+        first = os.path.join(four_parts, "part-0.dwrf")
+        (_, f), = lookup._HANDLES.values()
+        assert f.path == first and not f._f.closed
+        trace = {}
+        lookup_keys(four_parts, "k", [1], trace=trace)
+        assert trace["files_opened"] == 3
