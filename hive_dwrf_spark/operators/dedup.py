@@ -20,6 +20,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from ..format.env import env_int
+from .util import local_frame
+
 # Fixed MinHash parameters: classic 31-bit minhash over the Mersenne prime
 # 2^31-1. Everything — shingle hash, permutations a*h+b — stays strictly
 # below 2^62, so numpy int64 arithmetic is EXACT (no wraparound) and the
@@ -135,11 +138,9 @@ def _resolve_bucket_cap(bucket_cap: int | None) -> int | None:
     """Resolve the per-bucket candidate cap: an explicit argument wins,
     else SPARK_GRAFT_LSH_BUCKET_CAP (0/unset = uncapped). Returns None
     for 'no cap'."""
-    import os
-
     if bucket_cap is not None:
         return bucket_cap if bucket_cap > 0 else None
-    env = int(os.environ.get("SPARK_GRAFT_LSH_BUCKET_CAP", 0))
+    env = env_int("SPARK_GRAFT_LSH_BUCKET_CAP", 0)
     return env if env > 0 else None
 
 
@@ -603,11 +604,12 @@ def _maybe_broadcast_ids(ids: DataFrame) -> DataFrame:
     corpus-touching join + aggregate, and counting the raw plan would
     re-execute all of it again inside the anti-join (the checkpoint
     itself is id-list-sized, never the corpus)."""
-    import os
-
-    limit = int(os.environ.get("SPARK_GRAFT_BROADCAST_IDS_MAX", 5_000_000))
+    limit = env_int("SPARK_GRAFT_BROADCAST_IDS_MAX", 5_000_000)
     if not limit:
-        return ids
+        # a driver-built id frame (connected_components' local path) is a
+        # LocalRelation of known size, which the planner would broadcast
+        # on its own; the merge hint keeps 0 meaning "never broadcast"
+        return ids.hint("merge")
     ids = ids.localCheckpoint(eager=True)
     if ids.count() <= limit:
         return F.broadcast(ids)
@@ -1125,14 +1127,10 @@ def connected_components(
     Nodes only appear if they occur in `pairs` — callers union in
     singletons if every document needs a label.
     """
-    import os
-
     from pyspark import StorageLevel
 
     if local_threshold is None:
-        local_threshold = int(
-            os.environ.get("SPARK_GRAFT_CC_LOCAL_THRESHOLD", 2_000_000)
-        )
+        local_threshold = env_int("SPARK_GRAFT_CC_LOCAL_THRESHOLD", 2_000_000)
     edges = (
         pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
         .union(pairs.select(F.col(id2).alias("a"), F.col(id1).alias("b")))
@@ -1166,8 +1164,7 @@ def connected_components(
                     F.col(id1).alias("node"), F.col(id1).alias("component")
                 ).schema
             )
-            data = [(n, find(n)) for n in parent]
-            return spark.createDataFrame(data, out_schema)
+            return local_frame(spark, [(n, find(n)) for n in parent], out_schema)
     # STAR-CONTRACTION loop: each round (1) hash-min labels every live
     # node with the min of itself and its neighbours, (2) pointer-doubles
     # the label table TO FIXPOINT (label <- label(label) squares the
@@ -1301,7 +1298,8 @@ def connected_components(
                         ra, rb = rb, ra
                     parent[rb] = ra
             spark = pairs.sparkSession
-            fin = spark.createDataFrame(
+            fin = local_frame(
+                spark,
                 [(n, find(n)) for n in parent],
                 mapping.select(
                     F.col("node").alias("component"),

@@ -152,11 +152,9 @@ def pagerank_fixed_point(
     # the stress harness sets it to 0 so scale evidence always measures
     # the distributed loop; local_threshold=0 forces it explicitly
     if local_threshold is None:
-        import os
+        from ..format.env import env_int
 
-        local_threshold = int(
-            os.environ.get("SPARK_GRAFT_CC_LOCAL_THRESHOLD", 2_000_000)
-        )
+        local_threshold = env_int("SPARK_GRAFT_CC_LOCAL_THRESHOLD", 2_000_000)
     pinned = None
     if local_threshold:
         # When the caller KNOWS an upper bound on the edge count (e.g. a

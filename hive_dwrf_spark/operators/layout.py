@@ -20,6 +20,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 
 def write_clustered(
     df: DataFrame,
@@ -227,7 +229,8 @@ def compact_table(
         d = rel_subpath(f, path)
         return d.rsplit("/", 1)[0] if "/" in d else ""
 
-    inv = spark.createDataFrame(
+    inv = local_frame(
+        spark,
         [(f, rel_part(f), fs.size(f)) for f in files],
         "path string, part string, bytes long",
     )
@@ -278,7 +281,8 @@ def compact_table(
         .map(run)
         .collect()
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         report,
         "part string, grp long, files_in long, bytes_in long,"
         " out_path string, rows long",

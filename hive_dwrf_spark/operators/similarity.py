@@ -15,7 +15,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
+
+from ..format.env import env_int
+from .util import local_frame
 
 _SEED = 20240813
 
@@ -127,7 +136,7 @@ def kmeans_lloyd(
     scale: int = 10_000,
     round_times: list | None = None,
 ) -> DataFrame:
-    """Distributed Lloyd k-means over an embedding column with EXACT
+    """Lloyd k-means over an embedding column with EXACT
     integer arithmetic — deterministic under any partitioning and
     replayable in ANSI SQL, unlike float k-means whose centroids depend on
     summation order (and whose ML-library implementations seed from RNG
@@ -148,6 +157,29 @@ def kmeans_lloyd(
     out (k shrinks) rather than being re-seeded — documented Lloyd
     behavior, deterministic either way.
 
+    Adaptive bounded-corpus path (the connected_components /
+    pagerank_fixed_point discipline): the quantized corpus is persisted,
+    and one shuffle-free pass fills the cache and observes its size
+    (total quantized values, rows x d int64s). At most
+    SPARK_GRAFT_CC_LOCAL_THRESHOLD values (read at call time,
+    2,000,000 = 16 MB by default) are collected once with toArrow and the
+    rounds run in numpy with the same arithmetic: int64 squared
+    distances, ties to the smallest cid (centroid columns in ascending
+    cid order), centroid = floor(float64(sum) / float64(n)), empty
+    clusters dropped. Three Spark jobs (that pass, the seed query, the
+    collect) instead of 1 + 2 x rounds eager ones; the result is built
+    from an Arrow table, so it plans as a LocalRelation. The collected
+    input falls back to the distributed loop unless its ids are
+    non-NULL, unique and neither floating-point (Spark groups -0.0 with
+    0.0) nor nested, every vector has length d >= 1 with no NULL
+    element, and the magnitudes fit the int64 headroom below — the
+    inputs on which the distributed loop's grouping, zip_with padding or
+    overflow would differ. Over the threshold the loop reads the cache
+    that pass filled, so the gate costs one job launch. A setting of 0
+    skips the gate; the stress harness sets it so scale evidence
+    measures the loop. `round_times` (stress instrumentation) is filled
+    by the distributed loop only.
+
     int64 headroom: distances <= d * (2 * scale * max|x|)^2 — ~1e11 at
     d=64 unit-norm; per-(cluster, dim) sums <= scale * max|x| * n_rows.
     Returns long-form (cid, n, dim, c_e4): cluster label (seed id),
@@ -157,6 +189,7 @@ def kmeans_lloyd(
 
     if k <= 0 or rounds <= 0:
         raise ValueError(f"k/rounds must be positive, got {k}/{rounds}")
+    threshold = env_int("SPARK_GRAFT_CC_LOCAL_THRESHOLD", 2_000_000)
     q = F.transform(
         F.col(vec_col),
         lambda x: F.floor(x.cast("double") * F.lit(float(scale)) + F.lit(0.5)),
@@ -168,6 +201,11 @@ def kmeans_lloyd(
         .select(F.col(id_col).alias("__id"), q.alias("__qv"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    if threshold:
+        out = _kmeans_local(qdf, k, rounds, threshold)
+        if out is not None:
+            qdf.unpersist()
+            return out
     cent = (
         qdf.orderBy("__id")
         .limit(k)
@@ -228,6 +266,85 @@ def kmeans_lloyd(
         F.col("__n").alias("n"),
         F.posexplode("__cv").alias("__d0", "c_e4"),
     ).select("cid", "n", (F.col("__d0") + 1).alias("dim"), "c_e4")
+
+
+def _kmeans_local(qdf, k, rounds, threshold):
+    """kmeans_lloyd's rounds on the driver over the persisted quantized
+    frame `qdf` (__id, __qv), or None when it holds more than `threshold`
+    values or has a shape the distributed loop treats differently (see
+    kmeans_lloyd). Three Spark jobs: sizing the corpus, the seed query and
+    one collect."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import Observation
+
+    # a no-op write reads every row without a shuffle: it fills the cache
+    # (which the distributed loop reuses over the threshold) and the
+    # observed sum bounds the collect before it runs. The seed query
+    # cannot carry this metric: on input already sorted by id it reads
+    # only k rows per partition.
+    size = Observation()
+    qdf.observe(size, F.sum(F.size("__qv")).alias("values")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    values = size.get["values"]
+    if not values or values > threshold:
+        return None
+    seeds = qdf.orderBy("__id").limit(k).collect()
+    # a length-0 seed with values > 0 means a ragged corpus, which the
+    # one-length check below turns away
+    d = len(seeds[0]["__qv"])
+    tbl = qdf.toArrow()
+    n = tbl.num_rows
+    ids = tbl.column("__id")
+    if (
+        pa.types.is_floating(ids.type)
+        or pa.types.is_nested(ids.type)
+        or ids.null_count
+        or len(pc.unique(ids)) != n
+    ):
+        return None
+    vecs = tbl.column("__qv").combine_chunks()
+    flat = vecs.flatten()
+    if flat.null_count or not pc.all(
+        pc.equal(pc.list_value_length(vecs), d)
+    ).as_py():
+        return None
+    Q = flat.to_numpy().reshape(n, d)
+    top = max(int(Q.max()), -int(Q.min()))
+    # (2 * top + 1): a float64 quotient may floor one below -top
+    if d * (2 * top + 1) ** 2 >= 1 << 63 or n * top >= 1 << 63:
+        return None
+    cids = [r["__id"] for r in seeds]
+    C = np.array([r["__qv"] for r in seeds], dtype=np.int64)
+    for _ in range(rounds):
+        D = np.empty((n, len(C)), dtype=np.int64)
+        for j, c in enumerate(C):
+            diff = Q - c
+            D[:, j] = np.einsum("ij,ij->i", diff, diff)
+        # argmin returns the FIRST minimum: columns are in ascending cid
+        # order, so ties go to the smallest cid like min(struct(d, cid))
+        a = D.argmin(axis=1)
+        sizes = np.bincount(a, minlength=len(C))
+        keep = np.flatnonzero(sizes)
+        sums = np.stack([Q[a == j].sum(axis=0) for j in keep])
+        C = np.floor(
+            sums.astype(np.float64) / sizes[keep, None].astype(np.float64)
+        ).astype(np.int64)
+        cids = [cids[j] for j in keep]
+        sizes = sizes[keep]
+    schema = StructType([
+        StructField("cid", qdf.schema["__id"].dataType),
+        StructField("n", LongType()),
+        StructField("dim", IntegerType(), False),
+        StructField("c_e4", LongType()),
+    ])
+    rows = [
+        (cid, int(sz), dim + 1, int(c))
+        for cid, sz, cv in zip(cids, sizes, C)
+        for dim, c in enumerate(cv)
+    ]
+    return local_frame(qdf.sparkSession, rows, schema)
 
 
 def pca_basis(

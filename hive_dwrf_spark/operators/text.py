@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from .util import local_frame
+
 _STOPWORDS = [
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "for", "on", "with", "as", "at", "by", "from", "that", "this",
@@ -625,9 +627,7 @@ def _bpe_local_rounds(spark, vocab: list, k: int) -> DataFrame:
             )
             for s, f in vocab
         ]
-    return spark.createDataFrame(
-        merges, "merge_rank INT, pair STRING, cnt BIGINT"
-    )
+    return local_frame(spark, merges, "merge_rank INT, pair STRING, cnt BIGINT")
 
 
 def bpe_train_merges(

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators import dedup, multimodal, sampling, similarity, text
+from ..operators.util import local_frame
 from ..tables import fan_out, load
 from . import ORACLE, query
 
@@ -1664,9 +1665,7 @@ def sim_ivf(spark, sf_dir):
     ivf = similarity.ivf_topk(e, "embedding", "vec_id", qv, 10).select("vec_id")
     exact = similarity.cosine_topk(e, "embedding", "vec_id", qv, 10).select("vec_id")
     hits = ivf.join(exact, "vec_id").count()
-    return e.sparkSession.createDataFrame(
-        [(10, hits >= 5)], "k INT, recall_ok BOOLEAN"
-    )
+    return local_frame(spark, [(10, hits >= 5)], "k INT, recall_ok BOOLEAN")
 
 
 @query(
@@ -3217,7 +3216,8 @@ def embedding_pca(spark, sf_dir):
     var_matches = bool(
         abs(var - w[0]) <= 1e-6 * max(abs(float(w[0])), 1e-9)
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(8, orthonormal, eigs_desc, var_matches)],
         "p INT, orthonormal BOOLEAN, eigs_desc BOOLEAN, var_matches BOOLEAN",
     )
@@ -3725,13 +3725,22 @@ def pipeline_drift_by_segment(spark, sf_dir):
     """,
 )
 def embedding_kmeans(spark, sf_dir):
-    """Distributed Lloyd k-means, k=4 x 2 rounds
-    (operators/similarity.py::kmeans_lloyd): deterministic smallest-id
-    seeding, broadcast k-row centroids, integer zip_with distances with a
-    min(struct) winner, and map-side-combinable per-(cluster, dim) sums —
-    the shuffle carries k x d rows at any corpus size. All arithmetic is
-    exact integer/floor, so the clustering replays bit-for-bit in SQL —
-    the property no RNG-seeded ML-library k-means has."""
+    """Lloyd k-means, k=4 x 2 rounds (operators/similarity.py::
+    kmeans_lloyd): deterministic smallest-id seeding, integer squared
+    distances with ties to the smallest cid, and floor(sum / n) centroid
+    updates. All arithmetic is exact integer/floor, so the clustering
+    replays bit-for-bit in SQL — the property no RNG-seeded ML-library
+    k-means has.
+
+    A corpus of at most SPARK_GRAFT_CC_LOCAL_THRESHOLD quantized values
+    (rows x d; 2,000,000 by default) is collected once as Arrow and the
+    rounds run in numpy on the driver: three Spark jobs (a shuffle-free
+    sizing pass over the persisted corpus, the seed query, the collect),
+    and the centroids come back as an Arrow-built LocalRelation. A larger corpus — or duplicate/NULL ids, ragged
+    vectors, NULL elements or int64-overflowing magnitudes — runs the
+    distributed loop: broadcast k-row centroids, a zip_with distance with
+    a min(struct) winner and map-side-combinable per-(cluster, dim) sums,
+    so the shuffle carries k x d rows at any corpus size."""
     e = load(spark, sf_dir, "embeddings")
     return similarity.kmeans_lloyd(
         e, "embedding", "vec_id", k=4, rounds=2

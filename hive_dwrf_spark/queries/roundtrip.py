@@ -11,6 +11,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..format.env import env_int
+from ..operators.util import local_frame
 from ..tables import load
 from . import ORACLE, query
 
@@ -1898,7 +1899,8 @@ def format_stats(spark, sf_dir):
         )
         for name in cols
     ]
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         rows,
         "col_name string, n bigint, min_num double, max_num double,"
         " sum_int bigint",

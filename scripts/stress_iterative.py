@@ -31,8 +31,9 @@ def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
         REPO, "STRESS_r13_iterative.json"
     )
-    # force the distributed component loop (the small-graph gate would
-    # otherwise collect the sf0.1 edge list and measure nothing)
+    # force the distributed component and Lloyd loops (the size gates
+    # would otherwise collect the sf0.1 edge list and embeddings and
+    # measure nothing); both operators read it at call time
     os.environ["SPARK_GRAFT_CC_LOCAL_THRESHOLD"] = "0"
 
     from stress_scale import synthesize  # noqa: E402
@@ -56,7 +57,7 @@ def main() -> int:
 
     results: dict = {}
 
-    def run_lloyd(sf_dir: str) -> dict:
+    def run_lloyd(sf_dir: str, n_rounds: int = 2) -> dict:
         rounds: list = []
         t0 = time.perf_counter()
         similarity.ivf_lloyd_topk(
@@ -67,8 +68,12 @@ def main() -> int:
             10,
             n_lists=4,
             nprobe=2,
+            rounds=n_rounds,
             round_times=rounds,
         ).collect()
+        # only kmeans_lloyd's distributed loop fills round_times, so this
+        # proves the env setting above kept the driver-local gate out
+        assert len(rounds) == n_rounds, rounds
         return {
             "total_sec": round(time.perf_counter() - t0, 3),
             "round_sec": rounds,

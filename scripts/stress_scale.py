@@ -220,8 +220,9 @@ def main() -> int:
     if only is not None and os.path.exists(out_path):
         with open(out_path) as f:
             prior = json.load(f)
-    # stress always measures the DISTRIBUTED connected-components loop —
-    # the driver-local union-find gate would otherwise hide its scaling
+    # stress always measures the DISTRIBUTED connected-components,
+    # PageRank and Lloyd loops — their driver-local gates (read at call
+    # time) would otherwise hide their scaling
     os.environ["SPARK_GRAFT_CC_LOCAL_THRESHOLD"] = "0"
     xdir = X10 if replicas == REPLICAS else f"/tmp/stress_x{replicas}"
     # --reuse skips synthesis when the replica dir is already on disk

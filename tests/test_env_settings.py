@@ -94,3 +94,84 @@ def test_lookup_max_keys_at_registration(raw, monkeypatch):
     with pytest.warns(RuntimeWarning):
         register_udtfs(spark)
     assert registered["dwrf_lookup"].func.MAX_KEYS == DwrfLookupUDTF.MAX_KEYS
+
+
+def _plans_locally(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+@pytest.mark.parametrize("raw", BAD)
+def test_pagerank_local_threshold(raw, spark, monkeypatch):
+    from hive_dwrf_spark.operators.graph import pagerank_fixed_point
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_THRESHOLD", raw)
+    with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_CC_LOCAL_THRESHOLD"):
+        local = pagerank_fixed_point(edges)
+    assert _plans_locally(local)
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_THRESHOLD", "0")
+    dist = pagerank_fixed_point(edges)
+    assert not _plans_locally(dist)
+    assert sorted(local.collect()) == sorted(dist.collect())
+
+
+@pytest.mark.parametrize("raw", BAD)
+def test_connected_components_local_threshold(raw, spark, monkeypatch):
+    from hive_dwrf_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id1 long, id2 long")
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_THRESHOLD", raw)
+    with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_CC_LOCAL_THRESHOLD"):
+        local = connected_components(pairs)
+    assert _plans_locally(local)
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_THRESHOLD", "0")
+    dist = connected_components(pairs)
+    assert not _plans_locally(dist)
+    assert sorted(local.collect()) == sorted(dist.collect())
+
+
+@pytest.mark.parametrize("raw", BAD)
+def test_kmeans_local_threshold(raw, spark, monkeypatch):
+    from hive_dwrf_spark.operators.similarity import kmeans_lloyd
+
+    df = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 4)]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_THRESHOLD", raw)
+    with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_CC_LOCAL_THRESHOLD"):
+        local = kmeans_lloyd(df, "embedding", "vec_id", k=3)
+    assert _plans_locally(local)
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_THRESHOLD", "0")
+    dist = kmeans_lloyd(df, "embedding", "vec_id", k=3)
+    assert not _plans_locally(dist)
+    assert sorted(local.collect()) == sorted(dist.collect())
+
+
+@pytest.mark.parametrize("raw", BAD)
+def test_lsh_bucket_cap(raw, monkeypatch):
+    from hive_dwrf_spark.operators.dedup import _resolve_bucket_cap
+
+    monkeypatch.setenv("SPARK_GRAFT_LSH_BUCKET_CAP", raw)
+    with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_LSH_BUCKET_CAP"):
+        assert _resolve_bucket_cap(None) is None  # the default: uncapped
+    assert _resolve_bucket_cap(5) == 5
+    for value, want in [("0", None), ("5", 5)]:
+        monkeypatch.setenv("SPARK_GRAFT_LSH_BUCKET_CAP", value)
+        assert _resolve_bucket_cap(None) == want
+
+
+@pytest.mark.parametrize("raw", BAD)
+def test_broadcast_ids_max(raw, spark, monkeypatch):
+    from hive_dwrf_spark.operators.dedup import _maybe_broadcast_ids
+
+    ids = spark.range(10).withColumnRenamed("id", "doc_id")
+    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_IDS_MAX", raw)
+    with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_BROADCAST_IDS_MAX"):
+        out = _maybe_broadcast_ids(ids)
+    # the 5,000,000-row default broadcasts a 10-row frame
+    assert "broadcast" in out._jdf.queryExecution().analyzed().toString()
+    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_IDS_MAX", "0")
+    out = _maybe_broadcast_ids(ids)
+    assert "broadcast" not in out._jdf.queryExecution().analyzed().toString()

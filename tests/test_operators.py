@@ -790,12 +790,28 @@ def test_random_projection_exact_and_jl_property(spark):
     assert 0.7 < med < 1.3, med
 
 
-def test_kmeans_lloyd_exact_replay_and_separation(spark):
+def _set_gate(monkeypatch, value):
+    """Set kmeans_lloyd's size gate, SPARK_GRAFT_CC_LOCAL_THRESHOLD, which
+    it reads per call; None leaves the 2,000,000-value default."""
+    if value is None:
+        monkeypatch.delenv("SPARK_GRAFT_CC_LOCAL_THRESHOLD", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_THRESHOLD", value)
+
+
+@pytest.mark.parametrize(
+    "gate", [None, "0"], ids=["default_gate", "distributed"]
+)
+def test_kmeans_lloyd_exact_replay_and_separation(spark, monkeypatch, gate):
     """Centroids must equal a numpy replay of integer Lloyd exactly, be
-    invariant under repartitioning, and recover well-separated clusters."""
+    invariant under repartitioning, and recover well-separated clusters —
+    on the driver-local path the default gate picks for this corpus and
+    on the forced distributed loop."""
     import numpy as np
 
     from hive_dwrf_spark.operators.similarity import kmeans_lloyd
+
+    _set_gate(monkeypatch, gate)
 
     rng = np.random.default_rng(9)
     d, k = 6, 3
@@ -846,7 +862,7 @@ def test_kmeans_lloyd_exact_replay_and_separation(spark):
     assert sorted(map(tuple, got2)) == sorted(map(tuple, got))
 
 
-def test_kmeans_lloyd_cuts_lineage_and_releases_cache(spark):
+def test_kmeans_lloyd_cuts_lineage_and_releases_cache(spark, monkeypatch):
     """Each Lloyd round is lineage-cut (bpe/label_propagation
     discipline): the returned plan scans the checkpointed k-row centroid
     frame instead of nesting all r rounds, so a high round count does not
@@ -862,6 +878,8 @@ def test_kmeans_lloyd_cuts_lineage_and_releases_cache(spark):
         "vec_id long, embedding array<float>",
     ).repartition(7)
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    # the distributed loop's lineage cut is what this test asserts
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_THRESHOLD", "0")
     out = kmeans_lloyd(df, "embedding", "vec_id", k=3, rounds=6)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the plan starts at the round-6 checkpoint: zero shuffle exchanges
@@ -911,6 +929,156 @@ def test_ivf_lloyd_topk_matches_exact_when_probing_all(spark):
     assert len(got_one) == 5
     # all results come from the query's blob (ids ≡ 0 mod 3)
     assert all(r.vec_id % 3 == 0 for r in got_one), got_one
+
+
+def _is_local(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+# (label, rows of (id, vector), k, gate setting, takes the local path)
+_KMEANS_GATE_CASES = [
+    # ids 2 and 3 are equidistant from the seeds 0 and 1: ties go to the
+    # smaller cid in both rounds
+    ("ties", [(0, [0.0, 0.0]), (1, [2.0, 0.0]), (2, [1.0, 0.0]),
+              (3, [1.0, 0.0]), (4, [1.0, 5.0]), (5, [1.0, -5.0])],
+     2, None, True),
+    # seeds 0 and 1 coincide: every point ties to cid 0, cluster 1 empties
+    # and drops out in round 1
+    ("empty_cluster", [(0, [1.0, 1.0]), (1, [1.0, 1.0]), (2, [3.0, 0.5]),
+                       (3, [-2.0, 4.0]), (4, [9.0, 9.0])],
+     3, None, True),
+    # the distributed loop groups by id, so a repeated (id, vector) row
+    # counts once there (identical vectors keep its first() deterministic)
+    ("duplicate_ids", [(0, [0.0, 0.0]), (1, [4.0, 4.0]), (1, [4.0, 4.0]),
+                       (2, [0.5, 0.0]), (3, [4.5, 4.0])],
+     2, None, False),
+    # zip_with pads the shorter side with NULL, so every distance between
+    # a length-2 and a length-3 vector is NULL in the distributed loop
+    ("ragged", [(0, [0.0, 0.0]), (1, [4.0, 4.0, 4.0]), (2, [0.5, 0.0]),
+                (3, [4.5, 4.0, 4.0]), (4, [1.0, 0.0])],
+     2, None, False),
+    ("null_element", [(0, [0.0, 0.0]), (1, [4.0, 4.0]), (2, [0.5, None]),
+                      (3, [4.5, 4.0])],
+     2, None, False),
+    # 4 rows x d=2 is 8 quantized values: one over the threshold
+    ("over_threshold", [(0, [0.0, 0.0]), (1, [4.0, 4.0]), (2, [0.5, 0.0]),
+                        (3, [4.5, 4.0])],
+     2, "7", False),
+    ("at_threshold", [(0, [0.0, 0.0]), (1, [4.0, 4.0]), (2, [0.5, 0.0]),
+                      (3, [4.5, 4.0])],
+     2, "8", True),
+]
+
+
+@pytest.mark.parametrize(
+    "rows,k,threshold,local",
+    [c[1:] for c in _KMEANS_GATE_CASES],
+    ids=[c[0] for c in _KMEANS_GATE_CASES],
+)
+def test_kmeans_lloyd_local_gate_matches_distributed(
+    spark, monkeypatch, rows, k, threshold, local
+):
+    """Both branches of kmeans_lloyd's bounded-corpus gate return the same
+    rows: equidistant ties and an emptied seed cluster run driver-local;
+    duplicate ids, a ragged vector, a NULL element and a corpus over the
+    threshold fall back to the distributed loop."""
+    from hive_dwrf_spark.operators.similarity import kmeans_lloyd
+
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    _set_gate(monkeypatch, threshold)
+    gated = kmeans_lloyd(df, "embedding", "vec_id", k=k, rounds=2)
+    _set_gate(monkeypatch, "0")
+    dist = kmeans_lloyd(df, "embedding", "vec_id", k=k, rounds=2)
+    assert _is_local(gated) is local
+    assert not _is_local(dist)
+    assert gated.schema == dist.schema
+    got, want = sorted(map(tuple, gated.collect())), sorted(
+        map(tuple, dist.collect())
+    )
+    assert got == want
+    assert len(got) > 0
+
+
+def test_kmeans_lloyd_gate_sizes_id_sorted_input(spark, monkeypatch):
+    """The gate counts every row even when the planner knows the input is
+    sorted by id, where the seed query reads only k rows per partition:
+    40 rows x d=2 over 4 range partitions is 80 values."""
+    from pyspark.sql import functions as F
+
+    from hive_dwrf_spark.operators.similarity import kmeans_lloyd
+
+    df = spark.range(0, 40, 1, 4).select(
+        F.col("id").alias("vec_id"),
+        F.array((F.col("id") % 5).cast("double"), F.lit(1.0)).alias(
+            "embedding"
+        ),
+    )
+    got = {}
+    for gate in ("79", "80"):
+        _set_gate(monkeypatch, gate)
+        out = kmeans_lloyd(df, "embedding", "vec_id", k=2, rounds=2)
+        got[gate] = (_is_local(out), sorted(map(tuple, out.collect())))
+    assert got["79"][0] is False and got["80"][0] is True
+    assert got["79"][1] == got["80"][1]
+
+
+def test_kmeans_lloyd_local_path_starts_three_jobs(spark, monkeypatch):
+    """The driver-local path is one sizing pass, the seed query and one
+    collect — no per-round Spark jobs — releases the corpus cache, and
+    leaves round_times, the distributed loop's instrumentation, empty."""
+    from hive_dwrf_spark.operators.similarity import kmeans_lloyd
+
+    _set_gate(monkeypatch, None)
+    df = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 7)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    times: list = []
+    sc.setJobGroup("kmeans-local-jobs", "kmeans_lloyd local path")
+    try:
+        out = kmeans_lloyd(
+            df, "embedding", "vec_id", k=3, rounds=4, round_times=times
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("kmeans-local-jobs")) <= 3
+    assert _is_local(out)
+    assert times == []
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= before
+
+
+def test_ivf_lloyd_topk_equal_on_both_gate_branches(spark, monkeypatch):
+    """ivf_lloyd_topk inherits kmeans_lloyd's gate from
+    SPARK_GRAFT_CC_LOCAL_THRESHOLD, read at call time: forcing the
+    distributed loop with 0 returns the same top-k."""
+    import numpy as np
+
+    from hive_dwrf_spark.operators.similarity import ivf_lloyd_topk
+
+    rng = np.random.default_rng(5)
+    vecs = rng.normal(0, 1, (80, 5))
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in vecs[i]]) for i in range(80)],
+        "vec_id long, embedding array<double>",
+    )
+    qvec = [float(x) for x in vecs[7] + 0.05]
+
+    def run():
+        return [
+            tuple(r)
+            for r in ivf_lloyd_topk(
+                df, "embedding", "vec_id", qvec, 8, n_lists=4, nprobe=2
+            ).collect()
+        ]
+
+    monkeypatch.delenv("SPARK_GRAFT_CC_LOCAL_THRESHOLD", raising=False)
+    local = run()
+    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_THRESHOLD", "0")
+    assert run() == local
+    assert len(local) == 8
 
 
 def test_pca_basis_matches_numpy_and_projects(spark):

@@ -327,3 +327,34 @@ def test_drift_psi_corpus_cost_is_two_sketch_scans(spark):
     assert "BatchEvalPython" not in plan
     # both sketch sides partial-aggregate before their exchange
     assert plan.count("HashAggregate") >= 4
+
+
+def test_driver_local_results_plan_as_local_relations(spark):
+    # results computed on the driver are shipped back as Arrow, so they
+    # plan as a JVM LocalRelation; a list of Python rows would plan as a
+    # LogicalRDD whose every action starts a Python worker to unpickle it
+    from hive_dwrf_spark.operators.dedup import connected_components
+    from hive_dwrf_spark.operators.text import bpe_train_merges
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id1 long, id2 long")
+    words = spark.createDataFrame(
+        [("low lower lowest",), ("newer newest",)], "text string"
+    )
+    frames = {
+        "connected_components": connected_components(
+            pairs, local_threshold=1000
+        ),
+        "bpe_train_merges": bpe_train_merges(words, "text", k=3),
+        "embedding_kmeans": _queries()["embedding_kmeans"](spark, SF_SMOKE),
+    }
+    for name, df in frames.items():
+        qe = df._jdf.queryExecution()
+        logical = qe.optimizedPlan().toString()
+        physical = qe.executedPlan().toString()
+        assert "LocalRelation" in logical, (name, logical)
+        assert "LocalTableScan" in physical, (name, physical)
+        for plan in (logical, physical):
+            assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, (
+                name,
+                plan,
+            )
