@@ -74,15 +74,14 @@ def classify_controls(per_query: dict, bands: dict = None) -> str:
                             ABBA the control queries against the prior
                             round's checkout before accepting any bench
                             from such a window (the recorded artifact
-                            cannot adjudicate this by itself)."""
+                            cannot adjudicate this by itself). A control
+                            missing from per_query (it failed, or was
+                            dropped) also lands here: an absent
+                            measurement cannot vouch for a quiet window."""
     bands = bands or CONTROL_BANDS
-    ratios = [
-        per_query[name] / band
-        for name, band in bands.items()
-        if per_query.get(name) is not None
-    ]
-    if not ratios:
-        return "quiet"
+    if any(per_query.get(name) is None for name in bands):
+        return "suspect_regression"
+    ratios = [per_query[name] / band for name, band in bands.items()]
     if all(r <= 1.0 for r in ratios):
         return "quiet"
     if all(r > 1.0 for r in ratios) and max(ratios) / min(ratios) <= 2.0:

@@ -15,4 +15,8 @@ Layout:
   streaming/  structured-streaming helpers over DWRF directories
 """
 
+from .shipping import install_zip_invalidate_fix
+
 __version__ = "0.1.0"
+
+install_zip_invalidate_fix()

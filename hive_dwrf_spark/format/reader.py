@@ -994,7 +994,6 @@ class DwrfFile:
         self._verify_on_read = verify_checksums
         self._verified_stripes: set[int] = set()
         self._verify_triples: list[tuple[int, int, int]] | None = None
-        self._f = get_fs(path).open(path, "rb")
         # point-lookup decoder reuse (read_row): (stripe, projection) ->
         # no-prefetch _StripeDecoder with warmed dictionary/index caches
         self._point_decoders: dict = {}
@@ -1013,6 +1012,16 @@ class DwrfFile:
         self._stride_bytes = 0
         self._stride_budget = stride_cache_budget()
         self._stride_lock = _threading.Lock()
+        self._f = get_fs(path).open(path, "rb")
+        try:
+            self._read_tail(path)
+        except BaseException:
+            self._f.close()  # a failed open leaves no file to the GC
+            raise
+
+    def _read_tail(self, path: str) -> None:
+        """Read and validate magic, postscript, footer and stripe
+        directory."""
         try:
             # local files: positional os.pread, safe under the stripe pool
             self._fileno = self._f.fileno()

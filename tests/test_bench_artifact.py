@@ -92,3 +92,16 @@ def test_classify_forced_code_regression():
     assert bench.classify_controls(
         {"q04": 0.70, "q18": 1.40, "graph_pagerank": 4.30}
     ) == "suspect_regression"
+
+
+def test_classify_missing_control():
+    # a control that failed or was dropped measured nothing, so it cannot
+    # vouch for a quiet window — not even when the rest are in band
+    assert bench.classify_controls(
+        {"q04": 0.51, "q18": 1.05}
+    ) == "suspect_regression"
+    assert bench.classify_controls(
+        {"q04": 0.51, "q18": 1.05, "graph_pagerank": None}
+    ) == "suspect_regression"
+    assert bench.classify_controls({}) == "suspect_regression"
+    assert bench.classify_controls({"q01": 0.3}) == "suspect_regression"

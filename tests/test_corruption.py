@@ -19,7 +19,12 @@ still yields either an identical table or a typed error.
 
 from __future__ import annotations
 
+import contextlib
+import gc
+import os
 import random
+import sys
+import warnings
 
 import pyarrow as pa
 import pytest
@@ -545,3 +550,72 @@ class TestVerifyOnRead:
             spark.read.format("dwrf").option("verifyOnRead", "true").load(
                 bad_dir
             ).count()
+
+
+def _open_fds(root) -> int:
+    """/proc/self/fd entries open on files under `root` (sockets and
+    pipes of a live Spark session come and go on their own)."""
+    n = 0
+    for fd in os.listdir("/proc/self/fd"):
+        try:
+            n += os.readlink(f"/proc/self/fd/{fd}").startswith(str(root))
+        except OSError:  # closed since the listing
+            pass
+    return n
+
+
+@contextlib.contextmanager
+def _no_leaked_file(root, monkeypatch):
+    """The block may raise, but must leave no file under `root` open: the
+    fd count is unchanged both before and after a gc pass, and no
+    ResourceWarning (an error here, so it reaches the unraisable hook
+    from a finalizer) fires."""
+    unraisable = []
+    monkeypatch.setattr(sys, "unraisablehook", unraisable.append)
+    gc.collect()
+    before = _open_fds(root)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", ResourceWarning)
+        yield
+        assert _open_fds(root) == before
+        gc.collect()
+    assert _open_fds(root) == before
+    assert not unraisable, [u.exc_value for u in unraisable]
+
+
+@pytest.mark.skipif(
+    not os.path.isdir("/proc/self/fd"), reason="needs /proc/self/fd"
+)
+class TestFailedOpenClosesFile:
+    """A failed open closes its file before the error propagates."""
+
+    def test_garbage_file(self, tmp_path, monkeypatch):
+        p = _write(tmp_path, b"not a dwrf file at all" * 100)
+        with _no_leaked_file(tmp_path, monkeypatch):
+            with pytest.raises(DwrfCorruptError, match="bad magic"):
+                DwrfFile(p)
+
+    def test_truncated_file(self, victim, tmp_path, monkeypatch):
+        _, raw, _, _ = victim
+        p = _write(tmp_path, raw[: len(raw) // 2])
+        with _no_leaked_file(tmp_path, monkeypatch):
+            with pytest.raises(DwrfCorruptError):
+                DwrfFile(p)
+
+    def test_lookup_keys_retries_corrupt_member(
+        self, victim, tmp_path, monkeypatch
+    ):
+        """The handle cache caches no failed open, so every call opens
+        the corrupt member again; none of those opens may leak."""
+        from hive_dwrf_spark.format.lookup import lookup_keys
+
+        _, raw, _, _ = victim
+        d = tmp_path / "serve"
+        d.mkdir()
+        (d / "a.dwrf").write_bytes(raw)
+        (d / "b.dwrf").write_bytes(raw[: len(raw) // 2])
+        lookup_keys(str(d / "a.dwrf"), "i", [5])  # a.dwrf stays cached
+        with _no_leaked_file(tmp_path, monkeypatch):
+            for _ in range(2):
+                with pytest.raises(DwrfCorruptError):
+                    lookup_keys(str(d), "i", [5])

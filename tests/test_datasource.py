@@ -742,3 +742,55 @@ def test_in_filter_prunes_files_and_partitions(dwrf_spark, tmp_path):
     # and values still answer correctly through Spark
     back = spark.read.format("dwrf").load(flat)
     assert back.filter(F.col("k").isin(1, 5, 9)).count() == 3
+
+
+def test_workers_skip_unchanged_zip_rereads(dwrf_spark, tmp_path):
+    """A Python worker that has run a DWRF read holds the package's
+    `zipimporter.invalidate_caches`, so the `importlib.invalidate_caches()`
+    PySpark runs on every worker call re-reads no unchanged archive."""
+    import sys
+
+    import pyarrow as pa
+
+    if sys.version_info >= (3, 13):
+        pytest.skip("CPython 3.13 reads zip directories lazily")
+    spark = dwrf_spark
+    p = str(tmp_path / "t")
+    spark.range(100).write.format("dwrf").mode("overwrite").save(p)
+    assert spark.read.format("dwrf").load(p).count() == 100
+
+    def probe(batches):
+        import importlib
+        import zipimport
+
+        import hive_dwrf_spark  # noqa: F401  (as any DWRF call does first)
+
+        for _ in batches:
+            pass
+        installed = zipimport.zipimporter.invalidate_caches.__module__
+        reads = []
+        real = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(archive)
+            return real(archive)
+
+        # the first call may catch up on an archive read before the
+        # package was imported; the second must read nothing
+        importlib.invalidate_caches()
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        yield pa.RecordBatch.from_pydict(
+            {"installed": [installed], "rereads": [len(reads)]}
+        )
+
+    row = (
+        spark.range(1, numPartitions=1)
+        .mapInArrow(probe, "installed string, rereads long")
+        .first()
+    )
+    assert row["installed"] == "hive_dwrf_spark.shipping"
+    assert row["rereads"] == 0
