@@ -959,10 +959,18 @@ def _compress_block(block: bytes, kind: CompressionKind, level: int) -> bytes:
     raise ValueError(f"unsupported compression {kind}")
 
 
-def _decompress_block(block, kind: CompressionKind) -> bytes:
-    # `block` is any bytes-like (framing passes zero-copy memoryviews)
+def _decompress_block(
+    block, kind: CompressionKind, bufsize: int = zlib.DEF_BUF_SIZE
+) -> bytes:
+    # `block` is any bytes-like (framing passes zero-copy memoryviews).
+    # `bufsize` is zlib's initial output buffer; readers pass the file's
+    # compressionBlockSize, the most one block inflates to from a
+    # conforming writer, so the buffer is not regrown: zlib inflates with
+    # the GIL released but grows its buffer holding it, so each regrowth
+    # is one more GIL handoff between reader threads. It is only a
+    # starting size: a larger block still inflates correctly.
     if kind == CompressionKind.ZLIB:
-        return zlib.decompress(block, -15)
+        return zlib.decompress(block, -15, bufsize)
     if kind == CompressionKind.SNAPPY:
         if _PA_SNAPPY is not None:
             return _PA_SNAPPY.decompress(
@@ -1054,7 +1062,9 @@ def compress_stream(
     return bytes(out)
 
 
-def decompress_stream(data, kind: CompressionKind):
+def decompress_stream(
+    data, kind: CompressionKind, bufsize: int = zlib.DEF_BUF_SIZE
+):
     """Inverse of compress_stream; returns a bytes-like (bytes or
     memoryview — callers wrap in np.frombuffer/memoryview, never index
     past it). Accepts any buffer: block slicing is zero-copy on a
@@ -1064,7 +1074,8 @@ def decompress_stream(data, kind: CompressionKind):
     GIL, so streams with several compressed blocks decompress on the same
     small shared pool the writer uses — the single-reader path (bench,
     driver-side tools) gets the cores; Spark executor tasks are already
-    core-saturated and the pool cap keeps oversubscription bounded."""
+    core-saturated and the pool cap keeps oversubscription bounded.
+    `bufsize` is each block's initial output buffer (_decompress_block)."""
     if kind == CompressionKind.NONE:
         return data
     mv = memoryview(data)
@@ -1085,13 +1096,13 @@ def decompress_stream(data, kind: CompressionKind):
             parts.append(block)
     if len(todo) >= 4:
         done = _compress_pool().map(
-            lambda i: _decompress_block(parts[i], kind), todo
+            lambda i: _decompress_block(parts[i], kind, bufsize), todo
         )
         for i, blk in zip(todo, done):
             parts[i] = blk
     else:
         for i in todo:
-            parts[i] = _decompress_block(parts[i], kind)
+            parts[i] = _decompress_block(parts[i], kind, bufsize)
     if len(parts) == 1:
         return parts[0]
     return b"".join(parts)

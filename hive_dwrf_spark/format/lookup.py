@@ -13,9 +13,12 @@ key BATCHES, so this module does both halves in one pass:
                  cannot contain any requested key;
   stride level : within a surviving file, the key column's ROW_INDEX
                  per-stride statistics prune strides the same way;
-  decode level : each candidate stride of the key column is decoded,
-                 matched vectorized (arrow is_in), and only the matching
-                 rows' projected columns are gathered.
+  decode level : each candidate stride of the key column is decoded and
+                 matched against only the keys its own statistics admit
+                 (one numpy pass for an integer column without NULLs,
+                 Arrow's is_in otherwise), and only the matching rows'
+                 projected columns are gathered: a slice for a contiguous
+                 run of rows, one take for a scattered one.
 
 Parses and decodes amortize across CALLS, not only within one batch:
 every file is served from a process-wide open DwrfFile handle, so its
@@ -55,7 +58,13 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .fs import get_fs
-from .reader import DwrfFile, NoStridePositions, _corrupt_guard, stride_cache_budget
+from .reader import (
+    DwrfFile,
+    NoStridePositions,
+    _corrupt_guard,
+    _gatherer,
+    stride_cache_budget,
+)
 from .stats import stats_from_proto
 from .types import TypeKind
 
@@ -112,18 +121,34 @@ def _list_files(path: str) -> list[str]:
     return sorted(out)
 
 
-def _any_key_in_range(keys_sorted: list, mn, mx) -> bool:
-    """May [mn, mx] contain one of the sorted keys? Missing bounds
-    (all-null column, statless legacy file) can never prune."""
+def _keys_in_range(keys_sorted: list, mn, mx) -> list:
+    """The sorted keys inside [mn, mx]. Missing bounds (all-null column,
+    statless legacy file) can never prune: all keys."""
     if mn is None or mx is None:
-        return True
-    j = bisect.bisect_left(keys_sorted, mn)
-    return j < len(keys_sorted) and keys_sorted[j] <= mx
+        return keys_sorted
+    return keys_sorted[
+        bisect.bisect_left(keys_sorted, mn) : bisect.bisect_right(keys_sorted, mx)
+    ]
 
 
-def _match_offsets(karr: pa.Array, key_set: pa.Array) -> np.ndarray:
-    """Positions in `karr` whose value is one of the keys (nulls never
-    match)."""
+def _match_offsets(karr: pa.Array, keys: list, key_set: pa.Array) -> np.ndarray:
+    """Sorted positions in `karr` whose value is one of `keys` (nulls
+    never match). `keys` holds at least the sorted keys that may occur in
+    `karr`; `key_set` is every key of the call, as an Arrow array.
+
+    An integer window without NULLs matched against integer keys is one
+    numpy pass over its zero-copy view: each of the Arrow calls the
+    is_in path makes drops the GIL, which is dear under concurrent
+    clients."""
+    if (
+        pa.types.is_integer(karr.type)
+        and karr.null_count == 0
+        and all(type(k) is int for k in keys)
+    ):
+        vals = karr.to_numpy()
+        if len(keys) == 1:
+            return np.flatnonzero(vals == keys[0])
+        return np.flatnonzero(np.isin(vals, keys))
     mask = pc.fill_null(pc.is_in(karr, value_set=key_set), False)
     return np.flatnonzero(mask.to_numpy(zero_copy_only=False))
 
@@ -197,7 +222,7 @@ def lookup_keys(
             continue
         # --- file-level pruning: footer stats only, no data bytes ---
         st = f.file_stats(key_tid)
-        if not _any_key_in_range(key_list, st.minimum, st.maximum):
+        if not _keys_in_range(key_list, st.minimum, st.maximum):
             if trace is not None:
                 trace["files_pruned"] += 1
             continue
@@ -214,54 +239,44 @@ def lookup_keys(
                 if trace is not None:
                     trace["strides_total"] += n_strides
 
-                def emit(offs_global: np.ndarray, karr, k_base: int, in_stride: bool):
-                    """Gather every projected column at stripe-global row
-                    offsets `offs_global`; `karr` (the decoded key window
-                    starting at `k_base`) is reused when projected.
-                    `in_stride`: offsets all fall in the single stride the
-                    key was decoded from, so other columns may seek to it;
-                    False means a whole-stripe pass (offsets may span
-                    strides), so other columns decode whole-stripe too."""
+                def emit(hits: np.ndarray, karr, k_base: int, s_idx):
+                    """Gather every projected column at the rows `hits`
+                    of the key window `karr`, which starts at stripe row
+                    `k_base` and is reused when projected. `s_idx` is the
+                    stride the window holds, so other columns may seek to
+                    it; None means a whole-stripe window, so other columns
+                    decode whole-stripe too."""
+                    gather = _gatherer(hits)
                     for name, tid in tops:
-                        if tid == key_tid:
-                            piece = karr.take(
-                                pa.array(offs_global - k_base, type=pa.int64())
-                            )
-                        else:
-                            piece = None
-                            if in_stride:
-                                s_idx0 = int(offs_global[0]) // stride
-                                try:
-                                    arr = f._cached_stride_column(
-                                        dec, i, tid, s_idx0, stride, n_rows
-                                    )
-                                    piece = arr.take(
-                                        pa.array(
-                                            offs_global - s_idx0 * stride,
-                                            type=pa.int64(),
-                                        )
-                                    )
-                                except NoStridePositions:
-                                    piece = None
-                            if piece is None:
-                                piece = f._cached_whole_column(
-                                    dec, i, tid, n_rows
-                                ).take(pa.array(offs_global, type=pa.int64()))
-                        out_chunks.setdefault(name, []).append(piece)
+                        arr = karr if tid == key_tid else None
+                        if arr is None and s_idx is not None:
+                            try:
+                                arr = f._cached_stride_column(
+                                    dec, i, tid, s_idx, stride, n_rows
+                                )
+                            except NoStridePositions:
+                                pass
+                        if arr is None:
+                            arr = f._cached_whole_column(
+                                dec, i, tid, n_rows
+                            ).slice(k_base)
+                        out_chunks.setdefault(name, []).append(gather(arr))
 
-                # --- stride-level pruning via the key's ROW_INDEX stats ---
-                alive = list(range(n_strides))
+                # --- stride-level pruning via the key's ROW_INDEX stats:
+                # (stride, the keys its min/max admit) ---
+                alive = [(s, key_list) for s in range(n_strides)]
                 ri = dec.row_index(key_tid) if stride else None
                 if ri is not None and len(ri.entry) >= n_strides:
                     kept = []
-                    for s in alive:
+                    for s, _ in alive:
                         e = ri.entry[s].statistics
                         if e is None:
-                            kept.append(s)
+                            kept.append((s, key_list))
                             continue
                         cs = stats_from_proto(kind, e)
-                        if _any_key_in_range(key_list, cs.minimum, cs.maximum):
-                            kept.append(s)
+                        admitted = _keys_in_range(key_list, cs.minimum, cs.maximum)
+                        if admitted:
+                            kept.append((s, admitted))
                     alive = kept
                 if not alive:
                     continue
@@ -270,14 +285,13 @@ def lookup_keys(
                     if trace is not None:
                         trace["strides_scanned"] += 1
                     karr = f._cached_whole_column(dec, i, key_tid, n_rows)
-                    hits = _match_offsets(karr, key_set)
+                    hits = _match_offsets(karr, key_list, key_set)
                     if len(hits):
-                        emit(hits, karr, 0, in_stride=False)
+                        emit(hits, karr, 0, None)
                     continue
-                for s_idx in alive:
+                for s_idx, admitted in alive:
                     if trace is not None:
                         trace["strides_scanned"] += 1
-                    base = s_idx * stride
                     try:
                         karr = f._cached_stride_column(
                             dec, i, key_tid, s_idx, stride, n_rows
@@ -286,13 +300,13 @@ def lookup_keys(
                         karr = f._cached_whole_column(dec, i, key_tid, n_rows)
                         # stats pruning already ran; scanning the whole
                         # stripe once covers every remaining stride
-                        hits = _match_offsets(karr, key_set)
+                        hits = _match_offsets(karr, key_list, key_set)
                         if len(hits):
-                            emit(hits, karr, 0, in_stride=False)
+                            emit(hits, karr, 0, None)
                         break
-                    hits = _match_offsets(karr, key_set)
+                    hits = _match_offsets(karr, admitted, key_set)
                     if len(hits):
-                        emit(hits + base, karr, base, in_stride=True)
+                        emit(hits, karr, s_idx * stride, s_idx)
         _trim_decoded()
     cols = []
     for field in schema:

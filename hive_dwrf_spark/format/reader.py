@@ -14,6 +14,7 @@ evaluation to the consumer — SURVEY.md §4 O2)."""
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 import numpy as np
 import pyarrow as pa
@@ -21,6 +22,7 @@ import pyarrow as pa
 from . import codecs, proto
 from .profiler import profiler
 from .constants import (
+    DEFAULT_COMPRESSION_BLOCK_SIZE,
     MAGIC,
     TIMESTAMP_BASE_SECONDS,
     ColumnEncodingKind,
@@ -63,6 +65,31 @@ def _validity_buffer(present: np.ndarray | None):
     if present is None:
         return None
     return pa.py_buffer(np.packbits(present, bitorder="little").tobytes())
+
+
+def _large_utf8(lengths: np.ndarray, data: bytes) -> pa.Array:
+    """A large_utf8 array of the values of `lengths` laid end to end in
+    `data`."""
+    offsets = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lengths)])
+    return pa.Array.from_buffers(
+        pa.large_utf8(),
+        len(lengths),
+        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data)],
+    )
+
+
+def _gatherer(offs) -> Callable[[pa.Array], pa.Array]:
+    """A function gathering the rows at the sorted, distinct offsets
+    `offs` from an array. Point lookups gather from many arrays, and under
+    concurrent clients each Arrow call that drops the GIL waits to get it
+    back: a contiguous run (one row always is one) is a zero-copy slice,
+    which keeps the GIL; a scattered run is one take through an index
+    array built once and shared by every array gathered from."""
+    lo, n = int(offs[0]), len(offs)
+    if int(offs[-1]) - lo + 1 == n:
+        return lambda arr: arr.slice(lo, n)
+    idx = pa.array(offs, type=pa.int64())
+    return lambda arr: arr.take(idx)
 
 
 class NoStridePositions(Exception):
@@ -190,6 +217,8 @@ class _StripeDecoder:
     _COALESCE_GAP = 64 * 1024
     #: if included streams cover more than this fraction, read eagerly
     _EAGER_FRACTION = 0.75
+    #: byte budget of each decoder's decompressed-block cache
+    _BLK_CACHE_BUDGET = 32 * 1024 * 1024
 
     def __init__(
         self,
@@ -224,13 +253,24 @@ class _StripeDecoder:
             self._ranges[(s.column, s.kind)] = (off, s.length)
             off += s.length
         self._chunks: list[tuple[int, np.ndarray]] = []  # (start, bytes) sorted
-        # stream cache: plain dict, GIL-atomic get/set. Under the column
-        # thread pool two threads may rarely decompress the same stream
-        # twice (distinct columns touch distinct streams, so in practice
-        # never); idempotent, so no lock on the hot path.
+        # zlib's initial output buffer: one block's uncompressed size
+        self._bufsize = reader.block_size or DEFAULT_COMPRESSION_BLOCK_SIZE
+        # Memo caches. A point-lookup decoder is shared by every thread
+        # reading through its handle, so every cache follows one rule:
+        # lookups are single dict gets (no lock); an insert, an eviction or
+        # a byte count happens under the handle's lock, which is never held
+        # across a decode. An entry, once inserted, never changes.
+        # _cache (whole streams) and _ri_cache (parsed ROW_INDEX) only grow
+        # and are keyed by stream, so a racing miss at worst decodes the
+        # same stream twice and stores an equal value; they take no lock.
+        self._lock = reader._lock
         self._cache: dict[tuple[int, int], np.ndarray] = {}
         self._raw_cache: dict[tuple[int, int], np.ndarray] = {}
         self._ri_cache: dict[int, proto.RowIndex] = {}
+        # decoded stripe dictionaries (type id -> values), read-only once
+        # built: a stride miss on a DICTIONARY column would otherwise
+        # re-decode the whole DICTIONARY_DATA stream
+        self._dicts: dict[int, object] = {}
         # decompressed-block cache for the stride-seek path (_buf_at):
         # consecutive stride seeks overwhelmingly land in the SAME
         # compression block (a 256 KB block holds ~5-10 strides of a
@@ -238,10 +278,9 @@ class _StripeDecoder:
         # zlib over bytes a previous lookup already inflated — measured
         # ~50% of read_row wall time on the sf0.1 lookup table. Keyed by
         # (column, stream kind, block offset); insertion-order eviction
-        # under a byte budget, same GIL-atomic discipline as _cache.
+        # under a byte budget.
         self._blk_cache: dict[tuple[int, int, int], np.ndarray] = {}
         self._blk_cache_bytes = 0
-        self._blk_cache_budget = 32 * 1024 * 1024
         # per-thread decode scratch (present mask handoff to stride-dict
         # decode) so columns can decode concurrently
         import threading
@@ -300,12 +339,17 @@ class _StripeDecoder:
         # stream outside the prefetched ranges (no-prefetch point-lookup
         # decoders, dump tooling): direct IO, memoized so a reused
         # decoder preads each touched stream once, not once per lookup —
-        # bounded by the compressed size of the streams actually touched
+        # bounded by the compressed size of the streams actually touched.
+        # The miss preads under the lock (IO, not a decode), so threads
+        # first touching one stream together read it once.
         hit = self._raw_cache.get((off, ln))
         if hit is None:
-            data = self.r._read_at(self.stripe.offset + off, ln)
-            hit = np.frombuffer(data, dtype=np.uint8)
-            self._raw_cache[(off, ln)] = hit
+            with self._lock:
+                hit = self._raw_cache.get((off, ln))
+                if hit is None:
+                    data = self.r._read_at(self.stripe.offset + off, ln)
+                    hit = np.frombuffer(data, dtype=np.uint8)
+                    self._raw_cache[(off, ln)] = hit
         return hit
 
     def stream(self, column: int, kind: StreamKind) -> np.ndarray:
@@ -318,7 +362,7 @@ class _StripeDecoder:
                 # stored single-block stream comes back as a window into
                 # the prefetched chunk — no copies at all on that path
                 data = codecs.decompress_stream(
-                    self._raw_slice(off, ln), self.r.compression
+                    self._raw_slice(off, ln), self.r.compression, self._bufsize
                 )
             self._cache[key] = np.frombuffer(data, dtype=np.uint8)
         return self._cache[key]
@@ -367,21 +411,17 @@ class _StripeDecoder:
                 ck = (col, int(kind), p)
                 part = self._blk_cache.get(ck)
                 if part is None:
-                    part = np.frombuffer(
-                        codecs._decompress_block(
-                            comp[p + 3 : p + 3 + bl].tobytes(),
-                            self.r.compression,
+                    part = self._cache_block(
+                        ck,
+                        np.frombuffer(
+                            codecs._decompress_block(
+                                memoryview(comp[p + 3 : p + 3 + bl]),
+                                self.r.compression,
+                                self._bufsize,
+                            ),
+                            dtype=np.uint8,
                         ),
-                        dtype=np.uint8,
                     )
-                    self._blk_cache[ck] = part
-                    self._blk_cache_bytes += part.nbytes
-                    while (
-                        self._blk_cache_bytes > self._blk_cache_budget
-                        and self._blk_cache
-                    ):
-                        old = self._blk_cache.pop(next(iter(self._blk_cache)))
-                        self._blk_cache_bytes -= old.nbytes
             parts.append(part)
             have += len(part)
             p += 3 + bl
@@ -389,6 +429,40 @@ class _StripeDecoder:
             return np.zeros(0, dtype=np.uint8), int(off)
         buf = parts[0] if len(parts) == 1 else np.concatenate(parts)
         return buf, int(off)
+
+    def _cache_block(self, ck, part: np.ndarray) -> np.ndarray:
+        """Insert a decompressed block into the block cache, evicting the
+        oldest blocks past the budget; returns the cached block (a
+        concurrent decoder's, if one won the race)."""
+        with self._lock:
+            won = self._blk_cache.get(ck)
+            if won is not None:
+                return won
+            self._blk_cache[ck] = part
+            self._blk_cache_bytes += part.nbytes
+            while self._blk_cache_bytes > self._BLK_CACHE_BUDGET:
+                old = self._blk_cache.pop(next(iter(self._blk_cache)))
+                self._blk_cache_bytes -= old.nbytes
+        return part
+
+    def _string_dictionary(self, type_id: int, n_dict: int) -> pa.Array:
+        """The stripe dictionary of a DICTIONARY string column."""
+        key_lengths, _ = codecs.decode_int_rle(
+            self.stream(type_id, StreamKind.LENGTH), n_dict, signed=False
+        )
+        return _large_utf8(
+            key_lengths, self.stream(type_id, StreamKind.DICTIONARY_DATA).tobytes()
+        )
+
+    def _dictionary(self, type_id: int, build):
+        """The stripe dictionary of `type_id`, built by `build()` on first
+        use (outside the lock; a racing build's result is dropped)."""
+        hit = self._dicts.get(type_id)
+        if hit is None:
+            built = build()
+            with self._lock:
+                hit = self._dicts.setdefault(type_id, built)
+        return hit
 
     def _ints_window(self, col, kind, cur, count, signed):
         blk, off = cur.instream()
@@ -508,10 +582,13 @@ class _StripeDecoder:
             )
         elif kind in (TypeKind.SHORT, TypeKind.INT, TypeKind.LONG):
             if enc.kind == int(ColumnEncodingKind.DICTIONARY):
-                dict_vals, _ = codecs.decode_int_rle(
-                    self.stream(type_id, StreamKind.DICTIONARY_DATA),
-                    enc.dictionarySize,
-                    signed=True,
+                dict_vals = self._dictionary(
+                    type_id,
+                    lambda: codecs.decode_int_rle(
+                        self.stream(type_id, StreamKind.DICTIONARY_DATA),
+                        enc.dictionarySize,
+                        signed=True,
+                    )[0],
                 )
                 ids = self._ints_window(type_id, StreamKind.DATA, cur, nd, signed=False)
                 vals = dict_vals[ids]
@@ -533,10 +610,9 @@ class _StripeDecoder:
         elif kind in (TypeKind.STRING, TypeKind.BINARY):
             if enc.kind == int(ColumnEncodingKind.DICTIONARY):
                 n_dict = enc.dictionarySize
-                key_lengths, _ = codecs.decode_int_rle(
-                    self.stream(type_id, StreamKind.LENGTH), n_dict, signed=False
+                dict_arr = self._dictionary(
+                    type_id, lambda: self._string_dictionary(type_id, n_dict)
                 )
-                key_data = self.stream(type_id, StreamKind.DICTIONARY_DATA).tobytes()
                 if self.has_stream(type_id, StreamKind.IN_DICTIONARY):
                     # A14 stride dictionaries, seek path: this stride's
                     # side dictionary loads from its own positions
@@ -571,21 +647,13 @@ class _StripeDecoder:
                         type_id, StreamKind.IN_DICTIONARY, cur, nd
                     )
                     ids = np.where(in_dict, ids, n_dict + ids)
-                    key_lengths = np.concatenate([key_lengths, sd_lengths])
-                    key_data = key_data + sd_raw.tobytes()
-                    n_dict += int(sd_size)
+                    dict_arr = pa.concat_arrays(
+                        [dict_arr, _large_utf8(sd_lengths, sd_raw.tobytes())]
+                    )
                 else:
                     ids = self._ints_window(
                         type_id, StreamKind.DATA, cur, nd, signed=False
                     )
-                key_offsets = np.concatenate(
-                    [np.zeros(1, dtype=np.int64), np.cumsum(key_lengths)]
-                )
-                dict_arr = pa.Array.from_buffers(
-                    pa.large_utf8(),
-                    n_dict,
-                    [None, pa.py_buffer(key_offsets.tobytes()), pa.py_buffer(key_data)],
-                )
                 dense = dict_arr.take(pa.array(ids, type=pa.int64())).cast(pa.string())
             else:
                 lengths = self._ints_window(
@@ -994,6 +1062,13 @@ class DwrfFile:
         self._verify_on_read = verify_checksums
         self._verified_stripes: set[int] = set()
         self._verify_triples: list[tuple[int, int, int]] | None = None
+        # The handle's one lock. It guards every shared cache of the
+        # point-lookup path: the decoder LRU and decoded-stride LRU below,
+        # and the memo caches of the decoders (_StripeDecoder). It guards
+        # bookkeeping and IO, never a decode.
+        import threading as _threading
+
+        self._lock = _threading.Lock()
         # point-lookup decoder reuse (read_row): (stripe, projection) ->
         # no-prefetch _StripeDecoder with warmed dictionary/index caches
         self._point_decoders: dict = {}
@@ -1002,16 +1077,12 @@ class DwrfFile:
         # steady state re-reads a hot working set, and under concurrent
         # clients EVERY thread used to re-decode the same stride (the
         # r8-measured 9.8 ms/lookup at 32 clients vs 1.8 ms/row batched);
-        # with the arrays cached a repeat hit is a dict move + .take.
+        # with the arrays cached a repeat hit is a dict move + a gather.
         # Byte-budgeted (SPARK_GRAFT_STRIDE_CACHE_MB, default 64) so a
-        # wide scan through cold strides can't pin the heap; the lock
-        # guards only cache bookkeeping, never a decode.
-        import threading as _threading
-
+        # wide scan through cold strides can't pin the heap.
         self._stride_arrays: dict = {}
         self._stride_bytes = 0
         self._stride_budget = stride_cache_budget()
-        self._stride_lock = _threading.Lock()
         self._f = get_fs(path).open(path, "rb")
         try:
             self._read_tail(path)
@@ -1684,40 +1755,41 @@ class DwrfFile:
         reads per open file): keyed by (stripe, projection); built with
         prefetch=False so a seek never pays a whole-stripe read — only the
         touched streams pread (memoized) and only the covering blocks
-        decompress. Dictionary/index streams cache inside the decoder, so
-        lookup k>1 is pure stride-window work. The cache is LRU (hit moves
-        the key to the back, overflow evicts the FRONT) so workloads
-        alternating across more than the cap's (stripe, projection) pairs
-        keep their warm working set instead of rebuilding every decoder."""
+        decompress. Dictionaries, indexes and decompressed blocks cache
+        inside the decoder, so lookup k>1 is pure stride-window work. The
+        cache is LRU (hit moves the key to the back, overflow evicts the
+        FRONT) so workloads alternating across more than the cap's (stripe,
+        projection) pairs keep their warm working set instead of rebuilding
+        every decoder. Threads share the decoders: the LRU is touched only
+        under the handle's lock, and a decoder is built (a stripe-footer
+        read) outside it; when two threads build the same one, the first
+        to insert wins and both use its decoder."""
         key = (
             stripe_index,
             tuple(sorted(include_ids)) if include_ids is not None else None,
         )
-        # pop+reinsert is the LRU touch (dict preserves insertion order);
-        # pop with default keeps concurrent lookups on a shared handle
-        # safe — the worst race is two threads building the same decoder,
-        # which is idempotent
-        dec = self._point_decoders.pop(key, None)
-        if dec is not None:
-            self._point_decoders[key] = dec
-            return dec
-        while len(self._point_decoders) >= 8:  # cap: stripes x projections
-            try:
-                self._point_decoders.pop(next(iter(self._point_decoders)))
-            except (StopIteration, KeyError):  # concurrent evictor won
-                break
-        dec = _StripeDecoder(
+        with self._lock:
+            # pop+reinsert is the LRU touch (dict preserves insertion order)
+            dec = self._point_decoders.pop(key, None)
+            if dec is not None:
+                self._point_decoders[key] = dec
+                return dec
+        built = _StripeDecoder(
             self,
             self.footer.stripes[stripe_index],
             include_ids,
             index_ids=index_ids,
             prefetch=False,
         )
-        self._point_decoders[key] = dec
+        with self._lock:
+            dec = self._point_decoders.pop(key, None) or built
+            self._point_decoders[key] = dec
+            while len(self._point_decoders) > 8:  # cap: stripes x projections
+                self._point_decoders.pop(next(iter(self._point_decoders)))
         return dec
 
     def _stride_cache_get(self, key):
-        with self._stride_lock:
+        with self._lock:
             arr = self._stride_arrays.pop(key, None)
             if arr is not None:  # LRU touch: reinsert at the back
                 self._stride_arrays[key] = arr
@@ -1727,7 +1799,7 @@ class DwrfFile:
         nbytes = arr.nbytes
         if nbytes > self._stride_budget:
             return  # a single oversized array would evict everything
-        with self._stride_lock:
+        with self._lock:
             if key in self._stride_arrays:  # concurrent decoder won
                 return
             self._stride_arrays[key] = arr
@@ -1737,7 +1809,7 @@ class DwrfFile:
     def _stride_evict_to(self, target: int) -> None:
         """Evict from the FRONT until at most `target` bytes stay (dict
         preserves insertion order; a hit reinserts at the back, so the
-        front is least-recent). Caller holds _stride_lock."""
+        front is least-recent). Caller holds _lock."""
         while self._stride_bytes > target and self._stride_arrays:
             old = self._stride_arrays.pop(next(iter(self._stride_arrays)))
             self._stride_bytes -= old.nbytes
@@ -1745,7 +1817,7 @@ class DwrfFile:
     def _stride_cache_trim(self, nbytes: int) -> int:
         """Evict least-recent arrays until `nbytes` are freed or the cache
         is empty; returns the bytes freed."""
-        with self._stride_lock:
+        with self._lock:
             before = self._stride_bytes
             self._stride_evict_to(before - nbytes)
             return before - self._stride_bytes
@@ -1843,15 +1915,15 @@ class DwrfFile:
 
         Cost model: requested rows are grouped stripe -> stride; each
         touched stride of each projected column is decoded exactly ONCE
-        and all rows falling in it are gathered with a vectorized take —
-        k lookups landing in the same stride cost one stride decode plus
-        O(k) gathers, where the read_row loop pays k stride decodes.
+        and all rows falling in it are gathered at once (a slice when
+        they are contiguous, else one take) — k lookups landing in the
+        same stride cost one stride decode plus one gather, where the
+        read_row loop pays k stride decodes. Each column's pieces join
+        with one concat and reorder to input order with at most one take.
         Footer / stripe-footer / ROW_INDEX parses are amortized across
         the batch through the shared LRU point-decoder cache, and columns
         without seek positions (UNION, legacy files) fall back to ONE
         whole-stripe decode per (stripe, column) for the entire batch."""
-        import bisect
-
         ids = [int(r) for r in row_numbers]
         for r in ids:
             if r < 0 or r >= self.num_rows:
@@ -1888,7 +1960,9 @@ class DwrfFile:
             by_stripe.setdefault(i, []).append((r - firsts[i], pos))
         index_ids = {tid for _, tid in tops}
         pieces: dict[str, list[pa.Array]] = {name: [] for name, _ in tops}
-        order: list[int] = []  # output position of each gathered row
+        # row of the joined pieces that each output position takes
+        src = [0] * len(ids)
+        joined = 0
         for i in sorted(by_stripe):
             rows = by_stripe[i]
             n_rows = self.footer.stripes[i].numberOfRows
@@ -1904,16 +1978,20 @@ class DwrfFile:
             stripe_cols: dict[int, pa.Array] = {}  # fallback decode cache
             for s_idx in sorted(by_stride):
                 offs_pos = by_stride[s_idx]
-                offs = pa.array(
-                    [o for o, _ in offs_pos], type=pa.int64()
-                )
+                # each distinct row is gathered once, in row order
+                offs = sorted({o for o, _ in offs_pos})
+                at = {o: joined + k for k, o in enumerate(offs)}
+                for o, pos in offs_pos:
+                    src[pos] = at[o]
+                joined += len(offs)
+                gather = _gatherer(offs)
                 for name, tid in tops:
                     if s_idx >= 0:
                         try:
                             arr = self._cached_stride_column(
                                 dec, i, tid, s_idx, stride, n_rows
                             )
-                            pieces[name].append(arr.take(offs))
+                            pieces[name].append(gather(arr))
                             continue
                         except NoStridePositions:
                             pass
@@ -1922,27 +2000,15 @@ class DwrfFile:
                         col = self._cached_whole_column(dec, i, tid, n_rows)
                         stripe_cols[tid] = col
                     base = s_idx * stride if s_idx >= 0 else 0
-                    pieces[name].append(
-                        col.take(
-                            pa.array(
-                                [base + o for o, _ in offs_pos],
-                                type=pa.int64(),
-                            )
-                        )
-                    )
-                order.extend(pos for _, pos in offs_pos)
-        inv = np.empty(len(ids), dtype=np.int64)
-        inv[np.asarray(order, dtype=np.int64)] = np.arange(
-            len(ids), dtype=np.int64
-        )
-        take = pa.array(inv)
+                    pieces[name].append(gather(col.slice(base)))
+        reorder = None
+        if src != list(range(len(ids))):
+            reorder = pa.array(src, type=pa.int64())
         cols = []
         for name, _tid in tops:
             parts = pieces[name]
-            joined = (
-                pa.concat_arrays(parts) if len(parts) > 1 else parts[0]
-            )
-            cols.append(joined.take(take))
+            col = pa.concat_arrays(parts) if len(parts) > 1 else parts[0]
+            cols.append(col if reorder is None else col.take(reorder))
         return pa.table(cols, schema=schema)
 
     def __enter__(self):

@@ -135,6 +135,19 @@ class TestCompression:
             enc = codecs.compress_stream(payload, kind, 64 * 1024)
             assert codecs.decompress_stream(enc, kind) == payload
 
+    @pytest.mark.parametrize("size", [1_000, 4_096, 50_000])
+    def test_zlib_bufsize_is_only_a_hint(self, size):
+        """Readers size zlib's output buffer to the file's block size; a
+        block inflating to less, exactly that, or more (a foreign writer's
+        oversize block) must decode the same."""
+        payload = (b"0123456789abcdef" * (size // 16 + 1))[:size]
+        block = codecs._compress_block(payload, CompressionKind.ZLIB, 4)
+        assert codecs._decompress_block(block, CompressionKind.ZLIB, 4_096) == payload
+        framed = codecs.compress_stream(payload, CompressionKind.ZLIB, 1 << 20)
+        assert (
+            codecs.decompress_stream(framed, CompressionKind.ZLIB, 4_096) == payload
+        )
+
     def test_incompressible_stored_original(self):
         rng = np.random.default_rng(3)
         payload = rng.bytes(1000)

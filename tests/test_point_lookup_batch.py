@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 import sys
 import threading
+import time
 from collections import Counter, OrderedDict
 
 import numpy as np
@@ -565,3 +566,274 @@ class TestLookupHandleCache:
         trace = {}
         lookup_keys(four_parts, "k", [1], trace=trace)
         assert trace["files_opened"] == 3
+
+
+def _mixed_table(n: int) -> pa.Table:
+    """Every stride-decodable kind, NULLs in the data columns, and
+    low-cardinality int and string columns the writer dictionary-encodes."""
+    i = np.arange(n, dtype=np.int64)
+    return pa.table(
+        {
+            "i": pa.array(i),
+            "d": pa.array([None if r % 11 == 0 else r % 37 for r in range(n)], type=pa.int64()),
+            "s": pa.array([None if r % 13 == 0 else f"w{r % 53}" for r in range(n)]),
+            "txt": pa.array([f"row-{r}-{r * 7919 % 10007}" for r in range(n)]),
+            "f": pa.array([None if r % 7 == 0 else r / 4 for r in range(n)], type=pa.float64()),
+            "lst": pa.array(
+                [[r, r + 1] if r % 5 else None for r in range(n)], type=pa.list_(pa.int64())
+            ),
+            "m": pa.array(
+                [[(f"k{r % 3}", r)] if r % 6 else [] for r in range(n)],
+                type=pa.map_(pa.string(), pa.int64()),
+            ),
+            "st": pa.array(
+                [{"a": r % 5, "b": None if r % 4 == 0 else f"x{r % 3}"} for r in range(n)],
+                type=pa.struct([("a", pa.int64()), ("b", pa.string())]),
+            ),
+        }
+    )
+
+
+@pytest.fixture(scope="module")
+def mixed_file(tmp_path_factory):
+    """3 stripes of 2000 rows, strides of 250, 2 KB compression blocks."""
+    path = str(tmp_path_factory.mktemp("mixed") / "m.dwrf")
+    write_arrow_table(
+        path,
+        _mixed_table(6_000),
+        stripe_rows=2_000,
+        row_index_stride=250,
+        compression_block_size=2_048,
+    )
+    return path
+
+
+def _ids(n_rows: int) -> dict[str, list[int]]:
+    rng = np.random.default_rng(11)
+    return {
+        "duplicates_unsorted": [5_000, 3, 3, 1_999, 2_000, 5_000, 250, 4],
+        "contiguous_run": list(range(600, 640)),
+        "scattered_run": [745, 600, 610, 601],
+        "run_and_scatter": list(range(2_010, 2_020)) + [2_240, 2_003, 2_240, 1_000],
+        "stripe_edges": [0, 1_999, 2_000, 3_999, 4_000, 5_999],
+        "thousands_few_strides": [int(r) for r in rng.integers(4_000, 4_750, 3_000)],
+        "everywhere": [int(r) for r in rng.permutation(n_rows)[:500]],
+    }
+
+
+class TestGatherParity:
+    """read_rows_at and lookup_keys gather a slice per contiguous run and
+    one take per scattered run; every shape must equal a full read."""
+
+    def test_gatherer_branches(self):
+        from hive_dwrf_spark.format.reader import _gatherer
+
+        arr = pa.array(np.arange(100, dtype=np.int64) * 3)
+        run = _gatherer([40, 41, 42])(arr)
+        assert run.to_pylist() == [120, 123, 126]
+        # a run is a zero-copy window onto the same buffer
+        assert run.buffers()[1].address == arr.buffers()[1].address
+        assert _gatherer(np.array([7]))(arr).to_pylist() == [21]
+        assert _gatherer([2, 50, 51])(arr).to_pylist() == [6, 150, 153]
+
+    @pytest.mark.parametrize("case", sorted(_ids(6_000)))
+    @pytest.mark.parametrize("columns", [None, ["s", "st.b", "m", "d"]])
+    def test_read_rows_at(self, mixed_file, case, columns):
+        ids = _ids(6_000)[case]
+        with DwrfFile(mixed_file) as f:
+            want = f.read(columns=columns).take(pa.array(ids))
+            assert f.read_rows_at(ids, columns=columns).equals(want)
+            # again through the warm decoder and stride caches
+            assert f.read_rows_at(ids, columns=columns).equals(want)
+
+    def test_read_rows_at_without_row_index(self, tmp_path):
+        path = str(tmp_path / "legacy.dwrf")
+        write_arrow_table(path, _mixed_table(3_000), stripe_rows=1_000, row_index_stride=0)
+        ids = [2_999, 5, 6, 7, 1_000, 5, 1_500, 1_100]
+        with DwrfFile(path) as f:
+            assert f.read_rows_at(ids).equals(f.read().take(pa.array(ids)))
+
+    def test_read_rows_at_union_fallback(self, tmp_path):
+        """A UNION column has no seek positions: its rows come from one
+        whole-stripe decode, gathered at the stride's offset."""
+        n = 3_000
+        table = pa.table(
+            {
+                "i": pa.array(np.arange(n, dtype=np.int64)),
+                "u": pa.array(
+                    [
+                        {"tag": 0, "field0": r, "field1": None}
+                        if r % 3
+                        else {"tag": 1, "field0": None, "field1": f"s{r}"}
+                        for r in range(n)
+                    ],
+                    type=pa.struct(
+                        [("tag", pa.int8()), ("field0", pa.int64()), ("field1", pa.string())]
+                    ),
+                ),
+            }
+        )
+        path = str(tmp_path / "u.dwrf")
+        write_arrow_table(path, table, union_columns={"u"}, stripe_rows=1_000, row_index_stride=250)
+        ids = [0, 1, 7, 600, 601, 602, 749, 1_500, 2_999, 7, 2_260, 2_251]
+        with DwrfFile(path) as f:
+            assert f.read_rows_at(ids).equals(f.read().take(pa.array(ids)))
+
+    @staticmethod
+    def _key_dir(root, name: str, tables: list[pa.Table], **options) -> str:
+        d = os.path.join(str(root), name)
+        os.makedirs(d)
+        for n, t in enumerate(tables):
+            write_arrow_table(os.path.join(d, f"part-{n}.dwrf"), t, **options)
+        return d
+
+    @pytest.fixture(scope="class")
+    def unsorted_dir(self, tmp_path_factory):
+        """Keys in a seeded permutation with duplicates, so every stride's
+        min/max admits many keys and hits are scattered."""
+        rng = np.random.default_rng(5)
+        t = _mixed_table(8_000)
+        k = rng.permutation(8_000) // 2  # each key on two scattered rows
+        t = t.append_column("k", pa.array(k, type=pa.int64()))
+        return self._key_dir(
+            tmp_path_factory.mktemp("keys"),
+            "unsorted",
+            [t.slice(0, 4_000), t.slice(4_000)],
+            stripe_rows=1_500,
+            row_index_stride=250,
+            compression_block_size=2_048,
+        )
+
+    @pytest.mark.parametrize(
+        "keys",
+        [[7], [7, 8, 9, 1_999], list(range(0, 4_000, 9)), [None, 12, 3_999, 10**9]],
+        ids=["one", "few", "hundreds", "null_and_absent"],
+    )
+    def test_lookup_unsorted_int_keys(self, unsorted_dir, keys):
+        got = lookup_keys(unsorted_dir, "k", keys)
+        assert got.equals(_reference(unsorted_dir, "k", [k for k in keys if k is not None]))
+        cols = ["st", "k", "lst"]
+        got = lookup_keys(unsorted_dir, "k", keys, columns=cols)
+        assert got.equals(
+            _reference(unsorted_dir, "k", [k for k in keys if k is not None]).select(cols)
+        )
+
+    def test_lookup_sorted_runs(self, tmp_path):
+        """Range-sorted keys: each key's rows form one contiguous run."""
+        t = _mixed_table(6_000)
+        t = t.append_column("k", pa.array(np.arange(6_000) // 3, type=pa.int64()))
+        d = self._key_dir(tmp_path, "sorted", [t], stripe_rows=2_000, row_index_stride=250)
+        keys = [0, 83, 84, 666, 667, 1_999, 5_000]
+        assert lookup_keys(d, "k", keys).equals(_reference(d, "k", keys))
+
+    def test_lookup_string_keys(self, unsorted_dir):
+        keys = ["w3", "w52", "nope"]
+        assert lookup_keys(unsorted_dir, "s", keys).equals(_reference(unsorted_dir, "s", keys))
+
+    def test_lookup_int_key_column_with_nulls(self, unsorted_dir):
+        """"d" holds NULLs: matching takes the Arrow path, NULLs never match."""
+        keys = [0, 5, 36]
+        got = lookup_keys(unsorted_dir, "d", keys)
+        assert got.num_rows > 0
+        assert got.equals(_reference(unsorted_dir, "d", keys))
+
+    def test_lookup_without_row_index(self, tmp_path):
+        t = _mixed_table(3_000)
+        t = t.append_column("k", pa.array(np.arange(3_000)[::-1] % 700, type=pa.int64()))
+        d = self._key_dir(tmp_path, "legacy", [t], stripe_rows=1_000, row_index_stride=0)
+        keys = [0, 1, 699, 350]
+        assert lookup_keys(d, "k", keys).equals(_reference(d, "k", keys))
+
+    def test_lookup_union_output_column(self, tmp_path):
+        """A projected UNION column falls back to a whole-stripe decode,
+        gathered at the key stride's offset."""
+        n = 2_000
+        t = pa.table(
+            {
+                "k": pa.array(np.arange(n) % 500, type=pa.int64()),
+                "u": pa.array(
+                    [
+                        {"tag": 0, "field0": r, "field1": None}
+                        if r % 2
+                        else {"tag": 1, "field0": None, "field1": f"s{r}"}
+                        for r in range(n)
+                    ],
+                    type=pa.struct(
+                        [("tag", pa.int8()), ("field0", pa.int64()), ("field1", pa.string())]
+                    ),
+                ),
+            }
+        )
+        d = self._key_dir(
+            tmp_path, "union", [t], union_columns={"u"}, stripe_rows=1_000, row_index_stride=250
+        )
+        keys = [3, 260, 499]
+        assert lookup_keys(d, "k", keys).equals(_reference(d, "k", keys))
+
+
+def test_threads_share_handle_caches(mixed_file, monkeypatch):
+    """8 threads on ONE handle cycle through 12 (stripe, projection)
+    pairs, more than the decoder cache holds, with stride and block caches
+    small enough to evict constantly. Every answer equals a serial read,
+    nothing raises, and no decoder's block-cache byte count loses an
+    update."""
+    from hive_dwrf_spark.format import reader as reader_mod
+
+    monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
+    monkeypatch.setattr(reader_mod._StripeDecoder, "_BLK_CACHE_BUDGET", 16 * 1024)
+    projections = [None, ["i", "s"], ["txt", "d", "st"], ["f", "lst", "m"]]
+    rng = np.random.default_rng(3)
+    requests = [
+        (cols, [int(r) for r in stripe * 2_000 + rng.integers(0, 2_000, 12)])
+        for stripe in range(3)
+        for cols in projections
+    ]
+    with DwrfFile(mixed_file) as f:
+        serial = [f.read_rows_at(ids, columns=cols) for cols, ids in requests]
+
+    shared = DwrfFile(mixed_file)
+    decoders: dict[int, object] = {}
+    point_decoder = shared._point_decoder
+
+    def recording(*a):
+        dec = point_decoder(*a)
+        decoders[id(dec)] = dec
+        return dec
+
+    shared._point_decoder = recording
+    errors: list[BaseException] = []
+    mismatches: list[tuple[int, int]] = []
+    stop = threading.Event()
+    deadline = time.monotonic() + 3.0
+
+    def client(c: int) -> None:
+        try:
+            j = c // 4  # two groups of four threads in step
+            while time.monotonic() < deadline and not stop.is_set():
+                k = (j * 5) % len(requests)
+                cols, ids = requests[k]
+                if not shared.read_rows_at(ids, columns=cols).equals(serial[k]):
+                    mismatches.append((c, k))
+                j += 1
+        except BaseException as e:  # reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=client, args=(c,)) for c in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        stop.set()
+    finally:
+        sys.setswitchinterval(old)
+    shared.close()
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert not mismatches, mismatches
+    assert len(decoders) > 8
+    for dec in decoders.values():
+        held = sum(p.nbytes for p in dec._blk_cache.values())
+        assert dec._blk_cache_bytes == held
