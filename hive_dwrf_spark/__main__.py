@@ -11,7 +11,8 @@ runbook against a table directory.
                                         bytes read (A27 surface)
     lookup  <path> <key_col> <k1,k2,..> batched point lookup with file/
                                         stride pruning; rows as JSON
-                                        lines
+                                        lines, then the pruning and the
+                                        bytes the open handles hold
     compact <dir> <out.dwrf>            merge all part files into one by
                                         raw stripe copy (A22, no decode)
     verify  <path>                      scrub file(s) against recorded
@@ -103,7 +104,7 @@ def _parse_key(s: str):
 
 
 def _cmd_lookup(args: list[str]) -> int:
-    from .format.lookup import lookup_keys
+    from .format.lookup import cache_bytes, lookup_keys
 
     if len(args) != 3:
         print("usage: lookup <path> <key_col> <k1,k2,...>", file=sys.stderr)
@@ -119,6 +120,13 @@ def _cmd_lookup(args: list[str]) -> int:
         f"{trace['files_total']} pruned, strides "
         f"{trace['strides_scanned']}/{trace['strides_total']} scanned, "
         f"{trace['files_opened']} files opened",
+        file=sys.stderr,
+    )
+    held = cache_bytes()
+    print(
+        "# cache bytes: "
+        + ", ".join(f"{layer} {n}" for layer, n in held.items())
+        + f"; total {sum(held.values())}",
         file=sys.stderr,
     )
     return 0

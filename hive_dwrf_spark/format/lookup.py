@@ -9,7 +9,8 @@ scale the table is thousands of range-sorted files and callers look up
 key BATCHES, so this module does both halves in one pass:
 
   file level   : each file's footer column statistics (min/max of the
-                 key column — zero data bytes read) prune files that
+                 key column, from the footer plan cache of plans.py —
+                 zero data bytes read, no handle opened) prune files that
                  cannot contain any requested key;
   stride level : within a surviving file, the key column's ROW_INDEX
                  per-stride statistics prune strides the same way;
@@ -21,22 +22,30 @@ key BATCHES, so this module does both halves in one pass:
                  run of rows, one take for a scattered one.
 
 Parses and decodes amortize across CALLS, not only within one batch:
-every file is served from a process-wide open DwrfFile handle, so its
-footer, stripe footers and ROW_INDEX are parsed once, and stride decodes
-go through the handle's decoded-stride LRU (the one DwrfFile.read_row
-uses) — a hot stride is decoded once for all calls and threads.
+every file that holds keys is served from a process-wide open DwrfFile
+handle, so its footer, stripe footers and ROW_INDEX are parsed once, and
+stride decodes go through the handle's decoded-stride LRU (the one
+DwrfFile.read_row uses) — a hot stride is decoded once for all calls and
+threads. A file its footer summary prunes is never opened, so a
+directory of more files than _HANDLES_MAX keeps its handles as long as
+the files a call reads fit.
 
   identity : a handle is reused while (path, get_fs(path).stat_key(path))
              — size and mtime — is unchanged, the identity of the
-             DataSource's footer plan cache (_PLAN_CACHE). Like that cache
-             it assumes files are written once: a replacement or rewrite
-             changes size or mtime and is reopened, but an in-place
-             rewrite keeping both would be served from the stale handle.
+             footer plan cache (plans.py). Like that cache it assumes
+             files are written once: a replacement or rewrite changes
+             size or mtime and is reopened, but an in-place rewrite
+             keeping both would be served from the stale handle.
   bounds   : at most _HANDLES_MAX handles stay open (least recently used
-             dropped first), and the decoded strides held by all of them
-             stay within one SPARK_GRAFT_STRIDE_CACHE_MB budget — after
-             each file a call decodes from, the least recently used
-             handles' strides are evicted first.
+             dropped first). A handle holds decoded strides, at most
+             _StripeDecoder._BLK_CACHE_BUDGET of decompressed blocks in
+             each of its at most 8 stripe decoders, and the stripes'
+             dictionaries, row indexes and whole-stream decodes; it keeps
+             no compressed bytes, so none of this grows with the file.
+             The decoded strides of all handles stay within one
+             SPARK_GRAFT_STRIDE_CACHE_MB budget — after each file a call
+             decodes from, the least recently used handles' strides are
+             evicted first. cache_bytes() reports what the handles hold.
   lifetime : the cache owns its handles; callers never close them. An
              evicted handle is dropped, not closed, because another
              thread may be mid-read; its file closes with the last
@@ -58,11 +67,13 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .fs import get_fs
+from .plans import file_plans, plan_of
 from .reader import (
     DwrfFile,
     NoStridePositions,
     _corrupt_guard,
     _gatherer,
+    _resolve_field,
     stride_cache_budget,
 )
 from .stats import stats_from_proto
@@ -77,10 +88,12 @@ _HANDLES: "OrderedDict[str, tuple[tuple, DwrfFile]]" = OrderedDict()
 _HANDLES_LOCK = threading.Lock()
 
 
-def shared_handle(path: str) -> tuple[DwrfFile, bool]:
+def shared_handle(path: str, ident: tuple | None = None) -> tuple[DwrfFile, bool]:
     """The process-wide open handle of the DWRF file `path`, and whether
-    this call had to open it. The cache owns the handle: never close it."""
-    ident = get_fs(path).stat_key(path)
+    this call had to open it. `ident` is get_fs(path).stat_key(path), when
+    the caller has it. The cache owns the handle: never close it."""
+    if ident is None:
+        ident = get_fs(path).stat_key(path)
     with _HANDLES_LOCK:
         hit = _HANDLES.get(path)
         if hit is not None and hit[0] == ident:
@@ -112,6 +125,18 @@ def _trim_decoded() -> None:
         if excess <= 0:
             break
         excess -= f._stride_cache_trim(excess)
+
+
+def cache_bytes() -> dict[str, int]:
+    """Bytes held by all cached handles, per cache layer (the layers of
+    DwrfFile.cache_bytes, summed)."""
+    with _HANDLES_LOCK:
+        handles = [f for _, f in _HANDLES.values()]
+    total: dict[str, int] = {}
+    for f in handles:
+        for layer, n in f.cache_bytes().items():
+            total[layer] = total.get(layer, 0) + n
+    return total
 
 
 def _list_files(path: str) -> list[str]:
@@ -185,23 +210,58 @@ def lookup_keys(
         raise ValueError("lookup_keys requires at least one non-null key")
     key_set = pa.array(key_list)
     files = _list_files(path)
+    fs = get_fs(files[0])
+    idents = {fp: fs.stat_key(fp) for fp in files}
+    # a file without a cached footer summary gets it from its shared
+    # handle, so a cold call parses each footer once; the handles stay
+    # at hand for this call even if the handle LRU drops them meanwhile
+    planned: dict[str, DwrfFile] = {}
+    opened_for_plan: list[str] = []
+
+    def plan_from_handle(fp: str):
+        f, opened = shared_handle(fp, idents[fp])
+        planned[fp] = f
+        if opened:
+            opened_for_plan.append(fp)
+        return plan_of(f)
+
+    plans = file_plans(files, plan_from_handle, stat_keys=idents)
+
+    def handle(fp: str) -> DwrfFile:
+        f = planned.get(fp)
+        if f is None:
+            f, opened = shared_handle(fp, idents[fp])
+            if opened and trace is not None:
+                trace["files_opened"] += 1
+        return f
+
     if trace is not None:
         trace.update(
             files_total=len(files),
             files_pruned=0,
-            files_opened=0,
+            files_opened=len(opened_for_plan),
             strides_total=0,
             strides_scanned=0,
         )
     out_chunks: dict[str, list[pa.Array]] = {}
     schema: pa.Schema | None = None
     for fp in files:
-        f, opened = shared_handle(fp)
-        if opened and trace is not None:
-            trace["files_opened"] += 1
-        key_tid = f._top_level_id(key_column)
-        if key_tid is None:
+        plan = plans[fp]
+        key_name = _resolve_field(key_column, list(plan.stats_by_name))
+        if key_name is None:
             raise KeyError(f"{key_column!r} not in {fp}")
+        if schema is None and columns is None:
+            schema = plan.arrow_schema
+        if not plan.stripe_sizes:
+            continue  # an empty file holds no keys
+        # --- file-level pruning: footer summary only, no handle ---
+        st = plan.stats_by_name[key_name]
+        if st is not None and not _keys_in_range(key_list, st.minimum, st.maximum):
+            if trace is not None:
+                trace["files_pruned"] += 1
+            continue
+        f = handle(fp)
+        key_tid = f._top_level_id(key_name)
         if columns is not None:
             tops, include_ids = f._parse_projection(columns)
             if schema is None:
@@ -216,16 +276,6 @@ def lookup_keys(
             root = f.types[0]
             tops = list(zip(root.fieldNames, root.subtypes))
             include_ids = None
-            if schema is None:
-                schema = f.schema
-        if f.num_rows == 0:
-            continue
-        # --- file-level pruning: footer stats only, no data bytes ---
-        st = f.file_stats(key_tid)
-        if not _keys_in_range(key_list, st.minimum, st.maximum):
-            if trace is not None:
-                trace["files_pruned"] += 1
-            continue
         kind = TypeKind(f.types[key_tid].kind)
         stride = f.footer.rowIndexStride
         index_ids = {tid for _, tid in tops} | {key_tid}
@@ -308,6 +358,8 @@ def lookup_keys(
                     if len(hits):
                         emit(hits, karr, s_idx * stride, s_idx)
         _trim_decoded()
+    if schema is None:  # no file held keys: the projection's schema
+        schema = handle(files[0]).projected_schema(columns)
     cols = []
     for field in schema:
         parts = out_chunks.get(field.name, [])

@@ -217,7 +217,10 @@ class _StripeDecoder:
     _COALESCE_GAP = 64 * 1024
     #: if included streams cover more than this fraction, read eagerly
     _EAGER_FRACTION = 0.75
-    #: byte budget of each decoder's decompressed-block cache
+    #: byte budget of each decoder's decompressed-block cache. Point reads
+    #: keep no compressed bytes (see _raw_slice), so this bounds all the
+    #: stream data a decoder holds outside its whole-stream memo, however
+    #: large the file
     _BLK_CACHE_BUDGET = 32 * 1024 * 1024
 
     def __init__(
@@ -228,11 +231,11 @@ class _StripeDecoder:
         index_ids: set[int] | None = None,
         prefetch: bool = True,
     ):
-        """prefetch=False skips the up-front chunk read entirely — streams
-        are then fetched on demand via the _raw_slice direct-IO fallback
-        (one pread of the touched stream's compressed range). The point-
-        lookup path uses this: a seek that decodes one stride must not
-        pay a whole-stripe read per call."""
+        """prefetch=False skips the up-front chunk read entirely — stream
+        bytes are then read on demand (_raw_slice): a whole stream for
+        stream(), one compressed block at a time for a stride window. The
+        point-lookup path uses this: a seek that decodes one stride must
+        not pay a whole-stripe read per call."""
         self.r = reader
         self.stripe = stripe
         self._index_ids = index_ids or set()
@@ -265,21 +268,22 @@ class _StripeDecoder:
         # same stream twice and stores an equal value; they take no lock.
         self._lock = reader._lock
         self._cache: dict[tuple[int, int], np.ndarray] = {}
-        self._raw_cache: dict[tuple[int, int], np.ndarray] = {}
         self._ri_cache: dict[int, proto.RowIndex] = {}
         # decoded stripe dictionaries (type id -> values), read-only once
         # built: a stride miss on a DICTIONARY column would otherwise
         # re-decode the whole DICTIONARY_DATA stream
         self._dicts: dict[int, object] = {}
-        # decompressed-block cache for the stride-seek path (_buf_at):
+        # decompressed-block cache for the stride-seek path (_block):
         # consecutive stride seeks overwhelmingly land in the SAME
         # compression block (a 256 KB block holds ~5-10 strides of a
         # typical int stream), so without this every point lookup re-ran
         # zlib over bytes a previous lookup already inflated — measured
         # ~50% of read_row wall time on the sf0.1 lookup table. Keyed by
         # (column, stream kind, block offset); insertion-order eviction
-        # under a byte budget.
+        # under a byte budget. _blk_next holds, per cached block, the
+        # offset of the block after it, and is evicted with it.
         self._blk_cache: dict[tuple[int, int, int], np.ndarray] = {}
+        self._blk_next: dict[tuple[int, int, int], int] = {}
         self._blk_cache_bytes = 0
         # per-thread decode scratch (present mask handoff to stride-dict
         # decode) so columns can decode concurrently
@@ -332,25 +336,26 @@ class _StripeDecoder:
     def has_stream(self, column: int, kind: StreamKind) -> bool:
         return (column, int(kind)) in self._ranges
 
-    def _raw_slice(self, off: int, ln: int) -> np.ndarray:
+    def _chunk_view(self, off: int, ln: int) -> np.ndarray | None:
+        """Stripe bytes [off, off + ln) as a view into a prefetched chunk,
+        or None when no chunk covers them."""
         for start, arr in self._chunks:
             if start <= off and off + ln <= start + len(arr):
                 return arr[off - start : off - start + ln]
-        # stream outside the prefetched ranges (no-prefetch point-lookup
-        # decoders, dump tooling): direct IO, memoized so a reused
-        # decoder preads each touched stream once, not once per lookup —
-        # bounded by the compressed size of the streams actually touched.
-        # The miss preads under the lock (IO, not a decode), so threads
-        # first touching one stream together read it once.
-        hit = self._raw_cache.get((off, ln))
-        if hit is None:
-            with self._lock:
-                hit = self._raw_cache.get((off, ln))
-                if hit is None:
-                    data = self.r._read_at(self.stripe.offset + off, ln)
-                    hit = np.frombuffer(data, dtype=np.uint8)
-                    self._raw_cache[(off, ln)] = hit
-        return hit
+        return None
+
+    def _raw_slice(self, off: int, ln: int) -> np.ndarray:
+        """Stripe bytes [off, off + ln). Outside the prefetched chunks
+        (no-prefetch point-lookup decoders, dump tooling) this is one plain
+        pread that nothing here keeps: callers keep what they derive from
+        it — stream() the decompressed stream, _block() the decompressed
+        block — so a long-lived decoder holds no compressed bytes."""
+        hit = self._chunk_view(off, ln)
+        if hit is not None:
+            return hit
+        return np.frombuffer(
+            self.r._read_at(self.stripe.offset + off, ln), dtype=np.uint8
+        )
 
     def stream(self, column: int, kind: StreamKind) -> np.ndarray:
         key = (column, int(kind))
@@ -390,58 +395,158 @@ class _StripeDecoder:
     # RLE groups are decoded — RecordReaderImpl.java:494-543 seekToRow +
     # RunLengthIntegerReader.java:94-126 skip semantics.
 
-    def _buf_at(self, col: int, kind: StreamKind, blk: int | None, off: int, need: int):
-        """(byte buffer, start pos) for reading `need` bytes of the
-        DECOMPRESSED stream starting at uncompressed offset `off` —
-        compressed files decompress only blocks from `blk` until covered."""
-        if self.r.compression == CompressionKind.NONE:
-            return self.stream(col, kind), int(off)
-        rng_off, rng_len = self._ranges[(col, int(kind))]
-        comp = self._raw_slice(rng_off, rng_len)
-        p = int(blk)
-        have = 0
-        need_total = int(off) + int(need)
-        parts: list[np.ndarray] = []
-        while p < rng_len and have < need_total:
-            header = int(comp[p]) | (int(comp[p + 1]) << 8) | (int(comp[p + 2]) << 16)
-            bl = header >> 1
-            if header & 1:
-                part = comp[p + 3 : p + 3 + bl]  # stored: zero-copy view
-            else:
-                ck = (col, int(kind), p)
-                part = self._blk_cache.get(ck)
-                if part is None:
-                    part = self._cache_block(
-                        ck,
-                        np.frombuffer(
-                            codecs._decompress_block(
-                                memoryview(comp[p + 3 : p + 3 + bl]),
-                                self.r.compression,
-                                self._bufsize,
-                            ),
-                            dtype=np.uint8,
-                        ),
-                    )
-            parts.append(part)
-            have += len(part)
-            p += 3 + bl
-        if not parts:
-            return np.zeros(0, dtype=np.uint8), int(off)
-        buf = parts[0] if len(parts) == 1 else np.concatenate(parts)
-        return buf, int(off)
+    def _block(self, col: int, kind: StreamKind, p: int) -> tuple[np.ndarray, int]:
+        """(decompressed block, offset of the next block) for the block
+        whose header sits at compressed offset `p` of stream (col, kind).
 
-    def _cache_block(self, ck, part: np.ndarray) -> np.ndarray:
-        """Insert a decompressed block into the block cache, evicting the
-        oldest blocks past the budget; returns the cached block (a
-        concurrent decoder's, if one won the race)."""
+        Outside the prefetched chunks each block is read on its own: at
+        most 3 + compressionBlockSize bytes from a conforming writer, read
+        and inflated in one GIL-releasing native call where one is built
+        (_native.pread_inflate) — under concurrent clients every extra
+        release is one more wait for the GIL. A block that does not lie
+        inside its stream's byte range raises DwrfCorruptError rather than
+        reading the neighbouring stream."""
+        ck = (col, int(kind), p)
+        part = self._blk_cache.get(ck)
+        if part is not None:
+            nxt = self._blk_next.get(ck)
+            if nxt is not None:  # else evicted between the two gets
+                return part, nxt
+        rng_off, rng_len = self._ranges[(col, int(kind))]
+        if p < 0 or p + 3 > rng_len:
+            raise DwrfCorruptError(
+                f"block at {p} outside stream ({col}, {kind.name}) of "
+                f"{rng_len} bytes"
+            )
+        comp = self._chunk_view(rng_off, rng_len)
+        if comp is None:
+            part, framed = self._read_block(col, kind, rng_off + p, rng_len - p)
+        else:
+            header = int(comp[p]) | (int(comp[p + 1]) << 8) | (int(comp[p + 2]) << 16)
+            framed = 3 + (header >> 1)
+            self._check_framed(col, kind, framed, rng_len - p)
+            body = comp[p + 3 : p + framed]
+            if header & 1:
+                return body, p + framed  # stored: zero-copy view
+            part = np.frombuffer(
+                codecs._decompress_block(
+                    memoryview(body), self.r.compression, self._bufsize
+                ),
+                dtype=np.uint8,
+            )
+        return self._cache_block(ck, part, p + framed), p + framed
+
+    @staticmethod
+    def _check_framed(col: int, kind: StreamKind, framed: int, avail: int) -> None:
+        if framed > avail:
+            raise DwrfCorruptError(
+                f"compressed block of {framed} bytes runs past stream "
+                f"({col}, {kind.name}), which has {avail} bytes left"
+            )
+
+    def _read_block(
+        self, col: int, kind: StreamKind, at: int, avail: int
+    ) -> tuple[np.ndarray, int]:
+        """(decompressed block, framed length) of the block at stripe
+        offset `at`, with `avail` bytes of its stream left from there."""
+        from ._native import pread_inflate
+
+        fileno = self.r._fileno
+        if (
+            pread_inflate is not None
+            and fileno is not None
+            and self.r.compression == CompressionKind.ZLIB
+        ):
+            out = np.empty(self._bufsize, dtype=np.uint8)
+            n, framed = pread_inflate(fileno, self.stripe.offset + at, avail, out)
+            if n >= 0:
+                # a stream's last block is short: shrink in place (a
+                # realloc, not a copy under the GIL) so it holds its bytes
+                if n < len(out):
+                    out.resize(n, refcheck=False)
+                return out, framed
+            self._check_framed(col, kind, framed, avail)  # raises on -2
+            if n != -4:  # -4: larger than the block size; inflate below
+                raise DwrfCorruptError(
+                    f"compressed block at {at} of stream ({col}, "
+                    f"{kind.name}): "
+                    + ("short read" if n == -1 else "damaged deflate data")
+                )
+        data = self._raw_slice(at, min(avail, 3 + self._bufsize))
+        header = int(data[0]) | (int(data[1]) << 8) | (int(data[2]) << 16)
+        framed = 3 + (header >> 1)
+        self._check_framed(col, kind, framed, avail)
+        if framed > len(data):  # a block larger than the declared size
+            data = self._raw_slice(at, framed)
+        body = data[3:framed]
+        if header & 1:
+            return body.copy(), framed  # stored: keep none of the read
+        block = codecs._decompress_block(
+            memoryview(body), self.r.compression, self._bufsize
+        )
+        return np.frombuffer(block, dtype=np.uint8), framed
+
+    def _window(self, col, kind, blk, off, need) -> np.ndarray:
+        """`need` bytes of the decompressed stream (fewer at its end) from
+        uncompressed offset `off` of the block at compressed offset `blk`.
+        Only the blocks the window spans are read and inflated, and only
+        the window's own bytes are joined; an uncompressed stream (blk
+        None) reads just the window."""
+        rng_off, rng_len = self._ranges[(col, int(kind))]
+        if blk is None:
+            off = int(off)
+            return self._raw_slice(rng_off + off, max(0, min(need, rng_len - off)))
+        parts: list[np.ndarray] = []
+        p, skip, have = int(blk), int(off), 0
+        while have < need and p < rng_len:
+            part, p = self._block(col, kind, p)
+            if skip >= len(part):
+                skip -= len(part)
+                continue
+            piece = part[skip : skip + need - have]
+            skip = 0
+            parts.append(piece)
+            have += len(piece)
+        if not parts:
+            return np.zeros(0, dtype=np.uint8)
+        return parts[0] if len(parts) == 1 else np.concatenate(parts)
+
+    def _rle_window(self, col, kind, blk, off, bound, decode):
+        """decode(window) over the RLE run starting at (blk, off), where
+        `bound` bytes always hold the values wanted. The window is the rest
+        of the starting block; it reaches into the next block only when
+        decode runs off that block's end (ValueError), and then joins at
+        most `bound` bytes, not the whole blocks."""
+        rng_len = self._ranges[(col, int(kind))][1]
+        if blk is None or int(blk) >= rng_len:
+            # uncompressed, or a position at the stream's end (no values)
+            return decode(self._window(col, kind, blk, off, bound))
+        part, nxt = self._block(col, kind, int(blk))
+        first = part[int(off) : int(off) + bound]
+        try:
+            return decode(first)
+        except ValueError:
+            if len(first) == bound or nxt >= rng_len:
+                raise
+            # the run goes on in the next block
+            return decode(self._window(col, kind, blk, off, bound))
+
+    def _cache_block(self, ck, part: np.ndarray, nxt: int) -> np.ndarray:
+        """Insert a decompressed block and the offset of the block after
+        it into the block cache, evicting the oldest blocks past the
+        budget; returns the cached block (a concurrent decoder's, if one
+        won the race)."""
         with self._lock:
             won = self._blk_cache.get(ck)
             if won is not None:
                 return won
             self._blk_cache[ck] = part
+            self._blk_next[ck] = nxt
             self._blk_cache_bytes += part.nbytes
             while self._blk_cache_bytes > self._BLK_CACHE_BUDGET:
-                old = self._blk_cache.pop(next(iter(self._blk_cache)))
+                old_key = next(iter(self._blk_cache))
+                old = self._blk_cache.pop(old_key)
+                del self._blk_next[old_key]
                 self._blk_cache_bytes -= old.nbytes
         return part
 
@@ -471,40 +576,38 @@ class _StripeDecoder:
 
     def _ints_at(self, col, kind, blk, off, skip, count, signed):
         total = skip + count
+
+        def decode(buf):
+            ac = codecs.int_rle_aligned_count(buf, total)
+            return codecs.decode_int_rle(buf, ac, signed)[0]
+
         # RLE v1 worst case ~11 B/value (10-byte varint + headers), plus a
         # group-alignment tail of at most 129 further values
-        buf, pos = self._buf_at(col, kind, blk, off, total * 11 + 1600)
-        ac = codecs.int_rle_aligned_count(buf[pos:], total)
-        vals, _ = codecs.decode_int_rle(buf, ac, signed, pos)
+        vals = self._rle_window(col, kind, blk, off, total * 11 + 1600, decode)
         return vals[skip : skip + count]
 
-    def _raw_at(self, col, kind, blk, off, need):
-        buf, pos = self._buf_at(col, kind, blk, off, need)
-        return buf[pos : pos + need]
+    def _byte_rle_at(self, col, kind, blk, off, total):
+        def decode(buf):
+            ac = codecs.byte_rle_aligned_count(buf, total)
+            return codecs.decode_byte_rle(buf, ac)[0]
+
+        return self._rle_window(col, kind, blk, off, total + total // 64 + 256, decode)
 
     def _bytes_window(self, col, kind, cur, count):
         blk, off = cur.instream()
         (skip,) = cur.take(1)
-        total = skip + count
-        buf, pos = self._buf_at(col, kind, blk, off, total + total // 64 + 256)
-        ac = codecs.byte_rle_aligned_count(buf[pos:], total)
-        vals, _ = codecs.decode_byte_rle(buf, ac, pos)
-        return vals[skip : skip + count]
+        return self._byte_rle_at(col, kind, blk, off, skip + count)[skip : skip + count]
 
     def _bits_window(self, col, kind, cur, count):
         blk, off = cur.instream()
         skip, bit = cur.take(2)
         nbytes = (bit + count + 7) // 8
-        total = skip + nbytes
-        buf, pos = self._buf_at(col, kind, blk, off, total + total // 64 + 256)
-        ac = codecs.byte_rle_aligned_count(buf[pos:], total)
-        raw, _ = codecs.decode_byte_rle(buf, ac, pos)
+        raw = self._byte_rle_at(col, kind, blk, off, skip + nbytes)
         return np.unpackbits(raw[skip : skip + nbytes])[bit : bit + count].astype(bool)
 
     def _raw_window(self, col, kind, cur, need):
         blk, off = cur.instream()
-        buf, pos = self._buf_at(col, kind, blk, off, need)
-        return buf[pos : pos + need]
+        return self._window(col, kind, blk, off, need)
 
     def _stride_dict_size_index(self, type_id: int) -> int:
         """Index of the per-stride side-dictionary SIZE within a
@@ -633,7 +736,7 @@ class _StripeDecoder:
                         sd_size,
                         signed=False,
                     )
-                    sd_raw = self._raw_at(
+                    sd_raw = self._window(
                         type_id,
                         StreamKind.STRIDE_DICTIONARY,
                         sd_blk,
@@ -1754,13 +1857,12 @@ class DwrfFile:
         """Decoder reuse across point lookups (the serving pattern is MANY
         reads per open file): keyed by (stripe, projection); built with
         prefetch=False so a seek never pays a whole-stripe read — only the
-        touched streams pread (memoized) and only the covering blocks
-        decompress. Dictionaries, indexes and decompressed blocks cache
-        inside the decoder, so lookup k>1 is pure stride-window work. The
-        cache is LRU (hit moves the key to the back, overflow evicts the
-        FRONT) so workloads alternating across more than the cap's (stripe,
-        projection) pairs keep their warm working set instead of rebuilding
-        every decoder. Threads share the decoders: the LRU is touched only
+        covering blocks are read and decompress. Dictionaries, indexes and
+        decompressed blocks cache inside the decoder, so lookup k>1 is
+        pure stride-window work. The cache is LRU (hit moves the key to
+        the back, overflow evicts the FRONT) so workloads alternating
+        across more than the cap's (stripe, projection) pairs keep their
+        warm working set instead of rebuilding every decoder. Threads share the decoders: the LRU is touched only
         under the handle's lock, and a decoder is built (a stripe-footer
         read) outside it; when two threads build the same one, the first
         to insert wins and both use its decoder."""
@@ -1821,6 +1923,25 @@ class DwrfFile:
             before = self._stride_bytes
             self._stride_evict_to(before - nbytes)
             return before - self._stride_bytes
+
+    def cache_bytes(self) -> dict[str, int]:
+        """Bytes this handle holds for point lookups, per cache layer:
+        decoded strides (at most SPARK_GRAFT_STRIDE_CACHE_MB), decompressed
+        blocks (at most _StripeDecoder._BLK_CACHE_BUDGET per decoder, at
+        most 8 decoders), whole decompressed streams (row indexes,
+        dictionary streams, whole-stripe fallbacks) and decoded stripe
+        dictionaries."""
+        with self._lock:
+            decs = list(self._point_decoders.values())
+            out = {
+                "strides": self._stride_bytes,
+                "blocks": sum(d._blk_cache_bytes for d in decs),
+            }
+        out["streams"] = sum(a.nbytes for d in decs for a in list(d._cache.values()))
+        out["dictionaries"] = sum(
+            a.nbytes for d in decs for a in list(d._dicts.values())
+        )
+        return out
 
     def _cached_stride_column(
         self, dec, stripe_index: int, tid: int, s_idx: int, stride: int,

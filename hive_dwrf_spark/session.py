@@ -47,6 +47,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # error-context detail is lost.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
+_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
@@ -64,8 +65,22 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # non-runtime conf on this build; builder path sets it
+    _set_debugging_cache(RUNTIME_CONFS[_DEBUGGING] == "true")
     spark._hive_dwrf_confs_applied = True
     return spark
+
+
+def _set_debugging_cache(enabled: bool) -> None:
+    """PySpark reads spark.python.sql.dataFrameDebugging.enabled once per
+    process, at the first DataFrame call, into a module-level cache. The
+    conf is static, so conf.set fails on a session that is already built,
+    and a session used before its confs were applied has the cache set to
+    the default "on". Setting the cache makes the next call see the
+    wanted value either way."""
+    import pyspark.errors.utils as errors_utils
+
+    if hasattr(errors_utils, "_enable_debugging_cache"):
+        errors_utils._enable_debugging_cache = enabled
 
 
 def get_spark(app_name: str = "hive-dwrf-spark") -> SparkSession:

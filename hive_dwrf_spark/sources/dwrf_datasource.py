@@ -28,12 +28,12 @@ from __future__ import annotations
 
 import logging
 import os
-import threading
 import time
 import uuid
 from dataclasses import dataclass
 
 from ..format.fs import strip_file_uri
+from ..format.plans import FilePlan, compute_file_plan, file_plans
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -598,92 +598,18 @@ def compact_sink(
     }
 
 
-# --- driver-side footer plan cache -------------------------------------------
-# Planning (schema() + partitions()) needs only a small footer-derived
-# summary per file: stripe sizes for split packing, top-level column stats
-# for file pruning, and the arrow schema. Parsing a footer costs one tail
-# read + one proto decode; on a 100k-file table that is the dominant
-# planning cost, so summaries are cached keyed by (path, size, mtime) and
-# missing entries are filled by a small thread pool (pread + zlib release
-# the GIL). Spark's own InMemoryFileIndex plays the same role for parquet.
-
-_PLAN_CACHE: "OrderedDict[tuple, _FilePlan]" = None  # type: ignore[assignment]
-_PLAN_CACHE_MAX = 8192
-# Spark drivers plan queries from concurrent threads; OrderedDict LRU
-# mutation (move_to_end/popitem) is not thread-safe, so every cache
-# touch holds this lock (footer parsing itself stays outside it).
-_PLAN_CACHE_LOCK = threading.Lock()
-_PLAN_POOL_WORKERS = 16
+# --- driver-side footer plan cache (format/plans.py) -------------------------
+# The parse function is looked up here at call time, so a test can poison
+# it to prove a warm plan comes from the cache.
+_compute_file_plan = compute_file_plan
 
 
-@dataclass(frozen=True)
-class _FilePlan:
-    stripe_sizes: tuple  # per-stripe byte sizes, in file order
-    stats_by_name: dict  # top-level field name -> ColumnStats (or None)
-    arrow_schema: object  # pyarrow.Schema
+def _file_plans(paths: list[str]) -> dict[str, FilePlan]:
+    """Footer summaries for `paths`, cache-first. Returns {path: plan}."""
+    return file_plans(paths, _compute_file_plan)
 
 
-def _compute_file_plan(path: str):
-    from ..format.reader import DwrfFile
-
-    with DwrfFile(path) as f:
-        sizes = tuple(
-            (s.indexLength or 0) + (s.dataLength or 0) + (s.footerLength or 0)
-            for s in f.footer.stripes
-        )
-        root = f.types[0]
-        stats = {}
-        for name, tid in zip(root.fieldNames, root.subtypes):
-            try:
-                stats[name] = f.file_stats(tid)
-            except Exception:  # noqa: BLE001 - stats are advisory
-                stats[name] = None
-        return _FilePlan(sizes, stats, f.schema)
-
-
-def _file_plans(paths: list[str]) -> dict[str, _FilePlan]:
-    """Footer summaries for `paths`, cache-first, cache misses parsed on a
-    thread pool. Returns {path: plan}."""
-    global _PLAN_CACHE
-    from collections import OrderedDict
-
-    from ..format.fs import get_fs
-
-    fs = get_fs(paths[0] if paths else None)
-    plans: dict[str, _FilePlan] = {}
-    missing: list[tuple[str, tuple]] = []
-    with _PLAN_CACHE_LOCK:
-        if _PLAN_CACHE is None:
-            _PLAN_CACHE = OrderedDict()
-        for p in paths:
-            key = (p, fs.stat_key(p))
-            hit = _PLAN_CACHE.get(key)
-            if hit is not None:
-                _PLAN_CACHE.move_to_end(key)
-                plans[p] = hit
-            else:
-                missing.append((p, key))
-    if missing:
-        if len(missing) == 1:
-            computed = [_compute_file_plan(missing[0][0])]
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            workers = min(_PLAN_POOL_WORKERS, len(missing))
-            with ThreadPoolExecutor(max_workers=workers) as ex:
-                computed = list(
-                    ex.map(_compute_file_plan, [p for p, _ in missing])
-                )
-        with _PLAN_CACHE_LOCK:
-            for (p, key), plan in zip(missing, computed):
-                plans[p] = plan
-                _PLAN_CACHE[key] = plan
-            while len(_PLAN_CACHE) > _PLAN_CACHE_MAX:
-                _PLAN_CACHE.popitem(last=False)
-    return plans
-
-
-def _plan_may_match(plan: _FilePlan, filters) -> bool:
+def _plan_may_match(plan: FilePlan, filters) -> bool:
     """File-level stats pruning from the cached footer summary — the same
     decision as DwrfFile._filter_may_match_stats without reopening the
     file."""

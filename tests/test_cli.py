@@ -54,6 +54,23 @@ def test_lookup(table_dir, capsys):
     assert "0 files opened" in capsys.readouterr().err
 
 
+def test_lookup_prints_cache_bytes(table_dir, capsys):
+    assert main(["lookup", table_dir, "k", "5,150"]) == 0
+    (line,) = [
+        ln for ln in capsys.readouterr().err.splitlines()
+        if ln.startswith("# cache bytes: ")
+    ]
+    layers = dict(
+        part.rsplit(" ", 1)
+        for part in line[len("# cache bytes: "):].replace(";", ",").split(", ")
+    )
+    assert set(layers) == {"strides", "blocks", "streams", "dictionaries", "total"}
+    assert int(layers["strides"]) > 0
+    assert int(layers["total"]) == sum(
+        int(v) for k, v in layers.items() if k != "total"
+    )
+
+
 def test_lookup_prunes_files(table_dir, capsys):
     # keys from one part's key range only: the other file prunes on
     # footer stats

@@ -619,3 +619,78 @@ class TestFailedOpenClosesFile:
             for _ in range(2):
                 with pytest.raises(DwrfCorruptError):
                     lookup_keys(str(d), "i", [5])
+
+
+@pytest.mark.parametrize("native", [True, False], ids=["native", "python"])
+def test_block_header_past_its_stream(tmp_path, monkeypatch, native):
+    """A compressed block header whose length runs past the end of its
+    stream fails a point read with one DwrfCorruptError naming the block,
+    from read_rows_at and lookup_keys alike: the read stops at the
+    stream's end instead of taking the neighbouring stream's bytes, and no
+    zlib.error escapes."""
+    import zlib
+
+    import numpy as np
+
+    from hive_dwrf_spark.format import _native, codecs
+    from hive_dwrf_spark.format.constants import StreamKind
+    from hive_dwrf_spark.format.lookup import lookup_keys
+    from hive_dwrf_spark.format.reader import _StripeDecoder
+
+    if not native:
+        monkeypatch.setattr(_native, "pread_inflate", None)
+    n, stride = 20_000, 1_000
+    rng = np.random.default_rng(17)
+    d = tmp_path / "serve"
+    d.mkdir()
+    path = str(d / "t.dwrf")
+    write_arrow_table(
+        path,
+        pa.table(
+            {
+                "k": pa.array(np.arange(n), type=pa.int64()),
+                "v": pa.array(rng.integers(0, 1000, n), type=pa.int64()),
+            }
+        ),
+        row_index_stride=stride,
+        compression_block_size=8_192,
+    )
+    raw = bytearray(open(path, "rb").read())
+    with DwrfFile(path) as f:
+        stripe = f.footer.stripes[0]
+        dec = _StripeDecoder(f, stripe)
+        v = f._top_level_id("v")
+        off, ln = dec._ranges[(v, int(StreamKind.DATA))]
+        blocks = codecs.compressed_block_starts(bytes(dec._raw_slice(off, ln)))
+        # the stride whose DATA window starts in the second block
+        s = next(
+            i for i, e in enumerate(dec.row_index(v).entry)
+            if e.positions[0] == blocks[1]
+        )
+    stream_start = stripe.offset + off
+    stream_end = stream_start + ln
+    at = stream_start + int(blocks[1])
+    past = stream_end - at  # framed length 3 more than the stream holds
+    assert int.from_bytes(raw[at : at + 3], "little") & 1 == 0  # compressed
+    raw[at : at + 3] = (past << 1).to_bytes(3, "little")
+    open(path, "wb").write(bytes(raw))
+
+    reads: list[tuple[int, int]] = []
+    read_at = DwrfFile._read_at
+
+    def recording(self, offset, length):
+        reads.append((offset, length))
+        return read_at(self, offset, length)
+
+    monkeypatch.setattr(DwrfFile, "_read_at", recording)
+    row = s * stride + 7
+    with DwrfFile(path) as f:
+        with pytest.raises(DwrfCorruptError, match="runs past stream") as e:
+            f.read_rows_at([row])
+        assert not isinstance(e.value.__cause__, zlib.error)
+    with pytest.raises(DwrfCorruptError, match="runs past stream"):
+        lookup_keys(str(d), "k", [row], columns=["v"])
+    # no read that starts in the damaged stream goes past its end
+    for offset, length in reads:
+        if stream_start <= offset < stream_end:
+            assert offset + length <= stream_end, (offset, length)

@@ -518,6 +518,27 @@ class TestLookupHandleCache:
             # an LRU of 2 over a 4-file scan reuses nothing
             assert trace["files_opened"] == 4
 
+    def test_more_files_than_handles_reopens_only_key_holders(self, tmp_path):
+        """200 range-sorted files, more than the handle LRU holds: file
+        pruning reads the cached footer summaries, so a repeat call opens
+        at most the files that hold keys (a cyclic scan of all 200 files
+        through a 128-entry LRU would reopen every one)."""
+        d = str(tmp_path / "many")
+        os.makedirs(d)
+        for i in range(200):
+            t = pa.table({"k": pa.array(np.arange(i * 100, i * 100 + 100))})
+            write_arrow_table(os.path.join(d, f"part-{i:03d}.dwrf"), t)
+        assert len(os.listdir(d)) > lookup._HANDLES_MAX
+        keys = [150, 151, 4_321, 9_999, 19_950]
+        holders = len({k // 100 for k in keys})
+        want = _reference(d, "k", keys)
+        for n in range(3):
+            trace = {}
+            assert lookup_keys(d, "k", keys, trace=trace).equals(want)
+            assert trace["files_pruned"] == 200 - holders, trace
+            if n:
+                assert trace["files_opened"] <= holders, trace
+
     def test_corrupt_member_raises_every_call(self, four_parts, opens):
         from hive_dwrf_spark.format.reader import DwrfCorruptError
 
@@ -837,3 +858,160 @@ def test_threads_share_handle_caches(mixed_file, monkeypatch):
     for dec in decoders.values():
         held = sum(p.nbytes for p in dec._blk_cache.values())
         assert dec._blk_cache_bytes == held
+
+
+def _multi_block_table(n: int) -> pa.Table:
+    """Compressible columns (every block of every stream deflates), so a
+    small block size makes each stream span many blocks."""
+    rng = np.random.default_rng(11)
+    i = rng.integers(0, 1000, n)
+    return pa.table(
+        {
+            "i": pa.array(i, type=pa.int64()),
+            "s": pa.array([f"row-{x:05d}" for x in range(n)]),
+            "d": pa.array(i / 4.0),
+        }
+    )
+
+
+@pytest.mark.parametrize("native", [True, False], ids=["native", "python"])
+def test_point_reads_hold_no_compressed_bytes(tmp_path, monkeypatch, native):
+    """4 threads x 50 read_rows_at calls on one handle over a multi-block
+    file: every answer is exact, no buffer read from the file outlives
+    the call that read it (the handle keeps decompressed blocks, decoded
+    strides, dictionaries and row indexes, never compressed bytes), and
+    each cache layer stays within its bound."""
+    from hive_dwrf_spark.format import _native
+    from hive_dwrf_spark.format import reader as reader_mod
+
+    if not native:
+        monkeypatch.setattr(_native, "pread_inflate", None)
+    monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
+    monkeypatch.setattr(reader_mod._StripeDecoder, "_BLK_CACHE_BUDGET", 64 * 1024)
+    n = 40_000
+    table = _multi_block_table(n)
+    path = str(tmp_path / "blocks.dwrf")
+    write_arrow_table(
+        path, table, stripe_rows=20_000, row_index_stride=1_000,
+        compression_block_size=16_384,
+    )
+    f = DwrfFile(path)
+    reads: list[bytes] = []
+    read_at = f._read_at
+
+    def recording(offset, length):
+        data = read_at(offset, length)
+        reads.append(data)
+        return data
+
+    f._read_at = recording
+    errors: list[BaseException] = []
+    wrong: list[list[int]] = []
+
+    def client(c: int) -> None:
+        rng = np.random.default_rng(c)
+        try:
+            for _ in range(50):
+                rows = [int(r) for r in rng.integers(0, n, 8)]
+                if not f.read_rows_at(rows).equals(table.take(rows)):
+                    wrong.append(rows)
+        except BaseException as e:  # reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client, args=(c,)) for c in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert not wrong, wrong[:3]
+    assert reads
+    for dec in f._point_decoders.values():  # no lost block-cache update
+        assert dec._blk_cache.keys() == dec._blk_next.keys()
+        assert dec._blk_cache_bytes == sum(b.nbytes for b in dec._blk_cache.values())
+
+    def root(buf):
+        while True:
+            if isinstance(buf, np.ndarray) and buf.base is not None:
+                buf = buf.base
+            elif isinstance(buf, memoryview):
+                buf = buf.obj
+            else:
+                return buf
+
+    # a stream stored uncompressed is its own decompressed stream: kept
+    # whole (a dictionary stream here), it may share its read's buffer
+    streams = {
+        id(root(a)) for dec in f._point_decoders.values() for a in dec._cache.values()
+    }
+    # any other read is referenced only by `reads` and getrefcount's
+    # own argument
+    held = [
+        len(reads[k]) for k in range(len(reads))
+        if sys.getrefcount(reads[k]) > 2 and id(reads[k]) not in streams
+    ]
+    assert held == [], f"{len(held)} reads ({sum(held)} bytes) still held"
+    layers = f.cache_bytes()
+    assert set(layers) == {"strides", "blocks", "streams", "dictionaries"}
+    assert 0 < layers["strides"] <= 1 << 20, layers
+    assert 0 < layers["blocks"] <= len(f._point_decoders) * 64 * 1024, layers
+    f.close()
+
+
+def test_stride_inside_one_block_inflates_one_block(tmp_path, monkeypatch):
+    """A stride whose bytes lie inside one compressed block inflates that
+    block alone, also where the worst-case RLE window for its row count
+    (11 bytes a value) would reach into the next block."""
+    from hive_dwrf_spark.format import _native, codecs
+    from hive_dwrf_spark.format import reader as reader_mod
+
+    n, stride, block = 60_000, 1_000, 32_768
+    vals = np.random.default_rng(5).integers(0, 64, n)  # 1-byte varints
+    path = str(tmp_path / "v.dwrf")
+    write_arrow_table(
+        path, pa.table({"v": pa.array(vals, type=pa.int64())}),
+        stripe_rows=n, row_index_stride=stride, compression_block_size=block,
+    )
+    # no block stays cached, so every stride read inflates what it needs
+    monkeypatch.setattr(reader_mod._StripeDecoder, "_BLK_CACHE_BUDGET", 0)
+    inflated: list[int] = []
+    decompress_block = codecs._decompress_block
+
+    def counting_block(data, *a):
+        inflated.append(len(data))
+        return decompress_block(data, *a)
+
+    monkeypatch.setattr(codecs, "_decompress_block", counting_block)
+    if _native.pread_inflate is not None:
+        pread_inflate = _native.pread_inflate
+
+        def counting_native(*a):
+            inflated.append(a[1])
+            return pread_inflate(*a)
+
+        monkeypatch.setattr(_native, "pread_inflate", counting_native)
+    with DwrfFile(path) as f:
+        dec = f._point_decoder(0, None, {1})
+        # DATA positions: (block offset, offset in block, values to skip)
+        pos = [tuple(e.positions[:3]) for e in dec.row_index(1).entry]
+        # stride s lies inside one block when the strides after it start
+        # in that block too: the RLE group holding its last value ends
+        # where the group at stride s + 2 starts, or earlier
+        inside = [
+            s for s in range(len(pos) - 2)
+            if pos[s][0] == pos[s + 1][0] == pos[s + 2][0]
+            and pos[s + 2][1] > pos[s + 1][1]
+        ]
+        worst = [s for s in inside if pos[s][1] + (stride + pos[s][2]) * 11 > block]
+        assert len(inside) > 20 and worst, (len(inside), worst)
+        for s in inside:
+            inflated.clear()
+            got = dec.decode_stride_column(1, s, stride, n)
+            assert got.to_pylist() == vals[s * stride : (s + 1) * stride].tolist()
+            assert len(inflated) == 1, (s, pos[s], inflated)
