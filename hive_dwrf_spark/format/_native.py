@@ -9,12 +9,6 @@ data-dependent pointer chase — O(1) python work per *group*, which at
 (RunLengthIntegerReader.java:100-163); this compiles the identical 15-line
 loop with the system C compiler at first use.
 
-A second library holds ``pread_inflate``, the point-lookup block read:
-one pread of a compressed block plus its raw-deflate inflate in one call,
-so a block read costs one GIL release rather than two (``os.pread`` then
-``zlib.decompress``). It links the system zlib, and builds apart from the
-RLE kernels so a machine without zlib headers keeps them.
-
 Strictly optional: no compiler, no write access, any failure at all ->
 ``rle_walk`` is None and callers keep the pure-Python loop. The .so is
 cached under the user cache dir keyed by source hash, so each machine
@@ -251,76 +245,12 @@ int64_t byte_rle_decode(const uint8_t *buf, int64_t n, int64_t pos,
 }
 """
 
-_INFLATE_SRC = r"""
-#include <pthread.h>
-#include <stdint.h>
-#include <stdlib.h>
-#include <unistd.h>
-#include <zlib.h>
-
-/* Per-thread buffer for the compressed bytes, kept across calls and freed
-   when its thread exits: laid out as [int64 capacity][bytes]. */
-static pthread_key_t scratch_key;
-static pthread_once_t scratch_once = PTHREAD_ONCE_INIT;
-static void scratch_init(void) { pthread_key_create(&scratch_key, free); }
-
-static uint8_t *scratch(int64_t len) {
-    pthread_once(&scratch_once, scratch_init);
-    int64_t *s = pthread_getspecific(scratch_key);
-    if (!s || s[0] < len) {
-        free(s);
-        s = malloc(sizeof(int64_t) + (len ? len : 1));
-        pthread_setspecific(scratch_key, s);
-        if (!s) return NULL;
-        s[0] = len;
-    }
-    return (uint8_t *)(s + 1);
-}
-
-/* Read the compressed block whose 3-byte header sits at file offset `off`
-   (at most `avail` bytes of its stream remain from there) and inflate it
-   into `out`. Returns the decompressed length; once the header is read,
-   writes the block's framed length (3 + payload) to *framed. Returns -1
-   on a short read, -2 if the block runs past its stream, -3 on a damaged
-   deflate stream, -4 if the block inflates to more than `cap` bytes. */
-int64_t pread_inflate(int32_t fd, int64_t off, int64_t avail, uint8_t *out,
-                      int64_t cap, int64_t *framed) {
-    uint8_t h[3];
-    if (avail < 3) return -2;
-    if (pread(fd, h, 3, off) != 3) return -1;
-    uint32_t header = h[0] | (h[1] << 8) | ((uint32_t)h[2] << 16);
-    int64_t len = header >> 1;
-    *framed = 3 + len;
-    if (3 + len > avail) return -2;
-    if (header & 1) {  /* stored original */
-        if (len > cap) return -4;
-        return pread(fd, out, len, off + 3) == len ? len : -1;
-    }
-    uint8_t *comp = scratch(len);
-    if (!comp) return -1;
-    if (pread(fd, comp, len, off + 3) != len) return -1;
-    z_stream zs = {0};
-    if (inflateInit2(&zs, -15) != Z_OK) return -3;
-    zs.next_in = comp;
-    zs.avail_in = (uInt)len;
-    zs.next_out = out;
-    zs.avail_out = (uInt)cap;
-    int rc = inflate(&zs, Z_FINISH);
-    int64_t n = (int64_t)zs.total_out;
-    inflateEnd(&zs);
-    if (rc == Z_STREAM_END) return n;
-    return zs.avail_out == 0 ? -4 : -3;
-}
-"""
-
 rle_walk = None  # callable(packed_int64, limit, count, out_int64) -> int64
 rle_walk_over = None  # same, overshoot-tolerant (seek-position tables)
 rle_positions = None  # callable(buf_u8, targets_i64, out_byte, out_skip) -> int64
 rle_decode = None  # callable(buf_u8, pos, count, signed, out_i64) -> (n, pos)
 byte_rle_decode = None  # callable(buf_u8, pos, count, out_u8) -> (n, pos)
 rle_encode = None  # callable(values_i64, signed) -> bytes
-#: callable(fd, off, avail, out_u8) -> (n, framed); n < 0 is an error code
-pread_inflate = None
 
 
 def _cache_dir() -> str:
@@ -332,24 +262,24 @@ def _cache_dir() -> str:
     return d
 
 
-def _build(src: str, name: str, libs: tuple = ()) -> str | None:
-    tag = hashlib.sha256(src.encode()).hexdigest()[:16]
+def _build() -> str | None:
+    tag = hashlib.sha256(_SRC.encode()).hexdigest()[:16]
     try:
         d = _cache_dir()
     except OSError:
         return None
-    so_path = os.path.join(d, f"_{name}_{tag}.so")
+    so_path = os.path.join(d, f"_rle_walk_{tag}.so")
     if os.path.exists(so_path):
         return so_path
     cc = os.environ.get("CC") or "cc"
     try:
         with tempfile.TemporaryDirectory(dir=d) as tmp:
-            c_path = os.path.join(tmp, f"{name}.c")
+            c_path = os.path.join(tmp, "rle_walk.c")
             with open(c_path, "w") as f:
-                f.write(src)
-            tmp_so = os.path.join(tmp, f"{name}.so")
+                f.write(_SRC)
+            tmp_so = os.path.join(tmp, "rle_walk.so")
             subprocess.run(
-                [cc, "-O2", "-shared", "-fPIC", "-o", tmp_so, c_path, *libs],
+                [cc, "-O2", "-shared", "-fPIC", "-o", tmp_so, c_path],
                 check=True,
                 capture_output=True,
                 timeout=60,
@@ -365,7 +295,7 @@ def _load() -> None:
     global rle_decode, byte_rle_decode, rle_encode
     if os.environ.get("DWRF_NO_NATIVE"):
         return
-    so = _build(_SRC, "rle_walk")
+    so = _build()
     if so is None:
         return
     try:
@@ -512,43 +442,4 @@ def _load() -> None:
         rle_encode = None
 
 
-def _load_inflate() -> None:
-    global pread_inflate
-    if os.environ.get("DWRF_NO_NATIVE"):
-        return
-    so = _build(_INFLATE_SRC, "pread_inflate", ("-lz", "-pthread"))
-    if so is None:
-        return
-    try:
-        fn = ctypes.CDLL(so).pread_inflate
-        fn.restype = ctypes.c_int64
-        fn.argtypes = [
-            ctypes.c_int32,
-            ctypes.c_int64,
-            ctypes.c_int64,
-            ctypes.POINTER(ctypes.c_uint8),
-            ctypes.c_int64,
-            ctypes.POINTER(ctypes.c_int64),
-        ]
-    except Exception:
-        return
-
-    def read_block(fd, off, avail, out):
-        """-> (decompressed length, framed block length); a negative
-        length is an error code. Releases the GIL for the whole call."""
-        framed = ctypes.c_int64(0)
-        n = fn(
-            fd,
-            off,
-            avail,
-            out.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
-            len(out),
-            ctypes.byref(framed),
-        )
-        return n, framed.value
-
-    pread_inflate = read_block
-
-
 _load()
-_load_inflate()

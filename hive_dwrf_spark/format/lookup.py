@@ -26,9 +26,12 @@ every file that holds keys is served from a process-wide open DwrfFile
 handle, so its footer, stripe footers and ROW_INDEX are parsed once, and
 stride decodes go through the handle's decoded-stride LRU (the one
 DwrfFile.read_row uses) — a hot stride is decoded once for all calls and
-threads. A file its footer summary prunes is never opened, so a
-directory of more files than _HANDLES_MAX keeps its handles as long as
-the files a call reads fit.
+threads. Once its footer summary is cached, a file that summary prunes
+is not opened, so a directory of more files than _HANDLES_MAX keeps its
+handles as long as the files a call reads fit. A cold call reads each
+missing summary through the file's shared handle and keeps, for the
+call, at most _HANDLES_MAX of those handles (those of files that may
+hold keys), so it holds few files open however large the directory.
 
   identity : a handle is reused while (path, get_fs(path).stat_key(path))
              — size and mtime — is unchanged, the identity of the
@@ -67,7 +70,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .fs import get_fs
-from .plans import file_plans, plan_of
+from .plans import FilePlan, file_plans, plan_of
 from .reader import (
     DwrfFile,
     NoStridePositions,
@@ -156,6 +159,16 @@ def _keys_in_range(keys_sorted: list, mn, mx) -> list:
     ]
 
 
+def _may_hold(plan: FilePlan, key_column: str, keys_sorted: list) -> bool:
+    """Whether the footer summary `plan` admits one of the sorted keys:
+    the file has rows and its key-column min/max (when known) span one."""
+    name = _resolve_field(key_column, list(plan.stats_by_name))
+    if name is None or not plan.stripe_sizes:
+        return False
+    st = plan.stats_by_name[name]
+    return st is None or bool(_keys_in_range(keys_sorted, st.minimum, st.maximum))
+
+
 def _match_offsets(karr: pa.Array, keys: list, key_set: pa.Array) -> np.ndarray:
     """Sorted positions in `karr` whose value is one of `keys` (nulls
     never match). `keys` holds at least the sorted keys that may occur in
@@ -212,34 +225,35 @@ def lookup_keys(
     files = _list_files(path)
     fs = get_fs(files[0])
     idents = {fp: fs.stat_key(fp) for fp in files}
+    opened: list[str] = []  # list.append is atomic across plan threads
     # a file without a cached footer summary gets it from its shared
-    # handle, so a cold call parses each footer once; the handles stay
-    # at hand for this call even if the handle LRU drops them meanwhile
+    # handle, so a cold call parses each footer once. The handle of a
+    # file whose summary admits a key is kept for this call even if the
+    # handle LRU drops it meanwhile, at most _HANDLES_MAX of them; any
+    # other is dropped at once, so a cold call over a directory of many
+    # files holds few of them open
     planned: dict[str, DwrfFile] = {}
-    opened_for_plan: list[str] = []
-
-    def plan_from_handle(fp: str):
-        f, opened = shared_handle(fp, idents[fp])
-        planned[fp] = f
-        if opened:
-            opened_for_plan.append(fp)
-        return plan_of(f)
-
-    plans = file_plans(files, plan_from_handle, stat_keys=idents)
 
     def handle(fp: str) -> DwrfFile:
-        f = planned.get(fp)
+        f = planned.pop(fp, None)
         if f is None:
-            f, opened = shared_handle(fp, idents[fp])
-            if opened and trace is not None:
-                trace["files_opened"] += 1
+            f, was_opened = shared_handle(fp, idents[fp])
+            if was_opened:
+                opened.append(fp)
         return f
 
+    def plan_from_handle(fp: str) -> FilePlan:
+        f = handle(fp)
+        plan = plan_of(f)
+        if len(planned) < _HANDLES_MAX and _may_hold(plan, key_column, key_list):
+            planned[fp] = f
+        return plan
+
+    plans = file_plans(files, plan_from_handle, stat_keys=idents)
     if trace is not None:
         trace.update(
             files_total=len(files),
             files_pruned=0,
-            files_opened=len(opened_for_plan),
             strides_total=0,
             strides_scanned=0,
         )
@@ -255,8 +269,7 @@ def lookup_keys(
         if not plan.stripe_sizes:
             continue  # an empty file holds no keys
         # --- file-level pruning: footer summary only, no handle ---
-        st = plan.stats_by_name[key_name]
-        if st is not None and not _keys_in_range(key_list, st.minimum, st.maximum):
+        if not _may_hold(plan, key_name, key_list):
             if trace is not None:
                 trace["files_pruned"] += 1
             continue
@@ -360,6 +373,8 @@ def lookup_keys(
         _trim_decoded()
     if schema is None:  # no file held keys: the projection's schema
         schema = handle(files[0]).projected_schema(columns)
+    if trace is not None:
+        trace["files_opened"] = len(opened)
     cols = []
     for field in schema:
         parts = out_chunks.get(field.name, [])

@@ -279,11 +279,9 @@ class _StripeDecoder:
         # typical int stream), so without this every point lookup re-ran
         # zlib over bytes a previous lookup already inflated — measured
         # ~50% of read_row wall time on the sf0.1 lookup table. Keyed by
-        # (column, stream kind, block offset); insertion-order eviction
-        # under a byte budget. _blk_next holds, per cached block, the
-        # offset of the block after it, and is evicted with it.
-        self._blk_cache: dict[tuple[int, int, int], np.ndarray] = {}
-        self._blk_next: dict[tuple[int, int, int], int] = {}
+        # (column, stream kind, block offset), valued (block, offset of
+        # the next block); insertion-order eviction under a byte budget.
+        self._blk_cache: dict[tuple[int, int, int], tuple[np.ndarray, int]] = {}
         self._blk_cache_bytes = 0
         # per-thread decode scratch (present mask handoff to stride-dict
         # decode) so columns can decode concurrently
@@ -399,19 +397,15 @@ class _StripeDecoder:
         """(decompressed block, offset of the next block) for the block
         whose header sits at compressed offset `p` of stream (col, kind).
 
-        Outside the prefetched chunks each block is read on its own: at
-        most 3 + compressionBlockSize bytes from a conforming writer, read
-        and inflated in one GIL-releasing native call where one is built
-        (_native.pread_inflate) — under concurrent clients every extra
-        release is one more wait for the GIL. A block that does not lie
-        inside its stream's byte range raises DwrfCorruptError rather than
-        reading the neighbouring stream."""
+        Outside the prefetched chunks each block is read on its own: one
+        pread of at most 3 + compressionBlockSize bytes from a conforming
+        writer, which nothing keeps once the block is inflated. A block
+        that does not lie inside its stream's byte range raises
+        DwrfCorruptError rather than reading the neighbouring stream."""
         ck = (col, int(kind), p)
-        part = self._blk_cache.get(ck)
-        if part is not None:
-            nxt = self._blk_next.get(ck)
-            if nxt is not None:  # else evicted between the two gets
-                return part, nxt
+        hit = self._blk_cache.get(ck)
+        if hit is not None:
+            return hit
         rng_off, rng_len = self._ranges[(col, int(kind))]
         if p < 0 or p + 3 > rng_len:
             raise DwrfCorruptError(
@@ -420,71 +414,32 @@ class _StripeDecoder:
             )
         comp = self._chunk_view(rng_off, rng_len)
         if comp is None:
-            part, framed = self._read_block(col, kind, rng_off + p, rng_len - p)
+            q = 0
+            data = self._raw_slice(rng_off + p, min(rng_len - p, 3 + self._bufsize))
         else:
-            header = int(comp[p]) | (int(comp[p + 1]) << 8) | (int(comp[p + 2]) << 16)
-            framed = 3 + (header >> 1)
-            self._check_framed(col, kind, framed, rng_len - p)
-            body = comp[p + 3 : p + framed]
-            if header & 1:
-                return body, p + framed  # stored: zero-copy view
+            data, q = comp, p
+        header = int(data[q]) | (int(data[q + 1]) << 8) | (int(data[q + 2]) << 16)
+        framed = 3 + (header >> 1)
+        if framed > rng_len - p:
+            raise DwrfCorruptError(
+                f"compressed block of {framed} bytes runs past stream "
+                f"({col}, {kind.name}), which has {rng_len - p} bytes left"
+            )
+        if q + framed > len(data):  # a block larger than the declared size
+            data, q = self._raw_slice(rng_off + p, framed), 0
+        body = data[q + 3 : q + framed]
+        if header & 1:
+            if comp is not None:
+                return body, p + framed  # stored: zero-copy chunk view
+            part = body.copy()  # stored: keep none of the read
+        else:
             part = np.frombuffer(
                 codecs._decompress_block(
                     memoryview(body), self.r.compression, self._bufsize
                 ),
                 dtype=np.uint8,
             )
-        return self._cache_block(ck, part, p + framed), p + framed
-
-    @staticmethod
-    def _check_framed(col: int, kind: StreamKind, framed: int, avail: int) -> None:
-        if framed > avail:
-            raise DwrfCorruptError(
-                f"compressed block of {framed} bytes runs past stream "
-                f"({col}, {kind.name}), which has {avail} bytes left"
-            )
-
-    def _read_block(
-        self, col: int, kind: StreamKind, at: int, avail: int
-    ) -> tuple[np.ndarray, int]:
-        """(decompressed block, framed length) of the block at stripe
-        offset `at`, with `avail` bytes of its stream left from there."""
-        from ._native import pread_inflate
-
-        fileno = self.r._fileno
-        if (
-            pread_inflate is not None
-            and fileno is not None
-            and self.r.compression == CompressionKind.ZLIB
-        ):
-            out = np.empty(self._bufsize, dtype=np.uint8)
-            n, framed = pread_inflate(fileno, self.stripe.offset + at, avail, out)
-            if n >= 0:
-                # a stream's last block is short: shrink in place (a
-                # realloc, not a copy under the GIL) so it holds its bytes
-                if n < len(out):
-                    out.resize(n, refcheck=False)
-                return out, framed
-            self._check_framed(col, kind, framed, avail)  # raises on -2
-            if n != -4:  # -4: larger than the block size; inflate below
-                raise DwrfCorruptError(
-                    f"compressed block at {at} of stream ({col}, "
-                    f"{kind.name}): "
-                    + ("short read" if n == -1 else "damaged deflate data")
-                )
-        data = self._raw_slice(at, min(avail, 3 + self._bufsize))
-        header = int(data[0]) | (int(data[1]) << 8) | (int(data[2]) << 16)
-        framed = 3 + (header >> 1)
-        self._check_framed(col, kind, framed, avail)
-        if framed > len(data):  # a block larger than the declared size
-            data = self._raw_slice(at, framed)
-        body = data[3:framed]
-        if header & 1:
-            return body.copy(), framed  # stored: keep none of the read
-        block = codecs._decompress_block(
-            memoryview(body), self.r.compression, self._bufsize
-        )
-        return np.frombuffer(block, dtype=np.uint8), framed
+        return self._cache_block(ck, (part, p + framed))
 
     def _window(self, col, kind, blk, off, need) -> np.ndarray:
         """`need` bytes of the decompressed stream (fewer at its end) from
@@ -531,24 +486,22 @@ class _StripeDecoder:
             # the run goes on in the next block
             return decode(self._window(col, kind, blk, off, bound))
 
-    def _cache_block(self, ck, part: np.ndarray, nxt: int) -> np.ndarray:
-        """Insert a decompressed block and the offset of the block after
-        it into the block cache, evicting the oldest blocks past the
-        budget; returns the cached block (a concurrent decoder's, if one
-        won the race)."""
+    def _cache_block(
+        self, ck, entry: tuple[np.ndarray, int]
+    ) -> tuple[np.ndarray, int]:
+        """Insert (decompressed block, offset of the next block) into the
+        block cache, evicting the oldest blocks past the budget; returns
+        the cached entry (a concurrent decoder's, if one won the race)."""
         with self._lock:
             won = self._blk_cache.get(ck)
             if won is not None:
                 return won
-            self._blk_cache[ck] = part
-            self._blk_next[ck] = nxt
-            self._blk_cache_bytes += part.nbytes
+            self._blk_cache[ck] = entry
+            self._blk_cache_bytes += entry[0].nbytes
             while self._blk_cache_bytes > self._BLK_CACHE_BUDGET:
-                old_key = next(iter(self._blk_cache))
-                old = self._blk_cache.pop(old_key)
-                del self._blk_next[old_key]
+                old, _ = self._blk_cache.pop(next(iter(self._blk_cache)))
                 self._blk_cache_bytes -= old.nbytes
-        return part
+        return entry
 
     def _string_dictionary(self, type_id: int, n_dict: int) -> pa.Array:
         """The stripe dictionary of a DICTIONARY string column."""
@@ -1862,10 +1815,11 @@ class DwrfFile:
         pure stride-window work. The cache is LRU (hit moves the key to
         the back, overflow evicts the FRONT) so workloads alternating
         across more than the cap's (stripe, projection) pairs keep their
-        warm working set instead of rebuilding every decoder. Threads share the decoders: the LRU is touched only
-        under the handle's lock, and a decoder is built (a stripe-footer
-        read) outside it; when two threads build the same one, the first
-        to insert wins and both use its decoder."""
+        warm working set instead of rebuilding every decoder. Threads
+        share the decoders: the LRU is touched only under the handle's
+        lock, and a decoder is built (a stripe-footer read) outside it;
+        when two threads build the same one, the first to insert wins and
+        both use its decoder."""
         key = (
             stripe_index,
             tuple(sorted(include_ids)) if include_ids is not None else None,

@@ -539,6 +539,44 @@ class TestLookupHandleCache:
             if n:
                 assert trace["files_opened"] <= holders, trace
 
+    def test_cold_call_holds_few_files_open(self, tmp_path, monkeypatch):
+        """A cold call over more files than the handle LRU holds keeps no
+        more files open than the LRU, the plan pool's threads and the
+        planned handles of key-holding files (at most _HANDLES_MAX), when
+        the keys sit in a few files and when they sit in all of them."""
+        import gc
+        import weakref
+
+        from hive_dwrf_spark.format import plans
+
+        monkeypatch.setattr(lookup, "_HANDLES_MAX", 8)
+        live: "weakref.WeakSet[DwrfFile]" = weakref.WeakSet()
+        most = [0]
+        lock = threading.Lock()
+        orig = DwrfFile.__init__
+
+        def tracking(self, path, *a, **kw):
+            orig(self, path, *a, **kw)
+            with lock:
+                live.add(self)
+                gc.collect()  # a dropped handle with decoders is a cycle
+                most[0] = max(most[0], sum(not f._f.closed for f in live))
+
+        monkeypatch.setattr(DwrfFile, "__init__", tracking)
+        bound = 2 * lookup._HANDLES_MAX + plans._PLAN_POOL_WORKERS
+        for name, keys in [("few", [150, 4_321]), ("all", list(range(7, 6_000, 100)))]:
+            d = str(tmp_path / name)
+            os.makedirs(d)
+            for i in range(60):
+                t = pa.table({"k": pa.array(np.arange(i * 100, i * 100 + 100))})
+                write_arrow_table(os.path.join(d, f"part-{i:03d}.dwrf"), t)
+            most[0] = 0
+            trace = {}
+            got = lookup_keys(d, "k", keys, trace=trace)
+            assert got.column("k").to_pylist() == keys
+            assert trace["files_opened"] >= 60, trace
+            assert most[0] <= bound, (name, most[0])
+
     def test_corrupt_member_raises_every_call(self, four_parts, opens):
         from hive_dwrf_spark.format.reader import DwrfCorruptError
 
@@ -856,7 +894,7 @@ def test_threads_share_handle_caches(mixed_file, monkeypatch):
     assert not mismatches, mismatches
     assert len(decoders) > 8
     for dec in decoders.values():
-        held = sum(p.nbytes for p in dec._blk_cache.values())
+        held = sum(p.nbytes for p, _ in dec._blk_cache.values())
         assert dec._blk_cache_bytes == held
 
 
@@ -874,18 +912,14 @@ def _multi_block_table(n: int) -> pa.Table:
     )
 
 
-@pytest.mark.parametrize("native", [True, False], ids=["native", "python"])
-def test_point_reads_hold_no_compressed_bytes(tmp_path, monkeypatch, native):
+def test_point_reads_hold_no_compressed_bytes(tmp_path, monkeypatch):
     """4 threads x 50 read_rows_at calls on one handle over a multi-block
     file: every answer is exact, no buffer read from the file outlives
     the call that read it (the handle keeps decompressed blocks, decoded
     strides, dictionaries and row indexes, never compressed bytes), and
     each cache layer stays within its bound."""
-    from hive_dwrf_spark.format import _native
     from hive_dwrf_spark.format import reader as reader_mod
 
-    if not native:
-        monkeypatch.setattr(_native, "pread_inflate", None)
     monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
     monkeypatch.setattr(reader_mod._StripeDecoder, "_BLK_CACHE_BUDGET", 64 * 1024)
     n = 40_000
@@ -933,8 +967,9 @@ def test_point_reads_hold_no_compressed_bytes(tmp_path, monkeypatch, native):
     assert not wrong, wrong[:3]
     assert reads
     for dec in f._point_decoders.values():  # no lost block-cache update
-        assert dec._blk_cache.keys() == dec._blk_next.keys()
-        assert dec._blk_cache_bytes == sum(b.nbytes for b in dec._blk_cache.values())
+        assert dec._blk_cache_bytes == sum(
+            b.nbytes for b, _ in dec._blk_cache.values()
+        )
 
     def root(buf):
         while True:
@@ -968,7 +1003,7 @@ def test_stride_inside_one_block_inflates_one_block(tmp_path, monkeypatch):
     """A stride whose bytes lie inside one compressed block inflates that
     block alone, also where the worst-case RLE window for its row count
     (11 bytes a value) would reach into the next block."""
-    from hive_dwrf_spark.format import _native, codecs
+    from hive_dwrf_spark.format import codecs
     from hive_dwrf_spark.format import reader as reader_mod
 
     n, stride, block = 60_000, 1_000, 32_768
@@ -988,14 +1023,6 @@ def test_stride_inside_one_block_inflates_one_block(tmp_path, monkeypatch):
         return decompress_block(data, *a)
 
     monkeypatch.setattr(codecs, "_decompress_block", counting_block)
-    if _native.pread_inflate is not None:
-        pread_inflate = _native.pread_inflate
-
-        def counting_native(*a):
-            inflated.append(a[1])
-            return pread_inflate(*a)
-
-        monkeypatch.setattr(_native, "pread_inflate", counting_native)
     with DwrfFile(path) as f:
         dec = f._point_decoder(0, None, {1})
         # DATA positions: (block offset, offset in block, values to skip)
