@@ -233,6 +233,7 @@ def lookup_keys(
     # other is dropped at once, so a cold call over a directory of many
     # files holds few of them open
     planned: dict[str, DwrfFile] = {}
+    planned_lock = threading.Lock()
 
     def handle(fp: str) -> DwrfFile:
         f = planned.pop(fp, None)
@@ -245,8 +246,10 @@ def lookup_keys(
     def plan_from_handle(fp: str) -> FilePlan:
         f = handle(fp)
         plan = plan_of(f)
-        if len(planned) < _HANDLES_MAX and _may_hold(plan, key_column, key_list):
-            planned[fp] = f
+        if _may_hold(plan, key_column, key_list):
+            with planned_lock:
+                if len(planned) < _HANDLES_MAX:
+                    planned[fp] = f
         return plan
 
     plans = file_plans(files, plan_from_handle, stat_keys=idents)
