@@ -18,9 +18,10 @@ reported as ``{phase: {"seconds": float, "calls": int}}``.
 
 from __future__ import annotations
 
-import os
 import time
 from contextlib import contextmanager
+
+from .env import env_int
 
 PHASES = (
     "compression",
@@ -36,7 +37,7 @@ PHASES = (
 
 class Profiler:
     def __init__(self) -> None:
-        self.enabled = bool(int(os.environ.get("DWRF_PROFILE", "0") or "0"))
+        self.enabled = bool(env_int("DWRF_PROFILE", 0))
         self.reset()
 
     def reset(self) -> None:

@@ -14,6 +14,7 @@ evaluation to the consumer — SURVEY.md §4 O2)."""
 from __future__ import annotations
 
 import os
+import weakref
 from typing import Callable
 
 import numpy as np
@@ -199,6 +200,22 @@ class _PosCursor:
             return blk, off
         (off,) = self.take(1)
         return None, off
+
+
+def _prune_field(types, ids: set[int], field: pa.Field, tid: int) -> pa.Field:
+    """`field` with only the struct children whose type ids are in `ids`.
+    Module-level rather than a recursive closure: a closure that calls
+    itself is a reference cycle, and one over a handle would keep the
+    handle (and its open file) alive until the cyclic GC ran."""
+    t = types[tid]
+    if TypeKind(t.kind) == TypeKind.STRUCT and pa.types.is_struct(field.type):
+        kept = [
+            _prune_field(types, ids, field.type.field(i), s)
+            for i, (_nm, s) in enumerate(zip(t.fieldNames, t.subtypes))
+            if s in ids
+        ]
+        return pa.field(field.name, pa.struct(kept))
+    return field
 
 
 class _StripeDecoder:
@@ -1449,24 +1466,11 @@ class DwrfFile:
     def projected_schema(self, columns: list[str]) -> pa.Schema:
         """Arrow schema of a (possibly nested) projection result."""
         tops, ids = self._parse_projection(columns)
-
-        def prune(field: pa.Field, tid: int) -> pa.Field:
-            t = self.types[tid]
-            if TypeKind(t.kind) == TypeKind.STRUCT and pa.types.is_struct(
-                field.type
-            ):
-                kept = [
-                    prune(field.type.field(i), s)
-                    for i, (nm, s) in enumerate(
-                        zip(t.fieldNames, t.subtypes)
-                    )
-                    if s in ids
-                ]
-                return pa.field(field.name, pa.struct(kept))
-            return field
-
         return pa.schema(
-            [prune(self.schema.field(nm), tid) for nm, tid in tops]
+            [
+                _prune_field(self.types, ids, self.schema.field(nm), tid)
+                for nm, tid in tops
+            ]
         )
 
     def _filter_may_match_stats(self, filters, stats_for) -> bool:
@@ -1819,7 +1823,10 @@ class DwrfFile:
         share the decoders: the LRU is touched only under the handle's
         lock, and a decoder is built (a stripe-footer read) outside it;
         when two threads build the same one, the first to insert wins and
-        both use its decoder."""
+        both use its decoder. A cached decoder sees the handle through a
+        weak proxy: a strong reference would form a handle -> decoder ->
+        handle cycle, and a handle the lookup LRU drops would close its
+        file only when the cyclic GC ran."""
         key = (
             stripe_index,
             tuple(sorted(include_ids)) if include_ids is not None else None,
@@ -1831,7 +1838,7 @@ class DwrfFile:
                 self._point_decoders[key] = dec
                 return dec
         built = _StripeDecoder(
-            self,
+            weakref.proxy(self),
             self.footer.stripes[stripe_index],
             include_ids,
             index_ids=index_ids,

@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .format.env import env_int
+
 #: runtime confs that are safe to (re)apply to an existing session,
 #: e.g. the driver-provided one handed to ``__spark_entry__.entry``.
 RUNTIME_CONFS: dict[str, str] = {
@@ -84,13 +86,13 @@ def _set_debugging_cache(enabled: bool) -> None:
 
 
 def get_spark(app_name: str = "hive-dwrf-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    cpus = env_int("SPARK_GRAFT_CPUS", 0)
     master = f"local[{cpus}]" if cpus else "local[*]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", cpus or "32")
+        .config("spark.sql.shuffle.partitions", str(cpus or 32))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # Arrow makes pandas_udf / mapInPandas exchange columnar batches
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -9,19 +9,14 @@ file may sort anywhere in the listing, and an index offset would both skip
 it and re-emit already-read files. Each batch = listing minus processed
 names; restarts resume from the checkpointed name set exactly.
 
-Two readers share that offset model:
-
-- The DEFAULT is a partition-planning ``DataSourceStreamReader``: the
-  driver plans each micro-batch as (file, stripe-run) InputPartitions via
-  the same footer cache + bin-packing as the batch scan
-  (sources/dwrf_datasource.py — reference parity OrcInputFormat.java:
-  165-181), and rows decode on EXECUTORS as Arrow batches. No row ever
-  passes through the driver, so ingest scales with the cluster exactly
-  like a batch scan — the firehose path.
-- ``option("simpleReader", "true")`` falls back to the
-  ``SimpleDataSourceStreamReader`` (driver-side micro-batch read,
-  Spark's prefetch-cache contract) — fine at modest file-arrival rates
-  and useful for diagnosing executor-side issues.
+One reader serves that offset model: a partition-planning
+``DataSourceStreamReader``. The driver plans each micro-batch as (file,
+stripe-run) InputPartitions via the same footer cache + bin-packing as
+the batch scan (sources/dwrf_datasource.py — reference parity
+OrcInputFormat.java:165-181), and rows decode on EXECUTORS as Arrow
+batches. No row ever passes through the driver, so ingest scales with
+the cluster exactly like a batch scan. Checkpoints written by the former
+driver-side reader ({"processed": [names]}) still resume.
 
 Offsets stay BOUNDED on unbounded streams: each file is tracked with its
 mtime, and names older than ``maxFileAgeSec`` (default 7 days, Spark's
@@ -44,9 +39,8 @@ RATE, not the live-name count. The base rewrites only when the delta
 outgrows max(64, len(base)/100) names, so a 100k-name firehose pays a
 few-KB offset per trigger instead of the measured 4.1 MB full catalog
 (STRESS `_offset_catalog_100k`, round 11). Every consumer of an offset
-(partitions on restart, the simple reader on checkpoint interchange)
-resolves base+delta back to the full catalog; all historical offset
-shapes still normalize. Reference analogy: readers carry a position
+(partitions on restart) resolves base+delta back to the full catalog;
+all historical offset shapes still normalize. Reference analogy: readers carry a position
 into the footer's consolidated stripe directory, never the directory
 itself (ReaderImpl.java:204-260).
 """
@@ -58,11 +52,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 from pyspark.sql.types import StructType
 
 
@@ -198,8 +188,8 @@ def _offset_base_dir(options) -> str:
 
 
 #: resolved base catalogs keyed by (dir, ref) — offsets reference a base
-#: many triggers in a row, and a restart resolves the same ref from both
-#: partitions() and the simple reader; tiny (each entry is one dict)
+#: many triggers in a row, and partitions() resolves the same ref for both
+#: its start and end offsets; tiny (each entry is one dict)
 _BASE_CACHE: dict[tuple, tuple[dict, dict]] = {}
 _BASE_CACHE_MAX = 8
 
@@ -247,244 +237,8 @@ def _load_base_catalog(offset: dict, default_dir: str) -> tuple[dict, dict]:
     )
 
 
-def _resolve_offset_shape(
-    offset: dict, norm, default_dir: str
-) -> tuple[dict, int, dict]:
-    """(files, watermark_ns, late) from ANY offset shape, including the
-    round-12 delta form {base_ref, adds, removes, late_adds,
-    late_removes, watermark_ns}; `norm` handles the historical inline
-    shapes."""
-    if "base_ref" not in offset:
-        return norm(offset)
-    bfiles, blate = _load_base_catalog(offset, default_dir)
-    files = dict(bfiles)
-    files.update(offset.get("adds", {}))
-    for k in offset.get("removes", ()):
-        files.pop(k, None)
-    late = dict(blate)
-    late.update(offset.get("late_adds", {}))
-    for k in offset.get("late_removes", ()):
-        late.pop(k, None)
-    return files, int(offset.get("watermark_ns", 0)), late
-
-
-class _DwrfStreamReader(SimpleDataSourceStreamReader):
-    def __init__(self, schema: StructType, options):
-        DwrfStreamDataSource._bootstrap()
-        from hive_dwrf_spark.format.fs import strip_file_uri
-
-        # SQL/managed surfaces hand a file: URI; list_files answers with
-        # stripped os paths either way, so normalize up front or
-        # _rel_name would raise "not under" on every listing entry
-        self.path = strip_file_uri(options.get("path"))
-        self.schema = schema
-        self.committed_only = _committed_opt(options)
-        self._base_dir = _offset_base_dir(options)
-        # emit (rather than silently fold) below-watermark backfills on
-        # a planner-to-simpleReader checkpoint switch; mirrors the
-        # planner's allowLateFiles. Caveat (documented trade, same as a
-        # pre-r11 planner checkpoint): a file the PLANNER processed and
-        # then retired while it stayed on disk is indistinguishable from
-        # a backfill here and replays once — duplicate-once, never lose.
-        self.allow_late = str(options.get("allowLateFiles", "")).lower() in (
-            "true",
-            "1",
-            "yes",
-        )
-
-    def initialOffset(self) -> dict:
-        return {"processed": []}
-
-    def _processed(self, offset: dict) -> set[str]:
-        # legacy index offsets ({"file_index": N}) from pre-fix
-        # checkpoints map to "first N names of the current sorted
-        # listing" — those N replay once on upgrade, then the name-set
-        # offset is exact from there on
-        if "file_index" in offset:
-            listing = [
-                _rel_name(self.path, p)
-                for p in _dwrf_files(self.path, self.committed_only)
-            ]
-            return set(listing[: offset["file_index"]])
-        # delta-form planner offsets resolve through the base catalog
-        if "base_ref" in offset:
-            files, _wm, late = _resolve_offset_shape(
-                offset, lambda o: ({}, 0, {}), self._base_dir
-            )
-            return set(files) | set(late)
-        # planner-reader offsets ({"files": {name: mtime}}) interchange;
-        # a planner "late" registry is processed-or-accounted-for too
-        processed = offset.get("processed", offset.get("files", []))
-        return set(processed) | set(offset.get("late", []))
-
-    def _rows_for(self, items: list[tuple]):
-        # items: (path, stripe_indices|None) — None reads the whole
-        # file; an index list reads only those stripes (the uncovered
-        # remainder of a partially-ingested compact_sink merged file).
-        # Returns a materialized list: Spark pickles the prefetched batch
-        # between read() and commit(), so the result must be serializable
-        DwrfStreamDataSource._bootstrap()
-        from hive_dwrf_spark.format.reader import DwrfFile
-        from hive_dwrf_spark.sources.dwrf_datasource import (
-            _cast_partition_value,
-        )
-
-        want = [f.name for f in self.schema.fields]
-        names, part_fields = _split_fields(self.schema)
-        rows: list[tuple] = []
-        for fp, stripes in items:
-            raw = dict(_part_values_from_rel(_rel_name(self.path, fp)))
-            pvals = {
-                pname: (
-                    None
-                    if raw.get(pname) is None
-                    else _cast_partition_value(raw[pname], fld.dataType)
-                )
-                for pname, fld in part_fields.items()
-            }
-            with DwrfFile(fp) as f:
-                if names:
-                    if stripes is None:
-                        tables = [f.read(columns=names)]
-                    else:
-                        tables = [
-                            t
-                            for t in (
-                                f.read_stripe(i, columns=names)
-                                for i in stripes
-                            )
-                            if t is not None
-                        ]
-                    for table in tables:
-                        rows.extend(
-                            tuple(
-                                pvals[c] if c in part_fields else row[c]
-                                for c in want
-                            )
-                            for row in table.to_pylist()
-                        )
-                else:
-                    nrows = (
-                        f.num_rows
-                        if stripes is None
-                        else sum(
-                            f.footer.stripes[i].numberOfRows
-                            for i in stripes
-                        )
-                    )
-                    rows.extend(
-                        tuple(pvals[c] for c in want)
-                        for _ in range(nrows)
-                    )
-        # list_iterator: a real iterator (Spark requires one) that still
-        # pickles for the prefetch cache
-        return iter(rows)
-
-    def read(self, start: dict):
-        done = self._processed(start)
-        # planner-form checkpoints carry a retirement watermark: names
-        # the planner retired are NOT in its "files" map but WERE
-        # processed — re-emitting them on a simpleReader=true switch
-        # would duplicate rows. Anything at/below the watermark counts
-        # as processed (unless allowLateFiles says backfills should
-        # flow); the simple-form end offset then carries those names
-        # explicitly (it has no watermark of its own).
-        wm = (
-            int(start.get("watermark_ns", 0))
-            if ("files" in start or "base_ref" in start)
-            else 0
-        )
-        lineage: dict = {}
-        if self.committed_only:
-            from hive_dwrf_spark.sources.dwrf_datasource import (
-                manifest_lineage,
-            )
-
-            lineage = manifest_lineage(self.path)
-
-        def _acct(src: str, mt: int) -> bool:
-            return src in done or bool(wm and mt and mt < wm)
-
-        fresh: list[tuple] = []  # (path, stripe_indices|None)
-        absorbed: set[str] = set()
-        partial: dict[str, list[int]] = {}
-        below_wm: set[str] = set()
-        for p in _dwrf_files(self.path, self.committed_only):
-            n = _rel_name(self.path, p)
-            if n in done:
-                continue
-            if n in lineage:
-                # a compact_sink output: emit only what the offset does
-                # not already cover (nothing / the uncovered stripes /
-                # everything) — merged names must never double-ingest
-                unc = _uncovered_stripes(n, lineage, _acct)
-                if not unc:
-                    absorbed.add(n)
-                    continue
-                if len(unc) < _lineage_stripe_count(lineage, n):
-                    partial[n] = unc
-                    fresh.append((p, unc))
-                    continue
-            if wm and not self.allow_late and _mtime_ns(p) < wm:
-                below_wm.add(n)
-            else:
-                fresh.append((p, None))
-        end = {
-            "processed": sorted(
-                done
-                | below_wm
-                | absorbed
-                | {_rel_name(self.path, p) for p, _s in fresh}
-            )
-        }
-        # replay fidelity (readBetweenOffsets must emit the same rows
-        # even if the manifest compacts again in between): the absorbed
-        # names and partial stripe lists ride in the end offset
-        if absorbed:
-            end["absorbed"] = sorted(absorbed)
-        if partial:
-            end["partial"] = {k: list(v) for k, v in sorted(partial.items())}
-        return self._rows_for(fresh), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        DwrfStreamDataSource._bootstrap()
-        from hive_dwrf_spark.format.fs import join_path
-
-        done = self._processed(start)
-        batch = self._processed(end) - done
-        # mirror read(): absorbed names were folded without emission;
-        # partial names emitted only their uncovered stripes; names below
-        # a planner-form start watermark were folded silently too
-        absorbed = set(end.get("absorbed", ()))
-        partial = end.get("partial", {}) or {}
-        wm = (
-            0
-            if self.allow_late
-            else (
-                int(start.get("watermark_ns", 0))
-                if ("files" in start or "base_ref" in start)
-                else 0
-            )
-        )
-
-        def _at_or_above(p: str) -> bool:
-            try:
-                return _mtime_ns(p) >= wm
-            except (FileNotFoundError, OSError):
-                return True  # vanished: fail in _rows_for as before
-
-        items: list[tuple] = []
-        for name in sorted(batch - absorbed):
-            p = join_path(self.path, name)
-            if name in partial:
-                items.append((p, list(partial[name])))
-            elif not wm or _at_or_above(p):
-                items.append((p, None))
-        return self._rows_for(items)
-
-
 class _DwrfPartitionStreamReader(DataSourceStreamReader):
-    """Partition-planning stream reader (the default; module docstring).
+    """Partition-planning stream reader (module docstring).
 
     Lifecycle facts this design leans on (pyspark 4.1, verified against
     python_streaming_source_runner + plan_data_source_read):
@@ -567,10 +321,10 @@ class _DwrfPartitionStreamReader(DataSourceStreamReader):
     def _norm(offset: dict) -> tuple[dict, int, dict]:
         """(files, watermark_ns, late) from any historical offset shape:
         the planner form {"files": {...}, "watermark_ns": W, "late":
-        {...}}, the simple reader's {"processed": [names]} (checkpoint
-        interchange), or the pre-fix {"file_index": N} — mapped to empty,
-        so those files replay ONCE on upgrade and the name-set offset is
-        exact from there on."""
+        {...}}, the {"processed": [names]} form of checkpoints written by
+        the former driver-side reader, or the pre-fix {"file_index": N} —
+        mapped to empty, so those files replay ONCE on upgrade and the
+        name-set offset is exact from there on."""
         if "files" in offset:
             return (
                 dict(offset["files"]),
@@ -582,9 +336,21 @@ class _DwrfPartitionStreamReader(DataSourceStreamReader):
         return {}, 0, {}
 
     def _resolve(self, offset: dict) -> tuple[dict, int, dict]:
-        """_norm plus the round-12 delta form (base_ref + adds/removes
-        resolved against the persisted base catalog)."""
-        return _resolve_offset_shape(offset, self._norm, self._base_dir)
+        """_norm plus the round-12 delta form {base_ref, adds, removes,
+        late_adds, late_removes, watermark_ns}, resolved against the
+        persisted base catalog."""
+        if "base_ref" not in offset:
+            return self._norm(offset)
+        bfiles, blate = _load_base_catalog(offset, self._base_dir)
+        files = dict(bfiles)
+        files.update(offset.get("adds", {}))
+        for k in offset.get("removes", ()):
+            files.pop(k, None)
+        late = dict(blate)
+        late.update(offset.get("late_adds", {}))
+        for k in offset.get("late_removes", ()):
+            late.pop(k, None)
+        return files, int(offset.get("watermark_ns", 0)), late
 
     def _listing(self) -> dict:
         """{rel_name: (mtime_ns, size_bytes)} of the current directory
@@ -1130,33 +896,15 @@ class DwrfStreamDataSource(DataSource):
         return StructType(fields)
 
     def streamReader(self, schema: StructType):
-        """The partition-planning executor-side reader (default). With
-        option("simpleReader", "true") raise the NOT_IMPLEMENTED marker
-        pyspark's _streamReader probes for, which falls selection back
-        to simpleStreamReader below."""
-        if str(self.options.get("simpleReader", "")).lower() in (
-            "true",
-            "1",
-            "yes",
-        ):
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         return _DwrfPartitionStreamReader(schema, self.options)
-
-    def simpleStreamReader(self, schema: StructType):
-        return _DwrfStreamReader(schema, self.options)
 
 
 def stream_dwrf_dir(spark: SparkSession, path: str, **options) -> DataFrame:
     """Open a DWRF directory as a structured stream.
 
-    Options pass through to the source: ``simpleReader`` (driver-side
-    fallback reader), ``maxFileAgeSec`` (offset retirement window,
-    default 7 days), ``maxFilesPerTrigger`` / ``maxBytesPerTrigger``
+    Options pass through to the source: ``maxFileAgeSec`` (offset
+    retirement window, default 7 days), ``maxFilesPerTrigger`` /
+    ``maxBytesPerTrigger``
     (per-batch admission caps — whichever budget runs out first),
     ``allowLateFiles`` (admit backfilled below-watermark files instead
     of refusing them; refusals are counted and logged either way),

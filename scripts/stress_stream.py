@@ -11,12 +11,13 @@ memory sink, and records:
 - wall seconds per pass + the x10 ratio (file-count scaling);
 - planned_partitions from a direct reader.partitions(initial, latest)
   call — executor-side parallelism evidence: one InputPartition per
-  (file, stripe-run), exactly like the batch scan, where the old
-  simple reader always planned ONE driver-side prefetch;
+  (file, stripe-run), exactly like the batch scan;
 - a value check (row count + key sum) at both scales, so the ratio is
-  never measured over a wrong answer;
-- the same pass through the simple reader (simpleReader=true) at the
-  SMALL scale only, as the driver-side baseline the planner replaces.
+  never measured over a wrong answer.
+
+Earlier STRESS files also carry ``simple_reader_base_sec``, the same
+small-scale pass through the driver-side reader that has since been
+deleted (it lost every measurement to the planner).
 
 Usage: python scripts/stress_stream.py [out.json]
 Merges a "_streaming_x10" entry into out.json (default STRESS_r10.json).
@@ -59,15 +60,14 @@ def _make_dir(path: str, n_files: int) -> int:
     return total
 
 
-def _run_stream(spark, src: str, qname: str, simple: bool = False) -> float:
+def _run_stream(spark, src: str, qname: str) -> float:
     from hive_dwrf_spark.streaming import stream_dwrf_dir
 
     ckpt = f"/tmp/stress_stream_ckpt_{qname}"
     shutil.rmtree(ckpt, ignore_errors=True)
-    opts = {"simpleReader": "true"} if simple else {}
     t0 = time.perf_counter()
     q = (
-        stream_dwrf_dir(spark, src, **opts)
+        stream_dwrf_dir(spark, src)
         .writeStream.format("memory")
         .queryName(qname)
         .option("checkpointLocation", ckpt)
@@ -128,10 +128,6 @@ def main() -> int:
     row10 = spark.sql("SELECT count(*) c, sum(k) s FROM s_x10").collect()[0]
     assert (row10.c, row10.s) == (n10, expect_sum10), (row10, n10)
 
-    simple_sec = _run_stream(spark, src1, "s_simple_x1", simple=True)
-    rows = spark.sql("SELECT count(*) c FROM s_simple_x1").collect()[0]
-    assert rows.c == n1
-
     entry = {
         "files_base": BASE_FILES,
         "files_x10": BASE_FILES * 10,
@@ -141,7 +137,6 @@ def main() -> int:
         "ratio": round(x10_sec / base_sec, 2),
         "planned_partitions_x1": _planned_partitions(src1),
         "planned_partitions_x10": _planned_partitions(src10),
-        "simple_reader_base_sec": round(simple_sec, 3),
     }
     prior = {}
     if os.path.exists(out_path):

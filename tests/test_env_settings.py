@@ -175,3 +175,66 @@ def test_broadcast_ids_max(raw, spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_BROADCAST_IDS_MAX", "0")
     out = _maybe_broadcast_ids(ids)
     assert "broadcast" not in out._jdf.queryExecution().analyzed().toString()
+
+
+@pytest.mark.parametrize("raw", BAD + ["true"])
+def test_profile_setting(raw, monkeypatch):
+    import subprocess
+    import sys
+
+    from hive_dwrf_spark.format.profiler import Profiler
+
+    monkeypatch.setenv("DWRF_PROFILE", raw)
+    with pytest.warns(RuntimeWarning, match="DWRF_PROFILE"):
+        assert Profiler().enabled is False
+    # the module-level profiler is built at import: a bad value must not
+    # make importing the reader fail
+    proc = subprocess.run(
+        [sys.executable, "-c", "import hive_dwrf_spark.format.reader"],
+        capture_output=True,
+        text=True,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert "DWRF_PROFILE" in proc.stderr
+    monkeypatch.setenv("DWRF_PROFILE", "1")
+    assert Profiler().enabled is True
+
+
+@pytest.mark.parametrize(
+    "raw, master, partitions",
+    [(b, "local[*]", "32") for b in BAD]
+    + [("", "local[*]", "32"), ("0", "local[*]", "32"), ("3", "local[3]", "3")],
+)
+def test_session_cpus(raw, master, partitions, monkeypatch):
+    import warnings
+
+    from hive_dwrf_spark import session
+
+    seen = {}
+
+    class Builder:
+        def appName(self, name):
+            return self
+
+        def master(self, m):
+            seen["master"] = m
+            return self
+
+        def config(self, k, v):
+            seen[k] = v
+            return self
+
+        def getOrCreate(self):
+            return "spark"
+
+    monkeypatch.setattr(session.SparkSession, "builder", Builder())
+    monkeypatch.setattr(session, "apply_runtime_confs", lambda s: s)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert session.get_spark() == "spark"
+    assert any("SPARK_GRAFT_CPUS" in str(w.message) for w in caught) == (
+        raw in BAD
+    )
+    assert seen["master"] == master
+    assert seen["spark.sql.shuffle.partitions"] == partitions

@@ -8,9 +8,8 @@ at several delta thresholds:
 
 - every emitted offset must RESOLVE (base + delta) to exactly the
   planner's internal catalog + watermark + late registry;
-- a FRESH reader (simulating a restarted planner or the driver-side
-  simple reader on checkpoint interchange) must resolve the same
-  offset to the same catalog from disk alone;
+- a FRESH reader (simulating a restarted planner) must resolve the
+  same offset to the same catalog from disk alone;
 - consecutive resolved catalogs must keep the superset-modulo-
   retirement invariant: a name leaves only by falling below the
   watermark (the anchor-clobber regression class).

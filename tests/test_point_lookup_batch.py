@@ -577,6 +577,32 @@ class TestLookupHandleCache:
             assert trace["files_opened"] >= 60, trace
             assert most[0] <= bound, (name, most[0])
 
+    def test_dropped_handle_frees_without_cyclic_gc(self, nested_file, four_parts):
+        """A handle that has built point decoders is freed, and its file
+        closed, as soon as its last reference goes: with the cyclic GC off,
+        a weakref to it is dead right after `del`, and a handle the lookup
+        LRU evicts is freed on eviction."""
+        import gc
+        import weakref
+
+        gc.collect()
+        gc.disable()
+        try:
+            f = DwrfFile(nested_file)
+            f.read_rows_at([5, 9_000, 17_500], columns=["i", "s"])
+            assert f._point_decoders
+            refs = [weakref.ref(f), weakref.ref(f._f)]
+            del f
+            assert [r() for r in refs] == [None, None]  # file object freed
+
+            lookup_keys(four_parts, "k", [5, 15_000, 25_000, 35_000])
+            refs = [weakref.ref(h) for _, h in lookup._HANDLES.values()]
+            assert len(refs) == 4 and all(r() is not None for r in refs)
+            lookup._HANDLES.clear()
+            assert [r() for r in refs] == [None] * 4
+        finally:
+            gc.enable()
+
     def test_corrupt_member_raises_every_call(self, four_parts, opens):
         from hive_dwrf_spark.format.reader import DwrfCorruptError
 

@@ -387,9 +387,10 @@ def test_planner_offsets_are_bounded_by_file_age(tmp_path):
 
 
 def test_planner_offset_interchange_and_legacy_forms(tmp_path):
-    """partitions() normalizes every historical offset shape: the simple
-    reader's {'processed': [names]} and the pre-fix {'file_index': N} —
-    a checkpoint written by the old reader resumes under the new one."""
+    """Guard that old checkpoints still resume: partitions() normalizes
+    every historical offset shape, including {'processed': [names]}
+    written by the since-deleted driver-side reader and the pre-fix
+    {'file_index': N}."""
     import os
 
     from hive_dwrf_spark.format import write_arrow_table
@@ -401,7 +402,7 @@ def test_planner_offset_interchange_and_legacy_forms(tmp_path):
     rdr = _planner_reader(src)
     end = rdr.latestOffset()
     assert set(end["files"]) == {"a.dwrf", "b.dwrf", "c.dwrf"}
-    # simple-reader offset as start: only the unprocessed name is fresh
+    # name-list offset as start: only the unprocessed name is fresh
     got = {
         os.path.basename(p.path)
         for p in rdr.partitions({"processed": ["a.dwrf", "c.dwrf"]}, end)
@@ -417,8 +418,8 @@ def test_planner_offset_interchange_and_legacy_forms(tmp_path):
 
 def test_planner_splits_large_files_into_stripe_runs(tmp_path):
     """One large multi-stripe file fans out into several InputPartitions
-    (consecutive stripe runs bin-packed to maxSplitBytes) — the executor-
-    side parallelism the simple reader couldn't offer."""
+    (consecutive stripe runs bin-packed to maxSplitBytes) — executor-side
+    parallelism within one file."""
     import os
 
     from hive_dwrf_spark.format import write_arrow_table
@@ -523,44 +524,6 @@ def test_stream_end_to_end_bounded_offset_and_restart(spark, tmp_path):
     )
     offset = json.loads(open(last).read().splitlines()[-1])
     assert set(offset["files"]) == {"n1.dwrf"}  # old names retired
-
-
-def test_simple_reader_fallback_option(spark, tmp_path):
-    """option('simpleReader','true') routes through the driver-side
-    SimpleDataSourceStreamReader (diagnostic path) — same results, and
-    the checkpoint offset carries the simple reader's name-list shape."""
-    import glob
-    import json
-    import os
-
-    from hive_dwrf_spark.format import write_arrow_table
-    from hive_dwrf_spark.streaming import stream_dwrf_dir
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    write_arrow_table(f"{src}/x.dwrf", pa.table({"k": pa.array([1, 2, 3])}))
-    q = (
-        stream_dwrf_dir(spark, src, simpleReader=True)
-        .writeStream.format("memory")
-        .queryName("simple_fallback_test")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    while q.isActive:
-        q.awaitTermination(5)
-    q.awaitTermination()
-    assert (
-        spark.sql("SELECT count(*) c FROM simple_fallback_test").collect()[0].c
-        == 3
-    )
-    last = max(
-        (f for f in glob.glob(f"{ckpt}/offsets/*") if f[-1].isdigit()),
-        key=lambda f: int(os.path.basename(f)),
-    )
-    offset = json.loads(open(last).read().splitlines()[-1])
-    assert offset.get("processed") == ["x.dwrf"]
 
 
 def test_stream_partitioned_dir_and_projection(spark, tmp_path):
@@ -1031,42 +994,6 @@ def test_planner_max_bytes_per_trigger(tmp_path):
     assert len(end["files"]) == 1
 
 
-def test_simple_reader_honors_planner_watermark(spark, tmp_path):
-    """Checkpoint interchange planner -> simple reader: names the planner
-    RETIRED (below watermark_ns, absent from 'files') were processed —
-    the simple reader must fold them into processed, not re-emit them."""
-    import os
-
-    from hive_dwrf_spark.streaming.dwrf_stream import _DwrfStreamReader
-    from hive_dwrf_spark.format import write_arrow_table
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    now_ns = time.time_ns()
-    retired = f"{src}/retired.dwrf"
-    write_arrow_table(retired, pa.table({"k": pa.array([1])}))
-    t = (now_ns - 1000 * 10**9) / 1e9
-    os.utime(retired, (t, t))
-    write_arrow_table(f"{src}/live.dwrf", pa.table({"k": pa.array([2])}))
-    fresh_name = f"{src}/fresh.dwrf"
-    write_arrow_table(fresh_name, pa.table({"k": pa.array([3])}))
-    schema = StructType([StructField("k", LongType())])
-    rdr = _DwrfStreamReader(schema, {"path": src})
-    # planner-form checkpoint: live.dwrf processed, retired.dwrf retired
-    start = {
-        "files": {"live.dwrf": now_ns},
-        "watermark_ns": now_ns - 60 * 10**9,
-    }
-    rows, end = rdr.read(start)
-    got = [r[0] for r in rows]
-    assert got == [3]  # fresh only: retired NOT re-emitted
-    assert "retired.dwrf" in end["processed"]
-    # replay of the same range skips the retired name too
-    replay = [r[0] for r in rdr.readBetweenOffsets(start, end)]
-    assert replay == [3]
-
-
 def test_stream_path_accepts_file_uri(spark, tmp_path):
     """A file: URI path (what SQL/managed surfaces hand the source) must
     work end-to-end: schema(), offsets and reads all normalize it the
@@ -1521,43 +1448,6 @@ def test_planner_absorbs_and_partially_plans_merged_files(tmp_path):
     assert idxs2 == idxs, parts2
 
 
-def test_simple_reader_honors_merged_lineage(tmp_path):
-    """The simple (driver-side) reader: absorbed merged names emit
-    nothing; partially-covered ones emit only uncovered stripes; a
-    replay (readBetweenOffsets) of that range emits the same rows."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from hive_dwrf_spark.format import write_arrow_table
-    from hive_dwrf_spark.sources.dwrf_datasource import compact_sink
-    from hive_dwrf_spark.streaming.dwrf_stream import _DwrfStreamReader
-
-    out = str(tmp_path / "sink")
-    _mk_sink(out, ["a.dwrf", "b.dwrf"], rows_per=2)
-    schema = StructType([StructField("k", StringType())])
-    rdr = _DwrfStreamReader(schema, {"path": out, "committedOnly": "true"})
-    it1, o1 = rdr.read(rdr.initialOffset())
-    assert len(list(it1)) == 4
-
-    compact_sink(out, target_bytes=64 << 20, quiesce_sec=0)
-    it2, o2 = rdr.read(o1)
-    assert list(it2) == []  # fully covered -> absorbed
-    assert o2.get("absorbed"), o2
-
-    write_arrow_table(
-        f"{out}/d.dwrf", pa.table({"k": pa.array(["d:0"])})
-    )
-    with open(f"{out}/_batches", "a") as log:
-        log.write("#begin\t9\n9\td.dwrf\t1\n#end\t9\n")
-    compact_sink(out, target_bytes=64 << 20, quiesce_sec=0)
-    it3, o3 = rdr.read(o2)
-    got = [r[0] for r in it3]
-    assert got == ["d:0"], got  # only the uncovered source's stripes
-    assert o3.get("partial"), o3
-    # replay of the same range (prefetch-cache contract)
-    replay = [r[0] for r in rdr.readBetweenOffsets(o2, o3)]
-    assert replay == ["d:0"], replay
-
-
 def _mk_plain_dir(out, names, rows_per=1, mtimes=None):
     import os
 
@@ -1634,9 +1524,9 @@ def test_delta_offsets_emit_resolve_and_compact(tmp_path):
 
 def test_delta_offsets_restart_interchange_and_gc(tmp_path):
     """A RESTARTED planner resolves a checkpointed delta offset through
-    the base file on disk; the simple reader interchanges; base GC keeps
-    the newest 8 generations; a rolled-back-too-far ref errors clearly;
-    an unwritable base dir falls back to inline offsets."""
+    the base file on disk; base GC keeps the newest 8 generations; a
+    rolled-back-too-far ref errors clearly; an unwritable base dir falls
+    back to inline offsets."""
     import json
     import os
 
@@ -1644,7 +1534,6 @@ def test_delta_offsets_restart_interchange_and_gc(tmp_path):
 
     from hive_dwrf_spark.streaming.dwrf_stream import (
         _DwrfPartitionStreamReader,
-        _DwrfStreamReader,
     )
 
     out = str(tmp_path / "src")
@@ -1663,15 +1552,6 @@ def test_delta_offsets_restart_interchange_and_gc(tmp_path):
     o2 = rdr2.latestOffset()
     parts = rdr2.partitions(o1, o2)
     assert {p.path.rsplit("/", 1)[-1] for p in parts} == {"g0.dwrf"}
-
-    # interchange: the simple reader treats the delta offset's catalog
-    # as processed
-    simple = _DwrfStreamReader(schema, opts)
-    it, o3 = simple.read(o2)
-    assert list(it) == []  # everything already covered
-    _mk_plain_dir(out, ["g1.dwrf"])
-    it, o4 = simple.read(o3)
-    assert len(list(it)) == 1
 
     # GC: many generations -> newest 8 kept
     for i in range(12):
@@ -1736,40 +1616,6 @@ def test_retired_on_disk_files_not_counted_late(tmp_path):
     _mk_plain_dir(out, ["backfill.dwrf"], mtimes=[now - 800])
     rdr.latestOffset()
     assert rdr.late_files_dropped == 1
-
-
-def test_simple_reader_allow_late_emits_backfills(tmp_path):
-    """ADVICE (r11): on a planner-to-simpleReader switch, a backfill
-    below the planner's watermark is EMITTED when allowLateFiles is set
-    (default still folds it as processed), and the replay path agrees."""
-    import time
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from hive_dwrf_spark.streaming.dwrf_stream import _DwrfStreamReader
-
-    out = str(tmp_path / "src")
-    now = time.time()
-    _mk_plain_dir(
-        out, ["seen.dwrf", "backfill.dwrf"], mtimes=[now, now - 900]
-    )
-    schema = StructType([StructField("k", LongType())])
-    start = {
-        "files": {"seen.dwrf": int((now - 1) * 1e9)},
-        "watermark_ns": int((now - 100) * 1e9),
-    }
-    # default: folded silently (pre-round-12 behavior, offsets bounded)
-    rdr = _DwrfStreamReader(schema, {"path": out})
-    it, end = rdr.read(start)
-    assert list(it) == []
-    assert "backfill.dwrf" in end["processed"]
-    # allowLateFiles: the backfill flows, exactly once, replay included
-    rdr2 = _DwrfStreamReader(schema, {"path": out, "allowLateFiles": "true"})
-    it2, end2 = rdr2.read(start)
-    assert len(list(it2)) == 1
-    assert len(list(rdr2.readBetweenOffsets(start, end2))) == 1
-    it3, _ = rdr2.read(end2)
-    assert list(it3) == []  # no replay on the next batch
 
 
 def test_initial_offset_never_clobbers_anchor(tmp_path):
