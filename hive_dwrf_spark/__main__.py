@@ -105,6 +105,7 @@ def _parse_key(s: str):
 
 def _cmd_lookup(args: list[str]) -> int:
     from .format.lookup import cache_bytes, lookup_keys
+    from .format.reader import block_cache_bytes
 
     if len(args) != 3:
         print("usage: lookup <path> <key_col> <k1,k2,...>", file=sys.stderr)
@@ -122,7 +123,9 @@ def _cmd_lookup(args: list[str]) -> int:
         f"{trace['files_opened']} files opened",
         file=sys.stderr,
     )
-    held = cache_bytes()
+    # the handles share the process's decompressed blocks: print their
+    # total once
+    held = {**cache_bytes(), "blocks": block_cache_bytes()}
     print(
         "# cache bytes: "
         + ", ".join(f"{layer} {n}" for layer, n in held.items())

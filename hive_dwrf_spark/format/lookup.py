@@ -40,12 +40,15 @@ hold keys), so it holds few files open however large the directory.
              size or mtime and is reopened, but an in-place rewrite
              keeping both would be served from the stale handle.
   bounds   : at most _HANDLES_MAX handles stay open (least recently used
-             dropped first). A handle holds decoded strides, at most
-             _StripeDecoder._BLK_CACHE_BUDGET of decompressed blocks in
-             each of its at most 8 stripe decoders, and the stripes'
+             dropped first). A handle holds decoded strides, decompressed
+             blocks in its at most 8 stripe decoders, and the stripes'
              dictionaries, row indexes and whole-stream decodes; it keeps
              no compressed bytes, so none of this grows with the file.
-             The decoded strides of all handles stay within one
+             The decompressed blocks of every decoder in the process,
+             those of these handles included, stay within one
+             _StripeDecoder._BLK_CACHE_BUDGET per process (oldest first
+             out), so idle handles hand their share to the busy ones. The
+             decoded strides of all handles stay within one
              SPARK_GRAFT_STRIDE_CACHE_MB budget — after each file a call
              decodes from, the least recently used handles' strides are
              evicted first. cache_bytes() reports what the handles hold.
@@ -79,8 +82,6 @@ from .reader import (
     _resolve_field,
     stride_cache_budget,
 )
-from .stats import stats_from_proto
-from .types import TypeKind
 
 #: open handles kept across calls, one per file
 _HANDLES_MAX = 128
@@ -132,7 +133,9 @@ def _trim_decoded() -> None:
 
 def cache_bytes() -> dict[str, int]:
     """Bytes held by all cached handles, per cache layer (the layers of
-    DwrfFile.cache_bytes, summed)."""
+    DwrfFile.cache_bytes, summed). Their "blocks" are a share of the
+    process's decompressed blocks, which reader.block_cache_bytes()
+    totals over every handle."""
     with _HANDLES_LOCK:
         handles = [f for _, f in _HANDLES.values()]
     total: dict[str, int] = {}
@@ -292,7 +295,6 @@ def lookup_keys(
             root = f.types[0]
             tops = list(zip(root.fieldNames, root.subtypes))
             include_ids = None
-        kind = TypeKind(f.types[key_tid].kind)
         stride = f.footer.rowIndexStride
         index_ids = {tid for _, tid in tops} | {key_tid}
         with _corrupt_guard(fp):
@@ -328,22 +330,19 @@ def lookup_keys(
                             ).slice(k_base)
                         out_chunks.setdefault(name, []).append(gather(arr))
 
-                # --- stride-level pruning via the key's ROW_INDEX stats:
-                # (stride, the keys its min/max admit) ---
-                alive = [(s, key_list) for s in range(n_strides)]
-                ri = dec.row_index(key_tid) if stride else None
-                if ri is not None and len(ri.entry) >= n_strides:
-                    kept = []
-                    for s, _ in alive:
-                        e = ri.entry[s].statistics
-                        if e is None:
-                            kept.append((s, key_list))
-                            continue
-                        cs = stats_from_proto(kind, e)
-                        admitted = _keys_in_range(key_list, cs.minimum, cs.maximum)
+                # --- stride-level pruning via the key's ROW_INDEX stats,
+                # parsed once per decoder: (stride, the keys its min/max
+                # admit) ---
+                bounds = dec.stride_bounds(key_tid) if stride else None
+                if bounds is not None and len(bounds[0]) >= n_strides:
+                    mins, maxs = bounds
+                    alive = []
+                    for s in range(n_strides):
+                        admitted = _keys_in_range(key_list, mins[s], maxs[s])
                         if admitted:
-                            kept.append((s, admitted))
-                    alive = kept
+                            alive.append((s, admitted))
+                else:
+                    alive = [(s, key_list) for s in range(n_strides)]
                 if not alive:
                     continue
                 if not stride:

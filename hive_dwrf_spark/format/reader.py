@@ -13,7 +13,9 @@ evaluation to the consumer — SURVEY.md §4 O2)."""
 
 from __future__ import annotations
 
+import itertools
 import os
+import threading
 import weakref
 from typing import Callable
 
@@ -218,6 +220,90 @@ def _prune_field(types, ids: set[int], field: pa.Field, tid: int) -> pa.Field:
     return field
 
 
+class _BlockCache:
+    """The process's decompressed blocks (_StripeDecoder._block), shared by
+    every decoder of every handle under one byte budget, as the
+    reference's seek path keeps one decompressed buffer per open stream
+    however many readers are open. Entries are keyed (decoder token,
+    column, stream kind, block offset) and valued (block, offset of the
+    next block); the oldest insert is evicted first.
+
+    A get is one dict lookup and takes no lock; an insert, an eviction or
+    a drop holds the cache's lock, never across a read or an inflate. A
+    decoder's blocks leave with the decoder (drop, run by its finalizer),
+    so the cache holds no reference to a decoder or a handle."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self.entries: dict[tuple[int, int, int, int], tuple[np.ndarray, int]] = {}
+        self.nbytes = 0
+        self._owned: dict[int, int] = {}  # decoder token -> bytes cached
+        # tokens dropped while the lock was held elsewhere (another
+        # thread, or a GC pass inside this cache's own critical section)
+        self._dropped: list[int] = []
+
+    def owned(self, token: int) -> int:
+        """Bytes cached for the decoder with `token`."""
+        return self._owned.get(token, 0)
+
+    def put(self, key, entry: tuple[np.ndarray, int], budget: int):
+        """Insert `entry` under `key` and evict the oldest entries past
+        `budget` bytes; returns the cached entry (a concurrent decoder's,
+        if one won the race)."""
+        with self._lock:
+            self._forget_dropped()
+            won = self.entries.get(key)
+            if won is not None:
+                return won
+            self._add(key, entry)
+            while self.nbytes > budget:
+                old_key = next(iter(self.entries))
+                self._remove(old_key, self.entries.pop(old_key))
+        return entry
+
+    def drop(self, token: int) -> None:
+        """Remove the blocks of the decoder with `token`. Never waits for
+        the lock: when it is taken, the next put removes them."""
+        self._dropped.append(token)
+        if self._lock.acquire(blocking=False):
+            try:
+                self._forget_dropped()
+            finally:
+                self._lock.release()
+
+    def _add(self, key, entry) -> None:
+        self.entries[key] = entry
+        self.nbytes += entry[0].nbytes
+        self._owned[key[0]] = self._owned.get(key[0], 0) + entry[0].nbytes
+
+    def _remove(self, key, entry) -> None:
+        self.nbytes -= entry[0].nbytes
+        left = self._owned[key[0]] - entry[0].nbytes
+        if left:
+            self._owned[key[0]] = left
+        else:
+            del self._owned[key[0]]
+
+    def _forget_dropped(self) -> None:
+        """Remove the blocks of the dropped decoders. Caller holds _lock."""
+        while self._dropped:
+            token = self._dropped.pop()
+            if token in self._owned:
+                for key in [k for k in self.entries if k[0] == token]:
+                    self._remove(key, self.entries.pop(key))
+
+
+_BLOCKS = _BlockCache()
+#: one token per decoder, so block keys never alias across decoders
+_DECODER_TOKENS = itertools.count()
+
+
+def block_cache_bytes() -> int:
+    """Bytes of decompressed blocks the process holds, across all
+    handles: at most _StripeDecoder._BLK_CACHE_BUDGET."""
+    return _BLOCKS.nbytes
+
+
 class _StripeDecoder:
     """Decodes one stripe's streams.
 
@@ -234,10 +320,11 @@ class _StripeDecoder:
     _COALESCE_GAP = 64 * 1024
     #: if included streams cover more than this fraction, read eagerly
     _EAGER_FRACTION = 0.75
-    #: byte budget of each decoder's decompressed-block cache. Point reads
-    #: keep no compressed bytes (see _raw_slice), so this bounds all the
-    #: stream data a decoder holds outside its whole-stream memo, however
-    #: large the file
+    #: byte budget of the decompressed blocks per process (_BlockCache),
+    #: over every decoder of every handle. Point reads keep no compressed
+    #: bytes (see _raw_slice), so this bounds all the stream data the
+    #: decoders hold outside their whole-stream memos, however large the
+    #: files and however many handles are open
     _BLK_CACHE_BUDGET = 32 * 1024 * 1024
 
     def __init__(
@@ -278,32 +365,31 @@ class _StripeDecoder:
         # Memo caches. A point-lookup decoder is shared by every thread
         # reading through its handle, so every cache follows one rule:
         # lookups are single dict gets (no lock); an insert, an eviction or
-        # a byte count happens under the handle's lock, which is never held
-        # across a decode. An entry, once inserted, never changes.
-        # _cache (whole streams) and _ri_cache (parsed ROW_INDEX) only grow
-        # and are keyed by stream, so a racing miss at worst decodes the
-        # same stream twice and stores an equal value; they take no lock.
+        # a byte count happens under a lock (the handle's, or the block
+        # cache's for blocks), which is never held across a decode. An
+        # entry, once inserted, never changes. _cache (whole streams),
+        # _ri_cache (parsed ROW_INDEX) and _bounds (stride min/max) only
+        # grow and are keyed by stream or column, so a racing miss at worst
+        # decodes twice and stores an equal value; they take no lock.
         self._lock = reader._lock
         self._cache: dict[tuple[int, int], np.ndarray] = {}
         self._ri_cache: dict[int, proto.RowIndex] = {}
+        self._bounds: dict[int, tuple[list, list]] = {}
         # decoded stripe dictionaries (type id -> values), read-only once
         # built: a stride miss on a DICTIONARY column would otherwise
         # re-decode the whole DICTIONARY_DATA stream
         self._dicts: dict[int, object] = {}
-        # decompressed-block cache for the stride-seek path (_block):
-        # consecutive stride seeks overwhelmingly land in the SAME
-        # compression block (a 256 KB block holds ~5-10 strides of a
-        # typical int stream), so without this every point lookup re-ran
-        # zlib over bytes a previous lookup already inflated — measured
-        # ~50% of read_row wall time on the sf0.1 lookup table. Keyed by
-        # (column, stream kind, block offset), valued (block, offset of
-        # the next block); insertion-order eviction under a byte budget.
-        self._blk_cache: dict[tuple[int, int, int], tuple[np.ndarray, int]] = {}
-        self._blk_cache_bytes = 0
+        # decompressed blocks of the stride-seek path (_block) live in the
+        # process-wide _BLOCKS under this decoder's token: consecutive
+        # stride seeks overwhelmingly land in the SAME compression block
+        # (a 256 KB block holds ~5-10 strides of a typical int stream), so
+        # without them every point lookup re-ran zlib over bytes a previous
+        # lookup already inflated — measured ~50% of read_row wall time on
+        # the sf0.1 lookup table. They leave the cache with the decoder.
+        self._token = next(_DECODER_TOKENS)
+        weakref.finalize(self, _BLOCKS.drop, self._token)
         # per-thread decode scratch (present mask handoff to stride-dict
         # decode) so columns can decode concurrently
-        import threading
-
         self._tls = threading.local()
         wanted = (
             self._wanted_ranges(include_ids, body_len) if prefetch else []
@@ -402,6 +488,27 @@ class _StripeDecoder:
             self._ri_cache[column] = hit
         return hit
 
+    def stride_bounds(self, column: int) -> tuple[list, list] | None:
+        """(mins, maxs): the minimum and maximum of `column` in each
+        stride, from its ROW_INDEX statistics (None where a stride records
+        none). None when the column has no ROW_INDEX. Parsed once per
+        decoder: the lookup path prunes strides by them on every call."""
+        hit = self._bounds.get(column)
+        if hit is None:
+            ri = self.row_index(column)
+            if ri is None:
+                return None
+            kind = TypeKind(self.r.types[column].kind)
+            mins, maxs = [], []
+            for e in ri.entry:
+                cs = e.statistics
+                if cs is not None:
+                    cs = stats_from_proto(kind, cs)
+                mins.append(None if cs is None else cs.minimum)
+                maxs.append(None if cs is None else cs.maximum)
+            hit = self._bounds[column] = (mins, maxs)
+        return hit
+
     # -- stride-bounded decode (ROW_INDEX seek positions) ----------------------
     # Consumes the per-stride positions the writer records
     # (WriterImpl.java:317-328 PositionRecorder parity; see
@@ -419,8 +526,8 @@ class _StripeDecoder:
         writer, which nothing keeps once the block is inflated. A block
         that does not lie inside its stream's byte range raises
         DwrfCorruptError rather than reading the neighbouring stream."""
-        ck = (col, int(kind), p)
-        hit = self._blk_cache.get(ck)
+        ck = (self._token, col, int(kind), p)
+        hit = _BLOCKS.entries.get(ck)
         if hit is not None:
             return hit
         rng_off, rng_len = self._ranges[(col, int(kind))]
@@ -456,7 +563,7 @@ class _StripeDecoder:
                 ),
                 dtype=np.uint8,
             )
-        return self._cache_block(ck, (part, p + framed))
+        return _BLOCKS.put(ck, (part, p + framed), self._BLK_CACHE_BUDGET)
 
     def _window(self, col, kind, blk, off, need) -> np.ndarray:
         """`need` bytes of the decompressed stream (fewer at its end) from
@@ -502,23 +609,6 @@ class _StripeDecoder:
                 raise
             # the run goes on in the next block
             return decode(self._window(col, kind, blk, off, bound))
-
-    def _cache_block(
-        self, ck, entry: tuple[np.ndarray, int]
-    ) -> tuple[np.ndarray, int]:
-        """Insert (decompressed block, offset of the next block) into the
-        block cache, evicting the oldest blocks past the budget; returns
-        the cached entry (a concurrent decoder's, if one won the race)."""
-        with self._lock:
-            won = self._blk_cache.get(ck)
-            if won is not None:
-                return won
-            self._blk_cache[ck] = entry
-            self._blk_cache_bytes += entry[0].nbytes
-            while self._blk_cache_bytes > self._BLK_CACHE_BUDGET:
-                old, _ = self._blk_cache.pop(next(iter(self._blk_cache)))
-                self._blk_cache_bytes -= old.nbytes
-        return entry
 
     def _string_dictionary(self, type_id: int, n_dict: int) -> pa.Array:
         """The stripe dictionary of a DICTIONARY string column."""
@@ -1135,13 +1225,12 @@ class DwrfFile:
         self._verify_on_read = verify_checksums
         self._verified_stripes: set[int] = set()
         self._verify_triples: list[tuple[int, int, int]] | None = None
-        # The handle's one lock. It guards every shared cache of the
-        # point-lookup path: the decoder LRU and decoded-stride LRU below,
-        # and the memo caches of the decoders (_StripeDecoder). It guards
-        # bookkeeping and IO, never a decode.
-        import threading as _threading
-
-        self._lock = _threading.Lock()
+        # The handle's one lock. It guards the handle's shared caches of
+        # the point-lookup path: the decoder LRU and decoded-stride LRU
+        # below, and the dictionary memos of the decoders (_StripeDecoder;
+        # their decompressed blocks are the process-wide _BLOCKS', under
+        # its own lock). It guards bookkeeping and IO, never a decode.
+        self._lock = threading.Lock()
         # point-lookup decoder reuse (read_row): (stripe, projection) ->
         # no-prefetch _StripeDecoder with warmed dictionary/index caches
         self._point_decoders: dict = {}
@@ -1171,8 +1260,6 @@ class DwrfFile:
             self._fileno = self._f.fileno()
         except (AttributeError, OSError):
             # non-local file-likes (fsspec objects): seek+read under a lock
-            import threading
-
             self._fileno = None
             self._read_lock = threading.Lock()
         self._f.seek(0, 2)
@@ -1814,9 +1901,10 @@ class DwrfFile:
         """Decoder reuse across point lookups (the serving pattern is MANY
         reads per open file): keyed by (stripe, projection); built with
         prefetch=False so a seek never pays a whole-stripe read — only the
-        covering blocks are read and decompress. Dictionaries, indexes and
-        decompressed blocks cache inside the decoder, so lookup k>1 is
-        pure stride-window work. The cache is LRU (hit moves the key to
+        covering blocks are read and decompress. Dictionaries and indexes
+        cache inside the decoder, and decompressed blocks under its token
+        in the process-wide block cache, so lookup k>1 is pure
+        stride-window work. The cache is LRU (hit moves the key to
         the back, overflow evicts the FRONT) so workloads alternating
         across more than the cap's (stripe, projection) pairs keep their
         warm working set instead of rebuilding every decoder. Threads
@@ -1888,15 +1976,16 @@ class DwrfFile:
     def cache_bytes(self) -> dict[str, int]:
         """Bytes this handle holds for point lookups, per cache layer:
         decoded strides (at most SPARK_GRAFT_STRIDE_CACHE_MB), decompressed
-        blocks (at most _StripeDecoder._BLK_CACHE_BUDGET per decoder, at
-        most 8 decoders), whole decompressed streams (row indexes,
+        blocks of its at most 8 decoders (its share of the blocks of all
+        handles, at most _StripeDecoder._BLK_CACHE_BUDGET per process; see
+        block_cache_bytes), whole decompressed streams (row indexes,
         dictionary streams, whole-stripe fallbacks) and decoded stripe
         dictionaries."""
         with self._lock:
             decs = list(self._point_decoders.values())
             out = {
                 "strides": self._stride_bytes,
-                "blocks": sum(d._blk_cache_bytes for d in decs),
+                "blocks": sum(_BLOCKS.owned(d._token) for d in decs),
             }
         out["streams"] = sum(a.nbytes for d in decs for a in list(d._cache.values()))
         out["dictionaries"] = sum(

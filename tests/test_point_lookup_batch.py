@@ -40,6 +40,27 @@ def _nested_table(n: int) -> pa.Table:
     )
 
 
+@pytest.fixture
+def blocks(monkeypatch):
+    """A fresh process-wide block cache: the decoders a test builds keep
+    their decompressed blocks there, so its totals count only them."""
+    from hive_dwrf_spark.format import reader as reader_mod
+
+    cache = reader_mod._BlockCache()
+    monkeypatch.setattr(reader_mod, "_BLOCKS", cache)
+    return cache
+
+
+def _assert_block_counts(cache) -> None:
+    """The block cache's byte counts, in total and per decoder, agree with
+    its entries: no insert or eviction lost an update."""
+    per_token: Counter = Counter()
+    for key, (blk, _) in list(cache.entries.items()):
+        per_token[key[0]] += blk.nbytes
+    assert cache.nbytes == sum(per_token.values())
+    assert cache._owned == dict(per_token)
+
+
 @pytest.fixture(scope="module")
 def nested_file(tmp_path_factory):
     path = str(tmp_path_factory.mktemp("batch") / "t.dwrf")
@@ -577,11 +598,14 @@ class TestLookupHandleCache:
             assert trace["files_opened"] >= 60, trace
             assert most[0] <= bound, (name, most[0])
 
-    def test_dropped_handle_frees_without_cyclic_gc(self, nested_file, four_parts):
+    def test_dropped_handle_frees_without_cyclic_gc(
+        self, nested_file, four_parts, blocks
+    ):
         """A handle that has built point decoders is freed, and its file
         closed, as soon as its last reference goes: with the cyclic GC off,
         a weakref to it is dead right after `del`, and a handle the lookup
-        LRU evicts is freed on eviction."""
+        LRU evicts is freed on eviction. Its decompressed blocks leave the
+        process-wide block cache with it."""
         import gc
         import weakref
 
@@ -591,17 +615,111 @@ class TestLookupHandleCache:
             f = DwrfFile(nested_file)
             f.read_rows_at([5, 9_000, 17_500], columns=["i", "s"])
             assert f._point_decoders
+            assert 0 < f.cache_bytes()["blocks"] == blocks.nbytes
             refs = [weakref.ref(f), weakref.ref(f._f)]
             del f
             assert [r() for r in refs] == [None, None]  # file object freed
+            assert blocks.nbytes == 0 and not blocks.entries
 
             lookup_keys(four_parts, "k", [5, 15_000, 25_000, 35_000])
             refs = [weakref.ref(h) for _, h in lookup._HANDLES.values()]
             assert len(refs) == 4 and all(r() is not None for r in refs)
+            assert 0 < lookup.cache_bytes()["blocks"] == blocks.nbytes
             lookup._HANDLES.clear()
             assert [r() for r in refs] == [None] * 4
+            assert blocks.nbytes == 0 and not blocks.entries
+            _assert_block_counts(blocks)
         finally:
             gc.enable()
+
+    def test_blocks_of_all_handles_share_one_budget(
+        self, tmp_path, monkeypatch, blocks
+    ):
+        """More handles and decoders than a small block budget holds: the
+        decompressed blocks of two user-held handles and of every lookup
+        handle stay within ONE budget per process, and the handles' shares
+        add up to exactly what the cache holds, after every call."""
+        from hive_dwrf_spark.format import reader as reader_mod
+
+        budget, block = 64 * 1024, 16_384
+        monkeypatch.setattr(reader_mod._StripeDecoder, "_BLK_CACHE_BUDGET", budget)
+        d = str(tmp_path / "keys")
+        os.makedirs(d)
+        for i in range(4):
+            _write_part(
+                os.path.join(d, f"part-{i}.dwrf"), i * 10_000, 10_000,
+                compression_block_size=block,
+            )
+        n = 20_000
+        table = _multi_block_table(n)
+        user = []
+        for i in range(2):
+            path = str(tmp_path / f"rows-{i}.dwrf")
+            write_arrow_table(
+                path, table, stripe_rows=5_000, row_index_stride=1_000,
+                compression_block_size=block,
+            )
+            user.append(DwrfFile(path))
+        keys = list(range(0, 40_000, 499))  # a key in every stride
+        want = _reference(d, "k", keys)
+        tokens: set[int] = set()
+
+        def check() -> None:
+            _assert_block_counts(blocks)
+            shares = sum(f.cache_bytes()["blocks"] for f in user)
+            shares += lookup.cache_bytes().get("blocks", 0)
+            assert shares == blocks.nbytes <= budget, (shares, blocks.nbytes)
+            tokens.update(key[0] for key in blocks.entries)
+
+        rng = np.random.default_rng(2)
+        for _ in range(3):
+            for f in user:
+                rows = sorted(int(r) for r in rng.integers(0, n, 12))
+                assert f.read_rows_at(rows).equals(table.take(rows))
+                check()
+            assert lookup_keys(d, "k", keys).equals(want)
+            check()
+        # the decoders that cached blocks outnumber the blocks it holds
+        assert len(tokens) > budget // block, len(tokens)
+        for f in user:
+            f.close()
+
+    def test_stride_bounds_parse_once_per_decoder(self, four_parts, monkeypatch):
+        """The key column's stride statistics are parsed once per decoder,
+        not on every call, and pick the same strides: exactly those whose
+        rows hold a key."""
+        from hive_dwrf_spark.format import reader as reader_mod
+
+        batches = [[5, 12_345, 39_999], [7, 8, 9], [3, 20_000, 25_000, 31_001]]
+        want = [_reference(four_parts, "k", keys) for keys in batches]
+        parsed: list = []  # every statistics message the reader parses
+        stats_from_proto = reader_mod.stats_from_proto
+
+        def counting(kind, msg):
+            parsed.append(msg)
+            return stats_from_proto(kind, msg)
+
+        monkeypatch.setattr(reader_mod, "stats_from_proto", counting)
+        for n in range(6):
+            keys = batches[n % len(batches)]
+            trace = {}
+            assert lookup_keys(four_parts, "k", keys, trace=trace).equals(
+                want[n % len(batches)]
+            )
+            # 500-row strides in 4000-row stripes: stride k // 500 holds k
+            assert trace["strides_scanned"] == len({k // 500 for k in keys})
+            if n == len(batches) - 1:
+                warm = len(parsed)
+        assert len(parsed) == warm  # repeat calls parse nothing
+        decoders = [
+            dec for _, f in lookup._HANDLES.values()
+            for dec in f._point_decoders.values()
+        ]
+        assert len(decoders) == 4 * 3
+        # each stride's statistics of each decoder parsed exactly once
+        times = Counter(id(msg) for msg in parsed)
+        entries = [e.statistics for dec in decoders for e in dec.row_index(1).entry]
+        assert [times[id(msg)] for msg in entries] == [1] * len(entries)
 
     def test_corrupt_member_raises_every_call(self, four_parts, opens):
         from hive_dwrf_spark.format.reader import DwrfCorruptError
@@ -856,12 +974,15 @@ class TestGatherParity:
         assert lookup_keys(d, "k", keys).equals(_reference(d, "k", keys))
 
 
-def test_threads_share_handle_caches(mixed_file, monkeypatch):
+def test_threads_share_handle_caches(mixed_file, monkeypatch, blocks):
     """8 threads on ONE handle cycle through 12 (stripe, projection)
     pairs, more than the decoder cache holds, with stride and block caches
     small enough to evict constantly. Every answer equals a serial read,
-    nothing raises, and no decoder's block-cache byte count loses an
-    update."""
+    nothing raises, no block-cache byte count, in total or per decoder,
+    loses an update, and the blocks of every dropped decoder leave the
+    cache, also of those dropped while another thread held its lock."""
+    import gc
+
     from hive_dwrf_spark.format import reader as reader_mod
 
     monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
@@ -877,12 +998,12 @@ def test_threads_share_handle_caches(mixed_file, monkeypatch):
         serial = [f.read_rows_at(ids, columns=cols) for cols, ids in requests]
 
     shared = DwrfFile(mixed_file)
-    decoders: dict[int, object] = {}
+    built: set[int] = set()  # tokens of the decoders built
     point_decoder = shared._point_decoder
 
     def recording(*a):
         dec = point_decoder(*a)
-        decoders[id(dec)] = dec
+        built.add(dec._token)
         return dec
 
     shared._point_decoder = recording
@@ -918,10 +1039,12 @@ def test_threads_share_handle_caches(mixed_file, monkeypatch):
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors
     assert not mismatches, mismatches
-    assert len(decoders) > 8
-    for dec in decoders.values():
-        held = sum(p.nbytes for p, _ in dec._blk_cache.values())
-        assert dec._blk_cache_bytes == held
+    assert len(built) > 8
+    _assert_block_counts(blocks)
+    assert blocks.nbytes <= 16 * 1024
+    del shared, point_decoder, recording
+    gc.collect()  # the handle's patched method refers to the handle
+    assert blocks.nbytes == 0 and not blocks.entries and not blocks._owned
 
 
 def _multi_block_table(n: int) -> pa.Table:
@@ -938,7 +1061,7 @@ def _multi_block_table(n: int) -> pa.Table:
     )
 
 
-def test_point_reads_hold_no_compressed_bytes(tmp_path, monkeypatch):
+def test_point_reads_hold_no_compressed_bytes(tmp_path, monkeypatch, blocks):
     """4 threads x 50 read_rows_at calls on one handle over a multi-block
     file: every answer is exact, no buffer read from the file outlives
     the call that read it (the handle keeps decompressed blocks, decoded
@@ -992,10 +1115,7 @@ def test_point_reads_hold_no_compressed_bytes(tmp_path, monkeypatch):
     assert not errors, errors
     assert not wrong, wrong[:3]
     assert reads
-    for dec in f._point_decoders.values():  # no lost block-cache update
-        assert dec._blk_cache_bytes == sum(
-            b.nbytes for b, _ in dec._blk_cache.values()
-        )
+    _assert_block_counts(blocks)  # no lost block-cache update
 
     def root(buf):
         while True:
@@ -1021,7 +1141,7 @@ def test_point_reads_hold_no_compressed_bytes(tmp_path, monkeypatch):
     layers = f.cache_bytes()
     assert set(layers) == {"strides", "blocks", "streams", "dictionaries"}
     assert 0 < layers["strides"] <= 1 << 20, layers
-    assert 0 < layers["blocks"] <= len(f._point_decoders) * 64 * 1024, layers
+    assert 0 < layers["blocks"] == blocks.nbytes <= 64 * 1024, layers
     f.close()
 
 
