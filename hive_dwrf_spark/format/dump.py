@@ -51,7 +51,7 @@ def dump_file(path: str) -> str:
                 f"index={s.indexLength} data={s.dataLength} "
                 f"footer={s.footerLength} raw={s.rawDataSize}"
             )
-            dec = _StripeDecoder(f, s)
+            dec = _StripeDecoder(f, s, prefetch=False)
             for st_msg in dec.footer.streams:
                 out(
                     f"    Stream: column {st_msg.column} "

@@ -14,19 +14,24 @@ key BATCHES, so this module does both halves in one pass:
                  cannot contain any requested key;
   stride level : within a surviving file, the key column's ROW_INDEX
                  per-stride statistics prune strides the same way;
-  decode level : each candidate stride of the key column is decoded and
+  decode level : each candidate stride of the key column is read and
                  matched against only the keys its own statistics admit
                  (one numpy pass for an integer column without NULLs,
                  Arrow's is_in otherwise), and only the matching rows'
                  projected columns are gathered: a slice for a contiguous
-                 run of rows, one take for a scattered one.
+                 run of rows, one take for a scattered one. Both reads
+                 go through DwrfFile's one point-read primitive
+                 (_point_window, which read_row, read_rows and
+                 read_rows_at use too), the key's stride passed in so a
+                 projected key column is not read twice; a column
+                 without seek positions comes from its whole-stripe
+                 decode, sliced to the stride.
 
 Parses and decodes amortize across CALLS, not only within one batch:
 every file that holds keys is served from a process-wide open DwrfFile
 handle, so its footer, stripe footers and ROW_INDEX are parsed once, and
-stride decodes go through the handle's decoded-stride LRU (the one
-DwrfFile.read_row uses) — a hot stride is decoded once for all calls and
-threads. Once its footer summary is cached, a file that summary prunes
+stride decodes go through the handle's decoded-stride LRU — a hot stride
+is decoded once for all calls and threads. Once its footer summary is cached, a file that summary prunes
 is not opened, so a directory of more files than _HANDLES_MAX keeps its
 handles as long as the files a call reads fit. A cold call reads each
 missing summary through the file's shared handle and keeps, for the
@@ -76,9 +81,9 @@ from .fs import get_fs
 from .plans import FilePlan, file_plans, plan_of
 from .reader import (
     DwrfFile,
-    NoStridePositions,
     _corrupt_guard,
     _gatherer,
+    _join,
     _resolve_field,
     stride_cache_budget,
 )
@@ -281,59 +286,30 @@ def lookup_keys(
             continue
         f = handle(fp)
         key_tid = f._top_level_id(key_name)
+        tops, include_ids = f._projection(columns)
         if columns is not None:
-            tops, include_ids = f._parse_projection(columns)
             if schema is None:
                 schema = f.projected_schema(columns)
             # the key column must reach the decoder even when the
             # projection drops it from the output
-            if include_ids is not None and key_tid not in include_ids:
+            if key_tid not in include_ids:
                 from .types import subtree_ids
 
                 include_ids = include_ids | set(subtree_ids(f.types, key_tid))
-        else:
-            root = f.types[0]
-            tops = list(zip(root.fieldNames, root.subtypes))
-            include_ids = None
-        stride = f.footer.rowIndexStride
-        index_ids = {tid for _, tid in tops} | {key_tid}
         with _corrupt_guard(fp):
             for i, stripe in enumerate(f.footer.stripes):
                 n_rows = stripe.numberOfRows
                 if n_rows == 0:
                     continue
-                dec = f._point_decoder(i, include_ids, index_ids)
-                n_strides = (n_rows + stride - 1) // stride if stride else 1
+                dec = f._point_decoder(i, include_ids)
+                stride = f._stride_rows(i)
+                n_strides = (n_rows + stride - 1) // stride
                 if trace is not None:
                     trace["strides_total"] += n_strides
-
-                def emit(hits: np.ndarray, karr, k_base: int, s_idx):
-                    """Gather every projected column at the rows `hits`
-                    of the key window `karr`, which starts at stripe row
-                    `k_base` and is reused when projected. `s_idx` is the
-                    stride the window holds, so other columns may seek to
-                    it; None means a whole-stripe window, so other columns
-                    decode whole-stripe too."""
-                    gather = _gatherer(hits)
-                    for name, tid in tops:
-                        arr = karr if tid == key_tid else None
-                        if arr is None and s_idx is not None:
-                            try:
-                                arr = f._cached_stride_column(
-                                    dec, i, tid, s_idx, stride, n_rows
-                                )
-                            except NoStridePositions:
-                                pass
-                        if arr is None:
-                            arr = f._cached_whole_column(
-                                dec, i, tid, n_rows
-                            ).slice(k_base)
-                        out_chunks.setdefault(name, []).append(gather(arr))
-
                 # --- stride-level pruning via the key's ROW_INDEX stats,
                 # parsed once per decoder: (stride, the keys its min/max
                 # admit) ---
-                bounds = dec.stride_bounds(key_tid) if stride else None
+                bounds = dec.stride_bounds(key_tid)
                 if bounds is not None and len(bounds[0]) >= n_strides:
                     mins, maxs = bounds
                     alive = []
@@ -343,47 +319,22 @@ def lookup_keys(
                             alive.append((s, admitted))
                 else:
                     alive = [(s, key_list) for s in range(n_strides)]
-                if not alive:
-                    continue
-                if not stride:
-                    # legacy file without a row index: one whole-stripe pass
-                    if trace is not None:
-                        trace["strides_scanned"] += 1
-                    karr = f._cached_whole_column(dec, i, key_tid, n_rows)
-                    hits = _match_offsets(karr, key_list, key_set)
-                    if len(hits):
-                        emit(hits, karr, 0, None)
-                    continue
                 for s_idx, admitted in alive:
                     if trace is not None:
                         trace["strides_scanned"] += 1
-                    try:
-                        karr = f._cached_stride_column(
-                            dec, i, key_tid, s_idx, stride, n_rows
-                        )
-                    except NoStridePositions:
-                        karr = f._cached_whole_column(dec, i, key_tid, n_rows)
-                        # stats pruning already ran; scanning the whole
-                        # stripe once covers every remaining stride
-                        hits = _match_offsets(karr, key_list, key_set)
-                        if len(hits):
-                            emit(hits, karr, 0, None)
-                        break
+                    # --- decode level: match the key window, then gather
+                    # the projected columns of the same stride, reusing
+                    # the key window ---
+                    (karr,) = f._point_window(dec, i, s_idx, [(key_name, key_tid)])
                     hits = _match_offsets(karr, admitted, key_set)
                     if len(hits):
-                        emit(hits, karr, s_idx * stride, s_idx)
+                        gather = _gatherer(hits)
+                        arrays = f._point_window(dec, i, s_idx, tops, {key_tid: karr})
+                        for (name, _), arr in zip(tops, arrays):
+                            out_chunks.setdefault(name, []).append(gather(arr))
         _trim_decoded()
     if schema is None:  # no file held keys: the projection's schema
         schema = handle(files[0]).projected_schema(columns)
     if trace is not None:
         trace["files_opened"] = len(opened)
-    cols = []
-    for field in schema:
-        parts = out_chunks.get(field.name, [])
-        if not parts:
-            cols.append(pa.array([], type=field.type))
-        elif len(parts) == 1:
-            cols.append(parts[0])
-        else:
-            cols.append(pa.concat_arrays(parts))
-    return pa.table(cols, schema=schema)
+    return _join([out_chunks.get(field.name, []) for field in schema], schema)

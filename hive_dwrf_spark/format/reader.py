@@ -13,6 +13,7 @@ evaluation to the consumer — SURVEY.md §4 O2)."""
 
 from __future__ import annotations
 
+import bisect
 import itertools
 import os
 import threading
@@ -93,6 +94,18 @@ def _gatherer(offs) -> Callable[[pa.Array], pa.Array]:
         return lambda arr: arr.slice(lo, n)
     idx = pa.array(offs, type=pa.int64())
     return lambda arr: arr.take(idx)
+
+
+def _join(parts: list[list[pa.Array]], schema: pa.Schema) -> pa.Table:
+    """A table of `schema` whose each column joins its list of pieces
+    in `parts` (an empty list is an empty column)."""
+    return pa.table(
+        [
+            pa.concat_arrays(p) if len(p) > 1 else p[0] if p else pa.array([], f.type)
+            for p, f in zip(parts, schema)
+        ],
+        schema=schema,
+    )
 
 
 class NoStridePositions(Exception):
@@ -437,23 +450,16 @@ class _StripeDecoder:
     def has_stream(self, column: int, kind: StreamKind) -> bool:
         return (column, int(kind)) in self._ranges
 
-    def _chunk_view(self, off: int, ln: int) -> np.ndarray | None:
-        """Stripe bytes [off, off + ln) as a view into a prefetched chunk,
-        or None when no chunk covers them."""
+    def _raw_slice(self, off: int, ln: int) -> np.ndarray:
+        """Stripe bytes [off, off + ln): a view into the prefetched chunk
+        that covers them, else (the point-read decoders, dump tooling) one
+        plain pread that nothing here keeps: callers keep what they derive
+        from it — stream() the decompressed stream, _block() the
+        decompressed block — so a long-lived decoder holds no compressed
+        bytes."""
         for start, arr in self._chunks:
             if start <= off and off + ln <= start + len(arr):
                 return arr[off - start : off - start + ln]
-        return None
-
-    def _raw_slice(self, off: int, ln: int) -> np.ndarray:
-        """Stripe bytes [off, off + ln). Outside the prefetched chunks
-        (no-prefetch point-lookup decoders, dump tooling) this is one plain
-        pread that nothing here keeps: callers keep what they derive from
-        it — stream() the decompressed stream, _block() the decompressed
-        block — so a long-lived decoder holds no compressed bytes."""
-        hit = self._chunk_view(off, ln)
-        if hit is not None:
-            return hit
         return np.frombuffer(
             self.r._read_at(self.stripe.offset + off, ln), dtype=np.uint8
         )
@@ -521,11 +527,11 @@ class _StripeDecoder:
         """(decompressed block, offset of the next block) for the block
         whose header sits at compressed offset `p` of stream (col, kind).
 
-        Outside the prefetched chunks each block is read on its own: one
-        pread of at most 3 + compressionBlockSize bytes from a conforming
-        writer, which nothing keeps once the block is inflated. A block
-        that does not lie inside its stream's byte range raises
-        DwrfCorruptError rather than reading the neighbouring stream."""
+        Each block is read on its own: one pread of at most 3 +
+        compressionBlockSize bytes from a conforming writer, which nothing
+        keeps once the block is inflated. A block that does not lie inside
+        its stream's byte range raises DwrfCorruptError rather than
+        reading the neighbouring stream."""
         ck = (self._token, col, int(kind), p)
         hit = _BLOCKS.entries.get(ck)
         if hit is not None:
@@ -536,25 +542,18 @@ class _StripeDecoder:
                 f"block at {p} outside stream ({col}, {kind.name}) of "
                 f"{rng_len} bytes"
             )
-        comp = self._chunk_view(rng_off, rng_len)
-        if comp is None:
-            q = 0
-            data = self._raw_slice(rng_off + p, min(rng_len - p, 3 + self._bufsize))
-        else:
-            data, q = comp, p
-        header = int(data[q]) | (int(data[q + 1]) << 8) | (int(data[q + 2]) << 16)
+        data = self._raw_slice(rng_off + p, min(rng_len - p, 3 + self._bufsize))
+        header = int(data[0]) | (int(data[1]) << 8) | (int(data[2]) << 16)
         framed = 3 + (header >> 1)
         if framed > rng_len - p:
             raise DwrfCorruptError(
                 f"compressed block of {framed} bytes runs past stream "
                 f"({col}, {kind.name}), which has {rng_len - p} bytes left"
             )
-        if q + framed > len(data):  # a block larger than the declared size
-            data, q = self._raw_slice(rng_off + p, framed), 0
-        body = data[q + 3 : q + framed]
+        if framed > len(data):  # a block larger than the declared size
+            data = self._raw_slice(rng_off + p, framed)
+        body = data[3:framed]
         if header & 1:
-            if comp is not None:
-                return body, p + framed  # stored: zero-copy chunk view
             part = body.copy()  # stored: keep none of the read
         else:
             part = np.frombuffer(
@@ -1231,8 +1230,9 @@ class DwrfFile:
         # their decompressed blocks are the process-wide _BLOCKS', under
         # its own lock). It guards bookkeeping and IO, never a decode.
         self._lock = threading.Lock()
-        # point-lookup decoder reuse (read_row): (stripe, projection) ->
-        # no-prefetch _StripeDecoder with warmed dictionary/index caches
+        # point-read decoder reuse (_point_decoder, for read_row,
+        # read_rows, read_rows_at and lookup_keys): (stripe, projection)
+        # -> no-prefetch _StripeDecoder with warmed dictionary/index caches
         self._point_decoders: dict = {}
         # decoded-stride-array LRU shared by all point lookups on this
         # handle: (stripe, type_id, s_idx) -> pa.Array. The serving
@@ -1349,7 +1349,10 @@ class DwrfFile:
             # ordered, in-bounds and row-consistent before any data read
             total_rows = 0
             prev_end = len(MAGIC)
+            # first row of each stripe: point reads bisect it
+            self._stripe_firsts: list[int] = []
             for s in self.footer.stripes:
+                self._stripe_firsts.append(total_rows)
                 end = (
                     (s.offset or 0)
                     + (s.indexLength or 0)
@@ -1532,6 +1535,14 @@ class DwrfFile:
                 ids.update(self._path_ids(tid, partial[top]))
         return tops, ids
 
+    def _projection(self, columns: list[str] | None):
+        """_parse_projection(columns), or every top-level column and no
+        include set (decode everything) for columns=None."""
+        if columns is not None:
+            return self._parse_projection(columns)
+        root = self.types[0]
+        return list(zip(root.fieldNames, root.subtypes)), None
+
     def _path_ids(self, tid: int, rests: list[str]) -> set[int]:
         from .types import subtree_ids
 
@@ -1650,17 +1661,14 @@ class DwrfFile:
         stripe = self.footer.stripes[stripe_index]
         if filters and self._dictionary_disproves(stripe, filters):
             return None
-        include_ids: set[int] | None = None
+        selected, include_ids = self._projection(columns)
         index_ids: set[int] | None = None
-        selected: list[tuple[str, int]] | None = None
-        if columns is not None:
-            selected, include_ids = self._parse_projection(columns)
-            if filters:
-                index_ids = {
-                    tid
-                    for name, _op, _v in filters
-                    if (tid := self._top_level_id(name)) is not None
-                }
+        if columns is not None and filters:
+            index_ids = {
+                tid
+                for name, _op, _v in filters
+                if (tid := self._top_level_id(name)) is not None
+            }
         dec = _StripeDecoder(self, stripe, include_ids, index_ids)
         n = stripe.numberOfRows
         stride_alive: list[bool] | None = None
@@ -1701,12 +1709,7 @@ class DwrfFile:
                     return None
                 if all(stride_alive):
                     stride_alive = None
-        if selected is None:
-            root = self.types[0]
-            selected = list(zip(root.fieldNames, root.subtypes))
-            schema = pa.schema([self.schema.field(nm) for nm, _ in selected])
-        else:
-            schema = self.projected_schema(columns)
+        schema = self.schema if columns is None else self.projected_schema(columns)
         # Column parallelism: OFF by default (Spark runs one task per
         # stripe; a per-task column pool would oversubscribe). For the
         # whole-file read() of a single-stripe file it is a measured ~1.6x
@@ -1819,84 +1822,27 @@ class DwrfFile:
     ) -> pa.Table:
         """Random access (RecordReader.seekToRow analog,
         RecordReaderImpl.java:494-543): return rows [row_offset,
-        row_offset+count). Cost is O(stripes touched) — the stripe directory
-        locates the containing stripes without scanning, and only those
-        stripes' streams are read and decoded."""
-        if columns is not None:
-            self._parse_projection(columns)  # contract errors BEFORE guard
+        row_offset+count), clamped to the file (empty past its end). The
+        rows are read through the point-read path that read_row and
+        read_rows_at share (_point_window): the stripe directory locates
+        them without scanning, and each touched row-index stride is read
+        once, through the handle's stride cache, and kept as one slice."""
+        tops, include_ids = self._projection(columns)
+        schema = self.schema if columns is None else self.projected_schema(columns)
+        parts: list[list[pa.Array]] = [[] for _ in tops]
+        r, end = max(row_offset, 0), min(row_offset + count, self.num_rows)
         with _corrupt_guard(self.path):
-            return self._read_rows_impl(row_offset, count, columns)
-
-    def _read_rows_impl(
-        self, row_offset: int, count: int, columns: list[str] | None = None
-    ) -> pa.Table:
-        end = row_offset + count
-        tables = []
-        first_row = 0
-        for i, s in enumerate(self.footer.stripes):
-            n = s.numberOfRows
-            if first_row + n > row_offset and first_row < end:
-                lo = max(0, row_offset - first_row)
-                hi = min(n, end - first_row)
-                t = self._read_stripe_rows(i, lo, hi, columns)
-                tables.append(t)
-            first_row += n
-            if first_row >= end:
-                break
-        if not tables:
-            schema = (
-                self.schema if columns is None else self.projected_schema(columns)
-            )
-            return schema.empty_table()
-        return pa.concat_tables(tables)
-
-    def _read_stripe_rows(
-        self, stripe_index: int, lo: int, hi: int, columns: list[str] | None
-    ) -> pa.Table:
-        """Rows [lo, hi) of one stripe. Small ranges (≤ 2 strides) whose
-        projected columns are all stride-decodable scalars ride the
-        ROW_INDEX seek positions — only the covering strides decode; any
-        other shape falls back to the whole-stripe decode + slice."""
-        stripe = self.footer.stripes[stripe_index]
-        n = stripe.numberOfRows
-        stride = self.footer.rowIndexStride
-        if stride and (hi - lo) <= 2 * stride:
-            if columns is not None:
-                tops, include_ids = self._parse_projection(columns)
-            else:
-                root = self.types[0]
-                tops = list(zip(root.fieldNames, root.subtypes))
-                include_ids = None
-            if all(
-                TypeKind(self.types[tid].kind) in _STRIDE_DECODABLE
-                for _, tid in tops
-            ):
-                dec = _StripeDecoder(
-                    self, stripe, include_ids, index_ids={tid for _, tid in tops}
-                )
-                s0, s1 = lo // stride, max(lo // stride, (hi - 1) // stride)
-                try:
-                    cols = {}
-                    for name, tid in tops:
-                        parts = [
-                            dec.decode_stride_column(tid, s, stride, n)
-                            for s in range(s0, s1 + 1)
-                        ]
-                        arr = (
-                            pa.concat_arrays(parts) if len(parts) > 1 else parts[0]
-                        )
-                        cols[name] = arr.slice(lo - s0 * stride, hi - lo)
-                    return pa.table(cols)
-                except NoStridePositions:
-                    pass  # legacy file / stride-dict column: full decode
-        t = self.read_stripe(stripe_index, columns=columns)
-        return t.slice(lo, hi - lo)
+            while r < end:
+                i, s_idx, off, rows = self._locate(r)
+                n = min(rows - off, end - r)
+                dec = self._point_decoder(i, include_ids)
+                for p, arr in zip(parts, self._point_window(dec, i, s_idx, tops)):
+                    p.append(arr.slice(off, n))
+                r += n
+        return _join(parts, schema)
 
     def _point_decoder(
-        self,
-        stripe_index: int,
-        include_ids: set[int] | None,
-        index_ids: set[int],
+        self, stripe_index: int, include_ids: set[int] | None
     ) -> "_StripeDecoder":
         """Decoder reuse across point lookups (the serving pattern is MANY
         reads per open file): keyed by (stripe, projection); built with
@@ -1914,7 +1860,11 @@ class DwrfFile:
         both use its decoder. A cached decoder sees the handle through a
         weak proxy: a strong reference would form a handle -> decoder ->
         handle cycle, and a handle the lookup LRU drops would close its
-        file only when the cyclic GC ran."""
+        file only when the cyclic GC ran. With verify_checksums=True the
+        stripe's CRCs are checked once per handle before its first point
+        read."""
+        if self._verify_on_read:
+            self._verify_stripe_on_read(stripe_index)
         key = (
             stripe_index,
             tuple(sorted(include_ids)) if include_ids is not None else None,
@@ -1929,7 +1879,6 @@ class DwrfFile:
             weakref.proxy(self),
             self.footer.stripes[stripe_index],
             include_ids,
-            index_ids=index_ids,
             prefetch=False,
         )
         with self._lock:
@@ -2011,13 +1960,61 @@ class DwrfFile:
         self, dec, stripe_index: int, tid: int, n_rows: int
     ) -> pa.Array:
         """Whole-stripe fallback (NoStridePositions columns) through the
-        same LRU, keyed with s_idx=-1."""
-        key = (stripe_index, tid, -1)
+        same LRU, keyed with s_idx=-1 and the decoder's include set: a
+        whole-stripe decode keeps only a struct's projected fields, where
+        a stride decode keeps them all."""
+        ids = dec.decode_ids
+        key = (stripe_index, tid, -1, None if ids is None else frozenset(ids))
         arr = self._stride_cache_get(key)
         if arr is None:
             arr = dec.decode_column(tid, n_rows)
             self._stride_cache_put(key, arr)
         return arr
+
+    def _stride_rows(self, stripe_index: int) -> int:
+        """Rows per stride of a stripe, as the point reads split it: the
+        row-index stride, or the whole stripe in a file written without a
+        row index (that one stride has no seek positions, so it decodes
+        whole)."""
+        return (
+            self.footer.rowIndexStride
+            or self.footer.stripes[stripe_index].numberOfRows
+        )
+
+    def _locate(self, row: int) -> tuple[int, int, int, int]:
+        """(stripe, stride, offset in the stride, rows in the stride) of
+        file row `row`, by bisecting the stripes' first rows."""
+        i = bisect.bisect_right(self._stripe_firsts, row) - 1
+        stride = self._stride_rows(i)
+        s_idx, off = divmod(row - self._stripe_firsts[i], stride)
+        n_rows = self.footer.stripes[i].numberOfRows
+        return i, s_idx, off, min(stride, n_rows - s_idx * stride)
+
+    def _point_window(self, dec, i: int, s_idx: int, tops, have=None) -> list:
+        """The point-read primitive of read_row, read_rows, read_rows_at
+        and lookup_keys: the array of each projected column (name, type
+        id) of `tops` over the rows of stride s_idx of stripe i, decoded
+        by the point decoder `dec`. A column seeks to the stride through
+        its ROW_INDEX positions; one without them (UNION, files without a
+        row index) decodes the whole stripe, sliced to the stride. Both go
+        through the handle's stride cache. `have` maps a type id to the
+        stride's array the caller already holds."""
+        n_rows = self.footer.stripes[i].numberOfRows
+        stride = self._stride_rows(i)
+        out = []
+        for _name, tid in tops:
+            arr = have.get(tid) if have else None
+            if arr is None:
+                try:
+                    arr = self._cached_stride_column(
+                        dec, i, tid, s_idx, stride, n_rows
+                    )
+                except NoStridePositions:
+                    arr = self._cached_whole_column(dec, i, tid, n_rows).slice(
+                        s_idx * stride, stride
+                    )
+            out.append(arr)
+        return out
 
     def read_row(
         self, row_number: int, columns: list[str] | None = None
@@ -2026,55 +2023,35 @@ class DwrfFile:
         LazyTreeReader.java:300-365 parity, at this format's designed
         granularity): return row `row_number` as a {column: value} dict.
 
-        Cost model: the stripe directory locates the containing stripe in
-        O(stripes) without touching data; within the stripe, each
-        projected column seeks via the per-stride stream positions in its
-        ROW_INDEX (WriterImpl.java:317-328 records, InStream.java:112-132 /
-        RunLengthIntegerReader.java:94-126 consume) — only the compressed
-        blocks covering the containing stride are decompressed and only
-        that stride's RLE groups are decoded, so the seek quantum is one
-        row-index stride (default 10k rows), not the stripe. Columns
-        without positions (nested types, stride-dictionary columns,
-        legacy files) fall back per-column to whole-stripe decode."""
+        Cost model: the stripe directory locates the containing stripe by
+        bisection without touching data; the row is then read through the
+        point-read path that read_rows and read_rows_at share
+        (_point_window). Each projected column seeks via the per-stride
+        stream positions in its ROW_INDEX (WriterImpl.java:317-328
+        records, InStream.java:112-132 / RunLengthIntegerReader.java:94-126
+        consume) — only the compressed blocks covering the containing
+        stride are decompressed and only that stride's RLE groups are
+        decoded, so the seek quantum is one row-index stride (default 10k
+        rows), not the stripe, and the decoded stride stays in the
+        handle's stride cache for the next read. Columns without
+        positions (UNION, legacy files) decode the whole stripe once."""
         if row_number < 0 or row_number >= self.num_rows:
             raise IndexError(
                 f"row {row_number} out of range [0, {self.num_rows})"
             )
-        if columns is not None:
-            tops, include_ids = self._parse_projection(columns)
-        else:
-            root = self.types[0]
-            tops = list(zip(root.fieldNames, root.subtypes))
-            include_ids = None
+        tops, include_ids = self._projection(columns)
         with _corrupt_guard(self.path):
-            stride = self.footer.rowIndexStride
-            first_row = 0
-            for i, s in enumerate(self.footer.stripes):
-                if first_row + s.numberOfRows > row_number:
-                    break
-                first_row += s.numberOfRows
-            r_in_stripe = row_number - first_row
-            if not stride:
-                t = self._read_rows_impl(row_number, 1, columns=columns)
-                return {
-                    name: t.column(j)[0].as_py()
-                    for j, name in enumerate(t.schema.names)
-                }
-            dec = self._point_decoder(i, include_ids, {tid for _, tid in tops})
-            s_idx = r_in_stripe // stride
-            r_in_stride = r_in_stripe % stride
-            n_rows = self.footer.stripes[i].numberOfRows
-            out = {}
-            for name, tid in tops:
-                try:
-                    arr = self._cached_stride_column(
-                        dec, i, tid, s_idx, stride, n_rows
-                    )
-                    out[name] = arr[r_in_stride].as_py()
-                except NoStridePositions:
-                    col = self._cached_whole_column(dec, i, tid, n_rows)
-                    out[name] = col[r_in_stripe].as_py()
-            return out
+            i, s_idx, off, _ = self._locate(row_number)
+            dec = self._point_decoder(i, include_ids)
+            arrays = self._point_window(dec, i, s_idx, tops)
+        if columns is not None and any("." in c for c in columns):
+            # a dotted path keeps some fields of a struct, which a decoded
+            # stride holds whole (the tables of the other entry points
+            # cast to their schema the same way)
+            types = self.projected_schema(columns).types
+            arrays = [a.slice(off, 1).cast(t) for a, t in zip(arrays, types)]
+            off = 0
+        return {name: arr[off].as_py() for (name, _), arr in zip(tops, arrays)}
 
     def read_rows_at(
         self, row_numbers, columns: list[str] | None = None
@@ -2085,70 +2062,34 @@ class DwrfFile:
         (duplicates allowed and preserved).
 
         Cost model: requested rows are grouped stripe -> stride; each
-        touched stride of each projected column is decoded exactly ONCE
-        and all rows falling in it are gathered at once (a slice when
-        they are contiguous, else one take) — k lookups landing in the
-        same stride cost one stride decode plus one gather, where the
-        read_row loop pays k stride decodes. Each column's pieces join
-        with one concat and reorder to input order with at most one take.
+        touched stride is read once through the point-read path that
+        read_row and read_rows share (_point_window), and all rows falling
+        in it are gathered at once (a slice when they are contiguous,
+        else one take) — k rows landing in the same stride cost one stride
+        read plus one gather per column. Each column's pieces join with
+        one concat and reorder to input order with at most one take.
         Footer / stripe-footer / ROW_INDEX parses are amortized across
-        the batch through the shared LRU point-decoder cache, and columns
-        without seek positions (UNION, legacy files) fall back to ONE
-        whole-stripe decode per (stripe, column) for the entire batch."""
+        calls through the shared LRU point-decoder cache."""
         ids = [int(r) for r in row_numbers]
         for r in ids:
             if r < 0 or r >= self.num_rows:
                 raise IndexError(
                     f"row {r} out of range [0, {self.num_rows})"
                 )
-        if columns is not None:
-            tops, include_ids = self._parse_projection(columns)
-            schema = self.projected_schema(columns)
-        else:
-            root = self.types[0]
-            tops = list(zip(root.fieldNames, root.subtypes))
-            include_ids = None
-            schema = self.schema
-        if not ids:
-            return schema.empty_table()
-        with _corrupt_guard(self.path):
-            return self._read_rows_at_impl(
-                ids, tops, include_ids, schema
-            )
-
-    def _read_rows_at_impl(self, ids, tops, include_ids, schema) -> pa.Table:
-        import bisect
-
-        stride = self.footer.rowIndexStride
-        firsts: list[int] = []
-        acc = 0
-        for s in self.footer.stripes:
-            firsts.append(acc)
-            acc += s.numberOfRows
-        by_stripe: dict[int, list[tuple[int, int]]] = {}
-        for pos, r in enumerate(ids):
-            i = bisect.bisect_right(firsts, r) - 1
-            by_stripe.setdefault(i, []).append((r - firsts[i], pos))
-        index_ids = {tid for _, tid in tops}
-        pieces: dict[str, list[pa.Array]] = {name: [] for name, _ in tops}
+        tops, include_ids = self._projection(columns)
+        schema = self.schema if columns is None else self.projected_schema(columns)
+        parts: list[list[pa.Array]] = [[] for _ in tops]
         # row of the joined pieces that each output position takes
         src = [0] * len(ids)
-        joined = 0
-        for i in sorted(by_stripe):
-            rows = by_stripe[i]
-            n_rows = self.footer.stripes[i].numberOfRows
-            dec = self._point_decoder(i, include_ids, index_ids)
-            by_stride: dict[int, list[tuple[int, int]]] = {}
-            if stride:
-                for r_in_stripe, pos in rows:
-                    by_stride.setdefault(r_in_stripe // stride, []).append(
-                        (r_in_stripe % stride, pos)
-                    )
-            else:  # legacy file without a row index: whole-stripe decode
-                by_stride[-1] = rows
-            stripe_cols: dict[int, pa.Array] = {}  # fallback decode cache
-            for s_idx in sorted(by_stride):
-                offs_pos = by_stride[s_idx]
+        with _corrupt_guard(self.path):
+            # (stripe, stride) -> [(offset in the stride, output position)]
+            by_stride: dict[tuple[int, int], list[tuple[int, int]]] = {}
+            for pos, r in enumerate(ids):
+                i, s_idx, off, _ = self._locate(r)
+                by_stride.setdefault((i, s_idx), []).append((off, pos))
+            joined = 0
+            for i, s_idx in sorted(by_stride):
+                offs_pos = by_stride[(i, s_idx)]
                 # each distinct row is gathered once, in row order
                 offs = sorted({o for o, _ in offs_pos})
                 at = {o: joined + k for k, o in enumerate(offs)}
@@ -2156,31 +2097,13 @@ class DwrfFile:
                     src[pos] = at[o]
                 joined += len(offs)
                 gather = _gatherer(offs)
-                for name, tid in tops:
-                    if s_idx >= 0:
-                        try:
-                            arr = self._cached_stride_column(
-                                dec, i, tid, s_idx, stride, n_rows
-                            )
-                            pieces[name].append(gather(arr))
-                            continue
-                        except NoStridePositions:
-                            pass
-                    col = stripe_cols.get(tid)
-                    if col is None:
-                        col = self._cached_whole_column(dec, i, tid, n_rows)
-                        stripe_cols[tid] = col
-                    base = s_idx * stride if s_idx >= 0 else 0
-                    pieces[name].append(gather(col.slice(base)))
-        reorder = None
+                dec = self._point_decoder(i, include_ids)
+                for p, arr in zip(parts, self._point_window(dec, i, s_idx, tops)):
+                    p.append(gather(arr))
+        table = _join(parts, schema)
         if src != list(range(len(ids))):
-            reorder = pa.array(src, type=pa.int64())
-        cols = []
-        for name, _tid in tops:
-            parts = pieces[name]
-            col = pa.concat_arrays(parts) if len(parts) > 1 else parts[0]
-            cols.append(col if reorder is None else col.take(reorder))
-        return pa.table(cols, schema=schema)
+            table = table.take(pa.array(src, type=pa.int64()))
+        return table
 
     def __enter__(self):
         return self

@@ -476,7 +476,9 @@ class TestVerifyOnRead:
     def test_data_flip_fails_the_scan_typed(self, checked, tmp_path):
         """Single-bit data damage in stripe 2: reading stripes 0-1 still
         works (per-stripe verification), stripe 2's read raises naming
-        the stripe BEFORE any decode output escapes."""
+        the stripe BEFORE any decode output escapes. The point reads
+        (read_row, read_rows_at, read_rows) check the stripe the same
+        way, on every call."""
         p, raw = checked
         with DwrfFile(p) as f:
             s = f.footer.stripes[2]
@@ -489,10 +491,24 @@ class TestVerifyOnRead:
             assert f.read_stripe(1).num_rows == 5_000
             with pytest.raises(DwrfCorruptError, match="stripe 2 data"):
                 f.read_stripe(2)
+        with DwrfFile(pc, verify_checksums=True) as f:
+            assert f.read_row(4_321) == {"i": 4_321, "s": f"str{4_321 % 97}"}
+            assert f.read_rows_at([7, 9_999]).column("i").to_pylist() == [7, 9_999]
+            assert f.read_rows(9_998, 2).column("i").to_pylist() == [9_998, 9_999]
+            for _ in range(2):
+                with pytest.raises(DwrfCorruptError, match="stripe 2 data"):
+                    f.read_row(12_345)
+                with pytest.raises(DwrfCorruptError, match="stripe 2 data"):
+                    f.read_rows_at([12_345])
+                with pytest.raises(DwrfCorruptError, match="stripe 2 data"):
+                    f.read_rows(12_345, 3)
+                with pytest.raises(DwrfCorruptError, match="stripe 2 data"):
+                    f.read_rows(9_999, 2)
 
     def test_verification_runs_once_per_handle(self, checked):
         """Repeat reads of one stripe CRC-check only on the first touch
-        (the scan pattern: one handle, many read_stripe calls)."""
+        (the scan pattern: one handle, many read_stripe calls; the
+        serving pattern: many point reads)."""
         p, _ = checked
         with DwrfFile(p, verify_checksums=True) as f:
             calls = []
@@ -507,6 +523,12 @@ class TestVerifyOnRead:
             f.read_stripe(1)
             f.read_stripe(1)
             assert calls == [1]
+            for r in (5_000, 7_777, 9_999, 7_777):
+                assert f.read_row(r)["i"] == r
+            assert calls == [1]
+            for r in (15_000, 19_999, 16_001):
+                assert f.read_row(r)["i"] == r
+            assert calls == [1, 3]
 
     def test_no_checksums_is_a_noop_not_an_error(self, victim):
         """A file written without checksums reads normally under the

@@ -67,3 +67,27 @@ def test_golden_dump(tmp_path, name, table_fn, opts):
     with open(golden_path) as f:
         expected = f.read()
     assert text == expected, f"dump drifted from golden {name}"
+
+
+def test_dump_reads_no_stripe_data(tmp_path, monkeypatch):
+    """The dump lists each stripe's streams and encodings from its
+    footer: it reads fewer bytes than the stripes' data regions hold."""
+    from hive_dwrf_spark.format import DwrfFile, write_arrow_table
+    from hive_dwrf_spark.format.dump import dump_file
+
+    path = str(tmp_path / "golden.dwrf")
+    write_arrow_table(
+        path, _golden_table(), stripe_rows=5000, row_index_stride=1000, compression="zlib"
+    )
+    with DwrfFile(path) as f:
+        data_bytes = sum(s.dataLength for s in f.footer.stripes)
+    read = []
+    read_at = DwrfFile._read_at
+
+    def recording(self, offset, length):
+        read.append(length)
+        return read_at(self, offset, length)
+
+    monkeypatch.setattr(DwrfFile, "_read_at", recording)
+    assert "Stream: column 1 DATA" in dump_file(path)
+    assert sum(read) < data_bytes, (sum(read), data_bytes)

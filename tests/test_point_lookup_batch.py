@@ -824,9 +824,33 @@ def _ids(n_rows: int) -> dict[str, list[int]]:
     }
 
 
+def _runs(ids: list[int]) -> list[tuple[int, int]]:
+    """(position, length) of each maximal run of consecutive row ids."""
+    out = []
+    for k, r in enumerate(ids):
+        if out and ids[k - 1] + 1 == r:
+            out[-1] = (out[-1][0], out[-1][1] + 1)
+        else:
+            out.append((k, 1))
+    return out
+
+
+def _assert_point_reads(f: DwrfFile, ids: list[int], columns=None) -> None:
+    """read_rows_at, read_row per id and read_rows per contiguous run of
+    `ids` all equal the full read taken at `ids`."""
+    want = f.read(columns=columns).take(pa.array(ids, type=pa.int64()))
+    assert f.read_rows_at(ids, columns=columns).equals(want)
+    rows = want.to_pylist()
+    for r, row in zip(ids, rows):
+        assert f.read_row(r, columns=columns) == row, r
+    for k, n in _runs(ids):
+        assert f.read_rows(ids[k], n, columns=columns).equals(want.slice(k, n)), (ids[k], n)
+
+
 class TestGatherParity:
     """read_rows_at and lookup_keys gather a slice per contiguous run and
-    one take per scattered run; every shape must equal a full read."""
+    one take per scattered run, through the point-read path read_row and
+    read_rows share; every shape must equal a full read."""
 
     def test_gatherer_branches(self):
         from hive_dwrf_spark.format.reader import _gatherer
@@ -844,17 +868,18 @@ class TestGatherParity:
     def test_read_rows_at(self, mixed_file, case, columns):
         ids = _ids(6_000)[case]
         with DwrfFile(mixed_file) as f:
-            want = f.read(columns=columns).take(pa.array(ids))
-            assert f.read_rows_at(ids, columns=columns).equals(want)
+            _assert_point_reads(f, ids, columns)
             # again through the warm decoder and stride caches
-            assert f.read_rows_at(ids, columns=columns).equals(want)
+            _assert_point_reads(f, ids, columns)
 
     def test_read_rows_at_without_row_index(self, tmp_path):
         path = str(tmp_path / "legacy.dwrf")
         write_arrow_table(path, _mixed_table(3_000), stripe_rows=1_000, row_index_stride=0)
         ids = [2_999, 5, 6, 7, 1_000, 5, 1_500, 1_100]
         with DwrfFile(path) as f:
-            assert f.read_rows_at(ids).equals(f.read().take(pa.array(ids)))
+            # a projection's whole-stripe decodes must not serve another's
+            _assert_point_reads(f, ids, ["s", "st.b", "m", "d"])
+            _assert_point_reads(f, ids)
 
     def test_read_rows_at_union_fallback(self, tmp_path):
         """A UNION column has no seek positions: its rows come from one
@@ -880,7 +905,7 @@ class TestGatherParity:
         write_arrow_table(path, table, union_columns={"u"}, stripe_rows=1_000, row_index_stride=250)
         ids = [0, 1, 7, 600, 601, 602, 749, 1_500, 2_999, 7, 2_260, 2_251]
         with DwrfFile(path) as f:
-            assert f.read_rows_at(ids).equals(f.read().take(pa.array(ids)))
+            _assert_point_reads(f, ids)
 
     @staticmethod
     def _key_dir(root, name: str, tables: list[pa.Table], **options) -> str:
@@ -1170,7 +1195,7 @@ def test_stride_inside_one_block_inflates_one_block(tmp_path, monkeypatch):
 
     monkeypatch.setattr(codecs, "_decompress_block", counting_block)
     with DwrfFile(path) as f:
-        dec = f._point_decoder(0, None, {1})
+        dec = f._point_decoder(0, None)
         # DATA positions: (block offset, offset in block, values to skip)
         pos = [tuple(e.positions[:3]) for e in dec.row_index(1).entry]
         # stride s lies inside one block when the strides after it start
