@@ -37,6 +37,7 @@ from .constants import (
 from .env import env_int
 from .stats import ColumnStats, stats_from_proto
 from .types import arrow_type_of as _arrow_type_of
+from .types import subtree_ids
 from .types import type_tree_to_schema
 
 
@@ -706,9 +707,7 @@ class _StripeDecoder:
         if kind not in _STRIDE_DECODABLE:
             raise NoStridePositions(type_id)
         if rows <= 0:
-            return pa.array(
-                [], type=_arrow_type_of(self.r.types, type_id, self.r.type_overrides)
-            )
+            return self._empty(type_id)
         ri = self.row_index(type_id)
         if ri is None or s_idx >= len(ri.entry):
             if kind == TypeKind.STRUCT and not self.has_stream(
@@ -730,9 +729,7 @@ class _StripeDecoder:
             nd = rows
         enc = self.encodings[type_id]
         if nd == 0:
-            dense = pa.array(
-                [], type=_arrow_type_of(self.r.types, type_id, self.r.type_overrides)
-            )
+            dense = self._empty(type_id)
         elif kind == TypeKind.BOOLEAN:
             dense = pa.array(
                 self._bits_window(type_id, StreamKind.DATA, cur, nd), type=pa.bool_()
@@ -871,11 +868,10 @@ class _StripeDecoder:
                 pa.array(offsets, type=pa.int32()), keys, items
             )
         elif kind == TypeKind.STRUCT:
-            children = [
-                self._decode_stride_at(s, s_idx, nd) for s in t.subtypes
-            ]
+            fields = self._struct_fields(t)
             dense = pa.StructArray.from_arrays(
-                children, names=list(t.fieldNames)
+                [self._decode_stride_at(s, s_idx, nd) for _, s in fields],
+                names=[nm for nm, _ in fields],
             )
         else:
             raise NoStridePositions(type_id)
@@ -908,9 +904,7 @@ class _StripeDecoder:
         self._tls.present_rows = n_rows
 
         if n_values == 0:
-            dense = pa.array(
-                [], type=_arrow_type_of(self.r.types, type_id, self.r.type_overrides)
-            )
+            dense = self._empty(type_id)
             if present is None:
                 return dense
             return _scatter(dense, present)
@@ -1129,15 +1123,25 @@ class _StripeDecoder:
         )
         return pa.MapArray.from_arrays(pa.array(offsets, type=pa.int32()), keys, items)
 
-    def _decode_struct(self, type_id, n):
-        t = self.r.types[type_id]
-        pairs = [
+    def _struct_fields(self, t) -> list[tuple[str, int]]:
+        """(name, type id) of the fields of struct `t` the projection keeps."""
+        return [
             (nm, s)
             for nm, s in zip(t.fieldNames, t.subtypes)
             if self.decode_ids is None or s in self.decode_ids
         ]
-        children = [self.decode_column(s, n) for _, s in pairs]
-        return pa.StructArray.from_arrays(children, names=[nm for nm, _ in pairs])
+
+    def _empty(self, type_id: int) -> pa.Array:
+        """An empty array of the column, pruned as decoded arrays are."""
+        f = pa.field("", _arrow_type_of(self.r.types, type_id, self.r.type_overrides))
+        if self.decode_ids is not None:
+            f = _prune_field(self.r.types, self.decode_ids, f, type_id)
+        return pa.array([], type=f.type)
+
+    def _decode_struct(self, type_id, n):
+        fields = self._struct_fields(self.r.types[type_id])
+        children = [self.decode_column(s, n) for _, s in fields]
+        return pa.StructArray.from_arrays(children, names=[nm for nm, _ in fields])
 
     def _decode_union(self, type_id, n):
         t = self.r.types[type_id]
@@ -1235,7 +1239,8 @@ class DwrfFile:
         # -> no-prefetch _StripeDecoder with warmed dictionary/index caches
         self._point_decoders: dict = {}
         # decoded-stride-array LRU shared by all point lookups on this
-        # handle: (stripe, type_id, s_idx) -> pa.Array. The serving
+        # handle: (stripe, type_id, s_idx, kept struct fields) -> pa.Array
+        # (_cached_column). The serving
         # steady state re-reads a hot working set, and under concurrent
         # clients EVERY thread used to re-decode the same stride (the
         # r8-measured 9.8 ms/lookup at 32 clients vs 1.8 ms/row batched);
@@ -1506,8 +1511,6 @@ class DwrfFile:
         the struct node s (for its PRESENT stream) plus the qty subtree —
         the reference's recursive boolean[] include
         (OrcInputFormat.java:121-163)."""
-        from .types import subtree_ids
-
         root = self.types[0]
         by_name = dict(zip(root.fieldNames, root.subtypes))
         tops: list[tuple[str, int]] = []
@@ -1544,8 +1547,6 @@ class DwrfFile:
         return list(zip(root.fieldNames, root.subtypes)), None
 
     def _path_ids(self, tid: int, rests: list[str]) -> set[int]:
-        from .types import subtree_ids
-
         ids = {tid}
         t = self.types[tid]
         by = dict(zip(t.fieldNames, t.subtypes))
@@ -1942,32 +1943,29 @@ class DwrfFile:
         )
         return out
 
-    def _cached_stride_column(
-        self, dec, stripe_index: int, tid: int, s_idx: int, stride: int,
-        n_rows: int,
+    def _cached_column(
+        self, dec, i: int, tid: int, s_idx: int, stride: int, n_rows: int
     ) -> pa.Array:
-        """decode_stride_column through the handle-level array LRU —
-        repeat lookups into a hot stride skip the decode entirely.
-        Propagates NoStridePositions (never cached)."""
-        key = (stripe_index, tid, s_idx)
+        """_point_window's read of one column through the handle's stride
+        cache (an array LRU: a hot stride skips the decode), keyed by the
+        stride (-1: the whole stripe) and, only where the projection prunes
+        the column's subtree, the ids it keeps of it."""
+        kept = None
+        if dec.decode_ids is not None:
+            sub = frozenset(subtree_ids(self.types, tid))
+            kept = None if sub <= dec.decode_ids else sub & dec.decode_ids
+        key = (i, tid, s_idx, kept)
         arr = self._stride_cache_get(key)
         if arr is None:
-            arr = dec.decode_stride_column(tid, s_idx, stride, n_rows)
-            self._stride_cache_put(key, arr)
-        return arr
-
-    def _cached_whole_column(
-        self, dec, stripe_index: int, tid: int, n_rows: int
-    ) -> pa.Array:
-        """Whole-stripe fallback (NoStridePositions columns) through the
-        same LRU, keyed with s_idx=-1 and the decoder's include set: a
-        whole-stripe decode keeps only a struct's projected fields, where
-        a stride decode keeps them all."""
-        ids = dec.decode_ids
-        key = (stripe_index, tid, -1, None if ids is None else frozenset(ids))
-        arr = self._stride_cache_get(key)
-        if arr is None:
-            arr = dec.decode_column(tid, n_rows)
+            try:
+                arr = dec.decode_stride_column(tid, s_idx, stride, n_rows)
+            except NoStridePositions:
+                key = (i, tid, -1, kept)
+                whole = self._stride_cache_get(key)
+                if whole is None:
+                    whole = dec.decode_column(tid, n_rows)
+                    self._stride_cache_put(key, whole)
+                return whole.slice(s_idx * stride, stride)
             self._stride_cache_put(key, arr)
         return arr
 
@@ -1997,22 +1995,15 @@ class DwrfFile:
         by the point decoder `dec`. A column seeks to the stride through
         its ROW_INDEX positions; one without them (UNION, files without a
         row index) decodes the whole stripe, sliced to the stride. Both go
-        through the handle's stride cache. `have` maps a type id to the
-        stride's array the caller already holds."""
+        through the handle's stride cache (_cached_column). `have` maps a
+        type id to the stride's array the caller already holds."""
         n_rows = self.footer.stripes[i].numberOfRows
         stride = self._stride_rows(i)
         out = []
         for _name, tid in tops:
             arr = have.get(tid) if have else None
             if arr is None:
-                try:
-                    arr = self._cached_stride_column(
-                        dec, i, tid, s_idx, stride, n_rows
-                    )
-                except NoStridePositions:
-                    arr = self._cached_whole_column(dec, i, tid, n_rows).slice(
-                        s_idx * stride, stride
-                    )
+                arr = self._cached_column(dec, i, tid, s_idx, stride, n_rows)
             out.append(arr)
         return out
 
@@ -2044,13 +2035,6 @@ class DwrfFile:
             i, s_idx, off, _ = self._locate(row_number)
             dec = self._point_decoder(i, include_ids)
             arrays = self._point_window(dec, i, s_idx, tops)
-        if columns is not None and any("." in c for c in columns):
-            # a dotted path keeps some fields of a struct, which a decoded
-            # stride holds whole (the tables of the other entry points
-            # cast to their schema the same way)
-            types = self.projected_schema(columns).types
-            arrays = [a.slice(off, 1).cast(t) for a, t in zip(arrays, types)]
-            off = 0
         return {name: arr[off].as_py() for (name, _), arr in zip(tops, arrays)}
 
     def read_rows_at(

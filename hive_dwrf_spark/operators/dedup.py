@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from ..format.env import env_int
-from .util import local_frame
+from .util import collect_bounded
 
 # Fixed MinHash parameters: classic 31-bit minhash over the Mersenne prime
 # 2^31-1. Everything — shingle hash, permutations a*h+b — stays strictly
@@ -581,10 +581,10 @@ def resolve_duplicates(
     OUTPUT-SIZED, not bounded: at heavy duplication (the stress
     harness's giant-component case — most of the corpus non-canonical)
     it approaches corpus scale, so the broadcast is size-GATED like
-    every other data-dependent broadcast here: one cheap count on the
-    already-materialized label frame decides broadcast anti-join vs
-    shuffled anti-join (at that dup density the shuffle is the correct
-    plan, and Spark's left_anti shuffles only the id column)."""
+    every other data-dependent broadcast here: one sizing pass over the
+    loser list decides broadcast anti-join vs shuffled anti-join (at that
+    dup density the shuffle is the correct plan, and Spark's left_anti
+    shuffles only the id column)."""
     labels = connected_components(pairs)
     losers = labels.filter(F.col("component") != F.col("node")).select(
         F.col("node").alias(id_col)
@@ -598,22 +598,24 @@ def _maybe_broadcast_ids(ids: DataFrame) -> DataFrame:
     The threshold is rows (ids are fixed-width): 5M longs ~ 40 MB
     serialized, comfortably under Spark's 8 GB broadcast ceiling and
     worth the shuffle it saves; override with
-    SPARK_GRAFT_BROADCAST_IDS_MAX (0 disables broadcasting). The frame
-    is checkpointed BEFORE the gate count so the pipeline deriving it
-    runs exactly once — resolve_duplicates_by's loser list is a
-    corpus-touching join + aggregate, and counting the raw plan would
-    re-execute all of it again inside the anti-join (the checkpoint
-    itself is id-list-sized, never the corpus)."""
+    SPARK_GRAFT_BROADCAST_IDS_MAX (0 disables broadcasting). The bounded
+    collect (util.collect_bounded) derives the list once — a
+    corpus-touching join + aggregate in resolve_duplicates_by — and under
+    the gate returns it as a LocalRelation. Over the gate the cached list
+    moves to checkpoint blocks, which are freed with the returned plan,
+    where a cache would stay until unpersisted."""
     limit = env_int("SPARK_GRAFT_BROADCAST_IDS_MAX", 5_000_000)
     if not limit:
         # a driver-built id frame (connected_components' local path) is a
         # LocalRelation of known size, which the planner would broadcast
         # on its own; the merge hint keeps 0 meaning "never broadcast"
         return ids.hint("merge")
-    ids = ids.localCheckpoint(eager=True)
-    if ids.count() <= limit:
-        return F.broadcast(ids)
-    return ids
+    tbl = collect_bounded(ids, limit)[1]
+    if tbl is not None:
+        return F.broadcast(ids.sparkSession.createDataFrame(tbl, ids.schema))
+    out = ids.localCheckpoint(eager=True)
+    ids.unpersist()
+    return out
 
 
 def resolve_duplicates_by(
@@ -1110,22 +1112,21 @@ def connected_components(
     label self-join) — the standard Spark CC shape; the edge list is
     persisted since every round re-reads it.
 
-    Adaptive small-graph path: when the distinct edge list is at most
-    `local_threshold` rows (~16 B/edge -> tens of MB), the component
-    solve runs as a driver-local union-find on the collected PAIR LIST
-    (never the corpus) — the same size-gated reasoning Spark applies to
-    broadcast joins, replacing an O(log diameter)-round job cascade with
-    one collect. Near-dup edge lists are output-bounded and usually tiny
-    relative to the corpus; at 100 TB an over-threshold edge list takes
-    the distributed loop below. Pass local_threshold=0 to force the
-    distributed path; the default (None) reads the
-    SPARK_GRAFT_CC_LOCAL_THRESHOLD env var (fallback 2,000,000), which
-    the stress harness sets to 0 so scale evidence always measures the
-    loop.
+    Adaptive small-graph path: at most `local_threshold` distinct edges
+    (~16 B/edge -> tens of MB) are solved by a driver-local union-find
+    (_components) on the PAIR LIST (never the corpus), fetched by one
+    bounded collect (util.collect_bounded) — Spark's size-gated broadcast
+    reasoning in place of an O(log diameter)-round job cascade; the loop
+    finishes the same way once its contracted edge list fits. Near-dup
+    edge lists are output-bounded and usually tiny relative to the
+    corpus. local_threshold=0 forces the distributed path; the default
+    (None) reads SPARK_GRAFT_CC_LOCAL_THRESHOLD (fallback 2,000,000),
+    which the stress harness sets to 0 so scale evidence measures the loop.
 
     Returns (node, component) with component = min node id of the cluster.
     Nodes only appear if they occur in `pairs` — callers union in
-    singletons if every document needs a label.
+    singletons if every document needs a label. A NULL id joins no
+    cluster and appears once, as (NULL, NULL).
     """
     from pyspark import StorageLevel
 
@@ -1135,36 +1136,16 @@ def connected_components(
         pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
         .union(pairs.select(F.col(id2).alias("a"), F.col(id1).alias("b")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     if local_threshold:
-        # one cheap count on the persisted edge list decides the path —
-        # exactly how AQE sizes a broadcast side at runtime
-        n_edges = edges.count()
-        if n_edges <= local_threshold:
-            rows = edges.collect()
-            edges.unpersist()
-            parent: dict = {}
-
-            def find(x):
-                while parent.setdefault(x, x) != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for r in rows:
-                ra, rb = find(r["a"]), find(r["b"])
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            spark = pairs.sparkSession
-            out_schema = (
-                pairs.select(
-                    F.col(id1).alias("node"), F.col(id1).alias("component")
-                ).schema
-            )
-            return local_frame(spark, [(n, find(n)) for n in parent], out_schema)
+        # sized in one pass, as AQE sizes a broadcast side at runtime;
+        # over the gate the loop reads the cached edge list
+        tbl = collect_bounded(edges, local_threshold)[1]
+        if tbl is not None:
+            node = pairs.select(F.col(id1).alias("node"))
+            return _components(tbl, node.withColumn("component", F.col("node")))
+    else:
+        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
     # STAR-CONTRACTION loop: each round (1) hash-min labels every live
     # node with the min of itself and its neighbours, (2) pointer-doubles
     # the label table TO FIXPOINT (label <- label(label) squares the
@@ -1244,11 +1225,12 @@ def connected_components(
             .filter(F.col("_la") != F.col("_lb"))
             .select(F.col("_la").alias("a"), F.col("_lb").alias("b"))
             .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        n_live = nxt.count()
+        # sizes (and, at or under the gate, fetches) the contracted edge
+        # list; a gate of 0 fetches only an empty list, which ends the loop
+        n_live, rest = collect_bounded(nxt, local_threshold)
         if iter_times is not None:
-            # per-round wall time through the contraction count — stress-
+            # per-round wall time through the contraction's sizing — stress-
             # harness instrumentation (round-13 scale evidence: rounds =
             # O(log diameter) with a shrinking live-edge list, as a
             # measurement), never set on query paths
@@ -1278,34 +1260,12 @@ def connected_components(
         )
         if n_live == 0:
             break
-        if local_threshold and n_live <= local_threshold:
+        if rest is not None:
             # the contracted remainder fits the driver: finish with a
             # local union-find over SUPER-node edges and compose
-            rows = cur.collect()
-            cur.unpersist()
-            parent: dict = {}
-
-            def find(x):
-                while parent.setdefault(x, x) != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for r in rows:
-                ra, rb = find(r["a"]), find(r["b"])
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            spark = pairs.sparkSession
-            fin = local_frame(
-                spark,
-                [(n, find(n)) for n in parent],
-                mapping.select(
-                    F.col("node").alias("component"),
-                    F.col("node").alias("_l"),
-                ).schema,
-            )
+            fin = _components(
+                rest, mapping.select("node", F.col("node").alias("_l"))
+            ).withColumnRenamed("node", "component")
             return (
                 mapping.join(F.broadcast(fin), "component", "left")
                 .select(
@@ -1317,6 +1277,33 @@ def connected_components(
             )
     cur.unpersist()
     return mapping
+
+
+def _components(edges, like: DataFrame) -> DataFrame:
+    """Driver-local union-find over an Arrow edge table (a, b): a frame of
+    `like`'s schema holding (node, smallest node of its cluster). Each
+    round hooks every root to the smallest root an edge reaches, then
+    pointer-jumps to flat. A NULL endpoint connects nothing (its partner
+    is still a node, NULL one of its own), as in the distributed loop."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    a, b = (edges.column(c).combine_chunks() for c in "ab")
+    nodes = pc.unique(pa.concat_arrays([a, b])).sort()
+    both = pc.and_(a.is_valid(), b.is_valid())
+    ia, ib = (pc.index_in(x.filter(both), nodes).to_numpy() for x in (a, b))
+    label = np.arange(len(nodes))
+    while True:
+        lo = np.minimum(label[ia], label[ib])
+        new = label.copy()
+        np.minimum.at(new, label[ia], lo)
+        np.minimum.at(new, label[ib], lo)
+        while not np.array_equal(new[new], new):
+            new = new[new]
+        if np.array_equal(new, label):
+            tbl = pa.table([nodes, nodes.take(label)], like.columns)
+            return like.sparkSession.createDataFrame(tbl, like.schema)
+        label = new
 
 
 def incremental_minhash_pairs(

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import collect_bounded
+
 #: offset separating the two node-id spaces of a bipartite graph
 BIPARTITE_OFFSET = 1_000_000_000
 
@@ -65,40 +67,60 @@ def _pagerank_local(
     ``dedup=True``: the pairs may contain duplicates (the caller skipped
     the Spark-side distinct shuffle); they are deduped here in one numpy
     pass — packed into a single int64 when the value ranges allow (one
-    sort of n words), row-wise np.unique otherwise."""
+    sort of n words), row-wise np.unique otherwise.
+
+    NULLs act as in the distributed loop, whose joins on the sender never
+    match NULL: NULL sends nothing, its partner counts the edge and sends
+    NULL a share, and only nodes that received a message in a round rank,
+    send in the next round and appear in the result."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    src = tbl.column("src").to_numpy().astype(np.int64, copy=False)
-    dst = tbl.column("dst").to_numpy().astype(np.int64, copy=False)
+    cols = [tbl.column(c) for c in ("src", "dst")]
+    nulls = any(c.null_count for c in cols)
+    sv, dv = (c.is_valid().to_numpy(zero_copy_only=False) for c in cols)
+    src, dst = (np.asarray(pc.fill_null(c, 0), dtype=np.int64) for c in cols)
     if dedup and src.size:
         smin, smax = int(src.min()), int(src.max())
         dmin, dmax = int(dst.min()), int(dst.max())
         span = dmax - dmin + 1
-        if smin >= 0 and dmin >= 0 and (smax + 1) * span < 2**63:
+        if not nulls and smin >= 0 and dmin >= 0 and (smax + 1) * span < 2**63:
             packed = np.unique(src * span + (dst - dmin))
             src = packed // span
             dst = packed % span + dmin
+            sv = dv = np.ones(len(src), dtype=bool)
         else:
-            uniq = np.unique(np.stack([src, dst], axis=1), axis=0)
-            src, dst = (
-                np.ascontiguousarray(uniq[:, 0]),
-                np.ascontiguousarray(uniq[:, 1]),
-            )
+            uniq = np.unique(np.stack([src, dst, sv, dv], axis=1), axis=0)
+            src, dst = (np.ascontiguousarray(uniq[:, j]) for j in (0, 1))
+            sv, dv = (uniq[:, j].astype(bool) for j in (2, 3))
     s = np.concatenate([src, dst])
     d = np.concatenate([dst, src])
+    if nulls:  # NULL sends nothing; a share sent to NULL goes to slot n
+        sends = np.concatenate([sv, dv])
+        s, d, hears = s[sends], d[sends], np.concatenate([dv, sv])[sends]
     nodes, inv_s = np.unique(s, return_inverse=True)
-    deg = np.bincount(inv_s, minlength=len(nodes)).astype(np.int64)
+    n = len(nodes)
+    deg = np.bincount(inv_s, minlength=n + 1).astype(np.int64)
     di = np.searchsorted(nodes, d)
+    if nulls:
+        di[~hears] = n
     base = (100 - damping_pct) * scale // 100
-    r = np.full(len(nodes), scale, dtype=np.int64)
+    r = np.full(n + 1, scale, dtype=np.int64)
+    ranked = np.append(np.ones(n, dtype=bool), nulls)
+    si, ti = inv_s, di
     for _ in range(iterations):
-        contrib = r[inv_s] // deg[inv_s]
-        s_in = np.zeros(len(nodes), dtype=np.int64)
-        np.add.at(s_in, di, contrib)
+        if nulls:  # only the nodes a message reached last round send
+            si, ti = inv_s[ranked[inv_s]], di[ranked[inv_s]]
+        s_in = np.zeros(n + 1, dtype=np.int64)
+        np.add.at(s_in, ti, r[si] // deg[si])
         r = base + (damping_pct * s_in) // 100
+        if nulls:
+            ranked = np.bincount(ti, minlength=n + 1) > 0
+    keep = np.flatnonzero(ranked)
+    node = pa.array(np.append(nodes, 0)[keep], mask=keep == n)
     return spark.createDataFrame(
-        pa.table({"node": pa.array(nodes), "rank_fp": pa.array(r)}),
+        pa.table({"node": node, "rank_fp": pa.array(r[keep])}),
         "node BIGINT, rank_fp BIGINT",
     )
 
@@ -140,41 +162,33 @@ def pagerank_fixed_point(
     consumer, so nothing recomputes).
     """
     base = (100 - damping_pct) * scale // 100
-    # Adaptive small-graph gate (the connected_components discipline): the
-    # DISTINCT edge list is often driver-affordable even when the corpus
-    # that produced it is not (16 B/edge; the 2M default is ~32 MB). At or
-    # below the gate the three pregel rounds run as one numpy pass with
-    # identical int64 floored arithmetic; above it — or with
-    # local_threshold=0, which tests and the stress harness use — the
-    # distributed loop runs. The persisted edge list serves both paths, so
-    # the (often expensive) upstream join+distinct runs exactly once.
-    # default gate from the same env convention as connected_components:
-    # the stress harness sets it to 0 so scale evidence always measures
-    # the distributed loop; local_threshold=0 forces it explicitly
+    # Adaptive small-graph gate (the connected_components discipline, and
+    # its SPARK_GRAFT_CC_LOCAL_THRESHOLD default): the DISTINCT edge list
+    # is often driver-affordable even when the corpus that produced it is
+    # not (16 B/edge; the 2M default is ~32 MB). At or below the gate the
+    # pregel rounds run as one numpy pass with identical int64 floored
+    # arithmetic; above it — or with local_threshold=0, which tests and
+    # the stress harness use — the distributed loop runs. The bounded
+    # collect weighs each edge 2 (both directions); over the gate the loop
+    # reads the cached edge list, so the upstream join+distinct runs once.
     if local_threshold is None:
         from ..format.env import env_int
 
         local_threshold = env_int("SPARK_GRAFT_CC_LOCAL_THRESHOLD", 2_000_000)
     pinned = None
     if local_threshold:
+        e = edges.select("src", "dst")
         # When the caller KNOWS an upper bound on the edge count (e.g. a
         # bipartite edge list is at most one edge per fact row, and the
         # fact table's row count is free from the parquet footer), a
         # bound under the gate proves the local path applies without the
-        # persist + count materialization — the edge derivation (often a
-        # join+distinct) then runs exactly once, in the toArrow collect.
-        # Both paths compute identical results, so the gate may use any
-        # sound bound (optimization round 12).
+        # persist and sizing pass — the edge derivation then runs exactly
+        # once, in one toArrow job (optimization round 12).
         if edge_count_bound is not None and 2 * edge_count_bound <= local_threshold:
-            tbl = edges.select("src", "dst").toArrow()
-            return _pagerank_local(
-                edges.sparkSession, tbl, iterations, scale, damping_pct,
-                dedup=dedup_edges,
-            )
-        e = edges.select("src", "dst").persist()
-        if 2 * e.count() <= local_threshold:
             tbl = e.toArrow()
-            e.unpersist()
+        else:
+            tbl = collect_bounded(e, local_threshold, weight=F.lit(2))[1]
+        if tbl is not None:
             return _pagerank_local(
                 edges.sparkSession, tbl, iterations, scale, damping_pct,
                 dedup=dedup_edges,

@@ -24,7 +24,7 @@ from pyspark.sql.types import (
 )
 
 from ..format.env import env_int
-from .util import local_frame
+from .util import collect_bounded, local_frame
 
 _SEED = 20240813
 
@@ -158,27 +158,24 @@ def kmeans_lloyd(
     behavior, deterministic either way.
 
     Adaptive bounded-corpus path (the connected_components /
-    pagerank_fixed_point discipline): the quantized corpus is persisted,
-    and one shuffle-free pass fills the cache and observes its size
-    (total quantized values, rows x d int64s). At most
-    SPARK_GRAFT_CC_LOCAL_THRESHOLD values (read at call time,
-    2,000,000 = 16 MB by default) are collected once with toArrow and the
-    rounds run in numpy with the same arithmetic: int64 squared
-    distances, ties to the smallest cid (centroid columns in ascending
-    cid order), centroid = floor(float64(sum) / float64(n)), empty
-    clusters dropped. Three Spark jobs (that pass, the seed query, the
-    collect) instead of 1 + 2 x rounds eager ones; the result is built
-    from an Arrow table, so it plans as a LocalRelation. The collected
-    input falls back to the distributed loop unless its ids are
+    pagerank_fixed_point discipline): at most SPARK_GRAFT_CC_LOCAL_THRESHOLD
+    quantized values (read at call time, 2,000,000 = 16 MB by default)
+    come back through the bounded collect (util.collect_bounded) as one
+    Arrow table, the seeds are its k smallest ids, and the rounds run in
+    numpy with the same arithmetic: int64 squared distances, ties to the
+    smallest cid (centroid columns in ascending cid order), centroid =
+    floor(float64(sum) / float64(n)), empty clusters dropped. Two Spark
+    jobs (the sizing pass, the fetch) instead of 1 + 2 x rounds eager
+    ones, and the result plans as a LocalRelation. The collected input
+    goes to the distributed loop, as a LocalRelation, unless its ids are
     non-NULL, unique and neither floating-point (Spark groups -0.0 with
     0.0) nor nested, every vector has length d >= 1 with no NULL
     element, and the magnitudes fit the int64 headroom below — the
     inputs on which the distributed loop's grouping, zip_with padding or
     overflow would differ. Over the threshold the loop reads the cache
-    that pass filled, so the gate costs one job launch. A setting of 0
-    skips the gate; the stress harness sets it so scale evidence
-    measures the loop. `round_times` (stress instrumentation) is filled
-    by the distributed loop only.
+    the sizing pass filled. A setting of 0 skips the gate; the stress
+    harness sets it so scale evidence measures the loop. `round_times`
+    (stress instrumentation) is filled by the distributed loop only.
 
     int64 headroom: distances <= d * (2 * scale * max|x|)^2 — ~1e11 at
     d=64 unit-norm; per-(cluster, dim) sums <= scale * max|x| * n_rows.
@@ -196,16 +193,20 @@ def kmeans_lloyd(
     )
     # NULL vectors are excluded (a NULL distance struct would otherwise
     # poison the min(struct) winner; the SQL replay's unnest skips them)
-    qdf = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("__id"), q.alias("__qv"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    qdf = df.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("__id"), q.alias("__qv")
     )
     if threshold:
-        out = _kmeans_local(qdf, k, rounds, threshold)
-        if out is not None:
-            qdf.unpersist()
-            return out
+        tbl = collect_bounded(qdf, threshold, weight=F.size("__qv"))[1]
+        if tbl is not None:
+            out = _kmeans_local(qdf, tbl, k, rounds)
+            if out is not None:
+                return out
+            # a shape the loop treats differently: it runs over the
+            # collected corpus, never recomputing it
+            qdf = qdf.sparkSession.createDataFrame(tbl, qdf.schema)
+    else:
+        qdf = qdf.persist(StorageLevel.MEMORY_AND_DISK)
     cent = (
         qdf.orderBy("__id")
         .limit(k)
@@ -268,45 +269,29 @@ def kmeans_lloyd(
     ).select("cid", "n", (F.col("__d0") + 1).alias("dim"), "c_e4")
 
 
-def _kmeans_local(qdf, k, rounds, threshold):
-    """kmeans_lloyd's rounds on the driver over the persisted quantized
-    frame `qdf` (__id, __qv), or None when it holds more than `threshold`
-    values or has a shape the distributed loop treats differently (see
-    kmeans_lloyd). Three Spark jobs: sizing the corpus, the seed query and
-    one collect."""
+def _kmeans_local(qdf, tbl, k, rounds):
+    """kmeans_lloyd's rounds on the driver over `tbl`, the collected
+    quantized frame `qdf` (__id, __qv), or None when it has a shape the
+    distributed loop treats differently (see kmeans_lloyd). The seeds are
+    the vectors of the k smallest ids, picked from `tbl`."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    from pyspark.sql import Observation
 
-    # a no-op write reads every row without a shuffle: it fills the cache
-    # (which the distributed loop reuses over the threshold) and the
-    # observed sum bounds the collect before it runs. The seed query
-    # cannot carry this metric: on input already sorted by id it reads
-    # only k rows per partition.
-    size = Observation()
-    qdf.observe(size, F.sum(F.size("__qv")).alias("values")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    values = size.get["values"]
-    if not values or values > threshold:
-        return None
-    seeds = qdf.orderBy("__id").limit(k).collect()
-    # a length-0 seed with values > 0 means a ragged corpus, which the
-    # one-length check below turns away
-    d = len(seeds[0]["__qv"])
-    tbl = qdf.toArrow()
     n = tbl.num_rows
     ids = tbl.column("__id")
     if (
-        pa.types.is_floating(ids.type)
+        not n
+        or pa.types.is_floating(ids.type)
         or pa.types.is_nested(ids.type)
         or ids.null_count
         or len(pc.unique(ids)) != n
     ):
         return None
+    seeds = pc.sort_indices(ids)[:k]
     vecs = tbl.column("__qv").combine_chunks()
+    d = len(vecs[seeds[0].as_py()])
     flat = vecs.flatten()
-    if flat.null_count or not pc.all(
+    if not d or flat.null_count or not pc.all(
         pc.equal(pc.list_value_length(vecs), d)
     ).as_py():
         return None
@@ -315,8 +300,8 @@ def _kmeans_local(qdf, k, rounds, threshold):
     # (2 * top + 1): a float64 quotient may floor one below -top
     if d * (2 * top + 1) ** 2 >= 1 << 63 or n * top >= 1 << 63:
         return None
-    cids = [r["__id"] for r in seeds]
-    C = np.array([r["__qv"] for r in seeds], dtype=np.int64)
+    cids = ids.take(seeds).to_pylist()
+    C = Q[seeds.to_numpy()]
     for _ in range(rounds):
         D = np.empty((n, len(C)), dtype=np.int64)
         for j, c in enumerate(C):

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from .util import local_frame
+from .util import collect_bounded, local_frame
 
 _STOPWORDS = [
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
@@ -643,10 +643,11 @@ def bpe_train_merges(
     corpus-scale word-frequency aggregate always runs distributed, but a
     vocabulary at or below `local_threshold` rows (a few million words =
     tens of MB — web-corpus vocabularies land here; the CORPUS never
-    does) collects once and runs the k merge rounds driver-local with
-    zero per-round Spark jobs. Above the gate — or with
+    does) comes back through the bounded collect (util.collect_bounded:
+    one sizing pass, one Arrow fetch) and the k merge rounds run
+    driver-local with zero per-round Spark jobs. Above the gate — or with
     `local_threshold=0`, which tests use to pin parity — the distributed
-    per-round loop runs.
+    per-round loop runs over the vocabulary cached once.
 
     100 TB shape: ONE corpus-scale aggregate (word frequencies); every
     merge round then operates on the vocabulary table — typically a few
@@ -661,20 +662,22 @@ def bpe_train_merges(
     from pyspark import StorageLevel
 
     words = F.filter(F.split(F.lower(F.col(text_col)), " "), lambda w: w != "")
-    wf = (
+    # initial symbol sequence: the word's characters, space-separated
+    chars = F.trim(F.regexp_replace(F.col("word"), "(.)", "$1 "))
+    vocab = (
         df.select(F.explode(words).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(chars.alias("s"), "freq")
     )
-    # initial symbol sequence: the word's characters, space-separated
-    syms = wf.select(
-        F.trim(F.regexp_replace(F.col("word"), "(.)", "$1 ")).alias("s"), "freq"
-    )
-    if local_threshold and wf.count() <= local_threshold:
-        vocab = [(r.s, r.freq) for r in syms.collect()]
-        wf.unpersist()
-        return _bpe_local_rounds(df.sparkSession, vocab, k)
+    if local_threshold:
+        tbl = collect_bounded(vocab, local_threshold)[1]
+        if tbl is not None:
+            vocab = zip(*(tbl.column(c).to_pylist() for c in ("s", "freq")))
+            return _bpe_local_rounds(df.sparkSession, list(vocab), k)
+    else:
+        vocab.persist(StorageLevel.MEMORY_AND_DISK)
+    syms = vocab
     merges = []
     for r in range(k):
         ws = F.split(F.col("s"), " ")
@@ -731,8 +734,8 @@ def bpe_train_merges(
             .select(merged.alias("s"), "freq")
             .localCheckpoint(eager=True)
         )
-    # every merge row is checkpointed, so the cached word table can go
-    wf.unpersist()
+    # every merge row is checkpointed, so the cached vocabulary can go
+    vocab.unpersist()
     return reduce(lambda a, b: a.unionByName(b), merges)
 
 

@@ -63,3 +63,29 @@ def local_frame(spark, rows: list, schema: StructType | str) -> DataFrame:
         schema=arrow_schema,
     )
     return spark.createDataFrame(tbl, schema)
+
+
+def collect_bounded(df: DataFrame, limit: int, weight=None):
+    """The one way a driver-local path collects: (size, table) of `df`,
+    persisted and sized — its rows, or the sum of the `weight` Column — by
+    one no-op write (no exchange, unlike count()), then at or under
+    `limit` fetched from that cache as Arrow and released. Over the limit
+    the table is None and the frame stays cached for the distributed
+    path, whose caller unpersists it."""
+    from pyspark import StorageLevel
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    obs, rows = Observation(), F.count(F.lit(1))
+    weight = rows if weight is None else F.sum(weight)
+    observed = df.observe(obs, rows.alias("rows"), weight.alias("size"))
+    observed.write.format("noop").mode("overwrite").save()
+    size = obs.get["size"] or 0
+    if size > limit:
+        return size, None
+    empty = not obs.get["rows"]
+    tbl = to_arrow_schema(df.schema).empty_table() if empty else df.toArrow()
+    df.unpersist()
+    return size, tbl

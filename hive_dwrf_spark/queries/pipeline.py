@@ -3734,9 +3734,9 @@ def embedding_kmeans(spark, sf_dir):
 
     A corpus of at most SPARK_GRAFT_CC_LOCAL_THRESHOLD quantized values
     (rows x d; 2,000,000 by default) is collected once as Arrow and the
-    rounds run in numpy on the driver: three Spark jobs (a shuffle-free
-    sizing pass over the persisted corpus, the seed query, the collect),
-    and the centroids come back as an Arrow-built LocalRelation. A larger corpus — or duplicate/NULL ids, ragged
+    rounds run in numpy on the driver: two Spark jobs (the bounded
+    collect's sizing pass and its fetch), and the centroids come back as
+    an Arrow-built LocalRelation. A larger corpus — or duplicate/NULL ids, ragged
     vectors, NULL elements or int64-overflowing magnitudes — runs the
     distributed loop: broadcast k-row centroids, a zip_with distance with
     a min(struct) winner and map-side-combinable per-(cluster, dim) sums,

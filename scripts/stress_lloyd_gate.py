@@ -2,8 +2,9 @@
 
 Synthesizes, in memory, an embedding corpus just over the default gate
 (SPARK_GRAFT_CC_LOCAL_THRESHOLD: 2,000,000 quantized values) and times
-kmeans_lloyd(...).collect() with the setting unset, where the seed query
-sizes the corpus and the call falls back to the distributed loop, against
+kmeans_lloyd(...).collect() with the setting unset, where the bounded
+collect (operators/util.py::collect_bounded) sizes the corpus, turns it
+away and leaves it cached for the distributed loop, against
 the setting 0, which skips the gate. The two settings alternate, the
 first pair is warm-up, and both must run the distributed loop
 (round_times filled) and return the same rows. Prints one JSON line with

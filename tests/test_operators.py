@@ -605,6 +605,32 @@ def test_connected_components_long_chain_both_paths(spark):
     assert dist == want
 
 
+def test_connected_components_local_matches_python_union_find(spark):
+    """The driver-local union-find (numpy hooking and pointer jumping)
+    labels a random many-component graph, self-loops included, exactly
+    as a plain Python union-find does."""
+    import random
+
+    from hive_dwrf_spark.operators.dedup import connected_components
+
+    rng = random.Random(7)
+    ids = rng.sample(range(10_000), 300)
+    rows = [(rng.choice(ids), rng.choice(ids)) for _ in range(260)]
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    got = connected_components(_pairs(spark, rows)).collect()
+    assert {tuple(r) for r in got} == {(n, find(n)) for n in parent}
+
+
 def test_deterministic_sample_stable_under_partitioning(spark):
     from pyspark.sql import functions as F
 
@@ -1002,8 +1028,8 @@ def test_kmeans_lloyd_local_gate_matches_distributed(
 
 def test_kmeans_lloyd_gate_sizes_id_sorted_input(spark, monkeypatch):
     """The gate counts every row even when the planner knows the input is
-    sorted by id, where the seed query reads only k rows per partition:
-    40 rows x d=2 over 4 range partitions is 80 values."""
+    sorted by id, where an orderBy-limit seed query would read only k rows
+    per partition: 40 rows x d=2 over 4 range partitions is 80 values."""
     from pyspark.sql import functions as F
 
     from hive_dwrf_spark.operators.similarity import kmeans_lloyd
@@ -1023,10 +1049,11 @@ def test_kmeans_lloyd_gate_sizes_id_sorted_input(spark, monkeypatch):
     assert got["79"][1] == got["80"][1]
 
 
-def test_kmeans_lloyd_local_path_starts_three_jobs(spark, monkeypatch):
-    """The driver-local path is one sizing pass, the seed query and one
-    collect — no per-round Spark jobs — releases the corpus cache, and
-    leaves round_times, the distributed loop's instrumentation, empty."""
+def test_kmeans_lloyd_local_path_starts_two_jobs(spark, monkeypatch):
+    """The driver-local path is one sizing pass and one Arrow fetch — the
+    seeds come from the fetched table, no per-round Spark jobs — releases
+    the corpus cache, and leaves round_times, the distributed loop's
+    instrumentation, empty."""
     from hive_dwrf_spark.operators.similarity import kmeans_lloyd
 
     _set_gate(monkeypatch, None)
@@ -1044,7 +1071,7 @@ def test_kmeans_lloyd_local_path_starts_three_jobs(spark, monkeypatch):
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("kmeans-local-jobs")) <= 3
+    assert len(sc.statusTracker().getJobIdsForGroup("kmeans-local-jobs")) <= 2
     assert _is_local(out)
     assert times == []
     assert set(sc._jsc.getPersistentRDDs().keys()) <= before
@@ -2896,3 +2923,201 @@ class TestResolveBroadcastGate:
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Broadcast" in plan
         assert sorted(r.doc_id for r in out.collect()) == list(range(10))
+
+
+# -- every driver-local gate, both branches ----------------------------------
+#
+# Each gate sizes and fetches its frame through util.collect_bounded. A
+# site is (runner, gate measure, inputs): run(spark, monkeypatch, rows,
+# limit) returns the site's result with its gate at `limit`, where 0
+# forces the distributed branch; size(spark, rows) is what the gate
+# compares with the limit.
+
+
+def _pairs(spark, rows):
+    return spark.createDataFrame(rows, "id1 long, id2 long")
+
+
+def _run_cc(spark, monkeypatch, rows, limit):
+    from hive_dwrf_spark.operators.dedup import connected_components
+
+    return connected_components(_pairs(spark, rows), local_threshold=limit)
+
+
+def _size_cc(spark, rows):
+    return len({(a, b) for a, b in rows} | {(b, a) for a, b in rows})
+
+
+def _size_cc_rest(spark, rows):
+    """Live edges after the loop's first contraction: the contracted
+    remainder's gate, which the first gate (all edges) then turns away."""
+    from hive_dwrf_spark.operators.dedup import connected_components
+
+    times: list = []
+    connected_components(_pairs(spark, rows), local_threshold=0, iter_times=times)
+    return times[0][1]
+
+
+def _run_resolve(spark, monkeypatch, rows, limit):
+    from hive_dwrf_spark.operators.dedup import resolve_duplicates
+    from hive_dwrf_spark.operators.util import local_frame
+
+    docs = local_frame(
+        spark,
+        [(i, f"d{i}") for i in range(24)] + [(None, "dn")],
+        "doc_id long, text string",
+    )
+    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_IDS_MAX", str(limit))
+    return resolve_duplicates(docs, _pairs(spark, rows), "doc_id")
+
+
+def _size_resolve(spark, rows):
+    from hive_dwrf_spark.operators.dedup import connected_components
+
+    labels = connected_components(_pairs(spark, rows))
+    return labels.filter(F.col("component") != F.col("node")).count()
+
+
+def _run_pagerank(spark, monkeypatch, rows, limit):
+    from hive_dwrf_spark.operators.graph import pagerank_fixed_point
+
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    return pagerank_fixed_point(edges, iterations=2, local_threshold=limit)
+
+
+def _run_kmeans(spark, monkeypatch, rows, limit):
+    from hive_dwrf_spark.operators.similarity import kmeans_lloyd
+
+    _set_gate(monkeypatch, str(limit))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return kmeans_lloyd(df, "embedding", "vec_id", k=2, rounds=2)
+
+
+def _run_bpe(spark, monkeypatch, rows, limit):
+    from hive_dwrf_spark.operators.text import bpe_train_merges
+
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    return bpe_train_merges(df, "text", 3, local_threshold=limit)
+
+
+_CC_ROWS = {
+    "base": [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20), (21, 22)],
+    # a NULL endpoint connects nothing; its partner is still a node
+    "null_ids": [(1, 2), (2, 3), (None, 5), (5, 6), (7, None), (8, 9),
+                 (None, None)],
+    "empty": [],
+}
+# a path whose ids are shuffled: hash-min leaves many local minima, so
+# the first contraction keeps live edges for the remainder's gate
+_PATH = [17, 3, 29, 8, 40, 1, 33, 12, 25, 6, 38, 20, 14, 31, 9, 27]
+_CC_REST_ROWS = {
+    "base": list(zip(_PATH, _PATH[1:])),
+    "null_ids": list(zip(_PATH, _PATH[1:])) + [(None, 3), (50, None)],
+    "empty": [],
+}
+_GATE_SITES = {
+    "connected_components": (_run_cc, _size_cc, _CC_ROWS),
+    "connected_components_remainder": (_run_cc, _size_cc_rest, _CC_REST_ROWS),
+    "resolve_duplicates_broadcast_ids": (_run_resolve, _size_resolve, {
+        "base": [(i, i + 10) for i in range(10)] + [(3, 22)],
+        "null_ids": [(i, i + 10) for i in range(4)] + [(None, 5), (6, None)],
+        "empty": [],
+    }),
+    "pagerank_fixed_point": (_run_pagerank, lambda spark, rows: 2 * len(rows), {
+        "base": [(1, 2), (1, 3), (2, 3), (3, 4), (5, 6)],
+        # 3 also hears from 2, so it sends NULL its share in round 2; 5 and
+        # 7 hear only from NULL, which never sends, and drop out
+        "null_ids": [(1, 2), (2, 3), (3, None), (None, 5), (7, None),
+                     (None, None), (8, 9)],
+        "empty": [],
+    }),
+    "kmeans_lloyd": (
+        _run_kmeans,
+        lambda spark, rows: sum(len(v) for _, v in rows if v is not None),
+        {
+            "base": [(0, [0.0, 0.0]), (1, [4.0, 4.0]), (2, [0.5, 0.0]),
+                     (3, [4.5, 4.0]), (4, [1.0, 1.0])],
+            # a NULL id sends the corpus to the loop; a NULL vector is
+            # dropped on both branches
+            "null_ids": [(0, [0.0, 0.0]), (None, [4.0, 4.0]), (2, [0.5, 0.0]),
+                         (3, [4.5, 4.0]), (4, None)],
+            "empty": [],
+        },
+    ),
+    "bpe_train_merges": (
+        _run_bpe,
+        lambda spark, rows: len(
+            {w for _, t in rows if t for w in t.lower().split(" ") if w}
+        ),
+        {
+            "base": [(1, "low low low lower newest newest"), (2, "aaaa ab ab")],
+            "null_ids": [(None, "low lower"), (2, None), (3, "newest low")],
+            "empty": [],
+        },
+    ),
+}
+
+# Spark jobs each gated call started before the sites shared
+# collect_bounded, counted the same way. NULL ids then raised TypeError in
+# connected_components' local branch, directly or inside
+# resolve_duplicates; those cases take the base input's bound.
+_JOBS_BEFORE = {
+    ("bpe_train_merges", "at_limit"): 5,
+    ("bpe_train_merges", "over_limit"): 14,
+    ("bpe_train_merges", "null_ids"): 5,
+    ("bpe_train_merges", "empty"): 4,
+    ("connected_components", "at_limit"): 5,
+    ("connected_components", "over_limit"): 34,
+    ("connected_components", "null_ids"): 5,
+    ("connected_components", "empty"): 4,
+    ("connected_components_remainder", "at_limit"): 21,
+    ("connected_components_remainder", "over_limit"): 35,
+    ("connected_components_remainder", "null_ids"): 21,
+    ("connected_components_remainder", "empty"): 4,
+    ("kmeans_lloyd", "at_limit"): 3,
+    ("kmeans_lloyd", "over_limit"): 11,
+    ("kmeans_lloyd", "null_ids"): 13,
+    ("kmeans_lloyd", "empty"): 2,
+    ("pagerank_fixed_point", "at_limit"): 4,
+    ("pagerank_fixed_point", "over_limit"): 13,
+    ("pagerank_fixed_point", "null_ids"): 4,
+    ("pagerank_fixed_point", "empty"): 4,
+    ("resolve_duplicates_broadcast_ids", "at_limit"): 8,
+    ("resolve_duplicates_broadcast_ids", "over_limit"): 8,
+    ("resolve_duplicates_broadcast_ids", "null_ids"): 8,
+    ("resolve_duplicates_broadcast_ids", "empty"): 5,
+}
+
+
+@pytest.mark.parametrize("case", ["at_limit", "over_limit", "null_ids", "empty"])
+@pytest.mark.parametrize("site", sorted(_GATE_SITES))
+def test_gate_site_branches_agree(spark, monkeypatch, site, case):
+    """Every driver-local gate returns the distributed branch's rows at its
+    limit, one over it, with NULL ids and on empty input; takes the local
+    branch exactly at the limit; starts no more Spark jobs than before;
+    and leaves no cached frame behind."""
+    run, size, inputs = _GATE_SITES[site]
+    monkeypatch.delenv("SPARK_GRAFT_CC_LOCAL_THRESHOLD", raising=False)
+    rows = inputs["base" if case.endswith("limit") else case]
+    n = size(spark, rows)
+    limit = n - 1 if case == "over_limit" else max(n, 1)
+    sc = spark.sparkContext
+
+    def cached():  # a cached frame's RDD is named after its plan
+        return {k for k, r in sc._jsc.getPersistentRDDs().items() if r.name()}
+
+    before = cached()
+    group = f"gate-{site}-{case}"
+    sc.setJobGroup(group, group)
+    try:
+        gated = run(spark, monkeypatch, rows, limit)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert cached() <= before
+    if case.endswith("limit") and site != "connected_components_remainder":
+        assert _is_local(gated) is (case == "at_limit")
+    got = sorted(map(tuple, gated.collect()), key=repr)
+    want = sorted(map(tuple, run(spark, monkeypatch, rows, 0).collect()), key=repr)
+    assert got == want
+    assert jobs <= _JOBS_BEFORE[site, case], jobs

@@ -872,6 +872,34 @@ class TestGatherParity:
             # again through the warm decoder and stride caches
             _assert_point_reads(f, ids, columns)
 
+    def test_dotted_projection_reads_no_unprojected_field(
+        self, mixed_file, monkeypatch, blocks
+    ):
+        """A point read of "st.b" decodes only that field of the struct:
+        no block or whole stream of "st.a" is read, and the decoded
+        stride holds the projected fields only."""
+        from hive_dwrf_spark.format.reader import _StripeDecoder
+
+        read: set[int] = set()
+        for name in ("_block", "stream"):
+            real = getattr(_StripeDecoder, name)
+
+            def spy(self, col, kind, *rest, _real=real):
+                read.add(col)
+                return _real(self, col, kind, *rest)
+
+            monkeypatch.setattr(_StripeDecoder, name, spy)
+        with DwrfFile(mixed_file) as f:
+            root = f.types[0]
+            st = f.types[root.subtypes[list(root.fieldNames).index("st")]]
+            a, b = (st.subtypes[list(st.fieldNames).index(n)] for n in "ab")
+            row = f.read_row(745, columns=["s", "st.b", "m", "d"])
+            assert row["st"] == {"b": "x1"}
+            assert b in read and a not in read
+            got = f.read_rows_at([745, 10], columns=["st.b"])
+            assert got.schema == f.projected_schema(["st.b"])
+            assert a not in read
+
     def test_read_rows_at_without_row_index(self, tmp_path):
         path = str(tmp_path / "legacy.dwrf")
         write_arrow_table(path, _mixed_table(3_000), stripe_rows=1_000, row_index_stride=0)
