@@ -44,8 +44,8 @@ hold keys), so it holds few files open however large the directory.
              files are written once: a replacement or rewrite changes
              size or mtime and is reopened, but an in-place rewrite
              keeping both would be served from the stale handle.
-  bounds   : at most _HANDLES_MAX handles stay open (least recently used
-             dropped first). A handle holds decoded strides, decompressed
+  bounds   : at most _HANDLES_MAX handles stay open (least recently
+             served dropped first). A handle holds decoded strides, decompressed
              blocks in its at most 8 stripe decoders, and the stripes'
              dictionaries, row indexes and whole-stream decodes; it keeps
              no compressed bytes, so none of this grows with the file.
@@ -71,7 +71,7 @@ from __future__ import annotations
 
 import bisect
 import threading
-from collections import OrderedDict
+from collections import OrderedDict, deque
 
 import numpy as np
 import pyarrow as pa
@@ -122,6 +122,23 @@ def shared_handle(path: str, ident: tuple | None = None) -> tuple[DwrfFile, bool
     if winner is not f:
         f.close()  # never shared: no other thread can hold it
     return winner, True
+
+
+def _touch(served) -> None:
+    """Make the handles of `served`, (path, stat identity, handle) in the
+    order a call served them, the most recently used, re-entering any the
+    LRU dropped meanwhile. An entry of another identity, cached by another
+    call, is left as it is."""
+    with _HANDLES_LOCK:
+        for path, ident, f in served:
+            hit = _HANDLES.get(path)
+            if hit is not None and hit[0] != ident:
+                continue
+            if hit is None:
+                _HANDLES[path] = (ident, f)
+            _HANDLES.move_to_end(path)
+        while len(_HANDLES) > _HANDLES_MAX:
+            _HANDLES.popitem(last=False)  # dropped, not closed
 
 
 def _trim_decoded() -> None:
@@ -237,9 +254,11 @@ def lookup_keys(
     # a file without a cached footer summary gets it from its shared
     # handle, so a cold call parses each footer once. The handle of a
     # file whose summary admits a key is kept for this call even if the
-    # handle LRU drops it meanwhile, at most _HANDLES_MAX of them; any
-    # other is dropped at once, so a cold call over a directory of many
-    # files holds few of them open
+    # handle LRU drops it meanwhile, at most _HANDLES_MAX of them; past
+    # that it re-enters the LRU as most recent, so the LRU holds the
+    # other key holders whatever order the plan threads finish in. Any
+    # other handle is left to the LRU, so a cold call over a directory of
+    # many files holds few of them open
     planned: dict[str, DwrfFile] = {}
     planned_lock = threading.Lock()
 
@@ -256,8 +275,11 @@ def lookup_keys(
         plan = plan_of(f)
         if _may_hold(plan, key_column, key_list):
             with planned_lock:
-                if len(planned) < _HANDLES_MAX:
+                kept = len(planned) < _HANDLES_MAX
+                if kept:
                     planned[fp] = f
+            if not kept:
+                _touch([(fp, idents[fp], f)])
         return plan
 
     plans = file_plans(files, plan_from_handle, stat_keys=idents)
@@ -270,6 +292,9 @@ def lookup_keys(
         )
     out_chunks: dict[str, list[pa.Array]] = {}
     schema: pa.Schema | None = None
+    # (path, identity, handle) of the last files served, at most as many
+    # as the LRU keeps, so a call over many files holds few of them open
+    served: deque = deque(maxlen=_HANDLES_MAX)
     for fp in files:
         plan = plans[fp]
         key_name = _resolve_field(key_column, list(plan.stats_by_name))
@@ -285,6 +310,7 @@ def lookup_keys(
                 trace["files_pruned"] += 1
             continue
         f = handle(fp)
+        served.append((fp, idents[fp], f))
         key_tid = f._top_level_id(key_name)
         tops, include_ids = f._projection(columns)
         if columns is not None:
@@ -333,6 +359,10 @@ def lookup_keys(
                         for (name, _), arr in zip(tops, arrays):
                             out_chunks.setdefault(name, []).append(gather(arr))
         _trim_decoded()
+    # the handle LRU follows the order files were served in, planned
+    # handles included; doing it after the loop keeps a handle re-entered
+    # early from evicting one this call has yet to serve
+    _touch(served)
     if schema is None:  # no file held keys: the projection's schema
         schema = handle(files[0]).projected_schema(columns)
     if trace is not None:

@@ -1094,23 +1094,28 @@ def connected_components(
     (the SURVEY §2.D "union-find via iterative join", as min-label
     propagation with pointer doubling).
 
-    Each round does two things:
-    1. hash-min propagation: a node's candidate label is the min of its
-       own and its neighbours' labels (one shuffle join + groupBy);
-    2. pointer doubling: follow the label one more hop —
-       label(v) <- min(label(v), label(label(v))) — so the distance from
-       any node to its cluster minimum HALVES every round.
+    Each round runs three steps:
+    1. hash-min: every live node's label is the min of its own id and its
+       neighbours' (one groupBy over the live edge list);
+    2. pointer doubling to a fixpoint: label(v) <- min(label(v),
+       label(label(v))), a self-join of the label table that squares the
+       pointer depth each step, so a depth-d label forest flattens in
+       ceil(log2 d) steps. Every step runs its own changed check, a
+       `limit(1).count()` over the old and new labels (labels only
+       decrease, so "no row changed" is a valid fixpoint test);
+    3. contraction: both endpoints of every live edge are relabelled to
+       their root and self-loops are dropped, so the live edge list
+       shrinks every round; the loop stops when it is empty.
     Plain hash-min needs diameter-many rounds, and near-dup graphs do
     grow long chains (A~B~C~... threshold chains: the sf0.1 cosine graph
-    already has diameter > 20). With doubling, rounds = O(log diameter),
-    so max_iter=50 covers any conceivable graph; the loop still exits
-    early via the changed check, which is FUSED into the round's single
-    materializing action (labels are per-node non-increasing, so "no row
-    changed" is a valid fixed-point test).
+    already has diameter > 20); with doubling to a fixpoint and
+    contraction a long chain takes one round, and max_iter bounds the
+    rounds.
 
-    At 1B nodes each round is two shuffle joins on node id (edges + the
-    label self-join) — the standard Spark CC shape; the edge list is
-    persisted since every round re-reads it.
+    At 1B nodes each round shuffles the live edge list (hash-min, then
+    the contraction's joins and distinct) and self-joins the much smaller
+    label table per doubling step; the edge list is persisted since every
+    round re-reads it.
 
     Adaptive small-graph path: at most `local_threshold` distinct edges
     (~16 B/edge -> tens of MB) are solved by a driver-local union-find

@@ -10,7 +10,6 @@ import os
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..format.env import env_int
 from ..operators.util import local_frame
 from ..tables import load
 from . import ORACLE, query
@@ -363,52 +362,38 @@ def _numbered_lineitem(spark, sf_dir):
         "l_partkey",
         "l_suppkey",
     ]
-    # Parallel global row number (optimization round 12, guide §2.4/§2.5):
-    # the original shape was `row_number() OVER (ORDER BY keys)` — an
-    # Exchange SinglePartition plus a one-task sort of the whole table
-    # (and at 100 TB, of the whole CORPUS) before anything else runs.
-    # Range-partition by the key tuple (equal keys never split across
-    # range partitions) and sort within partitions instead: partition i's
-    # keys all precede partition j's for i < j, so after the local sort
-    # the global rank of a row is its row position within its partition
-    # plus the total row count of the partitions before it. Both terms
-    # come WITHOUT a window: `monotonically_increasing_id()` is specified
-    # as (partition id << 33) | row position, so projecting it right
-    # after the sort yields (pid, local rank) for free, and the offsets
-    # are an exclusive prefix sum over the ~#cores-row per-pid count
-    # frame (broadcast join; the only window left is over that tiny
-    # frame). vs the windowed form this removes one hash exchange of the
-    # full frame (clustering by pid — rows are already physically
-    # clustered by pid), the full-frame row_number window, and lets the
-    # already-sorted output flow straight into the range-layout write
-    # with no further exchange or sort (see _write_range_sorted
-    # presorted=True). The projection is narrowed to the key columns
-    # before the exchange (guide §2.3).
+    # Global row number without a one-task window: partition the key
+    # columns by ranges of the LEADING key (equal leading keys never
+    # straddle a partition boundary; NULLs go to partition 0, as ORDER BY
+    # puts them first) and sort within partitions by all 7 keys, so
+    # partition i's rows all precede partition j's for i < j. A row's rank
+    # is then its position in its partition plus the row count of the
+    # partitions before it. `monotonically_increasing_id()` is
+    # (partition id << 33) | position, so projecting it right after the
+    # sort gives both (pid, local rank); the offsets are an exclusive
+    # prefix sum over the per-pid counts, a ~#cores-row frame joined back
+    # by broadcast. The sorted output feeds _write_range_sorted as-is,
+    # with no further exchange or sort.
     #
-    # The range exchange partitions by the LEADING key alone (round 12
-    # session 3): equal leading keys can never straddle a partition
-    # boundary, and the within-partition sort restores the full 7-key
-    # order. Round 13 removes the exchange's hidden range-SAMPLING job
-    # outright (guide §2.4; at 100 TB that job re-scans the key column
-    # of the whole corpus): split bounds come from the parquet footer
-    # row-group stats of l_orderkey (driver-side, zero data bytes), each
-    # row maps to a bucket with a 31-comparison array filter, and a hash
-    # exchange on per-bucket TOKENS — longs preimage-picked so
-    # pmod(hash(t_b), par) == b — lands bucket b in partition b exactly.
-    # Partition order still tracks key order (bucket is monotone in the
-    # key; equal keys share a bucket), which is all the rank derivation
-    # below needs; the footer bounds only steer balance. Falls back to
-    # the sampling-backed range exchange when footer stats are missing.
+    # The partitioning needs no range-sampling job, a second scan of the
+    # input that `repartitionByRange` runs (0.75 s of a 7.5 s build of a
+    # 6M-row lineitem on 4 cores): split bounds come from the parquet
+    # footers' row-group stats of the leading key, a row's bucket is the
+    # number of bounds <= its key, and a hash exchange on per-bucket
+    # TOKENS, longs picked so pmod(hash(t_b), par) == b, lands bucket b in
+    # partition b. The bounds only steer balance. Without footer stats
+    # the range exchange runs instead.
     par = spark.sparkContext.defaultParallelism
     bounds = _footer_split_bounds(sf_dir, "lineitem", keys[0], par)
     toks = _hash_bucket_tokens(spark, par) if bounds else None
     if bounds and toks:
-        # bucket = #bounds <= key, as a SUM OF COMPARISONS: higher-order
-        # array functions (filter/aggregate) evaluate INTERPRETED per
-        # row — measured +0.5 s on the 600k-row frame — while this sum
-        # runs inside WholeStageCodegen
-        bucket = sum(
-            (F.col(keys[0]) >= F.lit(int(b))).cast("int") for b in bounds
+        # a SUM OF COMPARISONS: higher-order array functions
+        # (filter/aggregate) evaluate INTERPRETED per row — measured
+        # +0.5 s on the 600k-row frame — while this sum runs inside
+        # WholeStageCodegen. A NULL key compares NULL: bucket 0
+        bucket = F.coalesce(
+            sum((F.col(keys[0]) >= F.lit(int(b))).cast("int") for b in bounds),
+            F.lit(0),
         )
         # tokens MUST hash as BIGINT: the discovery job hashed long ids,
         # and Murmur3 hashes int32 and int64 differently — an int literal
@@ -473,56 +458,27 @@ def _release_pinned(df) -> None:
         pinned.unpersist()
 
 
-def _write_range_sorted(spark, df, path, key, n_files, presorted=False):
-    """Range-sorted DWRF layout written WIDE, then stripe-concatenated
-    (optimization round 12, guide §2.4 — remove the serial funnel):
-    ``repartitionByRange(n_files, key)`` pushes the sort + Arrow handoff
-    + encode of the whole frame into n_files tasks — for the single-file
-    layout, ONE task over the whole table (at 100 TB, the whole corpus).
-    Instead the frame is written as ~#cores range parts (every core
-    sorts and encodes only its own key range), and the parts are
-    stripe-concatenated in key order with A22's ``merge_files`` — a raw
-    byte copy of position-independent stripes (index/data/footer move
-    verbatim, only directory offsets change), no decode or re-encode,
-    IO-bound — with each output file's concat running as ONE EXECUTOR
-    TASK (optimization round 13; the round-12 driver-side loop funneled
-    100% of the table's bytes through the one driver process). Part
-    order comes from each part's footer min(key) statistics (part names
-    are uuids, zero data bytes read); range partitioning makes per-part
-    key ranges disjoint, so concatenation preserves the global sort the
-    stride lookups rely on.
-
-    ``presorted=True`` asserts the frame is ALREADY range-partitioned
-    and sorted by ``key`` within partitions (the _numbered_lineitem
-    output: rn order is construction-equal to the partition layout), so
-    the repartitionByRange here — whose hidden cost is a SAMPLING JOB
-    that evaluates the whole upstream once more, plus a full shuffle and
-    re-sort of the frame — is skipped and each task writes its partition
-    as-is. The footer min/max stats of every part are checked disjoint
-    before concatenation, so a violated precondition fails loudly rather
-    than producing an unsorted file."""
+def _write_range_sorted(df, path, key, n_files):
+    """Write the range-partitioned frame `df`, sorted by `key` within
+    each partition, as a range-sorted DWRF layout of at most `n_files`
+    files. Every partition is written as-is as one part, so every core
+    encodes only its own key range; the parts are then ordered by their
+    footer min(`key`) statistics (zero data bytes read) and
+    stripe-concatenated in that order on the driver with A22's
+    ``merge_files`` — a raw byte copy of position-independent stripes,
+    no decode or re-encode. The footer min/max of every part are checked
+    disjoint first, so a frame that is not range-partitioned fails
+    loudly instead of producing an unsorted file."""
     import glob as _glob
     import math
     import shutil as _shutil
 
+    from ..format.merge import merge_files
     from ..format.reader import DwrfFile
 
-    par = spark.sparkContext.defaultParallelism
-    if par <= n_files and not presorted:
-        df.repartitionByRange(n_files, key).sortWithinPartitions(
-            key
-        ).write.format("dwrf").option("path", path).mode("overwrite").save()
-        return
     parts_dir = path + "_parts"
     _shutil.rmtree(parts_dir, ignore_errors=True)
-    w = (
-        df
-        if presorted
-        else df.repartitionByRange(par, key).sortWithinPartitions(key)
-    )
-    w.write.format("dwrf").option("path", parts_dir).mode(
-        "overwrite"
-    ).save()
+    df.write.format("dwrf").option("path", parts_dir).mode("overwrite").save()
     ordered = []
     for fp in _glob.glob(os.path.join(parts_dir, "*.dwrf")):
         with DwrfFile(fp) as f:
@@ -541,59 +497,11 @@ def _write_range_sorted(spark, df, path, key, n_files, presorted=False):
     _shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
     chunk = math.ceil(len(parts) / n_files)
-    groups = [
-        (parts[i : i + chunk], os.path.join(path, f"part-{i // chunk:05d}.dwrf"))
-        for i in range(0, len(parts), chunk)
-    ]
-    # Executor-side merges (optimization round 13, guide §5 — the driver
-    # should do almost no data work): the round-12 shape copied every
-    # part's stripes through the single driver process; at 100 TB the
-    # concat — not the encode — becomes the choke, and 100% of the
-    # table's bytes would funnel through one process. Each output file's
-    # stripe-concat runs as one executor task instead (the same
-    # parallelize+merge_files pattern as operators/layout.compact_table):
-    # the 4-file layouts merge 4-way in parallel, and even the 1-file
-    # layout moves its copy off the driver. The footer-stats overlap
-    # guard above still runs driver-side (footer reads only, zero data
-    # bytes).
-    #
-    # SCALE-ADAPTIVE crossover, measured: one parallelize+collect job
-    # costs ~0.15 s of launch overhead regardless of bytes, while the
-    # driver byte copy runs at local-disk speed (~10 MB of sf0.1 parts
-    # = 15 ms) — so distributing only pays past ~hundreds of MB. Below
-    # the threshold the driver loop is strictly faster; at/above it the
-    # executor tasks win AND remove the driver funnel. Parameterised
-    # (env override) with a local-sane default; production justification
-    # in OPTIMIZATION_r13.md.
-    total_bytes = sum(os.path.getsize(fp) for fp in parts)
-    min_distribute = env_int(
-        "SPARK_GRAFT_MERGE_DISTRIBUTE_MIN_BYTES", 256 * 1024 * 1024
-    )
-    if total_bytes >= min_distribute:
-        from ..format.fs import fs_env_overlay
-        from ..shipping import ensure_shipped
-
-        ensure_shipped(spark)
-        fs_env = fs_env_overlay()
-
-        def _merge_group(spec):
-            import os as _os
-
-            _os.environ.update(fs_env)
-            from hive_dwrf_spark.format.merge import merge_files as _mf
-
-            srcs, out = spec
-            _mf(srcs, out)
-            return out
-
-        spark.sparkContext.parallelize(groups, len(groups)).map(
-            _merge_group
-        ).collect()
-    else:
-        from ..format.merge import merge_files
-
-        for srcs, out in groups:
-            merge_files(srcs, out)
+    for i in range(0, len(parts), chunk):
+        merge_files(
+            parts[i : i + chunk],
+            os.path.join(path, f"part-{i // chunk:05d}.dwrf"),
+        )
     _shutil.rmtree(parts_dir)
 
 
@@ -645,12 +553,8 @@ def format_point_lookup(spark, sf_dir):
     shutil.rmtree(path, ignore_errors=True)
     df = _numbered_lineitem(spark, sf_dir)
     # one sorted file so global row number == file row number (the
-    # range-sorted layout a point-lookup table has at any scale). The
-    # numbered frame is already range-partitioned and rn-sorted by
-    # construction, so the wide parallel write + driver-side stripe
-    # concat (optimization round 12, guide §2.4) needs no further
-    # exchange or sort — presorted=True writes each partition as-is
-    _write_range_sorted(spark, df, path, "rn", 1, presorted=True)
+    # range-sorted layout a point-lookup table has at any scale)
+    _write_range_sorted(df, path, "rn", 1)
     _release_pinned(df)
     fp = sorted(glob.glob(os.path.join(path, "*.dwrf")))[0]
     # serial lookup loop kept deliberately: a 16-thread pool over the
@@ -727,9 +631,7 @@ def format_point_lookup_batch(spark, sf_dir):
     path = f"/tmp/hive_dwrf_spark_ptlkb_{base}"
     shutil.rmtree(path, ignore_errors=True)
     df = _numbered_lineitem(spark, sf_dir)
-    # wide parallel write + driver-side stripe concat into the 4-file
-    # range layout (optimization round 12, guide §2.4)
-    _write_range_sorted(spark, df, path, "rn", 4, presorted=True)
+    _write_range_sorted(df, path, "rn", 4)
     _release_pinned(df)
     # row count from footers only (A27 raw-size accounting surface): the
     # key domain is known without scanning any data bytes
@@ -2164,9 +2066,7 @@ def format_sql_lookup(spark, sf_dir):
     path = f"/tmp/hive_dwrf_spark_sqllk_{base}"
     shutil.rmtree(path, ignore_errors=True)
     df = _numbered_lineitem(spark, sf_dir)
-    # wide parallel write + driver-side stripe concat into the 4-file
-    # range layout (optimization round 12, guide §2.4)
-    _write_range_sorted(spark, df, path, "rn", 4, presorted=True)
+    _write_range_sorted(df, path, "rn", 4)
     _release_pinned(df)
     n = dwrf_path_stats(path)["rows"]
     katoms = ", ".join(str(k) for k in range(0, n, 101))

@@ -131,6 +131,8 @@ QUERIES = [
                                   # prune files, strides decode once per
                                   # batch (key count grows with rows; read
                                   # ratio_per_output_row, not ratio)
+    "format_sql_lookup",  # the same lookup build, served through the
+                          # dwrf_lookup SQL table function
     "format_broadcast_join",  # footer-stats hint: dim broadcasts at any
                               # fact scale (the hint side stays 25 rows)
 ]

@@ -3,6 +3,8 @@ stats, and readability (reference A22 fast-concat parity)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -200,9 +202,9 @@ class TestDistributedCompaction:
 
 class TestWriteRangeSorted:
     """The wide-write + stripe-concat path behind the point-lookup
-    layouts (queries/roundtrip.py::_write_range_sorted, optimization
-    round 12): parts written by ~#cores tasks must concatenate into a
-    globally key-sorted file set with no row lost or reordered."""
+    layouts (queries/roundtrip.py::_write_range_sorted): the parts of a
+    range-partitioned, sorted frame must concatenate into a globally
+    key-sorted file set with no row lost or reordered."""
 
     def _frame(self, spark, n=5000):
         from pyspark.sql import functions as F
@@ -219,6 +221,13 @@ class TestWriteRangeSorted:
             .drop("scramble")
         )
 
+    def _presorted(self, spark, n=5000):
+        return (
+            self._frame(spark, n)
+            .repartitionByRange(7, "rn")
+            .sortWithinPartitions("rn")
+        )
+
     @pytest.mark.parametrize("n_files", [1, 3])
     def test_global_sort_and_row_parity(self, spark, tmp_path, n_files):
         from hive_dwrf_spark.queries.roundtrip import _write_range_sorted
@@ -226,22 +235,25 @@ class TestWriteRangeSorted:
 
         register(spark)
         out = str(tmp_path / f"rs{n_files}")
-        _write_range_sorted(spark, self._frame(spark), out, "rn", n_files)
+        _write_range_sorted(self._presorted(spark), out, "rn", n_files)
         import glob
 
         files = sorted(glob.glob(out + "/*.dwrf"))
-        assert 1 <= len(files) <= n_files
+        assert len(files) == n_files
         seen = []
         last = -1
         for fp in files:
             with DwrfFile(fp) as f:
-                vals = f.read().column("rn").to_pylist()
+                t = f.read()
+            vals = t.column("rn").to_pylist()
             # within-file sorted AND files disjoint in sorted name order
             assert vals == sorted(vals)
             assert vals[0] > last
+            assert t.column("v").to_pylist() == [3 * r for r in vals]
             last = vals[-1]
             seen.extend(vals)
         assert seen == list(range(5000))
+        assert not os.path.exists(out + "_parts")
 
     def test_single_file_read_row_seeks(self, spark, tmp_path):
         from hive_dwrf_spark.queries.roundtrip import _write_range_sorted
@@ -249,7 +261,7 @@ class TestWriteRangeSorted:
 
         register(spark)
         out = str(tmp_path / "rs_seek")
-        _write_range_sorted(spark, self._frame(spark), out, "rn", 1)
+        _write_range_sorted(self._presorted(spark), out, "rn", 1)
         import glob
 
         (fp,) = glob.glob(out + "/*.dwrf")
@@ -262,10 +274,8 @@ class TestWriteRangeSorted:
     def test_presorted_skips_exchange_and_stays_sorted(
         self, spark, tmp_path
     ):
-        """presorted=True on a frame that IS range-laid-out writes the
-        partitions as-is and still concatenates to a global sort."""
-        from pyspark.sql import functions as F
-
+        """A frame that IS range-laid-out is written partition by
+        partition as-is and still concatenates to a global sort."""
         from hive_dwrf_spark.queries.roundtrip import _write_range_sorted
         from hive_dwrf_spark.sources import register
 
@@ -276,7 +286,7 @@ class TestWriteRangeSorted:
             .sortWithinPartitions("rn")
         )
         out = str(tmp_path / "rs_presorted")
-        _write_range_sorted(spark, df, out, "rn", 1, presorted=True)
+        _write_range_sorted(df, out, "rn", 1)
         import glob
 
         (fp,) = glob.glob(out + "/*.dwrf")
@@ -297,7 +307,7 @@ class TestWriteRangeSorted:
         df = self._frame(spark).repartition(7, "rn")
         out = str(tmp_path / "rs_bad")
         with pytest.raises(AssertionError, match="range parts overlap"):
-            _write_range_sorted(spark, df, out, "rn", 1, presorted=True)
+            _write_range_sorted(df, out, "rn", 1)
 
     def test_numbered_lineitem_matches_window_rank(self, spark):
         """The monotonically_increasing_id-derived global rank equals
@@ -392,61 +402,57 @@ class TestWriteRangeSorted:
         assert "rangepartitioning" not in plan.lower(), plan
         assert "hashpartitioning(_tok" in plan, plan
 
-    def test_executor_merge_path_matches_driver_merge(self, spark, tmp_path, monkeypatch):
-        """The distributed stripe-concat (round 13: each output file's
-        merge runs as one executor task past the byte threshold) produces
-        the same rows and global order as the driver-side loop."""
-        from hive_dwrf_spark.format.reader import DwrfFile
-        from hive_dwrf_spark.queries.roundtrip import _write_range_sorted
-        from hive_dwrf_spark.sources import register
+    def test_numbered_lineitem_null_leading_keys(self, spark, tmp_path):
+        """NULL l_orderkey rows rank first, as in row_number() OVER
+        (ORDER BY keys): the bucket exchange puts them in partition 0."""
+        import pyarrow.parquet as pq
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
 
-        register(spark)
-
-        def read_all(path):
-            import glob as g
-            import os
-
-            rows = []
-            for fp in sorted(g.glob(os.path.join(str(path), "*.dwrf"))):
-                with DwrfFile(fp) as f:
-                    rows.extend(zip(f.read()["rn"].to_pylist(),
-                                    f.read()["v"].to_pylist()))
-            return rows
-
-        df = self._frame(spark, 4000)
-        monkeypatch.setenv("SPARK_GRAFT_MERGE_DISTRIBUTE_MIN_BYTES", "0")
-        out_e = str(tmp_path / "exec")
-        _write_range_sorted(spark, df, out_e, "rn", 3)
-        monkeypatch.setenv(
-            "SPARK_GRAFT_MERGE_DISTRIBUTE_MIN_BYTES", str(1 << 60)
+        from hive_dwrf_spark.queries.roundtrip import (
+            _numbered_lineitem,
+            _release_pinned,
         )
-        out_d = str(tmp_path / "driver")
-        _write_range_sorted(spark, df, out_d, "rn", 3)
-        got_e, got_d = read_all(out_e), read_all(out_d)
-        assert got_e == got_d
-        assert [r[0] for r in got_e] == sorted(r[0] for r in got_e)
-        assert len(got_e) == 4000
+        from hive_dwrf_spark.tables import load
 
-    def test_malformed_merge_threshold_uses_default(self, spark, tmp_path, monkeypatch):
-        """A malformed SPARK_GRAFT_MERGE_DISTRIBUTE_MIN_BYTES falls back to
-        the 256 MiB default: this small table merges on the driver, and
-        the executor path (which ships the package first) never runs."""
-        from hive_dwrf_spark import shipping
-        from hive_dwrf_spark.queries.roundtrip import _write_range_sorted
-        from hive_dwrf_spark.sources import register
-
-        register(spark)
-
-        def no_ship(_spark):
-            raise AssertionError("executor merge chosen below the default")
-
-        monkeypatch.setattr(shipping, "ensure_shipped", no_ship)
-        monkeypatch.setenv("SPARK_GRAFT_MERGE_DISTRIBUTE_MIN_BYTES", "256MB")
-        out = str(tmp_path / "bad_env")
-        with pytest.warns(RuntimeWarning, match="MERGE_DISTRIBUTE_MIN_BYTES"):
-            _write_range_sorted(spark, self._frame(spark, 2000), out, "rn", 1)
-        import glob
-
-        (fp,) = glob.glob(out + "/*.dwrf")
-        with DwrfFile(fp) as f:
-            assert f.read().column("rn").to_pylist() == list(range(2000))
+        n = 400
+        okey = [None if i % 23 == 5 else i // 4 for i in range(n)]
+        pq.write_table(
+            pa.table(
+                {
+                    "l_orderkey": pa.array(okey, pa.int64()),
+                    "l_partkey": pa.array(np.arange(n) % 37, pa.int64()),
+                    "l_suppkey": pa.array(np.arange(n) % 11, pa.int64()),
+                    "l_linenumber": pa.array(np.arange(n) % 4 + 1, pa.int32()),
+                    "l_quantity": pa.array(np.arange(n) % 50 + 1.0),
+                    "l_extendedprice": pa.array(np.arange(n) * 1.25),
+                    "l_returnflag": pa.array(["ARN"[i % 3] for i in range(n)]),
+                }
+            ),
+            str(tmp_path / "lineitem.parquet"),
+        )
+        sf = str(tmp_path)
+        df = _numbered_lineitem(spark, sf)
+        got = {
+            (r["rn"], r["okey"], r["ln"], r["qty_c"], r["price_c"], r["flag"])
+            for r in df.collect()
+        }
+        _release_pinned(df)
+        li = load(spark, sf, "lineitem")
+        w = Window.orderBy(
+            "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
+            "l_returnflag", "l_partkey", "l_suppkey",
+        )
+        want = {
+            tuple(r)
+            for r in li.select(
+                (F.row_number().over(w) - 1).alias("rn"),
+                "l_orderkey",
+                "l_linenumber",
+                F.floor(F.col("l_quantity") * 100 + 0.5).cast("bigint"),
+                F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("bigint"),
+                "l_returnflag",
+            ).collect()
+        }
+        assert sum(k is None for k in okey) == 18
+        assert got == want

@@ -539,6 +539,32 @@ class TestLookupHandleCache:
             # an LRU of 2 over a 4-file scan reuses nothing
             assert trace["files_opened"] == 4
 
+    def test_lru_follows_serving_order(self, four_parts, monkeypatch):
+        """Handles a cold call kept while planning re-enter the LRU as they
+        are served: with plans computed in reverse file order, the LRU of
+        2 ends on the last two files served, not the last two planned."""
+        real = lookup.file_plans
+
+        def reverse_plans(files, compute, stat_keys=None):
+            out = {}
+            for fp in reversed(files):
+                out.update(real([fp], compute, stat_keys))
+            return out
+
+        monkeypatch.setattr(lookup, "file_plans", reverse_plans)
+        monkeypatch.setattr(lookup, "_HANDLES_MAX", 2)
+        keys = [1, 15_000, 25_000, 35_000]
+        for n_call in range(2):
+            trace = {}
+            assert lookup_keys(four_parts, "k", keys, trace=trace).equals(
+                _reference(four_parts, "k", keys)
+            )
+            assert [os.path.basename(p) for p in lookup._HANDLES] == [
+                "part-2.dwrf",
+                "part-3.dwrf",
+            ], n_call
+            assert trace["files_opened"] == 4
+
     def test_more_files_than_handles_reopens_only_key_holders(self, tmp_path):
         """200 range-sorted files, more than the handle LRU holds: file
         pruning reads the cached footer summaries, so a repeat call opens
