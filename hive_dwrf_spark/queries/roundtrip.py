@@ -468,13 +468,15 @@ def _write_range_sorted(df, path, key, n_files):
     ``merge_files`` — a raw byte copy of position-independent stripes,
     no decode or re-encode. The footer min/max of every part are checked
     disjoint first, so a frame that is not range-partitioned fails
-    loudly instead of producing an unsorted file."""
+    loudly instead of producing an unsorted file. A frame with no rows
+    gives one zero-row file that carries its schema."""
     import glob as _glob
     import math
     import shutil as _shutil
 
     from ..format.merge import merge_files
     from ..format.reader import DwrfFile
+    from ..sources.dwrf_datasource import write_empty
 
     parts_dir = path + "_parts"
     _shutil.rmtree(parts_dir, ignore_errors=True)
@@ -496,7 +498,11 @@ def _write_range_sorted(df, path, key, n_files):
     parts = [fp for _, _, fp in ordered]
     _shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
-    chunk = math.ceil(len(parts) / n_files)
+    if not parts:
+        # an empty frame (Spark may write no part file at all): one
+        # zero-row file carries the frame's schema
+        write_empty(os.path.join(path, "part-00000.dwrf"), df.schema)
+    chunk = max(math.ceil(len(parts) / n_files), 1)
     for i in range(0, len(parts), chunk):
         merge_files(
             parts[i : i + chunk],

@@ -1,27 +1,37 @@
 """Spark Python DataSource for the DWRF format: spark.read.format("dwrf").
 
-Maps the reference's Hive integration points onto Spark's DataSource API:
+This module owns the DWRF scan for both the batch source and the stream
+source (streaming/dwrf_stream.py, which only plans offsets and asks this
+module for the rest):
 
-- OrcInputFormat split planning (one split per stripe byte range,
-  OrcInputFormat.java:165-181) -> one InputPartition per (file, stripe);
-  Spark schedules them across executors, so scan parallelism scales with
-  stripes exactly like the reference's MR splits.
-- OrcSerde row bridge (OrcSerde.java:43-139) -> Arrow RecordBatch exchange
-  (zero row-at-a-time conversion on either side).
-- Column projection pushdown (OrcInputFormat.java:121-163) -> the driver
-  passes only needed columns via the "columns" option (set automatically by
-  our helpers) or full schema reads; per-stripe decode only touches
-  requested columns' streams either way.
-- Predicate pushdown -> pushFilters() receives Catalyst filters; supported
-  conjuncts are evaluated against file and stride statistics to prune whole
-  files/stripes (the stats-evaluation layer the reference leaves to its host
-  engine — SURVEY.md §4 O2/O3). All filters are also reported back as
-  unsupported so Spark re-applies them for exactness; pruning is purely an
-  IO optimization.
+- listing: ``_scan_files`` walks a directory through the fs seam and,
+  with ``committedOnly``, keeps only the files its commit manifest records
+  (``committed_files``);
+- schema: ``scan_schema`` reads the first footer (every footer under
+  ``mergeSchema``) from the plan cache, appends hive ``k=v`` partition
+  columns, and applies the ``columns`` option;
+- split packing: ``_plan_splits`` bin-packs each file's stripes, or a
+  sorted subset of them, into ``_StripePartition`` runs of consecutive
+  stripes. This maps the reference's OrcInputFormat split planning (one
+  split per stripe byte range, OrcInputFormat.java:165-181): Spark
+  schedules the splits across executors, so scan parallelism scales with
+  stripes like the reference's MR splits;
+- split read: ``read_split`` decodes one split on an executor into Arrow
+  batches bound to the declared schema (the OrcSerde row bridge,
+  OrcSerde.java:43-139, becomes an Arrow exchange with no per-row
+  conversion). Only the schema's data columns decode; partition columns
+  come from the path (NULL when the path lacks the segment), and a
+  projection of partition columns alone takes its row counts from the
+  stripe directory.
+
+The batch reader adds predicate pushdown: ``pushFilters`` receives
+Catalyst filters, and supported conjuncts prune hive partitions, files
+(footer stats) and strides (row-index stats). All filters are also
+reported back as unsupported, so Spark re-applies them; pruning only
+saves IO.
 
 At 100 TB: planning reads only file footers (stripe directories); data IO
-happens in executors, one stripe per task, so no driver bottleneck beyond
-the file listing itself.
+happens in executors, so the driver's cost is the file listing.
 """
 
 from __future__ import annotations
@@ -95,13 +105,44 @@ def _project_fields(fields: list, columns_opt: str) -> list:
     return out
 
 
-def _list_dwrf_files(path: str) -> list[str]:
-    from ..format.fs import get_fs
+def _flag(options, key: str, default: str = "") -> bool:
+    """A boolean option: "true", "1" or "yes", in any case."""
+    return str(options.get(key, default)).lower() in ("true", "1", "yes")
 
-    out = get_fs(path).list_files(path, (".dwrf", ".orc"))
-    if not out:
-        raise FileNotFoundError(f"no .dwrf files under {path}")
-    return out
+
+def _source_path(options) -> str:
+    # SQL surfaces (CREATE TABLE ... LOCATION / managed tables) pass a
+    # file: URI where read API calls pass an os path
+    path = strip_file_uri(options.get("path"))
+    if not path:
+        raise ValueError("dwrf source requires a path")
+    return path
+
+
+def _scan_files(path: str, committed_only: bool = False) -> list[str]:
+    """Data files under `path` through the fs seam, sorted; [] when there
+    are none (or the directory does not exist yet).
+
+    committed_only keeps the files the directory's commit manifest
+    records (committed_files): orphans of crashed tasks and a retried
+    batch's second attempt are skipped, and a file the manifest does not
+    record yet becomes visible once a commit records it."""
+    from ..format.fs import get_fs, rel_subpath
+
+    fs = get_fs(path)
+    if hasattr(fs, "isfile") and not fs.exists(path):
+        return []
+    files = sorted(fs.list_files(path, (".dwrf", ".orc")))
+    if committed_only and files:
+        committed = committed_files(path)
+        if committed is None:
+            raise ValueError(
+                f"committedOnly read of {path}: no commit manifest "
+                "(_batches or _SUCCESS) found — the option only makes "
+                "sense over sink/batch-committed output"
+            )
+        files = [f for f in files if rel_subpath(f, path) in committed]
+    return files
 
 
 def _accepted_batch_groups(lines: list[str]) -> dict[str, dict[str, str]]:
@@ -752,15 +793,22 @@ class _StripePartition(InputPartition):
     part_values: tuple = ()  # (name, raw_string_value) pairs, hive-style
 
 
-def _partition_values_from_path(root: str, path: str) -> tuple:
-    """Parse hive-style key=value directory segments under root."""
-    rel = os.path.relpath(os.path.dirname(path), root)
-    out = []
-    for seg in rel.split(os.sep):
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            out.append((k, v))
-    return tuple(out)
+def _partition_values(root: str, path: str) -> tuple:
+    """Hive-style (key, raw value) pairs of the ``k=v`` directory segments
+    of `path` under `root` ('evt=click/part-0.dwrf' -> (('evt', 'click'),))
+    — string algebra, so scheme:// roots stay intact."""
+    from ..format.fs import rel_subpath
+
+    return tuple(
+        tuple(seg.split("=", 1))
+        for seg in rel_subpath(path, root).split("/")[:-1]
+        if "=" in seg
+    )
+
+
+def _is_partition(field) -> bool:
+    """True for a hive partition column (scan_schema marks them)."""
+    return bool(field.metadata and field.metadata.get("dwrf.partition"))
 
 
 def _infer_partition_type(values: list[str]):
@@ -786,6 +834,60 @@ def _cast_partition_value(raw: str, spark_type):
     if isinstance(spark_type, IntegerType):
         return int(raw)
     return raw
+
+
+def scan_schema(
+    path: str,
+    columns: str | None = None,
+    merge: bool = False,
+    committed_only: bool = False,
+) -> StructType:
+    """The Spark schema of the DWRF files under `path` (committed ones
+    only with `committed_only`).
+
+    Without `merge` (mergeSchema) the first footer defines the data
+    columns; with it, fields union by name across every footer in
+    first-seen order, requiring type agreement. Footers come from the
+    plan cache, so the split planning that follows re-parses nothing.
+    Hive ``k=v`` partition columns follow the data columns (Spark's
+    convention), marked with ``dwrf.partition`` metadata. `columns` (the
+    ``columns`` option) projects the result; it is also the only column
+    pruning a stream gets, since Spark pushes none into a Python stream
+    source."""
+    files = _scan_files(path, committed_only)
+    if not files:
+        raise FileNotFoundError(f"no .dwrf files under {path}")
+    fields: list[StructField] = []
+    seen: dict[str, StructField] = {}
+    footers = files if merge else files[:1]
+    plans = _file_plans(footers)
+    for fp in footers:
+        for af in plans[fp].arrow_schema:
+            fld = StructField(af.name, _arrow_to_spark_type(af.type))
+            prev = seen.get(fld.name.lower())
+            if prev is None:
+                seen[fld.name.lower()] = fld
+                fields.append(fld)
+            elif prev.dataType != fld.dataType:
+                raise ValueError(
+                    f"mergeSchema type conflict for {fld.name!r}: "
+                    f"{prev.dataType} vs {fld.dataType} in {fp}"
+                )
+    part_cols: dict[str, list[str]] = {}
+    for fp in files:
+        for k, v in _partition_values(path, fp):
+            part_cols.setdefault(k, []).append(v)
+    for name, values in part_cols.items():
+        fields.append(
+            StructField(
+                name,
+                _infer_partition_type(values),
+                metadata={"dwrf.partition": True},
+            )
+        )
+    if columns:
+        fields = _project_fields(fields, columns)
+    return StructType(fields)
 
 
 def _value_matches(val, op: str, value) -> bool:
@@ -820,23 +922,135 @@ def _derive_max_split(total_bytes: int, parallelism: int) -> int:
     return min(128 << 20, max(4 << 20, total_bytes // max(parallelism, 1) + 1))
 
 
-def _pack_stripe_runs(sizes, max_split: int) -> list[tuple[int, ...]]:
-    """Bin-pack CONSECUTIVE stripe indices of one file into splits of at
-    most ``max_split`` bytes (each split keeps IO sequential; a stripe
-    larger than max_split gets its own split). Shared by the batch scan
-    and the streaming partition planner."""
+def _pack_runs(idxs, sizes, max_split: int) -> list[tuple[int, ...]]:
+    """Bin-pack the sorted stripe indices `idxs` of one file into runs of
+    CONSECUTIVE stripes of at most ``max_split`` bytes: a gap in `idxs`
+    always ends a run, so IO stays sequential within a split, and a
+    stripe larger than max_split gets its own run."""
     runs: list[tuple[int, ...]] = []
     run: list[int] = []
     run_bytes = 0
-    for i, sz in enumerate(sizes):
-        if run and run_bytes + sz > max_split:
+    prev = None
+    for i in idxs:
+        sz = sizes[i] if i < len(sizes) else 0
+        if run and (i != prev + 1 or run_bytes + sz > max_split):
             runs.append(tuple(run))
             run, run_bytes = [], 0
         run.append(i)
         run_bytes += sz
+        prev = i
     if run:
         runs.append(tuple(run))
     return runs
+
+
+def _plan_splits(
+    root: str,
+    files: list[tuple[str, list | None]],
+    plans: dict[str, FilePlan],
+    max_split: int = 0,
+    parallelism: int = 0,
+) -> list[_StripePartition]:
+    """The scan splits of `files`, each a (path, sorted stripe subset or
+    None for every stripe) pair whose footer summary is in `plans`.
+    max_split 0 derives the split size Spark-style from the files' total
+    bytes and `parallelism` (0: the host's cores)."""
+    total = sum(sum(plans[p].stripe_sizes) for p, _ in files)
+    max_split = max_split or _derive_max_split(
+        total, parallelism or os.cpu_count() or 8
+    )
+    parts = []
+    for path, stripes in files:
+        sizes = plans[path].stripe_sizes
+        part_values = _partition_values(root, path)
+        for run in _pack_runs(
+            range(len(sizes)) if stripes is None else stripes, sizes, max_split
+        ):
+            parts.append(
+                _StripePartition(
+                    path=path, stripe_indices=run, part_values=part_values
+                )
+            )
+    return parts
+
+
+def read_split(
+    partition: _StripePartition,
+    schema: StructType,
+    filters: list[tuple] | None = None,
+    merge: bool = False,
+    verify: bool = False,
+):
+    """Decode one split into Arrow batches whose columns are `schema`'s,
+    in its declared order (Spark binds batches positionally).
+
+    Only the schema's data columns decode — every column of the file
+    when they are exactly the file's — with `filters` pruning stripes
+    and strides by their stats. `merge` (mergeSchema) null-fills the data
+    columns this file predates; `verify` (verifyOnRead) checks stripe
+    CRCs. Partition columns take the split's path values cast to their
+    type, NULL for a file outside the partition directories; with no
+    data column to decode, the row counts come from the stripe directory.
+    Spark cannot consume ns timestamps, so they truncate to us."""
+    import pyarrow as pa
+
+    from ..format.reader import DwrfFile
+
+    if not partition.stripe_indices:
+        return
+    raw = dict(partition.part_values)
+    names = [fl.name for fl in schema.fields]
+    with DwrfFile(partition.path, verify_checksums=verify) as f:
+        file_names = [fl.name for fl in f.schema]
+        present = {n.lower() for n in file_names}
+        data = [
+            fl.name
+            for fl in schema.fields
+            if not _is_partition(fl)
+            and (not merge or fl.name.lower() in present)
+        ]
+        columns = None if data == file_names else data
+        for idx in partition.stripe_indices:
+            if data:
+                table = f.read_stripe(idx, columns=columns, filters=filters)
+                if table is None:
+                    continue
+                n = table.num_rows
+                decoded = {
+                    c.lower(): a for c, a in zip(table.column_names, table.columns)
+                }
+            else:
+                n = f.footer.stripes[idx].numberOfRows
+                decoded = {}
+            cols = []
+            for fl in schema.fields:
+                col = None if _is_partition(fl) else decoded.get(fl.name.lower())
+                if col is None:  # a partition column, or one `merge` fills
+                    t = _spark_to_arrow_type(fl.dataType)
+                    v = raw.get(fl.name) if _is_partition(fl) else None
+                    col = (
+                        pa.nulls(n, t)
+                        if v is None
+                        else pa.repeat(
+                            pa.scalar(_cast_partition_value(v, fl.dataType), t), n
+                        )
+                    )
+                elif pa.types.is_timestamp(col.type) and col.type.unit == "ns":
+                    col = col.cast(pa.timestamp("us"), safe=False)
+                cols.append(col)
+            yield from pa.table(cols, names=names).to_batches()
+
+
+def write_empty(out_path: str, schema: StructType, **opts) -> None:
+    """Write a zero-row DWRF file carrying the Spark schema `schema`."""
+    import pyarrow as pa
+
+    from ..format.writer import DwrfWriter as FileWriter, _normalize_schema
+
+    arrow_schema = pa.schema(
+        [pa.field(f.name, _spark_to_arrow_type(f.dataType)) for f in schema.fields]
+    )
+    FileWriter(out_path, _normalize_schema(arrow_schema), **opts).close()
 
 
 @dataclass
@@ -847,23 +1061,9 @@ class _WriteResult(WriterCommitMessage):
 
 class DwrfReader(DataSourceReader):
     def __init__(self, schema: StructType, options):
-        # SQL surfaces (CREATE TABLE ... LOCATION / managed tables) pass
-        # a file: URI where read API calls pass an os path
-        self.path = strip_file_uri(options.get("path"))
-        if not self.path:
-            raise ValueError("dwrf reader requires a path")
+        self.path = _source_path(options)
         self.schema = schema
-        columns_opt = options.get("columns")
-        self.columns = (
-            [c.strip() for c in columns_opt.split(",") if c.strip()]
-            if columns_opt
-            else None
-        )
-        self._merge = str(options.get("mergeSchema", "false")).lower() in (
-            "true",
-            "1",
-            "yes",
-        )
+        self._merge = _flag(options, "mergeSchema")
         # split planning knobs (0 = derive Spark-style from total bytes)
         self._max_split = int(options.get("maxSplitBytes", 0) or 0)
         self._target_parallelism = int(options.get("targetParallelism", 0) or 0)
@@ -871,18 +1071,14 @@ class DwrfReader(DataSourceReader):
         # option("verifyOnRead","true"), or SPARK_GRAFT_VERIFY_ON_READ=1
         # for blanket enablement (set before the JVM starts, like every
         # worker env knob). Zero tax when off or no checksums recorded.
-        self._verify = str(
-            options.get(
-                "verifyOnRead", os.environ.get("SPARK_GRAFT_VERIFY_ON_READ", "")
-            )
-        ).lower() in ("true", "1", "yes")
+        self._verify = _flag(
+            options,
+            "verifyOnRead",
+            os.environ.get("SPARK_GRAFT_VERIFY_ON_READ", ""),
+        )
         # exactly-once reads over sink/batch output: scan only files the
         # directory's commit manifest records (see committed_files)
-        self._committed_only = str(options.get("committedOnly", "")).lower() in (
-            "true",
-            "1",
-            "yes",
-        )
+        self._committed_only = _flag(options, "committedOnly")
         # the driver's fs-scheme routing env travels INSIDE the pickled
         # reader so executor-side read() resolves the same filesystems
         # (workers' os.environ froze at JVM start — see fs.get_fs)
@@ -893,9 +1089,7 @@ class DwrfReader(DataSourceReader):
         # partition columns are those in the (possibly pruned) schema that
         # come from hive-style key=value directories, not from file data
         self._part_fields = {
-            f.name: f.dataType
-            for f in schema.fields
-            if f.metadata and f.metadata.get("dwrf.partition")
+            f.name: f.dataType for f in schema.fields if _is_partition(f)
         }
 
     def pushFilters(self, filters):
@@ -919,148 +1113,41 @@ class DwrfReader(DataSourceReader):
                 return True
         return False
 
-    def _scan_files(self) -> list[str]:
-        files = _list_dwrf_files(self.path)
-        if not self._committed_only:
-            return files
-        from ..format.fs import rel_subpath
-
-        committed = committed_files(self.path)
-        if committed is None:
-            raise ValueError(
-                f"committedOnly read of {self.path}: no commit manifest "
-                "(_batches or _SUCCESS) found — the option only makes "
-                "sense over sink/batch-committed output"
-            )
-        return [f for f in files if rel_subpath(f, self.path) in committed]
-
     def partitions(self):
-        import os as _os
-
         # pass 0: directory pruning needs no footer at all
-        survivors = []  # (path, part_values)
-        for path in self._scan_files():
-            part_values = (
-                _partition_values_from_path(self.path, path)
-                if self._part_fields
-                else ()
+        survivors = [
+            path
+            for path in _scan_files(self.path, self._committed_only)
+            if not (
+                self._part_fields
+                and self._filters
+                and self._partition_pruned(_partition_values(self.path, path))
             )
-            if part_values and self._partition_pruned(part_values):
-                continue  # directory pruned without opening the file
-            survivors.append((path, part_values))
-
+        ]
         # pass 1: footer summaries (cache-first, thread-pool parsed) for
         # footer-stats pruning + stripe sizes
-        plans = _file_plans([p for p, _ in survivors])
-        files = []  # (path, part_values, [stripe_bytes...])
-        total_bytes = 0
-        for path, part_values in survivors:
-            plan = plans[path]
-            if self._filters and not _plan_may_match(plan, self._filters):
-                continue  # whole file pruned by footer stats
-            files.append((path, part_values, list(plan.stripe_sizes)))
-            total_bytes += sum(plan.stripe_sizes)
-
-        par = self._target_parallelism or _os.cpu_count() or 8
-        max_split = self._max_split or _derive_max_split(total_bytes, par)
-
-        # pass 2: bin-pack CONSECUTIVE stripes of each file into splits
-        parts = []
-        for path, part_values, sizes in files:
-            for run in _pack_stripe_runs(sizes, max_split):
-                parts.append(
-                    _StripePartition(
-                        path=path,
-                        stripe_indices=run,
-                        part_values=part_values,
-                    )
-                )
-        if not parts:
-            # Spark requires >=1 partition; emit an empty sentinel
-            parts.append(_StripePartition(path=""))
-        return parts
+        plans = _file_plans(survivors)
+        files = [
+            (path, None)
+            for path in survivors
+            if not self._filters or _plan_may_match(plans[path], self._filters)
+        ]
+        # pass 2: bin-pack CONSECUTIVE stripes of each file into splits;
+        # Spark requires >=1 partition, so an empty scan gets a sentinel
+        return _plan_splits(
+            self.path, files, plans, self._max_split, self._target_parallelism
+        ) or [_StripePartition(path="")]
 
     def read(self, partition: _StripePartition):
-        import os as _os
-
-        from ..format.reader import DwrfFile
-
         if self._fs_env:
-            _os.environ.update(self._fs_env)
-        if not partition.stripe_indices:
-            return
-        file_columns = self.columns
-        if file_columns is not None:
-            file_columns = [c for c in file_columns if c not in self._part_fields]
-        missing: list = []
-        with DwrfFile(partition.path, verify_checksums=self._verify) as f:
-            if self._merge:
-                # schema evolution: this file may predate newer columns —
-                # read what it has, null-fill the rest after decode
-                present = {fl.name.lower() for fl in f.schema}
-                want = file_columns
-                if want is None:
-                    want = [
-                        fl.name
-                        for fl in self.schema.fields
-                        if fl.name not in self._part_fields
-                    ]
-                file_columns = [
-                    c for c in want if c.partition(".")[0].lower() in present
-                ]
-                missing = [
-                    fl
-                    for fl in self.schema.fields
-                    if fl.name not in self._part_fields
-                    and fl.name.lower() not in present
-                    and fl.name in want
-                ]
-            for idx in partition.stripe_indices:
-                table = f.read_stripe(
-                    idx,
-                    columns=file_columns,
-                    filters=self._filters or None,
-                )
-                yield from self._emit(table, partition, missing)
-
-    def _emit(self, table, partition: _StripePartition, missing: list):
-        """Post-decode fixups for one stripe table, then Arrow batches."""
-        import pyarrow as pa
-
-        if table is None:
-            return
-        for fld in missing:
-            table = table.append_column(
-                fld.name,
-                pa.nulls(table.num_rows, type=_spark_to_arrow_type(fld.dataType)),
-            )
-        # Spark cannot consume ns timestamps; truncate to us at the edge
-        fields = []
-        changed = False
-        for fld in table.schema:
-            if pa.types.is_timestamp(fld.type) and fld.type.unit == "ns":
-                fields.append(pa.field(fld.name, pa.timestamp("us")))
-                changed = True
-            else:
-                fields.append(fld)
-        if changed:
-            table = table.cast(pa.schema(fields), safe=False)
-        if self._part_fields:
-            raw = dict(partition.part_values)
-            n = table.num_rows
-            for name, dtype in self._part_fields.items():
-                if self.columns is not None and name not in self.columns:
-                    continue
-                val = _cast_partition_value(raw[name], dtype)
-                arr = pa.array([val] * n, type=_spark_to_arrow_type(dtype))
-                table = table.append_column(name, arr)
-            # Spark binds batches to the declared schema POSITIONALLY; a
-            # columns option may interleave partition and data columns, so
-            # match its order, not data-then-partition append order
-            want = [f.name for f in self.schema.fields]
-            if table.column_names != want:
-                table = table.select(want)
-        yield from table.to_batches()
+            os.environ.update(self._fs_env)
+        yield from read_split(
+            partition,
+            self.schema,
+            self._filters or None,
+            self._merge,
+            self._verify,
+        )
 
 
 class DwrfWriter(DataSourceArrowWriter):
@@ -1086,15 +1173,9 @@ class DwrfWriter(DataSourceArrowWriter):
         if "row_index_stride" in self.options:
             opts["row_index_stride"] = int(self.options["row_index_stride"])
         if "stride_dictionaries" in self.options:
-            opts["stride_dictionaries"] = str(
-                self.options["stride_dictionaries"]
-            ).lower() in ("true", "1", "yes")
+            opts["stride_dictionaries"] = _flag(self.options, "stride_dictionaries")
         if "checksums" in self.options:
-            opts["checksums"] = str(self.options["checksums"]).lower() in (
-                "true",
-                "1",
-                "yes",
-            )
+            opts["checksums"] = _flag(self.options, "checksums")
         if "union_columns" in self.options:
             # comma-separated struct<tag,field0,...> columns to store as
             # DWRF UNION nodes (the tagged-struct surrogate — DWRF UNION
@@ -1105,14 +1186,10 @@ class DwrfWriter(DataSourceArrowWriter):
         return opts
 
     def write(self, iterator):
-        import os as _os
-
-        import pyarrow as pa
-
         from ..format.writer import DwrfWriter as FileWriter, _normalize_schema
 
         if self._fs_env:
-            _os.environ.update(self._fs_env)
+            os.environ.update(self._fs_env)
         part_by = [
             c for c in self.options.get("partition_by", "").split(",") if c
         ]
@@ -1133,17 +1210,10 @@ class DwrfWriter(DataSourceArrowWriter):
                 writer = FileWriter(out_path, schema, **opts)
             writer.write_batch(batch)
             rows += batch.num_rows
-        if writer is None:  # empty task: write a zero-row file for the schema
-            arrow_schema = _normalize_schema(
-                pa.schema(
-                    [
-                        pa.field(f.name, _spark_to_arrow_type(f.dataType))
-                        for f in self.schema.fields
-                    ]
-                )
-            )
-            writer = FileWriter(out_path, arrow_schema, **opts)
-        writer.close()
+        if writer is None:  # empty task: a zero-row file for the schema
+            write_empty(out_path, self.schema, **opts)
+        else:
+            writer.close()
         return _WriteResult(path=out_path, rows=rows)
 
     def _write_partitioned(self, iterator, part_by: list[str]):
@@ -1323,57 +1393,12 @@ class DwrfDataSource(DataSource):
         return "dwrf"
 
     def schema(self):
-        path = strip_file_uri(self.options.get("path"))
-        if not path:
-            raise ValueError("dwrf source requires a path")
-        files = _list_dwrf_files(path)
-        merge = str(self.options.get("mergeSchema", "false")).lower() in (
-            "true",
-            "1",
-            "yes",
+        return scan_schema(
+            _source_path(self.options),
+            columns=self.options.get("columns"),
+            merge=_flag(self.options, "mergeSchema"),
+            committed_only=_flag(self.options, "committedOnly"),
         )
-        fields: list[StructField] = []
-        seen: dict[str, StructField] = {}
-        # without mergeSchema the first footer defines the schema (cheap —
-        # O(1) footers); with it, union fields by name across every footer
-        # in first-seen order, requiring type agreement. Footer summaries
-        # come from the shared plan cache, so the partitions() call that
-        # follows re-parses nothing.
-        plans = _file_plans(files if merge else files[:1])
-        for fp in files if merge else files[:1]:
-            aschema = plans[fp].arrow_schema
-            for i in range(len(aschema)):
-                fld = StructField(
-                    aschema.field(i).name,
-                    _arrow_to_spark_type(aschema.field(i).type),
-                )
-                prev = seen.get(fld.name.lower())
-                if prev is None:
-                    seen[fld.name.lower()] = fld
-                    fields.append(fld)
-                elif prev.dataType != fld.dataType:
-                    raise ValueError(
-                        f"mergeSchema type conflict for {fld.name!r}: "
-                        f"{prev.dataType} vs {fld.dataType} in {fp}"
-                    )
-        # hive-style partition columns from directory layout, appended after
-        # data columns (Spark's convention for partitioned sources)
-        part_cols: dict[str, list[str]] = {}
-        for fp in files:
-            for k, v in _partition_values_from_path(path, fp):
-                part_cols.setdefault(k, []).append(v)
-        for name, values in part_cols.items():
-            fields.append(
-                StructField(
-                    name,
-                    _infer_partition_type(values),
-                    metadata={"dwrf.partition": True},
-                )
-            )
-        columns_opt = self.options.get("columns")
-        if columns_opt:
-            fields = _project_fields(fields, columns_opt)
-        return StructType(fields)
 
     def reader(self, schema: StructType) -> DwrfReader:
         return DwrfReader(schema, self.options)

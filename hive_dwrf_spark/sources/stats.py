@@ -28,9 +28,10 @@ import re
 
 
 def dwrf_path_stats(path: str) -> dict:
-    """Footer-only statistics for a DWRF file or directory: no data
-    stream is read (footers are a few KB at the file tail; the plan
-    cache in dwrf_datasource keeps repeated calls free).
+    """Footer-only statistics for a DWRF file or directory: every call
+    stats and opens each file and parses its footer (a few KB at the file
+    tail); no data stream is read and nothing is cached across calls.
+    Raises FileNotFoundError when `path` holds no DWRF file.
 
     Returns {files, rows, file_bytes, raw_bytes} where raw_bytes is the
     writer's logical (uncompressed, pre-encoding) size accounting
@@ -39,9 +40,11 @@ def dwrf_path_stats(path: str) -> dict:
     """
     from ..format.fs import get_fs
     from ..format.reader import DwrfFile
-    from .dwrf_datasource import _list_dwrf_files
+    from .dwrf_datasource import _scan_files
 
-    files = _list_dwrf_files(path)
+    files = _scan_files(path)
+    if not files:
+        raise FileNotFoundError(f"no .dwrf files under {path}")
     fs = get_fs(path)
     rows = 0
     raw = 0

@@ -9,14 +9,17 @@ file may sort anywhere in the listing, and an index offset would both skip
 it and re-emit already-read files. Each batch = listing minus processed
 names; restarts resume from the checkpointed name set exactly.
 
-One reader serves that offset model: a partition-planning
-``DataSourceStreamReader``. The driver plans each micro-batch as (file,
-stripe-run) InputPartitions via the same footer cache + bin-packing as
-the batch scan (sources/dwrf_datasource.py — reference parity
-OrcInputFormat.java:165-181), and rows decode on EXECUTORS as Arrow
-batches. No row ever passes through the driver, so ingest scales with
-the cluster exactly like a batch scan. Checkpoints written by the former
-driver-side reader ({"processed": [names]}) still resume.
+The stream keeps only that offset policy: the offset algebra (name sets,
+delta offsets against base catalogs), the retirement watermark and late
+files, the admission caps, and compact_sink lineage coverage. The scan
+itself is the batch source's (sources/dwrf_datasource.py): its listing
+(with committedOnly), its schema inference, its split packing (one
+InputPartition per run of stripes, as OrcInputFormat.java:165-181 plans
+splits) and its executor-side split read. So rows decode on EXECUTORS as
+Arrow batches and never pass through the driver, and a stream and a
+batch read of one directory give the same schema and rows. Checkpoints
+written by the former driver-side reader ({"processed": [names]}) still
+resume.
 
 Offsets stay BOUNDED on unbounded streams: each file is tracked with its
 mtime, and names older than ``maxFileAgeSec`` (default 7 days, Spark's
@@ -56,68 +59,6 @@ from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 from pyspark.sql.types import StructType
 
 
-def _dwrf_files(path: str, committed_only: bool = False) -> list[str]:
-    """Data files under `path` through the fs seam (object-store dirs
-    list the same way local ones do), sorted for determinism.
-
-    committed_only restricts to the directory's commit manifest
-    (_batches '#end'-complete first groups / _SUCCESS) — the tail end of
-    a dwrf->dwrf pipeline chain, where ingesting a crashed upstream
-    task's orphan part file would double rows downstream. Files the
-    manifest doesn't (yet) record simply aren't visible this batch; the
-    offset picks them up if a later commit records them."""
-    DwrfStreamDataSource._bootstrap()
-    from hive_dwrf_spark.format.fs import get_fs, rel_subpath
-
-    fs = get_fs(path)
-    if hasattr(fs, "isfile") and not fs.exists(path):
-        return []
-    files = sorted(fs.list_files(path, (".dwrf",)))
-    if committed_only and files:
-        from hive_dwrf_spark.sources.dwrf_datasource import committed_files
-
-        committed = committed_files(path)
-        if committed is None:
-            raise ValueError(
-                f"committedOnly stream over {path}: no commit manifest "
-                "(_batches or _SUCCESS) found"
-            )
-        files = [f for f in files if rel_subpath(f, path) in committed]
-    return files
-
-
-def _rel_name(root: str, full: str) -> str:
-    """Offset key for one data file: its subpath under the stream root
-    (flat dirs: the basename; nested/hive layouts stay collision-free)."""
-    from hive_dwrf_spark.format.fs import rel_subpath
-
-    return rel_subpath(full, root)
-
-
-def _part_values_from_rel(rel: str) -> tuple:
-    """Hive-style (key, raw_value) pairs from a file's relative subpath
-    ('evt=click/part-0.dwrf' -> (('evt','click'),)) — pure string
-    algebra, URI-safe (os.path would mangle scheme:// roots)."""
-    out = []
-    for seg in rel.split("/")[:-1]:
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            out.append((k, v))
-    return tuple(out)
-
-
-def _split_fields(schema: StructType) -> tuple[list, dict]:
-    """(data field names, {partition name: StructField}) — partition
-    columns are marked with dwrf.partition metadata by schema()."""
-    part = {
-        f.name: f
-        for f in schema.fields
-        if f.metadata and f.metadata.get("dwrf.partition")
-    }
-    data = [f.name for f in schema.fields if f.name not in part]
-    return data, part
-
-
 def _uncovered_stripes(name: str, lineage: dict, accounted) -> list[int] | None:
     """Stripe indices of merged file `name` (a compact_sink output) whose
     source data the consumer has NOT already ingested, resolved through
@@ -146,36 +87,6 @@ def _uncovered_stripes(name: str, lineage: dict, accounted) -> list[int] | None:
 
 def _lineage_stripe_count(lineage: dict, name: str) -> int:
     return max(hi for _src, _lo, hi, _mt in lineage[name])
-
-
-def _pack_index_runs(idxs: list[int], sizes, max_split: int) -> list[tuple]:
-    """Bin-pack an arbitrary (sorted) subset of stripe indices into
-    CONSECUTIVE runs of at most max_split bytes — the partial-coverage
-    analog of _pack_stripe_runs (a gap in the subset always breaks the
-    run; reads stay sequential within each split)."""
-    runs: list[tuple] = []
-    run: list[int] = []
-    run_bytes = 0
-    prev = None
-    for i in idxs:
-        sz = sizes[i] if i < len(sizes) else 0
-        if run and (i != prev + 1 or run_bytes + sz > max_split):
-            runs.append(tuple(run))
-            run, run_bytes = [], 0
-        run.append(i)
-        run_bytes += sz
-        prev = i
-    if run:
-        runs.append(tuple(run))
-    return runs
-
-
-def _committed_opt(options) -> bool:
-    return str(options.get("committedOnly", "")).lower() in (
-        "true",
-        "1",
-        "yes",
-    )
 
 
 def _offset_base_dir(options) -> str:
@@ -255,11 +166,9 @@ class _DwrfPartitionStreamReader(DataSourceStreamReader):
 
     def __init__(self, schema: StructType, options):
         DwrfStreamDataSource._bootstrap()
-        from hive_dwrf_spark.format.fs import strip_file_uri
+        from hive_dwrf_spark.sources.dwrf_datasource import _flag, _source_path
 
-        # SQL/managed surfaces hand a file: URI; normalize like the batch
-        # reader or _rel_name raises on every stripped listing entry
-        self.path = strip_file_uri(options.get("path"))
+        self.path = _source_path(options)
         self.schema = schema
         self.max_age_ns = int(
             float(options.get("maxFileAgeSec", 7 * 24 * 3600)) * 1e9
@@ -275,12 +184,8 @@ class _DwrfPartitionStreamReader(DataSourceStreamReader):
         # offset then tracks every on-disk below-watermark name in a
         # "late" registry (entries leave when the file does), so offset
         # size follows directory retention rather than maxFileAgeSec.
-        self.allow_late = str(options.get("allowLateFiles", "")).lower() in (
-            "true",
-            "1",
-            "yes",
-        )
-        self.committed_only = _committed_opt(options)
+        self.allow_late = _flag(options, "allowLateFiles")
+        self.committed_only = _flag(options, "committedOnly")
         # delta offsets (module docstring): past this many live+late
         # names the catalog persists as a base file and offsets become
         # deltas; 0 disables (always-inline, the pre-round-12 shape)
@@ -356,10 +261,11 @@ class _DwrfPartitionStreamReader(DataSourceStreamReader):
         """{rel_name: (mtime_ns, size_bytes)} of the current directory
         state — one stat per file covers both the age clock and the
         byte-cap admission weights."""
-        from hive_dwrf_spark.format.fs import get_fs
+        from hive_dwrf_spark.format.fs import get_fs, rel_subpath
+        from hive_dwrf_spark.sources.dwrf_datasource import _scan_files
 
         out = {}
-        for p in _dwrf_files(self.path, self.committed_only):
+        for p in _scan_files(self.path, self.committed_only):
             try:
                 fs = get_fs(p)
                 size, mtime = 0, 0
@@ -383,7 +289,7 @@ class _DwrfPartitionStreamReader(DataSourceStreamReader):
                             self.path,
                             p,
                         )
-                out[_rel_name(self.path, p)] = (mtime, size)
+                out[rel_subpath(p, self.path)] = (mtime, size)
             except (FileNotFoundError, OSError):
                 # vanished between list and stat (compaction/retention
                 # deleting behind the stream) — as if never listed
@@ -658,10 +564,8 @@ class _DwrfPartitionStreamReader(DataSourceStreamReader):
         DwrfStreamDataSource._bootstrap()
         from hive_dwrf_spark.format.fs import join_path
         from hive_dwrf_spark.sources.dwrf_datasource import (
-            _StripePartition,
-            _derive_max_split,
             _file_plans,
-            _pack_stripe_runs,
+            _plan_splits,
         )
 
         start_files, start_wm, start_late = self._resolve(start)
@@ -718,89 +622,19 @@ class _DwrfPartitionStreamReader(DataSourceStreamReader):
             fresh = kept
             if not fresh:
                 return []
-        by_path = {join_path(self.path, n): n for n in fresh}
-        paths = sorted(by_path)
-        plans = _file_plans(paths)
-        total = sum(sum(p.stripe_sizes) for p in plans.values())
-        max_split = _derive_max_split(total, os.cpu_count() or 8)
-        parts = []
-        for fp in paths:
-            rel = by_path[fp]
-            pv = _part_values_from_rel(rel)
-            sizes = plans[fp].stripe_sizes
-            if rel in partial:
-                runs = _pack_index_runs(partial[rel], sizes, max_split)
-            else:
-                runs = _pack_stripe_runs(sizes, max_split)
-            for run in runs:
-                parts.append(
-                    _StripePartition(
-                        path=fp, stripe_indices=run, part_values=pv
-                    )
-                )
-        return parts
-
-    def read(self, partition):
-        """Executor-side decode of one (file, stripe-run) split into
-        Arrow batches — the same per-stripe scan as the batch source.
-        Only the schema's DATA columns decode (the columns option prunes
-        here); hive partition columns materialize from the split's
-        directory values without touching file bytes."""
-        DwrfStreamDataSource._bootstrap()
-        import pyarrow as pa
-
-        from hive_dwrf_spark.format.reader import DwrfFile
-        from hive_dwrf_spark.sources.dwrf_datasource import (
-            _cast_partition_value,
-            _spark_to_arrow_type,
+        paths = [join_path(self.path, n) for n in fresh]
+        return _plan_splits(
+            self.path,
+            [(fp, partial.get(n)) for fp, n in zip(paths, fresh)],
+            _file_plans(paths),
         )
 
-        want = [f.name for f in self.schema.fields]
-        names, part_fields = _split_fields(self.schema)
-        raw = dict(getattr(partition, "part_values", ()) or ())
+    def read(self, partition):
+        """Executor-side: the batch source's split read (read_split)."""
+        DwrfStreamDataSource._bootstrap()
+        from hive_dwrf_spark.sources.dwrf_datasource import read_split
 
-        def _part_array(fld, n):
-            v = raw.get(fld.name)
-            if v is not None:
-                v = _cast_partition_value(v, fld.dataType)
-            return pa.array([v] * n, type=_spark_to_arrow_type(fld.dataType))
-
-        with DwrfFile(partition.path) as f:
-            for idx in partition.stripe_indices:
-                if names:
-                    table = f.read_stripe(idx, columns=names)
-                    if table is None:
-                        continue
-                else:
-                    # projection kept only partition columns: row count
-                    # from the stripe directory, zero data bytes decoded
-                    n = f.footer.stripes[idx].numberOfRows
-                    table = pa.table(
-                        {
-                            pname: _part_array(fld, n)
-                            for pname, fld in part_fields.items()
-                        }
-                    )
-                    yield from table.select(want).to_batches()
-                    continue
-                # Spark cannot consume ns timestamps; truncate at the edge
-                fields = []
-                changed = False
-                for fld in table.schema:
-                    if pa.types.is_timestamp(fld.type) and fld.type.unit == "ns":
-                        fields.append(pa.field(fld.name, pa.timestamp("us")))
-                        changed = True
-                    else:
-                        fields.append(fld)
-                if changed:
-                    table = table.cast(pa.schema(fields), safe=False)
-                for pname, fld in part_fields.items():
-                    table = table.append_column(
-                        pname, _part_array(fld, table.num_rows)
-                    )
-                if table.column_names != want:
-                    table = table.select(want)
-                yield from table.to_batches()
+        return read_split(partition, self.schema)
 
 
 def _mtime_ns(path: str) -> int:
@@ -818,10 +652,13 @@ class DwrfStreamDataSource(DataSource):
     Spark's streaming-source planner runs this class in a separate
     driver-side Python process that does NOT receive the session's pyFiles
     (unlike executor workers and the batch planner), so the class is
-    registered pickled BY VALUE (stream_dwrf_dir below) and lazily imports
-    the format core through _bootstrap(), which falls back to the import
-    roots recorded at registration time (package dir + shipped zip — both
-    driver-local paths, and this reader is a driver-side component)."""
+    registered pickled BY VALUE (stream_dwrf_dir below). Every import of
+    the package (the format core, and the batch source whose schema and
+    scan this source uses) therefore sits inside a method, after
+    _bootstrap(), which falls back to the import roots recorded at
+    registration time (package dir + shipped zip — both driver-local
+    paths, and this reader is a driver-side component). A module-level
+    import of hive_dwrf_spark here would fail in the planner process."""
 
     #: candidate sys.path roots for importing hive_dwrf_spark in the
     #: planner subprocess; set at registration, pickled with the class
@@ -849,51 +686,17 @@ class DwrfStreamDataSource(DataSource):
 
     def schema(self):
         self._bootstrap()
-        from hive_dwrf_spark.format.fs import strip_file_uri
-        from hive_dwrf_spark.format.reader import DwrfFile
         from hive_dwrf_spark.sources.dwrf_datasource import (
-            _arrow_to_spark_type,
-            _infer_partition_type,
-            _project_fields,
+            _flag,
+            _source_path,
+            scan_schema,
         )
-        from pyspark.sql.types import StructField
 
-        path = strip_file_uri(self.options.get("path", ""))
-        files = _dwrf_files(path, _committed_opt(self.options))
-        if not files:
-            raise ValueError("dwrf_stream requires a path with at least one .dwrf file")
-        with DwrfFile(files[0]) as f:
-            fields = [
-                StructField(
-                    f.schema.field(i).name,
-                    _arrow_to_spark_type(f.schema.field(i).type),
-                )
-                for i in range(len(f.schema))
-            ]
-        # hive-style partition columns from the directory layout, appended
-        # after data columns with the same marker the batch source uses
-        # (a tailed ingest dir is routinely date=/source=-partitioned;
-        # dropping those columns silently would lose the partition key)
-        part_cols: dict[str, list[str]] = {}
-        for fp in files:
-            for k, v in _part_values_from_rel(_rel_name(path, fp)):
-                part_cols.setdefault(k, []).append(v)
-        for name, values in part_cols.items():
-            fields.append(
-                StructField(
-                    name,
-                    _infer_partition_type(values),
-                    metadata={"dwrf.partition": True},
-                )
-            )
-        columns_opt = self.options.get("columns")
-        if columns_opt:
-            # explicit projection: Spark cannot push column pruning into a
-            # Python stream source, so the option is the manual prune —
-            # only the named data columns decode (same resolution rules
-            # as the batch source: _project_fields)
-            fields = _project_fields(fields, columns_opt)
-        return StructType(fields)
+        return scan_schema(
+            _source_path(self.options),
+            columns=self.options.get("columns"),
+            committed_only=_flag(self.options, "committedOnly"),
+        )
 
     def streamReader(self, schema: StructType):
         return _DwrfPartitionStreamReader(schema, self.options)

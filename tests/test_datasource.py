@@ -794,3 +794,106 @@ def test_workers_skip_unchanged_zip_rereads(dwrf_spark, tmp_path):
     )
     assert row["installed"] == "hive_dwrf_spark.shipping"
     assert row["rereads"] == 0
+
+
+# --- one scan for batch and stream ------------------------------------------
+
+
+def _partitioned_300(spark, out):
+    """300 rows written partition_by("b"): k = 0..299, b = k % 2."""
+    spark.sql("SELECT id AS k, id % 2 AS b FROM range(300)").coalesce(
+        1
+    ).write.format("dwrf").option("partition_by", "b").mode("append").save(out)
+
+
+def _stream_rows(spark, path, name, ckpt, **options):
+    """(schema, rows) of one availableNow pass of the stream source over
+    `path` into a memory sink."""
+    from hive_dwrf_spark.streaming import stream_dwrf_dir
+
+    q = (
+        stream_dwrf_dir(spark, path, **options)
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    while q.isActive:
+        q.awaitTermination(5)
+    q.awaitTermination()
+    got = spark.table(name)
+    return got.schema, got.collect()
+
+
+def test_partition_only_projection_counts_every_row(dwrf_spark, tmp_path):
+    """A columns option naming only partition columns yields one row per
+    data row (row counts from the stripe directory), not zero rows."""
+    spark = dwrf_spark
+    out = str(tmp_path / "ponly")
+    _partitioned_300(spark, out)
+    df = spark.read.format("dwrf").option("columns", "b").load(out)
+    assert df.columns == ["b"]
+    assert df.count() == 300
+    assert sorted(r.b for r in df.collect()) == [0] * 150 + [1] * 150
+
+
+def test_file_outside_partition_dirs_reads_null(dwrf_spark, tmp_path):
+    """A file whose path lacks a partition column's k=v segment (here, at
+    the root beside b=0/ and b=1/) reads NULL for that column through
+    both the batch and the stream source."""
+    import pyarrow as pa
+
+    from hive_dwrf_spark.format import write_arrow_table
+
+    spark = dwrf_spark
+    out = str(tmp_path / "rootfile")
+    _partitioned_300(spark, out)
+    write_arrow_table(
+        os.path.join(out, "root.dwrf"), pa.table({"k": pa.array([1000, 1001])})
+    )
+    want = [(k, k % 2) for k in range(300)] + [(1000, None), (1001, None)]
+    batch = spark.read.format("dwrf").load(out).select("k", "b").collect()
+    _, streamed = _stream_rows(
+        spark, out, "rootfile_stream", str(tmp_path / "ckpt")
+    )
+    for rows in (batch, streamed):
+        assert sorted(((r.k, r.b) for r in rows), key=lambda r: r[0]) == want
+
+
+@pytest.mark.parametrize("columns", [None, "k,b", "b", "ts"])
+def test_batch_and_stream_scan_agree(dwrf_spark, tmp_path, columns):
+    """spark.read.format("dwrf") and stream_dwrf_dir read one
+    hive-partitioned directory (with an ns-timestamp column) to the same
+    schema and rows, with and without a columns option."""
+    import numpy as np
+    import pyarrow as pa
+
+    from hive_dwrf_spark.format import write_arrow_table
+
+    spark = dwrf_spark
+    out = str(tmp_path / "parity")
+    for b in range(3):
+        k = np.arange(b * 100, b * 100 + 100, dtype=np.int64)
+        # ns values with a sub-microsecond part: both truncate to us
+        ts = pa.array(k * 1_000_000_007 + 1_700_000_000 * 10**9, pa.timestamp("ns"))
+        os.makedirs(os.path.join(out, f"b={b}"))
+        write_arrow_table(
+            os.path.join(out, f"b={b}", "part-0.dwrf"),
+            pa.table({"k": k, "ts": ts}),
+            stripe_rows=40,
+        )
+    reader = spark.read.format("dwrf")
+    options = {}
+    if columns:
+        reader = reader.option("columns", columns)
+        options["columns"] = columns
+    batch = reader.load(out)
+    name = f"parity_{(columns or 'all').replace(',', '_')}"
+    schema, streamed = _stream_rows(
+        spark, out, name, str(tmp_path / "ckpt"), **options
+    )
+    assert schema == batch.schema
+    rows = batch.collect()
+    assert len(rows) == 300
+    assert sorted(map(tuple, streamed)) == sorted(map(tuple, rows))

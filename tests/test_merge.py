@@ -309,6 +309,43 @@ class TestWriteRangeSorted:
         with pytest.raises(AssertionError, match="range parts overlap"):
             _write_range_sorted(df, out, "rn", 1)
 
+    @pytest.mark.parametrize("n_parts", [0, 4])
+    def test_empty_frame_writes_one_empty_file(self, spark, tmp_path, n_parts):
+        """A frame with no rows, whether Spark writes empty parts (4 range
+        partitions) or no part at all (an empty RDD), becomes one zero-row
+        file with the frame's schema, which the serving path and the
+        DataSource read as empty."""
+        from pyspark.sql import functions as F
+
+        from hive_dwrf_spark.format.lookup import lookup_keys
+        from hive_dwrf_spark.queries.roundtrip import _write_range_sorted
+        from hive_dwrf_spark.sources import register
+
+        register(spark)
+        frame = spark.range(0).select(
+            F.col("id").alias("rn"), (F.col("id") * 3).alias("v")
+        )
+        if n_parts:
+            frame = frame.repartitionByRange(n_parts, "rn")
+        else:
+            frame = spark.createDataFrame(
+                spark.sparkContext.emptyRDD(), frame.schema
+            )
+        df = frame.sortWithinPartitions("rn")
+        out = str(tmp_path / f"rs_empty{n_parts}")
+        _write_range_sorted(df, out, "rn", 4)
+        import glob
+
+        (fp,) = glob.glob(out + "/*.dwrf")
+        with DwrfFile(fp) as f:
+            assert f.num_rows == 0
+            assert f.schema.names == ["rn", "v"]
+        assert lookup_keys(out, "rn", [0, 1]).num_rows == 0
+        back = spark.read.format("dwrf").load(out)
+        assert back.columns == ["rn", "v"]
+        assert back.count() == 0
+        assert not os.path.exists(out + "_parts")
+
     def test_numbered_lineitem_matches_window_rank(self, spark):
         """The monotonically_increasing_id-derived global rank equals
         row_number() OVER (ORDER BY keys) on the same frame (sf0.001)."""
