@@ -147,27 +147,24 @@ def _cmd_compact(args: list[str]) -> int:
 
 
 def _cmd_verify(args: list[str]) -> int:
-    from .format.fs import get_fs
-    from .format.reader import DwrfCorruptError, DwrfFile, DwrfNoChecksumsError
+    from .format.plans import verify_files
 
     if len(args) != 1:
         print("usage: verify <path>", file=sys.stderr)
         return 2
-    files = get_fs(args[0]).list_files(args[0], (".dwrf", ".orc"))
+    files = bad = 0
+    for fp, stripes, nbytes, status in verify_files(args[0]):
+        files += 1
+        if status == "ok":
+            print(f"OK       {fp} ({stripes} stripes, {nbytes} bytes)")
+        elif status == "no checksums":
+            print(f"SKIPPED  {fp}: no checksums recorded")
+        else:
+            bad += 1
+            print(f"CORRUPT  {fp}: {status.removeprefix('corrupt: ')}")
     if not files:
         print(f"no .dwrf files under {args[0]}", file=sys.stderr)
         return 2
-    bad = 0
-    for fp in sorted(files):
-        try:
-            with DwrfFile(fp) as f:
-                rep = f.verify()
-            print(f"OK       {fp} ({rep['stripes']} stripes, {rep['bytes']} bytes)")
-        except DwrfNoChecksumsError:
-            print(f"SKIPPED  {fp}: no checksums recorded")
-        except DwrfCorruptError as e:
-            bad += 1
-            print(f"CORRUPT  {fp}: {e}")
     return 1 if bad else 0
 
 

@@ -31,12 +31,13 @@ Parses and decodes amortize across CALLS, not only within one batch:
 every file that holds keys is served from a process-wide open DwrfFile
 handle, so its footer, stripe footers and ROW_INDEX are parsed once, and
 stride decodes go through the handle's decoded-stride LRU — a hot stride
-is decoded once for all calls and threads. Once its footer summary is cached, a file that summary prunes
-is not opened, so a directory of more files than _HANDLES_MAX keeps its
-handles as long as the files a call reads fit. A cold call reads each
-missing summary through the file's shared handle and keeps, for the
-call, at most _HANDLES_MAX of those handles (those of files that may
-hold keys), so it holds few files open however large the directory.
+is decoded once for all calls and threads. File routing reads only the
+footer summaries of the table catalog (plans.file_plans, the cache the
+DataSource scan plans from), and a handle is opened only for a file
+whose summary admits a key: a cold call parses every missing footer on
+the plan pool without keeping it open, so the handle LRU holds the key
+holders, not the whole directory, and a directory of more files than
+_HANDLES_MAX keeps its handles as long as the files a call reads fit.
 
   identity : a handle is reused while (path, get_fs(path).stat_key(path))
              — size and mtime — is unchanged, the identity of the
@@ -71,14 +72,14 @@ from __future__ import annotations
 
 import bisect
 import threading
-from collections import OrderedDict, deque
+from collections import OrderedDict
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from .fs import get_fs
-from .plans import FilePlan, file_plans, plan_of
+from .plans import FilePlan, data_files, file_plans
 from .reader import (
     DwrfFile,
     _corrupt_guard,
@@ -124,23 +125,6 @@ def shared_handle(path: str, ident: tuple | None = None) -> tuple[DwrfFile, bool
     return winner, True
 
 
-def _touch(served) -> None:
-    """Make the handles of `served`, (path, stat identity, handle) in the
-    order a call served them, the most recently used, re-entering any the
-    LRU dropped meanwhile. An entry of another identity, cached by another
-    call, is left as it is."""
-    with _HANDLES_LOCK:
-        for path, ident, f in served:
-            hit = _HANDLES.get(path)
-            if hit is not None and hit[0] != ident:
-                continue
-            if hit is None:
-                _HANDLES[path] = (ident, f)
-            _HANDLES.move_to_end(path)
-        while len(_HANDLES) > _HANDLES_MAX:
-            _HANDLES.popitem(last=False)  # dropped, not closed
-
-
 def _trim_decoded() -> None:
     """Hold the decoded strides of all cached handles within one stride
     cache budget, evicting from the least recently used handles first."""
@@ -165,13 +149,6 @@ def cache_bytes() -> dict[str, int]:
         for layer, n in f.cache_bytes().items():
             total[layer] = total.get(layer, 0) + n
     return total
-
-
-def _list_files(path: str) -> list[str]:
-    out = get_fs(path).list_files(path, (".dwrf", ".orc"))
-    if not out:
-        raise FileNotFoundError(f"no .dwrf files under {path}")
-    return sorted(out)
 
 
 def _keys_in_range(keys_sorted: list, mn, mx) -> list:
@@ -247,42 +224,13 @@ def lookup_keys(
     if not key_list:
         raise ValueError("lookup_keys requires at least one non-null key")
     key_set = pa.array(key_list)
-    files = _list_files(path)
+    files = data_files(path)
+    if not files:
+        raise FileNotFoundError(f"no .dwrf files under {path}")
     fs = get_fs(files[0])
     idents = {fp: fs.stat_key(fp) for fp in files}
-    opened: list[str] = []  # list.append is atomic across plan threads
-    # a file without a cached footer summary gets it from its shared
-    # handle, so a cold call parses each footer once. The handle of a
-    # file whose summary admits a key is kept for this call even if the
-    # handle LRU drops it meanwhile, at most _HANDLES_MAX of them; past
-    # that it re-enters the LRU as most recent, so the LRU holds the
-    # other key holders whatever order the plan threads finish in. Any
-    # other handle is left to the LRU, so a cold call over a directory of
-    # many files holds few of them open
-    planned: dict[str, DwrfFile] = {}
-    planned_lock = threading.Lock()
-
-    def handle(fp: str) -> DwrfFile:
-        f = planned.pop(fp, None)
-        if f is None:
-            f, was_opened = shared_handle(fp, idents[fp])
-            if was_opened:
-                opened.append(fp)
-        return f
-
-    def plan_from_handle(fp: str) -> FilePlan:
-        f = handle(fp)
-        plan = plan_of(f)
-        if _may_hold(plan, key_column, key_list):
-            with planned_lock:
-                kept = len(planned) < _HANDLES_MAX
-                if kept:
-                    planned[fp] = f
-            if not kept:
-                _touch([(fp, idents[fp], f)])
-        return plan
-
-    plans = file_plans(files, plan_from_handle, stat_keys=idents)
+    plans = file_plans(files, stat_keys=idents)
+    opened = 0  # handles this call had to open
     if trace is not None:
         trace.update(
             files_total=len(files),
@@ -292,9 +240,6 @@ def lookup_keys(
         )
     out_chunks: dict[str, list[pa.Array]] = {}
     schema: pa.Schema | None = None
-    # (path, identity, handle) of the last files served, at most as many
-    # as the LRU keeps, so a call over many files holds few of them open
-    served: deque = deque(maxlen=_HANDLES_MAX)
     for fp in files:
         plan = plans[fp]
         key_name = _resolve_field(key_column, list(plan.stats_by_name))
@@ -309,8 +254,8 @@ def lookup_keys(
             if trace is not None:
                 trace["files_pruned"] += 1
             continue
-        f = handle(fp)
-        served.append((fp, idents[fp], f))
+        f, was_opened = shared_handle(fp, idents[fp])
+        opened += was_opened
         key_tid = f._top_level_id(key_name)
         tops, include_ids = f._projection(columns)
         if columns is not None:
@@ -359,12 +304,10 @@ def lookup_keys(
                         for (name, _), arr in zip(tops, arrays):
                             out_chunks.setdefault(name, []).append(gather(arr))
         _trim_decoded()
-    # the handle LRU follows the order files were served in, planned
-    # handles included; doing it after the loop keeps a handle re-entered
-    # early from evicting one this call has yet to serve
-    _touch(served)
     if schema is None:  # no file held keys: the projection's schema
-        schema = handle(files[0]).projected_schema(columns)
+        f, was_opened = shared_handle(files[0], idents[files[0]])
+        opened += was_opened
+        schema = f.projected_schema(columns)
     if trace is not None:
-        trace["files_opened"] = len(opened)
+        trace["files_opened"] = opened
     return _join([out_chunks.get(field.name, []) for field in schema], schema)

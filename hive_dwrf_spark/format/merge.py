@@ -131,12 +131,14 @@ def merge_files(paths: list[str], out_path: str) -> list[tuple[str, int, int]]:
 
 
 def compact_directory(path: str, out_file: str) -> int:
-    """Merge every .dwrf file under `path` into one file; returns stripe
-    count. The distributed variant shards inputs across tasks and runs
-    merge_files per shard (IO-bound, no shuffle)."""
-    from .fs import get_fs, rel_subpath
+    """Merge every data file under `path` (plans.data_files, the files a
+    scan of `path` reads) into one file; returns stripe count. The
+    distributed variant shards inputs across tasks and runs merge_files
+    per shard (IO-bound, no shuffle)."""
+    from .fs import rel_subpath
+    from .plans import data_files
 
-    files = sorted(get_fs(path).list_files(path, (".dwrf",)))
+    files = data_files(path)
     if not files:
         raise FileNotFoundError(f"no .dwrf files under {path}")
     # refuse to merge ACROSS subdirectories: hive-partition values live

@@ -211,6 +211,7 @@ def compact_table(
         rel_subpath,
         strip_file_uri,
     )
+    from ..format.plans import data_files
     from ..shipping import ensure_shipped
 
     ensure_shipped(spark)
@@ -221,7 +222,7 @@ def compact_table(
     # mangle 'scheme://'), so the whole job runs against an object store
     # exactly as against local disk
     fs = get_fs(path)
-    files = fs.list_files(path, (".dwrf", ".orc"))
+    files = data_files(path)
     if not files:
         raise FileNotFoundError(f"no .dwrf files under {path}")
 

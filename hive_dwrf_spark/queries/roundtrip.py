@@ -2117,10 +2117,9 @@ def format_compact_distributed(spark, sf_dir):
     # target ~ a third of the table so the 8 inputs pack into a few bins
     # at ANY scale factor (a fixed byte target stops compacting once
     # every part file exceeds it: each lands in its own bin)
-    from ..format.fs import get_fs
+    from ..sources.stats import dwrf_path_stats
 
-    fs = get_fs(src)
-    total = sum(fs.size(f) for f in fs.list_files(src, (".dwrf",)))
+    total = dwrf_path_stats(src)["file_bytes"]
     report = compact_table(
         spark, src, target_bytes=max(256 * 1024, total // 3), out_dir=out
     )

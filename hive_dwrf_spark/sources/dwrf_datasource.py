@@ -4,9 +4,9 @@ This module owns the DWRF scan for both the batch source and the stream
 source (streaming/dwrf_stream.py, which only plans offsets and asks this
 module for the rest):
 
-- listing: ``_scan_files`` walks a directory through the fs seam and,
-  with ``committedOnly``, keeps only the files its commit manifest records
-  (``committed_files``);
+- listing: ``_scan_files`` takes the table catalog's one walk
+  (format/plans.py::data_files) and, with ``committedOnly``, keeps only
+  the files its commit manifest records (``committed_files``);
 - schema: ``scan_schema`` reads the first footer (every footer under
   ``mergeSchema``) from the plan cache, appends hive ``k=v`` partition
   columns, and applies the ``columns`` option;
@@ -43,7 +43,7 @@ import uuid
 from dataclasses import dataclass
 
 from ..format.fs import strip_file_uri
-from ..format.plans import FilePlan, compute_file_plan, file_plans
+from ..format.plans import FilePlan, data_files, file_plans
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -120,19 +120,16 @@ def _source_path(options) -> str:
 
 
 def _scan_files(path: str, committed_only: bool = False) -> list[str]:
-    """Data files under `path` through the fs seam, sorted; [] when there
-    are none (or the directory does not exist yet).
+    """Data files under `path` (plans.data_files: sorted; [] when there
+    are none or the directory does not exist yet).
 
     committed_only keeps the files the directory's commit manifest
     records (committed_files): orphans of crashed tasks and a retried
     batch's second attempt are skipped, and a file the manifest does not
     record yet becomes visible once a commit records it."""
-    from ..format.fs import get_fs, rel_subpath
+    from ..format.fs import rel_subpath
 
-    fs = get_fs(path)
-    if hasattr(fs, "isfile") and not fs.exists(path):
-        return []
-    files = sorted(fs.list_files(path, (".dwrf", ".orc")))
+    files = data_files(path)
     if committed_only and files:
         committed = committed_files(path)
         if committed is None:
@@ -400,10 +397,7 @@ def compact_manifest(
     with fs.open(log, "r") as f:
         lines = [ln.rstrip("\n") for ln in f if ln.strip()]
     accepted = _accepted_batch_groups(lines)
-    live = {
-        rel_subpath(fp, path)
-        for fp in fs.list_files(path, (".dwrf", ".orc"))
-    }
+    live = {rel_subpath(fp, path) for fp in data_files(path)}
 
     def _bid_key(b: str):
         try:
@@ -639,17 +633,6 @@ def compact_sink(
     }
 
 
-# --- driver-side footer plan cache (format/plans.py) -------------------------
-# The parse function is looked up here at call time, so a test can poison
-# it to prove a warm plan comes from the cache.
-_compute_file_plan = compute_file_plan
-
-
-def _file_plans(paths: list[str]) -> dict[str, FilePlan]:
-    """Footer summaries for `paths`, cache-first. Returns {path: plan}."""
-    return file_plans(paths, _compute_file_plan)
-
-
 def _plan_may_match(plan: FilePlan, filters) -> bool:
     """File-level stats pruning from the cached footer summary — the same
     decision as DwrfFile._filter_may_match_stats without reopening the
@@ -860,7 +843,7 @@ def scan_schema(
     fields: list[StructField] = []
     seen: dict[str, StructField] = {}
     footers = files if merge else files[:1]
-    plans = _file_plans(footers)
+    plans = file_plans(footers)
     for fp in footers:
         for af in plans[fp].arrow_schema:
             fld = StructField(af.name, _arrow_to_spark_type(af.type))
@@ -1055,8 +1038,20 @@ def write_empty(out_path: str, schema: StructType, **opts) -> None:
 
 @dataclass
 class _WriteResult(WriterCommitMessage):
-    path: str
-    rows: int
+    files: list  # (path, rows) of each data file the task wrote
+
+
+def _written(messages) -> list[tuple[str, int]]:
+    """(path, rows) of every data file the tasks of `messages` wrote."""
+    return [f for m in messages if m is not None for f in m.files]
+
+
+def _norm(p: str) -> str:
+    """A task's literal out_path as commits compare it: local paths
+    normalize through abspath, URIs stay verbatim."""
+    from ..format.fs import path_scheme
+
+    return p if path_scheme(p) else os.path.abspath(p)
 
 
 class DwrfReader(DataSourceReader):
@@ -1126,7 +1121,7 @@ class DwrfReader(DataSourceReader):
         ]
         # pass 1: footer summaries (cache-first, thread-pool parsed) for
         # footer-stats pruning + stripe sizes
-        plans = _file_plans(survivors)
+        plans = file_plans(survivors)
         files = [
             (path, None)
             for path in survivors
@@ -1214,7 +1209,7 @@ class DwrfWriter(DataSourceArrowWriter):
             write_empty(out_path, self.schema, **opts)
         else:
             writer.close()
-        return _WriteResult(path=out_path, rows=rows)
+        return _WriteResult(files=[(out_path, rows)])
 
     def _write_partitioned(self, iterator, part_by: list[str]):
         """Hive-style partitioned write: {path}/k1=v1/k2=v2/part-*.dwrf.
@@ -1232,7 +1227,7 @@ class DwrfWriter(DataSourceArrowWriter):
         task_id = uuid.uuid4().hex[:16]
         writers: dict[tuple, FileWriter] = {}
         paths: dict[tuple, str] = {}
-        rows = 0
+        rows: dict[tuple, int] = {}
         for batch in iterator:
             table = pa.Table.from_batches([batch])
             missing = [c for c in part_by if c not in table.column_names]
@@ -1262,57 +1257,35 @@ class DwrfWriter(DataSourceArrowWriter):
                     writers[key] = w
                     paths[key] = out_path
                 w.write_table(sub)
-                rows += sub.num_rows
+                rows[key] = rows.get(key, 0) + sub.num_rows
         for w in writers.values():
             w.close()
-        return _WriteResult(
-            path="\x00".join(paths.values()) or self.path, rows=rows
-        )
+        return _WriteResult(files=[(paths[k], rows[k]) for k in paths])
 
     def commit(self, messages):
-        from ..format.fs import get_fs, join_path, path_scheme, rel_subpath
+        from ..format.fs import get_fs, join_path, rel_subpath
 
         if self._fs_env:  # commit also runs in a Python worker
             os.environ.update(self._fs_env)
         fs = get_fs(self.path)
-
-        def norm(p: str) -> str:
-            # task messages carry the literal out_paths; local paths
-            # normalize through abspath, URIs stay verbatim
-            return p if path_scheme(p) else os.path.abspath(p)
-
-        keep = set()
-        for m in messages:
-            if m is not None:
-                for p in m.path.split("\x00"):
-                    if p.endswith(".dwrf"):
-                        keep.add(norm(p))
+        written = _written(messages)
         if self.overwrite:
-            for fp in fs.list_files(self.path, (".dwrf",)):
-                if norm(fp) not in keep:
+            keep = {_norm(p) for p, _ in written}
+            for fp in data_files(self.path):
+                if _norm(fp) not in keep:
                     fs.remove(fp)
         fs.makedirs(self.path)
         with fs.open(join_path(self.path, "_SUCCESS"), "w") as f:
-            for m in messages:
-                if m is not None:
-                    for p in m.path.split("\x00"):
-                        if p.endswith(".dwrf"):
-                            f.write(
-                                f"{rel_subpath(norm(p), norm(self.path))}"
-                                f"\t{m.rows}\n"
-                            )
+            for p, rows in written:
+                f.write(f"{rel_subpath(_norm(p), _norm(self.path))}\t{rows}\n")
 
     def abort(self, messages):
         from ..format.fs import get_fs
 
         if self._fs_env:
             os.environ.update(self._fs_env)
-        for m in messages:
-            if m is None:
-                continue
-            for p in m.path.split("\x00"):
-                if p.endswith(".dwrf"):
-                    get_fs(p).remove(p)
+        for p, _ in _written(messages):
+            get_fs(p).remove(p)
 
 
 class DwrfStreamWriter(DwrfWriter, DataSourceStreamArrowWriter):
@@ -1332,16 +1305,12 @@ class DwrfStreamWriter(DwrfWriter, DataSourceStreamArrowWriter):
     _spark_metadata discipline re-expressed for DWRF dirs)."""
 
     def commit(self, messages, batchId: int) -> None:
-        from ..format.fs import get_fs, join_path, path_scheme, rel_subpath
+        from ..format.fs import get_fs, join_path, rel_subpath
 
         if self._fs_env:
             os.environ.update(self._fs_env)
         fs = get_fs(self.path)
         fs.makedirs(self.path)
-
-        def norm(p: str) -> str:
-            return p if path_scheme(p) else os.path.abspath(p)
-
         with fs.open(join_path(self.path, "_batches"), "a") as f:
             # begin/end markers: committedOnly reads accept only complete,
             # first-seen groups (committed_files). '#end' makes a torn
@@ -1351,15 +1320,11 @@ class DwrfStreamWriter(DwrfWriter, DataSourceStreamArrowWriter):
             # the SAME batchId cannot merge the torn attempt's files into
             # the retry's accepted group (read-time double count).
             f.write(f"#begin\t{batchId}\n")
-            for m in messages:
-                if m is not None:
-                    for p in m.path.split("\x00"):
-                        if p.endswith(".dwrf"):
-                            f.write(
-                                f"{batchId}\t"
-                                f"{rel_subpath(norm(p), norm(self.path))}"
-                                f"\t{m.rows}\n"
-                            )
+            for p, rows in _written(messages):
+                f.write(
+                    f"{batchId}\t{rel_subpath(_norm(p), _norm(self.path))}"
+                    f"\t{rows}\n"
+                )
             f.write(f"#end\t{batchId}\n")
         # periodic in-place log compaction (compact_manifest): every
         # interval-th batch, same cadence rule as Spark's file-sink
@@ -1373,16 +1338,7 @@ class DwrfStreamWriter(DwrfWriter, DataSourceStreamArrowWriter):
             compact_manifest(self.path, force=True)
 
     def abort(self, messages, batchId: int) -> None:
-        from ..format.fs import get_fs
-
-        if self._fs_env:
-            os.environ.update(self._fs_env)
-        for m in messages:
-            if m is None:
-                continue
-            for p in m.path.split("\x00"):
-                if p.endswith(".dwrf"):
-                    get_fs(p).remove(p)
+        super().abort(messages)
 
 
 class DwrfDataSource(DataSource):

@@ -13,13 +13,14 @@ Consequence: a DWRF-backed 2 KB dimension table NEVER auto-broadcasts —
 every join against it sort-merges, shuffling the fact side.
 
 THE WORKAROUND: read the size the planner can't see directly from the
-file footers (zero data bytes — the same pass `partitions()` already
-does for pruning) and apply an explicit `broadcast()` hint when the
-logical size clears the session's own autoBroadcastJoinThreshold. The
-hint is exactly what SupportsReportStatistics would have let AQE decide;
-making it explicit keeps the decision deterministic and visible in the
-plan. When Spark ships a stats hook for Python sources, DwrfDataSource
-should report `raw_bytes` there and this helper becomes a no-op shim.
+file footers (zero data bytes — the catalog's footer summaries in
+format/plans.py, the ones `partitions()` plans and prunes from) and
+apply an explicit `broadcast()` hint when the logical size clears the
+session's own autoBroadcastJoinThreshold. The hint is exactly what
+SupportsReportStatistics would have let AQE decide; making it explicit
+keeps the decision deterministic and visible in the plan. When Spark
+ships a stats hook for Python sources, DwrfDataSource should report
+`raw_bytes` there and this helper becomes a no-op shim.
 """
 
 from __future__ import annotations
@@ -28,37 +29,29 @@ import re
 
 
 def dwrf_path_stats(path: str) -> dict:
-    """Footer-only statistics for a DWRF file or directory: every call
-    stats and opens each file and parses its footer (a few KB at the file
-    tail); no data stream is read and nothing is cached across calls.
-    Raises FileNotFoundError when `path` holds no DWRF file.
+    """Footer-only statistics for a DWRF file or directory: the files a
+    default scan of `path` reads (plans.data_files) and their footer
+    summaries from the catalog's plan cache (plans.file_plans), so a
+    repeat call on an unchanged directory stats each file and parses no
+    footer; no data stream is read. Raises FileNotFoundError when `path`
+    holds no DWRF file.
 
     Returns {files, rows, file_bytes, raw_bytes} where raw_bytes is the
     writer's logical (uncompressed, pre-encoding) size accounting
     (reference A27, WriterImpl raw-size counters) — the honest stand-in
     for Catalyst's sizeInBytes, conservative vs compressed file size.
     """
-    from ..format.fs import get_fs
-    from ..format.reader import DwrfFile
-    from .dwrf_datasource import _scan_files
+    from ..format.plans import data_files, file_plans
 
-    files = _scan_files(path)
+    files = data_files(path)
     if not files:
         raise FileNotFoundError(f"no .dwrf files under {path}")
-    fs = get_fs(path)
-    rows = 0
-    raw = 0
-    file_bytes = 0
-    for fp in files:
-        file_bytes += fs.size(fp)
-        with DwrfFile(fp) as f:
-            rows += f.footer.numberOfRows or 0
-            raw += f.footer.rawDataSize or 0
+    plans = file_plans(files).values()
     return {
         "files": len(files),
-        "rows": rows,
-        "file_bytes": file_bytes,
-        "raw_bytes": raw,
+        "rows": sum(p.rows for p in plans),
+        "file_bytes": sum(p.file_bytes for p in plans),
+        "raw_bytes": sum(p.raw_bytes for p in plans),
     }
 
 
@@ -126,24 +119,27 @@ def broadcast_if_small(df, path: str, threshold_bytes: int | None = None):
 
 def merged_column_stats(path: str) -> dict:
     """Per-top-level-column ColumnStats merged across every part file's
-    footer — the whole-table catalog view, zero data bytes read (A19 +
-    A27: ColumnStatisticsImpl merging, ReaderImpl.java:204-260 footer
-    consumption). Keys are the first file's field names; files must share
-    a schema (one table's parts do)."""
-    from ..format.fs import get_fs
-    from ..format.reader import DwrfFile
+    footer summary (plans.file_plans) — the whole-table catalog view,
+    zero data bytes read (A19 + A27: ColumnStatisticsImpl merging,
+    ReaderImpl.java:204-260 footer consumption). Keys are the field names
+    in first-seen file order; files must share a schema (one table's
+    parts do). The result holds fresh objects: the cached summaries'
+    stats are copied, never merged into."""
+    import copy
 
-    files = get_fs(path).list_files(path, (".dwrf", ".orc"))
+    from ..format.plans import data_files, file_plans
+
+    files = data_files(path)
     if not files:
         raise FileNotFoundError(f"no .dwrf files under {path}")
+    plans = file_plans(files)
     merged: dict = {}
-    for fp in sorted(files):
-        with DwrfFile(fp) as f:
-            for name in f.types[0].fieldNames:
-                tid = f._top_level_id(name)
-                st = f.file_stats(tid)
-                if name in merged:
-                    merged[name].merge(st)
-                else:
-                    merged[name] = st
+    for fp in files:
+        for name, st in plans[fp].stats_by_name.items():
+            if st is None:
+                raise ValueError(f"{fp}: no footer statistics for {name!r}")
+            if name in merged:
+                merged[name].merge(st)
+            else:
+                merged[name] = copy.copy(st)
     return merged

@@ -30,9 +30,12 @@ UDTF. ``useArrow=True`` (arrow TRANSPORT under row-yield eval) was
 measured neutral at 100k output rows (2.15s vs 2.10s plain): the decode
 dominates, not the pickling. Revisit when SPARK-53286 lands.
 
-``analyze`` opens one footer on the driver, so the path must be
-driver-visible (true for any shared filesystem / object store behind
-the fs seam).
+``analyze`` reads the first file's footer summary from the table
+catalog on the driver (format/plans.py; a summary the scan or an earlier
+lookup cached is not re-parsed), so the path must be driver-visible
+(true for any shared filesystem / object store behind the fs seam). It
+opens no serving handle: lookup_keys opens those for the files that
+admit a key.
 """
 
 from __future__ import annotations
@@ -53,7 +56,8 @@ class DwrfLookupUDTF:
         from pyspark.sql.types import StructField, StructType
 
         from ..format.fs import strip_file_uri
-        from ..format.lookup import _list_files, shared_handle
+        from ..format.plans import data_files, file_plans
+        from ..format.reader import _resolve_field
         from .dwrf_datasource import _arrow_to_spark_type
 
         if not (path.isConstantExpression and isinstance(path.value, str)):
@@ -65,15 +69,18 @@ class DwrfLookupUDTF:
             key_col.isConstantExpression and isinstance(key_col.value, str)
         ):
             raise ValueError("dwrf_lookup: key_col must be a constant string")
-        first = _list_files(strip_file_uri(path.value))[0]
-        f, _ = shared_handle(first)
-        if f._top_level_id(key_col.value) is None:
+        table = strip_file_uri(path.value)
+        files = data_files(table)
+        if not files:
+            raise FileNotFoundError(f"no .dwrf files under {table}")
+        schema = file_plans(files[:1])[files[0]].arrow_schema
+        if _resolve_field(key_col.value, schema.names) is None:
             raise ValueError(
-                f"dwrf_lookup: no column {key_col.value!r} in {first}"
+                f"dwrf_lookup: no column {key_col.value!r} in {files[0]}"
             )
         fields = [
             StructField(fl.name, _arrow_to_spark_type(fl.type))
-            for fl in f.schema
+            for fl in schema
         ]
         return AnalyzeResult(schema=StructType(fields))
 
@@ -236,25 +243,14 @@ class DwrfVerifyUDTF:
         )
 
     def eval(self, path):
-        from ..format.fs import get_fs, strip_file_uri
-        from ..format.reader import (
-            DwrfCorruptError,
-            DwrfFile,
-            DwrfNoChecksumsError,
-        )
+        from ..format.fs import strip_file_uri
+        from ..format.plans import verify_files
 
         path = strip_file_uri(path)
-        files = sorted(get_fs(path).list_files(path, (".dwrf", ".orc")))
-        if not files:
+        scrubbed = False
+        for row in verify_files(path):
+            scrubbed = True
+            yield row
+        if not scrubbed:
             # a typo'd or empty path must not read as a clean scrub
             yield (path, None, None, "error: no data files found")
-            return
-        for fp in files:
-            try:
-                with DwrfFile(fp) as f:
-                    rep = f.verify()
-                yield (fp, rep["stripes"], rep["bytes"], "ok")
-            except DwrfNoChecksumsError:
-                yield (fp, None, None, "no checksums")
-            except DwrfCorruptError as e:
-                yield (fp, None, None, f"corrupt: {e}")

@@ -563,10 +563,8 @@ class _DwrfPartitionStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         DwrfStreamDataSource._bootstrap()
         from hive_dwrf_spark.format.fs import join_path
-        from hive_dwrf_spark.sources.dwrf_datasource import (
-            _file_plans,
-            _plan_splits,
-        )
+        from hive_dwrf_spark.format.plans import file_plans
+        from hive_dwrf_spark.sources.dwrf_datasource import _plan_splits
 
         start_files, start_wm, start_late = self._resolve(start)
         end_files, _, end_late = self._resolve(end)
@@ -626,7 +624,7 @@ class _DwrfPartitionStreamReader(DataSourceStreamReader):
         return _plan_splits(
             self.path,
             [(fp, partial.get(n)) for fp, n in zip(paths, fresh)],
-            _file_plans(paths),
+            file_plans(paths),
         )
 
     def read(self, partition):

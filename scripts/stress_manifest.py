@@ -87,7 +87,7 @@ def manifest_10k(batches: int = 10_000) -> dict:
             with open(os.path.join(out, name), "wb") as f:
                 f.write(b"x")  # existence is what compaction checks
             writer.commit(
-                [_WriteResult(path=os.path.join(out, name), rows=1)], b
+                [_WriteResult(files=[(os.path.join(out, name), 1)])], b
             )
             drop = b - RETAIN
             if drop >= 0:

@@ -216,6 +216,42 @@ def test_partition_pruning(dwrf_spark, tmp_path):
     assert back.filter("b = 2").count() == 1000
 
 
+def test_overwrite_removes_orc_members(dwrf_spark, tmp_path):
+    """An overwrite replaces every data file a read of the directory sees,
+    .orc members included."""
+    import pyarrow as pa
+
+    from hive_dwrf_spark.format import write_arrow_table
+
+    d = str(tmp_path / "t")
+    os.makedirs(d)
+    write_arrow_table(
+        os.path.join(d, "old.orc"),
+        pa.table({"id": pa.array([100, 101, 102], type=pa.int64())}),
+    )
+    dwrf_spark.range(5).write.format("dwrf").mode("overwrite").save(d)
+    assert dwrf_spark.read.format("dwrf").load(d).count() == 5
+    assert not os.path.exists(os.path.join(d, "old.orc"))
+
+
+def test_success_records_each_files_rows(dwrf_spark, tmp_path):
+    """Each _SUCCESS line of a partitioned write records its own file's
+    footer row count, not the total of the task that wrote it."""
+    from hive_dwrf_spark.format import DwrfFile
+
+    d = str(tmp_path / "p")
+    df = dwrf_spark.sql("SELECT id AS k, id % 2 AS b FROM range(10)")
+    df.coalesce(1).write.format("dwrf").option("partition_by", "b").mode(
+        "append"
+    ).save(d)
+    with open(os.path.join(d, "_SUCCESS")) as fh:
+        lines = [ln.rstrip("\n").split("\t") for ln in fh if ln.strip()]
+    assert len(lines) == 2
+    for rel, rows in lines:
+        with DwrfFile(os.path.join(d, rel)) as f:
+            assert int(rows) == f.num_rows == 5
+
+
 def test_stride_dictionaries_option_roundtrip(dwrf_spark, tmp_path):
     """A14 through the Spark datasource: unique-heavy strings round-trip
     with stride dictionaries enabled and the stripe dictionary shrinks."""
@@ -405,8 +441,7 @@ def test_footer_plan_cache_and_parallel_planning(tmp_path, monkeypatch):
 
     import pyarrow as pa
 
-    from hive_dwrf_spark.format import write_arrow_table
-    from hive_dwrf_spark.sources import dwrf_datasource as ds
+    from hive_dwrf_spark.format import plans, write_arrow_table
     from hive_dwrf_spark.sources.dwrf_datasource import DwrfDataSource
 
     n_files = 120
@@ -429,7 +464,7 @@ def test_footer_plan_cache_and_parallel_planning(tmp_path, monkeypatch):
     def boom(path):
         raise AssertionError(f"footer re-parsed for {path}")
 
-    monkeypatch.setattr(ds, "_compute_file_plan", boom)
+    monkeypatch.setattr(plans, "compute_file_plan", boom)
     parts_warm = reader_for(str(tmp_path)).partitions()
     assert [(p.path, p.stripe_indices) for p in parts_warm] == [
         (p.path, p.stripe_indices) for p in parts_cold

@@ -60,6 +60,28 @@ def test_merged_file_prunes(tmp_path):
         assert got.num_rows == 1000  # five of six stripes pruned
 
 
+def test_compact_directory_keeps_orc_members(spark, tmp_path):
+    """compact_directory merges every file a read of the directory sees:
+    an .orc member counts like a .dwrf one."""
+    from hive_dwrf_spark.format.merge import compact_directory
+    from hive_dwrf_spark.sources import register
+
+    register(spark)
+    d = tmp_path / "mixed"
+    d.mkdir()
+    _make(d / "a.dwrf", 0, 2)
+    _make(d / "b.orc", 2, 3)
+    out = str(tmp_path / "out.dwrf")
+    compact_directory(str(d), out)
+    with DwrfFile(out) as f:
+        got = f.read().to_pylist()
+    read = spark.read.format("dwrf").load(str(d)).collect()
+    assert len(got) == 5
+    assert sorted(got, key=lambda r: r["k"]) == sorted(
+        (r.asDict() for r in read), key=lambda r: r["k"]
+    )
+
+
 class TestDistributedCompaction:
     """compact_table (operators/layout.py): catalog-only planning, one
     stripe-copy merge per Spark task, value-transparent output."""

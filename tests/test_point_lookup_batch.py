@@ -421,16 +421,19 @@ class TestLookupHandleCache:
 
     def test_unchanged_directory_opens_each_file_once(self, four_parts, opens):
         batches = [[5, 12_345, 39_999], [7, 8, 9], [20_000, 25_000, 31_001]]
-        for n in range(6):
+        # a handle opens on the first call whose keys the file's summary
+        # admits: parts 0, 1, 3, then part 2 on the third call
+        for n, want_opened in enumerate([3, 0, 1, 0, 0, 0]):
             keys = batches[n % len(batches)]
             trace = {}
             got = lookup_keys(four_parts, "k", keys, trace=trace)
             assert got.equals(_reference(four_parts, "k", keys))
-            assert trace["files_opened"] == (4 if n == 0 else 0), trace
+            assert trace["files_opened"] == want_opened, trace
         lookup_opens = {p: c for p, c in opens.items() if "part-" in p}
         # _reference's own opens are one per file per call; the lookup
-        # path adds exactly one per file over all six calls
-        assert set(lookup_opens.values()) == {6 + 1}, lookup_opens
+        # path adds one footer parse and one handle per file over all six
+        # calls
+        assert set(lookup_opens.values()) == {6 + 2}, lookup_opens
         # cached handles answer like fresh ones
         cached = lookup_keys(four_parts, "k", batches[0], columns=["v"])
         lookup._HANDLES = OrderedDict()
@@ -540,15 +543,15 @@ class TestLookupHandleCache:
             assert trace["files_opened"] == 4
 
     def test_lru_follows_serving_order(self, four_parts, monkeypatch):
-        """Handles a cold call kept while planning re-enter the LRU as they
-        are served: with plans computed in reverse file order, the LRU of
-        2 ends on the last two files served, not the last two planned."""
+        """Planning opens no handle, so the handle LRU follows the order
+        files were served in: with plans computed in reverse file order,
+        the LRU of 2 ends on the last two files served."""
         real = lookup.file_plans
 
-        def reverse_plans(files, compute, stat_keys=None):
+        def reverse_plans(files, stat_keys=None):
             out = {}
             for fp in reversed(files):
-                out.update(real([fp], compute, stat_keys))
+                out.update(real([fp], stat_keys))
             return out
 
         monkeypatch.setattr(lookup, "file_plans", reverse_plans)
@@ -587,10 +590,11 @@ class TestLookupHandleCache:
                 assert trace["files_opened"] <= holders, trace
 
     def test_cold_call_holds_few_files_open(self, tmp_path, monkeypatch):
-        """A cold call over more files than the handle LRU holds keeps no
-        more files open than the LRU, the plan pool's threads and the
-        planned handles of key-holding files (at most _HANDLES_MAX), when
-        the keys sit in a few files and when they sit in all of them."""
+        """A cold call over more files than the handle LRU holds opens a
+        handle only on the files that hold keys, and keeps no more files
+        open than the LRU, the one being served and the plan pool's
+        threads, when the keys sit in a few files and when they sit in
+        all of them."""
         import gc
         import weakref
 
@@ -610,7 +614,7 @@ class TestLookupHandleCache:
                 most[0] = max(most[0], sum(not f._f.closed for f in live))
 
         monkeypatch.setattr(DwrfFile, "__init__", tracking)
-        bound = 2 * lookup._HANDLES_MAX + plans._PLAN_POOL_WORKERS
+        bound = lookup._HANDLES_MAX + 1 + plans._PLAN_POOL_WORKERS
         for name, keys in [("few", [150, 4_321]), ("all", list(range(7, 6_000, 100)))]:
             d = str(tmp_path / name)
             os.makedirs(d)
@@ -621,7 +625,7 @@ class TestLookupHandleCache:
             trace = {}
             got = lookup_keys(d, "k", keys, trace=trace)
             assert got.column("k").to_pylist() == keys
-            assert trace["files_opened"] >= 60, trace
+            assert trace["files_opened"] == len({k // 100 for k in keys}), trace
             assert most[0] <= bound, (name, most[0])
 
     def test_dropped_handle_frees_without_cyclic_gc(
@@ -777,9 +781,10 @@ class TestLookupHandleCache:
         # healthy members keep serving
         assert lookup_keys(four_parts, "k", [5]).column("k").to_pylist() == [5]
 
-    def test_udtf_analyze_shares_the_handle(self, four_parts):
-        """The dwrf_lookup TVF reads its schema from the shared handle and
-        leaves it open for the lookups that follow."""
+    def test_udtf_analyze_reads_the_plan(self, four_parts):
+        """The dwrf_lookup TVF reads its schema from the first file's
+        footer summary and opens no handle: the lookup that follows opens
+        the one file that holds its key."""
         from types import SimpleNamespace
 
         from hive_dwrf_spark.sources.udtf import DwrfLookupUDTF
@@ -787,14 +792,16 @@ class TestLookupHandleCache:
         def const(v):
             return SimpleNamespace(isConstantExpression=True, value=v)
 
-        res = DwrfLookupUDTF.analyze(const(four_parts), const("k"), None)
+        res = DwrfLookupUDTF.analyze(const(four_parts), const("K"), None)
         assert res.schema.fieldNames() == ["k", "v"]
-        first = os.path.join(four_parts, "part-0.dwrf")
-        (_, f), = lookup._HANDLES.values()
-        assert f.path == first and not f._f.closed
+        assert not lookup._HANDLES
+        with pytest.raises(ValueError, match="no column"):
+            DwrfLookupUDTF.analyze(const(four_parts), const("nope"), None)
         trace = {}
         lookup_keys(four_parts, "k", [1], trace=trace)
-        assert trace["files_opened"] == 3
+        assert trace["files_opened"] == 1
+        (_, f), = lookup._HANDLES.values()
+        assert f.path == os.path.join(four_parts, "part-0.dwrf")
 
 
 def _mixed_table(n: int) -> pa.Table:
