@@ -20,6 +20,7 @@ from __future__ import annotations
 import zlib
 
 import numpy as np
+import pyarrow as pa
 
 from .constants import (
     MAX_DELTA,
@@ -29,13 +30,6 @@ from .constants import (
     MIN_REPEAT_SIZE,
     CompressionKind,
 )
-
-try:
-    import snappy  # optional C binding
-
-    _HAVE_SNAPPY = True
-except ImportError:
-    _HAVE_SNAPPY = False
 
 try:
     # optional python-lzo (raw LZO1X blocks — the codec the reference
@@ -50,17 +44,10 @@ except ImportError:
 def lzo_available() -> bool:
     return _lzo is not None
 
-try:
-    # pyarrow bundles C++ snappy (raw format, same bytes as python-snappy);
-    # ~100x faster than the pure-python fallback and always present in a
-    # pyspark environment. decompress needs the exact output size, which the
-    # block framing layer knows (block_size for all but the last block) or
-    # the fallback recovers from the snappy preamble varint.
-    import pyarrow as _pa
-
-    _PA_SNAPPY = _pa.Codec("snappy")
-except Exception:
-    _PA_SNAPPY = None
+#: pyarrow's bundled C++ snappy (raw format), the one snappy codec.
+#: Decompression needs the exact output size, which the block's preamble
+#: varint gives (_snappy_uncompressed_len).
+_PA_SNAPPY = pa.Codec("snappy")
 
 
 def _snappy_uncompressed_len(data: bytes) -> int:
@@ -74,94 +61,6 @@ def _snappy_uncompressed_len(data: bytes) -> int:
         shift += 7
         if b < 0x80:
             return total
-
-
-# --- pure-Python snappy fallback -------------------------------------------------
-# Used when python-snappy is absent. decompress handles any spec-compliant
-# stream (literals + all three copy forms); compress emits literal-only
-# elements — valid snappy that any C implementation reads, with no
-# compression (the block-framing layer stores such blocks as "original"
-# anyway, so the write path loses nothing but interop is preserved).
-
-
-def _snappy_compress_py(data: bytes) -> bytes:
-    out = bytearray()
-    n = len(data)
-    # preamble: uncompressed length varint
-    v = n
-    while v >= 0x80:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
-    pos = 0
-    while pos < n:
-        chunk = min(n - pos, 65536)
-        ln = chunk - 1
-        if ln < 60:
-            out.append(ln << 2)
-        elif ln < (1 << 8):
-            out.append(60 << 2)
-            out.append(ln)
-        else:
-            out.append(61 << 2)
-            out += ln.to_bytes(2, "little")
-        out += data[pos : pos + chunk]
-        pos += chunk
-    return bytes(out)
-
-
-def _snappy_decompress_py(data: bytes) -> bytes:
-    pos = 0
-    total = 0
-    shift = 0
-    while True:  # length varint
-        b = data[pos]
-        pos += 1
-        total |= (b & 0x7F) << shift
-        shift += 7
-        if b < 0x80:
-            break
-    out = bytearray()
-    n = len(data)
-    while pos < n:
-        tag = data[pos]
-        pos += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                nbytes = ln - 59
-                ln = int.from_bytes(data[pos : pos + nbytes], "little")
-                pos += nbytes
-            ln += 1
-            out += data[pos : pos + ln]
-            pos += ln
-            continue
-        if kind == 1:  # copy with 1-byte offset
-            ln = ((tag >> 2) & 0x7) + 4
-            off = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif kind == 2:  # 2-byte offset
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(data[pos : pos + 2], "little")
-            pos += 2
-        else:  # 4-byte offset
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(data[pos : pos + 4], "little")
-            pos += 4
-        if off == 0 or off > len(out):
-            raise ValueError("corrupt snappy stream: bad copy offset")
-        start = len(out) - off
-        if off >= ln:
-            out += out[start : start + ln]
-        else:  # overlapping copy: byte-at-a-time semantics
-            for i in range(ln):
-                out.append(out[start + i])
-    if len(out) != total:
-        raise ValueError(
-            f"corrupt snappy stream: expected {total} bytes, got {len(out)}"
-        )
-    return bytes(out)
 
 
 # --- pure-Python LZO1X decoder ----------------------------------------------------
@@ -941,11 +840,7 @@ def _compress_block(block: bytes, kind: CompressionKind, level: int) -> bytes:
         c = zlib.compressobj(level, zlib.DEFLATED, -15)  # raw deflate
         return c.compress(block) + c.flush()
     if kind == CompressionKind.SNAPPY:
-        if _PA_SNAPPY is not None:
-            return _PA_SNAPPY.compress(block).to_pybytes()
-        if _HAVE_SNAPPY:
-            return snappy.compress(block)
-        return _snappy_compress_py(block)
+        return _PA_SNAPPY.compress(block).to_pybytes()
     if kind == CompressionKind.LZO:
         if _lzo is None:
             # vendored pure-Python LZO1X compressor: valid streams in
@@ -972,13 +867,16 @@ def _decompress_block(
     if kind == CompressionKind.ZLIB:
         return zlib.decompress(block, -15, bufsize)
     if kind == CompressionKind.SNAPPY:
-        if _PA_SNAPPY is not None:
-            return _PA_SNAPPY.decompress(
-                block, decompressed_size=_snappy_uncompressed_len(block)
-            ).to_pybytes()
-        if _HAVE_SNAPPY:
-            return snappy.decompress(bytes(block))
-        return _snappy_decompress_py(block)
+        size = _snappy_uncompressed_len(block)
+        # no snappy element expands more than 22-fold (a 3-byte copy
+        # yields at most 64 bytes): a larger size is a damaged preamble,
+        # refused before it sizes the output buffer
+        if size > 22 * len(block):
+            raise ValueError(f"corrupt snappy block: {size} bytes from {len(block)}")
+        try:
+            return _PA_SNAPPY.decompress(block, decompressed_size=size).to_pybytes()
+        except OSError as e:  # pyarrow reports damaged input as an IO error
+            raise ValueError(f"corrupt snappy block: {e}") from e
     if kind == CompressionKind.LZO:
         if _lzo is None:
             # vendored pure-Python LZO1X decoder: slow but always present,

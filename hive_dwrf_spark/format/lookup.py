@@ -30,13 +30,13 @@ key BATCHES, so this module does both halves in one pass:
 Parses and decodes amortize across CALLS, not only within one batch:
 every file that holds keys is served from a process-wide open DwrfFile
 handle, so its footer, stripe footers and ROW_INDEX are parsed once, and
-stride decodes go through the handle's decoded-stride LRU — a hot stride
-is decoded once for all calls and threads. File routing reads only the
-footer summaries of the table catalog (plans.file_plans, the cache the
-DataSource scan plans from), and a handle is opened only for a file
-whose summary admits a key: a cold call parses every missing footer on
-the plan pool without keeping it open, so the handle LRU holds the key
-holders, not the whole directory, and a directory of more files than
+stride decodes go through the decoded-stride LRU the handles share — a
+hot stride is decoded once for all calls and threads. File routing reads
+only the footer summaries of the table catalog (plans.file_plans, the
+cache the DataSource scan plans from), and a handle is opened only for a
+file whose summary admits a key: a cold call parses every missing footer
+on the plan pool without keeping it open, so the handle LRU holds the
+key holders, not the whole directory, and a directory of more files than
 _HANDLES_MAX keeps its handles as long as the files a call reads fit.
 
   identity : a handle is reused while (path, get_fs(path).stat_key(path))
@@ -52,12 +52,14 @@ _HANDLES_MAX keeps its handles as long as the files a call reads fit.
              no compressed bytes, so none of this grows with the file.
              The decompressed blocks of every decoder in the process,
              those of these handles included, stay within one
-             _StripeDecoder._BLK_CACHE_BUDGET per process (oldest first
-             out), so idle handles hand their share to the busy ones. The
-             decoded strides of all handles stay within one
-             SPARK_GRAFT_STRIDE_CACHE_MB budget — after each file a call
-             decodes from, the least recently used handles' strides are
-             evicted first. cache_bytes() reports what the handles hold.
+             _StripeDecoder._BLK_CACHE_BUDGET per process, and the decoded
+             strides of these handles within one stride cache
+             (_STRIDES) of SPARK_GRAFT_STRIDE_CACHE_MB; both evict the
+             least recently used entry first on every insert, so idle
+             handles hand their share to the busy ones. A user-held
+             DwrfFile has a stride cache of its own, so neither side's
+             churn evicts the other's hot strides. cache_bytes() reports
+             what the handles hold.
   lifetime : the cache owns its handles; callers never close them. An
              evicted handle is dropped, not closed, because another
              thread may be mid-read; its file closes with the last
@@ -85,8 +87,8 @@ from .reader import (
     _corrupt_guard,
     _gatherer,
     _join,
+    _LruCache,
     _resolve_field,
-    stride_cache_budget,
 )
 
 #: open handles kept across calls, one per file
@@ -96,6 +98,8 @@ _HANDLES_MAX = 128
 # reads stay outside it.
 _HANDLES: "OrderedDict[str, tuple[tuple, DwrfFile]]" = OrderedDict()
 _HANDLES_LOCK = threading.Lock()
+#: the decoded strides of every handle above, under one budget
+_STRIDES = _LruCache()
 
 
 def shared_handle(path: str, ident: tuple | None = None) -> tuple[DwrfFile, bool]:
@@ -109,7 +113,7 @@ def shared_handle(path: str, ident: tuple | None = None) -> tuple[DwrfFile, bool
         if hit is not None and hit[0] == ident:
             _HANDLES.move_to_end(path)
             return hit[1], False
-    f = DwrfFile(path)  # a failed open raises here and caches nothing
+    f = DwrfFile(path, _strides=_STRIDES)  # a failed open caches nothing
     with _HANDLES_LOCK:
         hit = _HANDLES.get(path)
         if hit is not None and hit[0] == ident:  # a concurrent open won
@@ -123,18 +127,6 @@ def shared_handle(path: str, ident: tuple | None = None) -> tuple[DwrfFile, bool
     if winner is not f:
         f.close()  # never shared: no other thread can hold it
     return winner, True
-
-
-def _trim_decoded() -> None:
-    """Hold the decoded strides of all cached handles within one stride
-    cache budget, evicting from the least recently used handles first."""
-    with _HANDLES_LOCK:
-        handles = [f for _, f in _HANDLES.values()]
-    excess = sum(f._stride_bytes for f in handles) - stride_cache_budget()
-    for f in handles:
-        if excess <= 0:
-            break
-        excess -= f._stride_cache_trim(excess)
 
 
 def cache_bytes() -> dict[str, int]:
@@ -303,11 +295,9 @@ def lookup_keys(
                         arrays = f._point_window(dec, i, s_idx, tops, {key_tid: karr})
                         for (name, _), arr in zip(tops, arrays):
                             out_chunks.setdefault(name, []).append(gather(arr))
-        _trim_decoded()
-    if schema is None:  # no file held keys: the projection's schema
-        f, was_opened = shared_handle(files[0], idents[files[0]])
-        opened += was_opened
-        schema = f.projected_schema(columns)
+    if schema is None:  # no file held keys: the projection's schema,
+        with DwrfFile(files[0]) as f:  # from a handle the LRU never holds
+            schema = f.projected_schema(columns)
     if trace is not None:
         trace["files_opened"] = opened
     return _join([out_chunks.get(field.name, []) for field in schema], schema)

@@ -18,6 +18,7 @@ import itertools
 import os
 import threading
 import weakref
+from collections import OrderedDict
 from typing import Callable
 
 import numpy as np
@@ -234,50 +235,76 @@ def _prune_field(types, ids: set[int], field: pa.Field, tid: int) -> pa.Field:
     return field
 
 
-class _BlockCache:
-    """The process's decompressed blocks (_StripeDecoder._block), shared by
-    every decoder of every handle under one byte budget, as the
-    reference's seek path keeps one decompressed buffer per open stream
-    however many readers are open. Entries are keyed (decoder token,
-    column, stream kind, block offset) and valued (block, offset of the
-    next block); the oldest insert is evicted first.
+class _LruCache:
+    """A byte-budgeted LRU cache of the point-read path, shared by every
+    thread. Three instances: the process's decompressed blocks (_BLOCKS,
+    _StripeDecoder._block) under one budget for every decoder of every
+    handle, as the reference's seek path keeps one decompressed buffer per
+    open stream however many readers are open; the decoded strides of
+    each user-held DwrfFile; and the decoded strides shared by every
+    serving handle of lookup.shared_handle. The two stride instances each
+    take SPARK_GRAFT_STRIDE_CACHE_MB: with one budget for both, a user
+    handle's churn through cold strides evicted the serving handles' hot
+    key strides.
 
-    A get is one dict lookup and takes no lock; an insert, an eviction or
-    a drop holds the cache's lock, never across a read or an inflate. A
-    decoder's blocks leave with the decoder (drop, run by its finalizer),
-    so the cache holds no reference to a decoder or a handle."""
+    A key starts with its owner's token (owner()); the first insert of a
+    key wins, and a put evicts the least recently used entries past the
+    budget it is given. A get, a put, an eviction and a drop each hold
+    the cache's lock, never across a read, an inflate or a decode. An
+    owner's entries leave with the owner (drop, run by its finalizer), so
+    the cache holds no reference to a decoder or a handle."""
 
     def __init__(self) -> None:
         self._lock = threading.Lock()
-        self.entries: dict[tuple[int, int, int, int], tuple[np.ndarray, int]] = {}
+        # key -> (value, bytes), least recently used first
+        self.entries: OrderedDict = OrderedDict()
         self.nbytes = 0
-        self._owned: dict[int, int] = {}  # decoder token -> bytes cached
+        self._owned: dict[int, int] = {}  # owner token -> bytes cached
         # tokens dropped while the lock was held elsewhere (another
         # thread, or a GC pass inside this cache's own critical section)
         self._dropped: list[int] = []
 
+    def owner(self, obj) -> int:
+        """A new owner token, whose entries leave when `obj` is collected."""
+        token = next(_OWNER_TOKENS)
+        weakref.finalize(obj, self.drop, token)
+        return token
+
     def owned(self, token: int) -> int:
-        """Bytes cached for the decoder with `token`."""
+        """Bytes cached under the owner `token`."""
         return self._owned.get(token, 0)
 
-    def put(self, key, entry: tuple[np.ndarray, int], budget: int):
-        """Insert `entry` under `key` and evict the oldest entries past
-        `budget` bytes; returns the cached entry (a concurrent decoder's,
-        if one won the race)."""
+    def get(self, key):
+        """The value cached under `key`, now the most recently used, or
+        None."""
+        with self._lock:
+            hit = self.entries.get(key)
+            if hit is None:
+                return None
+            self.entries.move_to_end(key)
+            return hit[0]
+
+    def put(self, key, value, nbytes: int, budget: int):
+        """Insert `value` of `nbytes` under `key` and evict the least
+        recently used entries past `budget` bytes; returns the cached
+        value (a concurrent decoder's, if one won the race). A value
+        larger than the budget is returned uncached, since it would evict
+        everything."""
+        if nbytes > budget:
+            return value
         with self._lock:
             self._forget_dropped()
             won = self.entries.get(key)
             if won is not None:
-                return won
-            self._add(key, entry)
+                return won[0]
+            self._add(key, (value, nbytes))
             while self.nbytes > budget:
-                old_key = next(iter(self.entries))
-                self._remove(old_key, self.entries.pop(old_key))
-        return entry
+                self._remove(*self.entries.popitem(last=False))
+        return value
 
     def drop(self, token: int) -> None:
-        """Remove the blocks of the decoder with `token`. Never waits for
-        the lock: when it is taken, the next put removes them."""
+        """Remove the entries of the owner `token`. Never waits for the
+        lock: when it is taken, the next put removes them."""
         self._dropped.append(token)
         if self._lock.acquire(blocking=False):
             try:
@@ -287,19 +314,19 @@ class _BlockCache:
 
     def _add(self, key, entry) -> None:
         self.entries[key] = entry
-        self.nbytes += entry[0].nbytes
-        self._owned[key[0]] = self._owned.get(key[0], 0) + entry[0].nbytes
+        self.nbytes += entry[1]
+        self._owned[key[0]] = self._owned.get(key[0], 0) + entry[1]
 
     def _remove(self, key, entry) -> None:
-        self.nbytes -= entry[0].nbytes
-        left = self._owned[key[0]] - entry[0].nbytes
+        self.nbytes -= entry[1]
+        left = self._owned[key[0]] - entry[1]
         if left:
             self._owned[key[0]] = left
         else:
             del self._owned[key[0]]
 
     def _forget_dropped(self) -> None:
-        """Remove the blocks of the dropped decoders. Caller holds _lock."""
+        """Remove the entries of the dropped owners. Caller holds _lock."""
         while self._dropped:
             token = self._dropped.pop()
             if token in self._owned:
@@ -307,9 +334,9 @@ class _BlockCache:
                     self._remove(key, self.entries.pop(key))
 
 
-_BLOCKS = _BlockCache()
-#: one token per decoder, so block keys never alias across decoders
-_DECODER_TOKENS = itertools.count()
+#: one token per cache owner, so keys never alias across owners
+_OWNER_TOKENS = itertools.count()
+_BLOCKS = _LruCache()
 
 
 def block_cache_bytes() -> int:
@@ -334,7 +361,7 @@ class _StripeDecoder:
     _COALESCE_GAP = 64 * 1024
     #: if included streams cover more than this fraction, read eagerly
     _EAGER_FRACTION = 0.75
-    #: byte budget of the decompressed blocks per process (_BlockCache),
+    #: byte budget of the decompressed blocks per process (_BLOCKS),
     #: over every decoder of every handle. Point reads keep no compressed
     #: bytes (see _raw_slice), so this bounds all the stream data the
     #: decoders hold outside their whole-stream memos, however large the
@@ -378,7 +405,8 @@ class _StripeDecoder:
         self._bufsize = reader.block_size or DEFAULT_COMPRESSION_BLOCK_SIZE
         # Memo caches. A point-lookup decoder is shared by every thread
         # reading through its handle, so every cache follows one rule:
-        # lookups are single dict gets (no lock); an insert, an eviction or
+        # lookups are single dict gets (no lock), except in the block
+        # cache, whose LRU touch takes its lock; an insert, an eviction or
         # a byte count happens under a lock (the handle's, or the block
         # cache's for blocks), which is never held across a decode. An
         # entry, once inserted, never changes. _cache (whole streams),
@@ -400,8 +428,7 @@ class _StripeDecoder:
         # without them every point lookup re-ran zlib over bytes a previous
         # lookup already inflated — measured ~50% of read_row wall time on
         # the sf0.1 lookup table. They leave the cache with the decoder.
-        self._token = next(_DECODER_TOKENS)
-        weakref.finalize(self, _BLOCKS.drop, self._token)
+        self._token = _BLOCKS.owner(self)
         # per-thread decode scratch (present mask handoff to stride-dict
         # decode) so columns can decode concurrently
         self._tls = threading.local()
@@ -534,7 +561,7 @@ class _StripeDecoder:
         its stream's byte range raises DwrfCorruptError rather than
         reading the neighbouring stream."""
         ck = (self._token, col, int(kind), p)
-        hit = _BLOCKS.entries.get(ck)
+        hit = _BLOCKS.get(ck)
         if hit is not None:
             return hit
         rng_off, rng_len = self._ranges[(col, int(kind))]
@@ -563,7 +590,8 @@ class _StripeDecoder:
                 ),
                 dtype=np.uint8,
             )
-        return _BLOCKS.put(ck, (part, p + framed), self._BLK_CACHE_BUDGET)
+        budget = self._BLK_CACHE_BUDGET
+        return _BLOCKS.put(ck, (part, p + framed), part.nbytes, budget)
 
     def _window(self, col, kind, blk, off, need) -> np.ndarray:
         """`need` bytes of the decompressed stream (fewer at its end) from
@@ -1206,7 +1234,8 @@ def _resolve_field(name: str, names: list[str]) -> str | None:
 
 
 def stride_cache_budget() -> int:
-    """Byte budget of a handle's decoded-stride LRU
+    """Byte budget of a decoded-stride cache: that of one user-held
+    handle, or the one the serving handles share
     (SPARK_GRAFT_STRIDE_CACHE_MB, default 64)."""
     return env_int("SPARK_GRAFT_STRIDE_CACHE_MB", 64) << 20
 
@@ -1214,7 +1243,15 @@ def stride_cache_budget() -> int:
 class DwrfFile:
     """Random-access DWRF file reader."""
 
-    def __init__(self, path: str, verify_checksums: bool = False):
+    def __init__(
+        self,
+        path: str,
+        verify_checksums: bool = False,
+        *,
+        _strides: _LruCache | None = None,
+    ):
+        """`_strides` is the decoded-stride cache to share (the serving
+        handles'); by default the handle has its own."""
         from .fs import get_fs
 
         self.path = path
@@ -1228,28 +1265,27 @@ class DwrfFile:
         self._verify_on_read = verify_checksums
         self._verified_stripes: set[int] = set()
         self._verify_triples: list[tuple[int, int, int]] | None = None
-        # The handle's one lock. It guards the handle's shared caches of
-        # the point-lookup path: the decoder LRU and decoded-stride LRU
-        # below, and the dictionary memos of the decoders (_StripeDecoder;
-        # their decompressed blocks are the process-wide _BLOCKS', under
-        # its own lock). It guards bookkeeping and IO, never a decode.
+        # The handle's one lock. It guards the handle's decoder LRU below
+        # and the dictionary memos of the decoders (_StripeDecoder). The
+        # decompressed blocks and decoded strides live in _LruCache
+        # instances, under their own locks. It guards bookkeeping and IO,
+        # never a decode.
         self._lock = threading.Lock()
         # point-read decoder reuse (_point_decoder, for read_row,
         # read_rows, read_rows_at and lookup_keys): (stripe, projection)
         # -> no-prefetch _StripeDecoder with warmed dictionary/index caches
         self._point_decoders: dict = {}
-        # decoded-stride-array LRU shared by all point lookups on this
-        # handle: (stripe, type_id, s_idx, kept struct fields) -> pa.Array
-        # (_cached_column). The serving
-        # steady state re-reads a hot working set, and under concurrent
-        # clients EVERY thread used to re-decode the same stride (the
-        # r8-measured 9.8 ms/lookup at 32 clients vs 1.8 ms/row batched);
-        # with the arrays cached a repeat hit is a dict move + a gather.
-        # Byte-budgeted (SPARK_GRAFT_STRIDE_CACHE_MB, default 64) so a
-        # wide scan through cold strides can't pin the heap.
-        self._stride_arrays: dict = {}
-        self._stride_bytes = 0
-        self._stride_budget = stride_cache_budget()
+        # decoded strides of all point lookups on this handle, keyed
+        # (token, stripe, type_id, s_idx, kept struct fields) -> pa.Array
+        # (_cached_column). The serving steady state re-reads a hot
+        # working set, and under concurrent clients EVERY thread used to
+        # re-decode the same stride (the r8-measured 9.8 ms/lookup at 32
+        # clients vs 1.8 ms/row batched); with the arrays cached a repeat
+        # hit is an LRU touch + a gather. Byte-budgeted
+        # (stride_cache_budget) so a wide scan through cold strides can't
+        # pin the heap.
+        self._strides = _LruCache() if _strides is None else _strides
+        self._token = self._strides.owner(self)
         self._f = get_fs(path).open(path, "rb")
         try:
             self._read_tail(path)
@@ -1889,54 +1925,21 @@ class DwrfFile:
                 self._point_decoders.pop(next(iter(self._point_decoders)))
         return dec
 
-    def _stride_cache_get(self, key):
-        with self._lock:
-            arr = self._stride_arrays.pop(key, None)
-            if arr is not None:  # LRU touch: reinsert at the back
-                self._stride_arrays[key] = arr
-            return arr
-
-    def _stride_cache_put(self, key, arr) -> None:
-        nbytes = arr.nbytes
-        if nbytes > self._stride_budget:
-            return  # a single oversized array would evict everything
-        with self._lock:
-            if key in self._stride_arrays:  # concurrent decoder won
-                return
-            self._stride_arrays[key] = arr
-            self._stride_bytes += nbytes
-            self._stride_evict_to(self._stride_budget)
-
-    def _stride_evict_to(self, target: int) -> None:
-        """Evict from the FRONT until at most `target` bytes stay (dict
-        preserves insertion order; a hit reinserts at the back, so the
-        front is least-recent). Caller holds _lock."""
-        while self._stride_bytes > target and self._stride_arrays:
-            old = self._stride_arrays.pop(next(iter(self._stride_arrays)))
-            self._stride_bytes -= old.nbytes
-
-    def _stride_cache_trim(self, nbytes: int) -> int:
-        """Evict least-recent arrays until `nbytes` are freed or the cache
-        is empty; returns the bytes freed."""
-        with self._lock:
-            before = self._stride_bytes
-            self._stride_evict_to(before - nbytes)
-            return before - self._stride_bytes
-
     def cache_bytes(self) -> dict[str, int]:
         """Bytes this handle holds for point lookups, per cache layer:
-        decoded strides (at most SPARK_GRAFT_STRIDE_CACHE_MB), decompressed
-        blocks of its at most 8 decoders (its share of the blocks of all
-        handles, at most _StripeDecoder._BLK_CACHE_BUDGET per process; see
-        block_cache_bytes), whole decompressed streams (row indexes,
-        dictionary streams, whole-stripe fallbacks) and decoded stripe
-        dictionaries."""
+        decoded strides (its entries in its stride cache, which holds at
+        most stride_cache_budget(): its own, or the one the serving handles
+        share), decompressed blocks of its at most 8 decoders (its share of
+        the blocks of all handles, at most _StripeDecoder._BLK_CACHE_BUDGET
+        per process; see block_cache_bytes), whole decompressed streams
+        (row indexes, dictionary streams, whole-stripe fallbacks) and
+        decoded stripe dictionaries."""
         with self._lock:
             decs = list(self._point_decoders.values())
-            out = {
-                "strides": self._stride_bytes,
-                "blocks": sum(_BLOCKS.owned(d._token) for d in decs),
-            }
+        out = {
+            "strides": self._strides.owned(self._token),
+            "blocks": sum(_BLOCKS.owned(d._token) for d in decs),
+        }
         out["streams"] = sum(a.nbytes for d in decs for a in list(d._cache.values()))
         out["dictionaries"] = sum(
             a.nbytes for d in decs for a in list(d._dicts.values())
@@ -1954,19 +1957,20 @@ class DwrfFile:
         if dec.decode_ids is not None:
             sub = frozenset(subtree_ids(self.types, tid))
             kept = None if sub <= dec.decode_ids else sub & dec.decode_ids
-        key = (i, tid, s_idx, kept)
-        arr = self._stride_cache_get(key)
+        cache = self._strides
+        key = (self._token, i, tid, s_idx, kept)
+        arr = cache.get(key)
         if arr is None:
             try:
                 arr = dec.decode_stride_column(tid, s_idx, stride, n_rows)
             except NoStridePositions:
-                key = (i, tid, -1, kept)
-                whole = self._stride_cache_get(key)
+                key = (self._token, i, tid, -1, kept)
+                whole = cache.get(key)
                 if whole is None:
                     whole = dec.decode_column(tid, n_rows)
-                    self._stride_cache_put(key, whole)
+                    cache.put(key, whole, whole.nbytes, stride_cache_budget())
                 return whole.slice(s_idx * stride, stride)
-            self._stride_cache_put(key, arr)
+            arr = cache.put(key, arr, arr.nbytes, stride_cache_budget())
         return arr
 
     def _stride_rows(self, stripe_index: int) -> int:

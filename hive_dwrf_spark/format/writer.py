@@ -638,10 +638,10 @@ class _StripeEncoder:
                 # STRIDE_DICTIONARY_LENGTH rle, side-dict SIZE, DATA rle,
                 # IN_DICTIONARY bitfield — _resolve_positions interleaves
                 # them by pos_kind_order
-                per_stride_bytes = np.zeros(n_strides, dtype=np.int64)
-                np.add.at(per_stride_bytes, ss_sorted, sd_lengths)
+                stride_nbytes = np.zeros(n_strides, dtype=np.int64)
+                np.add.at(stride_nbytes, ss_sorted, sd_lengths)
                 sd_byte_starts = np.concatenate(
-                    [np.zeros(1, dtype=np.int64), np.cumsum(per_stride_bytes)[:-1]]
+                    [np.zeros(1, dtype=np.int64), np.cumsum(stride_nbytes)[:-1]]
                 )
                 n_sd = len(sk_sorted)
                 self._pos_spec(

@@ -284,36 +284,43 @@ class TestLzoCompressor:
 
 
 class TestSnappyFallback:
-    """Pure-Python snappy (used when python-snappy is absent): decompress
-    handles all element kinds; compress emits valid literal-only streams."""
+    """Snappy blocks through the one snappy path (pyarrow's codec, behind
+    _compress_block/_decompress_block): every element kind decodes, and
+    damage raises ValueError, which the reader's guard types as
+    DwrfCorruptError."""
 
     def test_literal_roundtrip(self):
-        from hive_dwrf_spark.format.codecs import (
-            _snappy_compress_py,
-            _snappy_decompress_py,
-        )
+        from hive_dwrf_spark.format.codecs import _compress_block, _decompress_block
+        from hive_dwrf_spark.format.constants import CompressionKind
 
         for data in [b"", b"x", b"hello world" * 10, bytes(range(256)) * 300]:
-            assert _snappy_decompress_py(_snappy_compress_py(data)) == data
+            block = _compress_block(data, CompressionKind.SNAPPY, 6)
+            assert _decompress_block(block, CompressionKind.SNAPPY) == data
 
     def test_copy_elements(self):
-        from hive_dwrf_spark.format.codecs import _snappy_decompress_py
+        from hive_dwrf_spark.format.codecs import _decompress_block
+        from hive_dwrf_spark.format.constants import CompressionKind
 
         # hand-crafted: len=12, literal "abcd", copy1 offset=4 len=8
         # copy1 tag: kind 1, len-4=4 in bits 2-4, offset high bits 5-7 = 0
         stream = bytes([12, (3 << 2), *b"abcd", (1 | (4 << 2)), 4])
-        assert _snappy_decompress_py(stream) == b"abcdabcdabcd"
+        assert _decompress_block(stream, CompressionKind.SNAPPY) == b"abcdabcdabcd"
         # copy2: literal "ab", then offset=2 len=6 (overlapping)
         stream2 = bytes([8, (1 << 2), *b"ab", (2 | (5 << 2)), 2, 0])
-        assert _snappy_decompress_py(stream2) == b"abababab"
+        assert _decompress_block(stream2, CompressionKind.SNAPPY) == b"abababab"
 
     def test_corrupt_raises(self):
         import pytest as _pytest
 
-        from hive_dwrf_spark.format.codecs import _snappy_decompress_py
+        from hive_dwrf_spark.format.codecs import _decompress_block
+        from hive_dwrf_spark.format.constants import CompressionKind
 
-        with _pytest.raises(ValueError):
-            _snappy_decompress_py(bytes([4, (1 | (4 << 2)), 9]))  # offset > out
+        for stream in [
+            bytes([4, (1 | (4 << 2)), 9]),  # copy offset > output so far
+            bytes([0xFF, 0xFF, 0xFF, 0x7F, 0]),  # preamble past any expansion
+        ]:
+            with _pytest.raises(ValueError, match="corrupt snappy block"):
+                _decompress_block(stream, CompressionKind.SNAPPY)
 
     def test_snappy_file_roundtrip(self, tmp_path):
         import numpy as np
@@ -330,34 +337,6 @@ class TestSnappyFallback:
             got = f.read()
         assert got.column("k").to_pylist() == list(range(5000))
         assert got.column("s").to_pylist()[-1] == "v4999"
-
-
-class TestSnappyBackends:
-    """The pyarrow C++ snappy backend (the fast path) must be raw-format
-    interchangeable with the pure-python fallback in both directions."""
-
-    def test_cross_backend_blocks(self):
-        import pytest as _pytest
-
-        from hive_dwrf_spark.format.codecs import (
-            _PA_SNAPPY,
-            _snappy_compress_py,
-            _snappy_decompress_py,
-            _snappy_uncompressed_len,
-        )
-
-        if _PA_SNAPPY is None:
-            _pytest.skip("pyarrow snappy codec unavailable")
-        data = (b"the quick brown fox " * 500) + bytes(range(256)) * 4
-        pa_comp = _PA_SNAPPY.compress(data).to_pybytes()
-        py_comp = _snappy_compress_py(data)
-        assert _snappy_decompress_py(pa_comp) == data
-        assert (
-            _PA_SNAPPY.decompress(
-                py_comp, decompressed_size=_snappy_uncompressed_len(py_comp)
-            ).to_pybytes()
-            == data
-        )
 
 
 class TestNativeDecodeParity:

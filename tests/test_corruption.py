@@ -33,22 +33,20 @@ from hive_dwrf_spark.format import write_arrow_table
 from hive_dwrf_spark.format.reader import DwrfCorruptError, DwrfFile
 
 
-@pytest.fixture(scope="module")
-def victim(tmp_path_factory):
-    """Multi-stripe, multi-stride, nested-column, zlib-compressed file
-    plus its golden decode and raw bytes."""
-    p = str(tmp_path_factory.mktemp("corrupt") / "victim.dwrf")
+def _victim(p: str, n: int, **opts):
+    """Write a multi-stripe, multi-stride, nested-column file of `n` rows
+    to `p`; returns its path, raw bytes, golden decode and regions."""
     t = pa.table(
         {
-            "i": pa.array(range(30_000), type=pa.int64()),
-            "s": pa.array([f"str{i % 251}" for i in range(30_000)]),
+            "i": pa.array(range(n), type=pa.int64()),
+            "s": pa.array([f"str{i % 251}" for i in range(n)]),
             "lst": pa.array(
-                [[i % 7, i % 5] for i in range(30_000)],
+                [[i % 7, i % 5] for i in range(n)],
                 type=pa.list_(pa.int64()),
             ),
         }
     )
-    write_arrow_table(p, t, stripe_rows=8_000, row_index_stride=1_000)
+    write_arrow_table(p, t, stripe_rows=8_000, row_index_stride=1_000, **opts)
     raw = open(p, "rb").read()
     with DwrfFile(p) as f:
         golden = f.read()
@@ -72,6 +70,40 @@ def victim(tmp_path_factory):
         )
         regions.append(("tail", tail_start, len(raw)))
     return p, raw, golden, regions
+
+
+@pytest.fixture(scope="module")
+def victim(tmp_path_factory):
+    """A zlib-compressed victim plus its golden decode and raw bytes."""
+    return _victim(str(tmp_path_factory.mktemp("corrupt") / "victim.dwrf"), 30_000)
+
+
+@pytest.fixture(scope="module")
+def snappy_victim(tmp_path_factory):
+    """A snappy-compressed victim: pyarrow reports a damaged snappy block
+    as an OSError, which the codec must type as corruption."""
+    p = str(tmp_path_factory.mktemp("corrupt") / "snappy.dwrf")
+    return _victim(p, 50_000, compression="snappy")
+
+
+def _data_flips(regions, n: int, seed: int) -> list[int]:
+    """`n` byte offsets spread at random over the data regions."""
+    data = [(a, b) for name, a, b in regions if name == "data"]
+    picks = random.Random(seed).sample(range(sum(b - a for a, b in data)), n)
+    offs = []
+    for k in sorted(picks):
+        for a, b in data:
+            if k < b - a:
+                offs.append(a + k)
+                break
+            k -= b - a
+    return offs
+
+
+def _flip(tmp_path, raw: bytes, off: int, mask: int) -> str:
+    b_ = bytearray(raw)
+    b_[off] ^= mask
+    return _write(tmp_path, bytes(b_))
 
 
 def _write(tmp_path, data: bytes) -> str:
@@ -242,9 +274,13 @@ class TestRegionFuzz:
             except DwrfCorruptError:
                 pass
 
-    def test_point_lookup_surfaces_raise_typed(self, victim, tmp_path):
+    def test_point_lookup_surfaces_raise_typed(
+        self, victim, snappy_victim, tmp_path
+    ):
         """read_row / read_rows_at / read_rows on an index-corrupted
-        file: typed error or exact values, never fabrication."""
+        file: typed error or exact values, never fabrication. On a
+        snappy file with data flips (values may change, see the data-flip
+        test): typed error or every requested row."""
         _, raw, golden, regions = victim
         random.seed(13)
         name, a, b = next(r for r in regions if r[0] == "index")
@@ -262,22 +298,34 @@ class TestRegionFuzz:
                     assert t2.column("i").to_pylist() == [8_000, 8_001, 8_002]
             except DwrfCorruptError:
                 pass
+        _, raw, _, regions = snappy_victim
+        ids = [7, 8_001, 20_000, 33_333, 49_999]
+        for off in _data_flips(regions, 60, seed=23):
+            p = _flip(tmp_path, raw, off, 0x40)
+            try:
+                with DwrfFile(p) as f:
+                    assert f.read_rows_at(ids).num_rows == len(ids)
+                    assert len(f.read_row(41_234)) == 3
+                    assert f.read_rows(16_000, 3).num_rows == 3
+            except DwrfCorruptError:
+                pass
 
-    def test_data_flips_never_leak_untyped(self, victim, tmp_path):
+    def test_data_flips_never_leak_untyped(self, victim, snappy_victim, tmp_path):
         """Data-region flips: values may change (documented blind spot —
         no checksums in the format), but any structural consequence
         must still surface as DwrfCorruptError, and row COUNT must hold
-        for flips that decode."""
+        for flips that decode. Checked on a zlib and a snappy file."""
         _, raw, golden, regions = victim
         random.seed(17)
         offs = []
         for name, a, b in regions:
             if name == "data":
                 offs.extend(random.sample(range(a, b), 10))
-        for off in offs:
-            b_ = bytearray(raw)
-            b_[off] ^= 0x40
-            p = _write(tmp_path, bytes(b_))
+        cases = [(raw, golden, off) for off in offs]
+        _, raw, golden, regions = snappy_victim
+        cases += [(raw, golden, off) for off in _data_flips(regions, 60, seed=17)]
+        for raw, golden, off in cases:
+            p = _flip(tmp_path, raw, off, 0x40)
             try:
                 with DwrfFile(p) as f:
                     got = f.read()
@@ -285,10 +333,13 @@ class TestRegionFuzz:
             except DwrfCorruptError:
                 pass
 
-    def test_lookup_keys_on_damaged_directory(self, victim, tmp_path):
+    def test_lookup_keys_on_damaged_directory(
+        self, victim, snappy_victim, tmp_path
+    ):
         """The multi-file serving surface (lookup_keys): a damaged file
         in the directory raises DwrfCorruptError (or serves exact values
-        for flips its decode path never touches); contract errors stay
+        for flips its decode path never touches); a snappy file with data
+        flips raises it or serves a table; contract errors stay
         themselves."""
         from hive_dwrf_spark.format.lookup import lookup_keys
 
@@ -315,6 +366,18 @@ class TestRegionFuzz:
         (d / "b.dwrf").write_bytes(raw)
         with pytest.raises(KeyError):
             lookup_keys(str(d), "nope", [5])
+        _, raw, _, regions = snappy_victim
+        keys = list(range(0, 50_000, 997))
+        for n, off in enumerate(_data_flips(regions, 20, seed=29)):
+            d = tmp_path / f"serve_snappy_{n}"  # a new path: no cached handle
+            d.mkdir()
+            b_ = bytearray(raw)
+            b_[off] ^= 0x40
+            (d / "a.dwrf").write_bytes(bytes(b_))
+            try:
+                assert isinstance(lookup_keys(str(d), "i", keys), pa.Table)
+            except DwrfCorruptError:
+                pass
 
     def test_contract_errors_stay_contract_errors(self, victim):
         """The guard must not swallow caller mistakes into 'corrupt':

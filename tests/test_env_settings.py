@@ -11,6 +11,7 @@ import pytest
 
 from hive_dwrf_spark.format import DwrfFile, write_arrow_table
 from hive_dwrf_spark.format.env import env_int
+from hive_dwrf_spark.format.reader import stride_cache_budget
 
 BAD = ["eight", "1.5", "-3"]
 
@@ -33,10 +34,10 @@ def test_stride_cache_budget(raw, tmp_path, monkeypatch):
     write_arrow_table(p, pa.table({"k": pa.array([1, 2, 3], type=pa.int64())}))
     monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", raw)
     with pytest.warns(RuntimeWarning):
-        f = DwrfFile(p)
-    with f:
-        assert f._stride_budget == 64 << 20
+        assert stride_cache_budget() == 64 << 20
+    with DwrfFile(p) as f, pytest.warns(RuntimeWarning):
         assert f.read_row(1) == {"k": 2}
+        assert f.cache_bytes()["strides"] > 0  # cached under the default
 
 
 @pytest.mark.parametrize("raw", BAD)

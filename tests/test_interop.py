@@ -671,23 +671,6 @@ def test_foreign_snappy_blocks_decode(tmp_path):
     assert t.column("s").to_pylist() == ROWS_S2
 
 
-def test_hand_rolled_snappy_matches_fallback_decoder():
-    """The hand-rolled copy/literal elements are spec-valid snappy: the
-    pure-Python fallback decoder reproduces the plaintext regardless of
-    which codec the block path picked."""
-    from hive_dwrf_spark.format.codecs import _snappy_decompress_py
-
-    elements = (
-        bytes([(4 - 1) << 2]) + b"abcd"
-        + bytes([((12 - 1) << 2) | 2]) + (4).to_bytes(2, "little")
-        + bytes([(4 - 1) << 2]) + b"wxyz"
-        + bytes([((12 - 1) << 2) | 2]) + (4).to_bytes(2, "little")
-        + bytes([(4 - 1) << 2]) + b"pqpq"
-    )
-    blob = _uv(36) + elements
-    assert _snappy_decompress_py(blob) == "".join(ROWS_S2).encode()
-
-
 def _build_timestamp_file() -> bytes:
     """TIMESTAMP column with packed nanos (WriterImpl.formatNanos write
     side, LazyTimestampTreeReader.java:99-108 parseNanos decode table):

@@ -19,6 +19,7 @@ import pytest
 
 from hive_dwrf_spark.format import DwrfFile, lookup, write_arrow_table
 from hive_dwrf_spark.format.lookup import lookup_keys
+from hive_dwrf_spark.format.reader import _LruCache, stride_cache_budget
 
 
 def _nested_table(n: int) -> pa.Table:
@@ -46,17 +47,17 @@ def blocks(monkeypatch):
     their decompressed blocks there, so its totals count only them."""
     from hive_dwrf_spark.format import reader as reader_mod
 
-    cache = reader_mod._BlockCache()
+    cache = reader_mod._LruCache()
     monkeypatch.setattr(reader_mod, "_BLOCKS", cache)
     return cache
 
 
-def _assert_block_counts(cache) -> None:
-    """The block cache's byte counts, in total and per decoder, agree with
-    its entries: no insert or eviction lost an update."""
+def _assert_cache_counts(cache) -> None:
+    """An LRU cache's byte counts, in total and per owner, agree with its
+    entries: no insert or eviction lost an update."""
     per_token: Counter = Counter()
-    for key, (blk, _) in list(cache.entries.items()):
-        per_token[key[0]] += blk.nbytes
+    for key, (_, nbytes) in list(cache.entries.items()):
+        per_token[key[0]] += nbytes
     assert cache.nbytes == sum(per_token.values())
     assert cache._owned == dict(per_token)
 
@@ -202,22 +203,22 @@ class TestReadRowsAt:
         growing without bound."""
         with DwrfFile(nested_file) as f:
             first = f.read_row(1_234)
-            n_entries = len(f._stride_arrays)
-            assert n_entries > 0 and f._stride_bytes > 0
-            # repeat hit: same keys, same values, no new entries
+            held = f.cache_bytes()["strides"]
+            assert held > 0
+            # repeat hit: same keys, same values, nothing new cached
             again = f.read_row(1_234)
             assert again == first
-            assert len(f._stride_arrays) == n_entries
+            assert f.cache_bytes()["strides"] == held
             # neighbor row in the same stride: pure cache hit too
             f.read_row(1_235)
-            assert len(f._stride_arrays) == n_entries
+            assert f.cache_bytes()["strides"] == held
         # a 1-MB budget must bound the cache while answers stay exact
         monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
         with DwrfFile(nested_file) as f:
             rows = {}
             for r in (0, 8_000, 16_000, 24_000, 1_234):
                 rows[r] = f.read_row(r)
-            assert f._stride_bytes <= 1 << 20
+            assert 0 < f.cache_bytes()["strides"] <= stride_cache_budget() == 1 << 20
             assert rows[1_234] == first
 
     def test_concurrent_lookups_shared_handle_exact(self, nested_file):
@@ -397,6 +398,7 @@ class TestLookupHandleCache:
     @pytest.fixture(autouse=True)
     def fresh_cache(self, monkeypatch):
         monkeypatch.setattr(lookup, "_HANDLES", OrderedDict())
+        monkeypatch.setattr(lookup, "_STRIDES", _LruCache())
 
     @pytest.fixture
     def opens(self, monkeypatch):
@@ -478,7 +480,8 @@ class TestLookupHandleCache:
 
     def test_concurrent_calls_match_serial(self, four_parts, monkeypatch):
         """4 threads x 20 calls on shared handles, under a 1 MB budget so
-        evictions race with reads, give the serial answers."""
+        evictions race with reads, give the serial answers and leave the
+        shared stride cache's counts exact."""
         monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
         rng = np.random.default_rng(7)
         batches = [
@@ -513,22 +516,113 @@ class TestLookupHandleCache:
         for j, want in enumerate(serial):
             assert results[j].equals(want), j
         assert len(lookup._HANDLES) == 4
+        _assert_cache_counts(lookup._STRIDES)
+        assert 0 < lookup._STRIDES.nbytes <= 1 << 20
+
+    @staticmethod
+    def _wide(tmp_path, name: str = "wide") -> str:
+        """4 files whose strides each decode to ~100 KB of strings: one
+        file's strides alone fill a 1 MB budget."""
+        d = str(tmp_path / name)
+        os.makedirs(d)
+        for i in range(4):
+            _write_part(os.path.join(d, f"{i}.dwrf"), i * 10_000, 10_000, "x" * 200)
+        return d
 
     def test_decoded_bytes_bounded_across_handles(self, tmp_path, monkeypatch):
-        """Each handle alone fills its own budget, so only the shared bound
-        keeps the sum over all cached handles under one budget."""
-        d = str(tmp_path / "wide")
-        os.makedirs(d)
-        for i in range(4):  # ~100 KB of decoded strings per stride
-            _write_part(os.path.join(d, f"{i}.dwrf"), i * 10_000, 10_000, "x" * 200)
+        """Each handle alone would fill a budget, and the handles share one
+        stride cache, so the sum over all cached handles stays under one
+        budget."""
+        d = self._wide(tmp_path)
         monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
         keys = list(range(0, 40_000, 97))  # a key in every stride
         want = _reference(d, "k", keys)
         for _ in range(2):
             assert lookup_keys(d, "k", keys).equals(want)
-            held = [f._stride_bytes for _, f in lookup._HANDLES.values()]
+            held = [f.cache_bytes()["strides"] for _, f in lookup._HANDLES.values()]
             assert len(held) == 4 and sum(held) <= 1 << 20, held
             assert max(held) > 0
+
+    def test_lookup_strides_within_budget_after_every_put(
+        self, tmp_path, monkeypatch
+    ):
+        """The lookup handles' summed strides stay within one budget after
+        every insert, in the middle of a call too, not only between the
+        files a call reads."""
+        d = self._wide(tmp_path)
+        monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
+        cache = lookup._STRIDES
+        real_put = cache.put
+        sums: list[int] = []
+
+        def checked_put(*a):
+            out = real_put(*a)
+            sums.append(lookup.cache_bytes().get("strides", 0))
+            assert sums[-1] == cache.nbytes <= 1 << 20, sums[-1]
+            return out
+
+        monkeypatch.setattr(cache, "put", checked_put)
+        keys = list(range(0, 40_000, 97))
+        assert lookup_keys(d, "k", keys).equals(_reference(d, "k", keys))
+        # the puts of the files read later evicted those of earlier ones
+        assert len(sums) > 10 and max(sums) > (1 << 20) // 2
+
+    def test_user_and_lookup_strides_do_not_evict_each_other(
+        self, tmp_path, monkeypatch
+    ):
+        """A user-held handle has a stride cache of its own: churning its
+        strides past its budget evicts none of the lookup handles'
+        strides, and churning the lookup handles evicts none of its."""
+        d = self._wide(tmp_path)
+        monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
+        user_path = str(tmp_path / "user.dwrf")
+        _write_part(user_path, 0, 10_000, "y" * 200)
+        with DwrfFile(user_path) as user:
+            user.read_rows_at([5, 2_500])
+            lookup_keys(d, "k", [5, 12_500])
+            served = set(lookup._STRIDES.entries)
+            held = set(user._strides.entries)
+            assert served and held and user._strides is not lookup._STRIDES
+            # the user handle's churn: every stride, more than its budget
+            for r in range(0, 10_000, 500):
+                user.read_row(r)
+            assert user.cache_bytes()["strides"] <= 1 << 20
+            assert held - set(user._strides.entries)  # it evicted its own
+            assert set(lookup._STRIDES.entries) == served
+            # the lookup handles' churn: every stride of every file
+            held = set(user._strides.entries)
+            lookup_keys(d, "k", list(range(0, 40_000, 97)))
+            assert served - set(lookup._STRIDES.entries)
+            assert set(user._strides.entries) == held
+
+    def test_dropped_handle_leaves_no_shared_strides(self, four_parts):
+        """A handle dropped from the handle LRU and collected takes its
+        entries out of the shared stride cache; the others keep theirs."""
+        import gc
+
+        lookup_keys(four_parts, "k", [5, 15_000, 25_000, 35_000])
+        cache = lookup._STRIDES
+        tokens = {f._token for _, f in lookup._HANDLES.values()}
+        assert {key[0] for key in cache.entries} == tokens
+        _, dropped = lookup._HANDLES.popitem(last=False)[1]
+        token = dropped._token
+        del dropped
+        gc.collect()
+        assert {key[0] for key in cache.entries} == tokens - {token}
+        assert cache.owned(token) == 0
+        lookup._HANDLES.clear()
+        gc.collect()
+        assert cache.nbytes == 0 and not cache.entries
+
+    def test_absent_keys_with_columns_open_no_handle(self, four_parts):
+        """A projected lookup whose keys no file holds builds the empty
+        result's schema without a serving handle: none is opened or kept."""
+        before = OrderedDict(lookup._HANDLES)
+        trace = {}
+        got = lookup_keys(four_parts, "k", [99_999], columns=["v"], trace=trace)
+        assert got.num_rows == 0 and got.schema.names == ["v"]
+        assert trace["files_opened"] == 0 and trace["files_pruned"] == 4
+        assert lookup._HANDLES == before
 
     def test_handle_count_bounded(self, four_parts, monkeypatch):
         monkeypatch.setattr(lookup, "_HANDLES_MAX", 2)
@@ -658,7 +752,7 @@ class TestLookupHandleCache:
             lookup._HANDLES.clear()
             assert [r() for r in refs] == [None] * 4
             assert blocks.nbytes == 0 and not blocks.entries
-            _assert_block_counts(blocks)
+            _assert_cache_counts(blocks)
         finally:
             gc.enable()
 
@@ -695,7 +789,7 @@ class TestLookupHandleCache:
         tokens: set[int] = set()
 
         def check() -> None:
-            _assert_block_counts(blocks)
+            _assert_cache_counts(blocks)
             shares = sum(f.cache_bytes()["blocks"] for f in user)
             shares += lookup.cache_bytes().get("blocks", 0)
             assert shares == blocks.nbytes <= budget, (shares, blocks.nbytes)
@@ -1126,7 +1220,7 @@ def test_threads_share_handle_caches(mixed_file, monkeypatch, blocks):
     assert not errors, errors
     assert not mismatches, mismatches
     assert len(built) > 8
-    _assert_block_counts(blocks)
+    _assert_cache_counts(blocks)
     assert blocks.nbytes <= 16 * 1024
     del shared, point_decoder, recording
     gc.collect()  # the handle's patched method refers to the handle
@@ -1201,7 +1295,7 @@ def test_point_reads_hold_no_compressed_bytes(tmp_path, monkeypatch, blocks):
     assert not errors, errors
     assert not wrong, wrong[:3]
     assert reads
-    _assert_block_counts(blocks)  # no lost block-cache update
+    _assert_cache_counts(blocks)  # no lost block-cache update
 
     def root(buf):
         while True:
