@@ -15,17 +15,26 @@ key BATCHES, so this module does both halves in one pass:
   stride level : within a surviving file, the key column's ROW_INDEX
                  per-stride statistics prune strides the same way;
   decode level : each candidate stride of the key column is read and
-                 matched against only the keys its own statistics admit
-                 (one numpy pass for an integer column without NULLs,
-                 Arrow's is_in otherwise), and only the matching rows'
-                 projected columns are gathered: a slice for a contiguous
-                 run of rows, one take for a scattered one. Both reads
-                 go through DwrfFile's one point-read primitive
-                 (_point_window, which read_row, read_rows and
-                 read_rows_at use too), the key's stride passed in so a
-                 projected key column is not read twice; a column
-                 without seek positions comes from its whole-stripe
-                 decode, sliced to the stride.
+                 matched against only the keys its own statistics admit,
+                 and only the matching rows' projected columns are
+                 gathered: a slice for a contiguous run of rows, one take
+                 for a scattered one. A stride entry is an Arrow array,
+                 or, for a NULL-free stride of a DICTIONARY SHORT/INT/
+                 LONG/STRING column, its ids over the stripe dictionary
+                 (reader._DictStride), whose gathered rows alone are
+                 looked up, with one Arrow build per output column. A
+                 key stride kept as ids is matched by id: the call's
+                 keys map to ids of the stripe's dictionary once, by
+                 searchsorted, when that dictionary ascends (this
+                 writer's do; a foreign writer's may not, and then the
+                 stride's values are matched). Values are matched with
+                 one numpy pass for an integer column without NULLs,
+                 Arrow's is_in otherwise. Both reads go through
+                 DwrfFile's one point-read primitive (_point_window,
+                 which read_row, read_rows and read_rows_at use too), the
+                 key's stride passed in so a projected key column is not
+                 read twice; a column without seek positions comes from
+                 its whole-stripe decode, sliced to the stride.
 
 Parses and decodes amortize across CALLS, not only within one batch:
 every file that holds keys is served from a process-wide open DwrfFile
@@ -46,10 +55,12 @@ _HANDLES_MAX keeps its handles as long as the files a call reads fit.
              size or mtime and is reopened, but an in-place rewrite
              keeping both would be served from the stale handle.
   bounds   : at most _HANDLES_MAX handles stay open (least recently
-             served dropped first). A handle holds decoded strides, decompressed
-             blocks in its at most 8 stripe decoders, and the stripes'
-             dictionaries, row indexes and whole-stream decodes; it keeps
-             no compressed bytes, so none of this grows with the file.
+             served dropped first). A handle holds decoded strides (Arrow
+             arrays, or dictionary ids charged their own bytes only),
+             decompressed blocks in its at most 8 stripe decoders, and
+             the stripes' dictionaries (each once, however many strides
+             read it), row indexes and whole-stream decodes; it keeps no
+             compressed bytes, so none of this grows with the file.
              The decompressed blocks of every decoder in the process,
              those of these handles included, stay within one
              _StripeDecoder._BLK_CACHE_BUDGET per process, and the decoded
@@ -84,6 +95,7 @@ from .fs import get_fs
 from .plans import FilePlan, data_files, file_plans
 from .reader import (
     DwrfFile,
+    _DictStride,
     _corrupt_guard,
     _gatherer,
     _join,
@@ -143,14 +155,13 @@ def cache_bytes() -> dict[str, int]:
     return total
 
 
-def _keys_in_range(keys_sorted: list, mn, mx) -> list:
-    """The sorted keys inside [mn, mx]. Missing bounds (all-null column,
-    statless legacy file) can never prune: all keys."""
+def _key_bounds(keys_sorted: list, mn, mx) -> tuple[int, int]:
+    """(lo, hi): keys_sorted[lo:hi] are the sorted keys inside [mn, mx].
+    Missing bounds (all-null column, statless legacy file) can never
+    prune: all keys."""
     if mn is None or mx is None:
-        return keys_sorted
-    return keys_sorted[
-        bisect.bisect_left(keys_sorted, mn) : bisect.bisect_right(keys_sorted, mx)
-    ]
+        return 0, len(keys_sorted)
+    return bisect.bisect_left(keys_sorted, mn), bisect.bisect_right(keys_sorted, mx)
 
 
 def _may_hold(plan: FilePlan, key_column: str, keys_sorted: list) -> bool:
@@ -160,18 +171,32 @@ def _may_hold(plan: FilePlan, key_column: str, keys_sorted: list) -> bool:
     if name is None or not plan.stripe_sizes:
         return False
     st = plan.stats_by_name[name]
-    return st is None or bool(_keys_in_range(keys_sorted, st.minimum, st.maximum))
+    if st is None:
+        return True
+    lo, hi = _key_bounds(keys_sorted, st.minimum, st.maximum)
+    return lo < hi
 
 
-def _match_offsets(karr: pa.Array, keys: list, key_set: pa.Array) -> np.ndarray:
-    """Sorted positions in `karr` whose value is one of `keys` (nulls
-    never match). `keys` holds at least the sorted keys that may occur in
-    `karr`; `key_set` is every key of the call, as an Arrow array.
+def _match_offsets(karr, keys: list, key_set: pa.Array, ids=None) -> np.ndarray:
+    """Sorted positions in the key stride `karr` whose value is one of
+    `keys` (nulls never match). `keys` holds at least the sorted keys that
+    may occur in `karr`; `key_set` is every key of the call, as an Arrow
+    array.
 
-    An integer window without NULLs matched against integer keys is one
-    numpy pass over its zero-copy view: each of the Arrow calls the
-    is_in path makes drops the GIL, which is dear under concurrent
-    clients."""
+    A lazy dictionary stride (_DictStride) matches ids, not values: `ids`
+    are the dictionary ids of `keys` (-1 for a key the dictionary does not
+    hold; see _DictStride.key_ids), or None when its dictionary cannot map
+    them, and then its values are matched. An integer window without
+    NULLs matched against integer keys is one numpy pass over its
+    zero-copy view: each of the Arrow calls the is_in path makes drops
+    the GIL, which is dear under concurrent clients."""
+    if type(karr) is _DictStride:
+        if ids is not None:
+            ids = ids[ids >= 0]
+            if len(ids) == 1:
+                return np.flatnonzero(karr.ids == ids[0])
+            return np.flatnonzero(np.isin(karr.ids, ids))
+        karr = karr.to_arrow()
     if (
         pa.types.is_integer(karr.type)
         and karr.null_count == 0
@@ -277,19 +302,27 @@ def lookup_keys(
                     mins, maxs = bounds
                     alive = []
                     for s in range(n_strides):
-                        admitted = _keys_in_range(key_list, mins[s], maxs[s])
-                        if admitted:
-                            alive.append((s, admitted))
+                        lo, hi = _key_bounds(key_list, mins[s], maxs[s])
+                        if lo < hi:
+                            alive.append((s, lo, hi))
                 else:
-                    alive = [(s, key_list) for s in range(n_strides)]
-                for s_idx, admitted in alive:
+                    alive = [(s, 0, len(key_list)) for s in range(n_strides)]
+                key_ids = None  # the keys as ids of this stripe's dictionary
+                for s_idx, lo, hi in alive:
                     if trace is not None:
                         trace["strides_scanned"] += 1
                     # --- decode level: match the key window, then gather
                     # the projected columns of the same stride, reusing
                     # the key window ---
                     (karr,) = f._point_window(dec, i, s_idx, [(key_name, key_tid)])
-                    hits = _match_offsets(karr, admitted, key_set)
+                    if key_ids is None and type(karr) is _DictStride:
+                        key_ids = karr.key_ids(key_list)  # once per stripe
+                    hits = _match_offsets(
+                        karr,
+                        key_list[lo:hi],
+                        key_set,
+                        None if key_ids is None else key_ids[lo:hi],
+                    )
                     if len(hits):
                         gather = _gatherer(hits)
                         arrays = f._point_window(dec, i, s_idx, tops, {key_tid: karr})

@@ -84,30 +84,101 @@ def _large_utf8(lengths: np.ndarray, data: bytes) -> pa.Array:
     )
 
 
-def _gatherer(offs) -> Callable[[pa.Array], pa.Array]:
+class _DictStride:
+    """A decoded stride of a top-level, NULL-free DICTIONARY column
+    (SHORT, INT, LONG or STRING) as the point reads cache it: the
+    narrowest unsigned ids over the stripe dictionary, which the stripe
+    decoder memoizes once for all its strides. Like the reference's lazy
+    dictionary readers (LazyStringDictionaryTreeReader.java:60-109), a
+    read looks up only the rows it gathers. `values` is the dictionary a
+    numpy gather indexes (ints in the column's dtype, strings as str
+    objects), `arrow` the one an Arrow take indexes (strings only), and
+    `ascending` whether `values` ascend strictly, so that keys map to ids
+    by searchsorted. A cache entry is charged for the ids only
+    (nbytes): the dictionary is the decoder's, and the entry leaves the
+    cache when its decoder leaves the handle (DwrfFile._point_decoder)."""
+
+    __slots__ = ("ids", "values", "arrow", "ascending", "type", "nbytes")
+
+    def __init__(self, ids, values, arrow, ascending: bool, type_: pa.DataType):
+        self.ids = ids
+        self.values = values
+        self.arrow = arrow
+        self.ascending = ascending
+        self.type = type_
+        self.nbytes = ids.nbytes
+
+    def gather(self, sel) -> tuple[np.ndarray, np.ndarray]:
+        """The rows `sel` (a slice or an index array) of a small gather, as
+        (dictionary values, ids): _join looks the ids of a column's pieces
+        up at once, and builds them into Arrow once."""
+        return self.values, self.ids[sel]
+
+    def to_arrow(self, sel=slice(None)) -> pa.Array:
+        """The rows `sel` as an Arrow array, without a Python object per
+        row: a numpy gather for ints, one take over the dictionary for
+        strings."""
+        if self.arrow is None:
+            return pa.array(self.values[self.ids[sel]], type=self.type)
+        return self.arrow.take(pa.array(self.ids[sel])).cast(self.type)
+
+    def key_ids(self, keys: list) -> np.ndarray | None:
+        """The id of each of the sorted `keys` in the dictionary (-1 for a
+        key it does not hold), or None where searchsorted cannot map them:
+        a dictionary that does not ascend, as a foreign writer may leave
+        it, or keys of another kind than the column's values."""
+        want = str if self.arrow is not None else int
+        if not self.ascending or not all(type(k) is want for k in keys):
+            return None
+        try:
+            kv = np.array(keys, dtype=object if want is str else np.int64)
+        except OverflowError:
+            return None
+        pos = np.searchsorted(self.values, kv)
+        held = self.values[np.minimum(pos, len(self.values) - 1)] == kv
+        return np.where(held, pos, -1)
+
+
+def _gatherer(offs) -> Callable:
     """A function gathering the rows at the sorted, distinct offsets
-    `offs` from an array. Point lookups gather from many arrays, and under
-    concurrent clients each Arrow call that drops the GIL waits to get it
-    back: a contiguous run (one row always is one) is a zero-copy slice,
-    which keeps the GIL; a scattered run is one take through an index
-    array built once and shared by every array gathered from."""
+    `offs` from a stride's array. Point lookups gather from many arrays,
+    and under concurrent clients each Arrow call that drops the GIL waits
+    to get it back: a contiguous run (one row always is one) is a
+    zero-copy slice, which keeps the GIL; a scattered run is one take
+    through an index array built once and shared by every array gathered
+    from. A lazy dictionary stride (_DictStride) gathers with numpy, and
+    _join makes its values Arrow once per column."""
     lo, n = int(offs[0]), len(offs)
     if int(offs[-1]) - lo + 1 == n:
-        return lambda arr: arr.slice(lo, n)
-    idx = pa.array(offs, type=pa.int64())
-    return lambda arr: arr.take(idx)
+        run = slice(lo, lo + n)
+        return lambda arr: (
+            arr.gather(run) if type(arr) is _DictStride else arr.slice(lo, n)
+        )
+    pos = np.asarray(offs, dtype=np.int64)
+    idx = pa.array(pos)
+    return lambda arr: arr.gather(pos) if type(arr) is _DictStride else arr.take(idx)
 
 
-def _join(parts: list[list[pa.Array]], schema: pa.Schema) -> pa.Table:
+def _join(parts: list[list], schema: pa.Schema) -> pa.Table:
     """A table of `schema` whose each column joins its list of pieces
-    in `parts` (an empty list is an empty column)."""
-    return pa.table(
-        [
-            pa.concat_arrays(p) if len(p) > 1 else p[0] if p else pa.array([], f.type)
-            for p, f in zip(parts, schema)
-        ],
-        schema=schema,
-    )
+    in `parts` (an empty list is an empty column). A piece is an Arrow
+    array or a _DictStride gather, (dictionary values, ids); a column of
+    gathers only is one numpy lookup per dictionary and one Arrow build."""
+
+    def column(p: list, t: pa.DataType) -> pa.Array:
+        if not p:
+            return pa.array([], t)
+        if all(type(a) is tuple for a in p):
+            vals = p[0][0]
+            if all(a[0] is vals for a in p):
+                got = vals[p[0][1] if len(p) == 1 else np.concatenate([a[1] for a in p])]
+            else:
+                got = np.concatenate([v[ids] for v, ids in p])
+            return pa.array(got, type=t)
+        p = [pa.array(a[0][a[1]], type=t) if type(a) is tuple else a for a in p]
+        return pa.concat_arrays(p) if len(p) > 1 else p[0]
+
+    return pa.table([column(p, f.type) for p, f in zip(parts, schema)], schema=schema)
 
 
 class NoStridePositions(Exception):
@@ -245,7 +316,11 @@ class _LruCache:
     serving handle of lookup.shared_handle. The two stride instances each
     take SPARK_GRAFT_STRIDE_CACHE_MB: with one budget for both, a user
     handle's churn through cold strides evicted the serving handles' hot
-    key strides.
+    key strides. A stride entry is an Arrow array charged its bytes, or,
+    for a NULL-free stride of a DICTIONARY SHORT/INT/LONG/STRING column,
+    a _DictStride charged its ids only (the stripe dictionary it reads
+    is its decoder's, counted once under DwrfFile.cache_bytes()
+    "dictionaries").
 
     A key starts with its owner's token (owner()); the first insert of a
     key wins, and a put evicts the least recently used entries past the
@@ -301,6 +376,13 @@ class _LruCache:
             while self.nbytes > budget:
                 self._remove(*self.entries.popitem(last=False))
         return value
+
+    def remove_if(self, pred) -> None:
+        """Remove every entry whose key and value `pred(key, value)`
+        accepts."""
+        with self._lock:
+            for key in [k for k, (v, _) in self.entries.items() if pred(k, v)]:
+                self._remove(key, self.entries.pop(key))
 
     def drop(self, token: int) -> None:
         """Remove the entries of the owner `token`. Never waits for the
@@ -419,8 +501,11 @@ class _StripeDecoder:
         self._bounds: dict[int, tuple[list, list]] = {}
         # decoded stripe dictionaries (type id -> values), read-only once
         # built: a stride miss on a DICTIONARY column would otherwise
-        # re-decode the whole DICTIONARY_DATA stream
+        # re-decode the whole DICTIONARY_DATA stream. _views holds what
+        # the lazy strides (_DictStride) of a column read of its
+        # dictionary: (values a numpy gather indexes, ascending)
         self._dicts: dict[int, object] = {}
+        self._views: dict[int, tuple[np.ndarray, bool]] = {}
         # decompressed blocks of the stride-seek path (_block) live in the
         # process-wide _BLOCKS under this decoder's token: consecutive
         # stride seeks overwhelmingly land in the SAME compression block
@@ -657,6 +742,35 @@ class _StripeDecoder:
                 hit = self._dicts.setdefault(type_id, built)
         return hit
 
+    def _lazy_stride(self, type_id: int, ids: np.ndarray, dictionary, pa_type):
+        """A _DictStride of the dictionary ids `ids` of `type_id`, whose
+        stripe dictionary is `dictionary` (an int array in the column's
+        dtype, or an Arrow string array). The view its gathers index is
+        built once per column, like the dictionary."""
+        n_dict = len(dictionary)
+        if len(ids) and int(ids.view(np.uint64).max()) >= n_dict:
+            raise DwrfCorruptError(
+                f"column {type_id}: dictionary id past its {n_dict} entries"
+            )
+        arrow = dictionary if isinstance(dictionary, pa.Array) else None
+        view = self._views.get(type_id)
+        if view is None:
+            vals = dictionary if arrow is None else arrow.to_numpy(zero_copy_only=False)
+            built = (vals, n_dict < 2 or bool(np.all(vals[1:] > vals[:-1])))
+            with self._lock:
+                view = self._views.setdefault(type_id, built)
+        width = np.uint8 if n_dict <= 1 << 8 else np.uint16 if n_dict <= 1 << 16 else np.uint32
+        return _DictStride(ids.astype(width), view[0], arrow, view[1], pa_type)
+
+    def dictionary_bytes(self) -> int:
+        """Bytes of the decoded stripe dictionaries, each counted once
+        however many strides read it, with the str object arrays the lazy
+        string strides gather from (their pointers)."""
+        views = [v for v, _ in list(self._views.values()) if v.dtype == object]
+        return sum(a.nbytes for a in list(self._dicts.values())) + sum(
+            v.nbytes for v in views
+        )
+
     def _ints_window(self, col, kind, cur, count, signed):
         blk, off = cur.instream()
         (skip,) = cur.take(1)
@@ -716,20 +830,31 @@ class _StripeDecoder:
         return idx
 
     def decode_stride_column(
-        self, type_id: int, s_idx: int, stride: int, n_rows: int
-    ) -> pa.Array:
+        self, type_id: int, s_idx: int, stride: int, n_rows: int, lazy: bool = False
+    ) -> pa.Array | _DictStride:
         """Decode rows [s_idx*stride, min((s_idx+1)*stride, n_rows)) of a
         top-level column using its recorded seek positions, recursing into
         nested children (each child consumes its OWN RowIndexEntry, the
         LazyListTreeReader.java:101-107 pattern). Raises NoStridePositions
         when a column in the subtree has none (UNION branches, legacy
-        files) — callers fall back to the whole-stripe decode."""
+        files) — callers fall back to the whole-stripe decode. With
+        `lazy`, a NULL-free stride of a DICTIONARY SHORT/INT/LONG/STRING
+        column comes back as a _DictStride (see _decode_stride_at)."""
         rows = min(stride, n_rows - s_idx * stride)
-        return self._decode_stride_at(type_id, s_idx, rows)
+        lazy = lazy and type_id not in self.r.date_ids
+        return self._decode_stride_at(type_id, s_idx, rows, lazy)
 
     def _decode_stride_at(
-        self, type_id: int, s_idx: int, rows: int
-    ) -> pa.Array:
+        self, type_id: int, s_idx: int, rows: int, lazy: bool = False
+    ) -> pa.Array | _DictStride:
+        """The stride of `rows` rows at stride s_idx of `type_id`, as an
+        Arrow array. With `lazy` (a top-level column without a date
+        annotation, read for the point reads' stride cache), a stride
+        without NULLs of a DICTIONARY-encoded SHORT, INT, LONG or STRING
+        column (not a stride-dictionary one) is a _DictStride instead: its
+        ids over the stripe dictionary that _dictionary memoizes, so the
+        cache holds ids, not values. Every other stride (NULLs, a date,
+        stride dictionaries, nested children) is materialized."""
         t = self.r.types[type_id]
         kind = TypeKind(t.kind)
         if kind not in _STRIDE_DECODABLE:
@@ -768,6 +893,12 @@ class _StripeDecoder:
                 type=pa.int8(),
             )
         elif kind in (TypeKind.SHORT, TypeKind.INT, TypeKind.LONG):
+            pa_type = {
+                TypeKind.SHORT: pa.int16(),
+                TypeKind.INT: pa.int32(),
+                TypeKind.LONG: pa.int64(),
+            }[kind]
+            np_type = pa_type.to_pandas_dtype()
             if enc.kind == int(ColumnEncodingKind.DICTIONARY):
                 dict_vals = self._dictionary(
                     type_id,
@@ -775,18 +906,15 @@ class _StripeDecoder:
                         self.stream(type_id, StreamKind.DICTIONARY_DATA),
                         enc.dictionarySize,
                         signed=True,
-                    )[0],
+                    )[0].astype(np_type, copy=False),
                 )
                 ids = self._ints_window(type_id, StreamKind.DATA, cur, nd, signed=False)
+                if lazy and nd == rows:
+                    return self._lazy_stride(type_id, ids, dict_vals, pa_type)
                 vals = dict_vals[ids]
             else:
                 vals = self._ints_window(type_id, StreamKind.DATA, cur, nd, signed=True)
-            pa_type = {
-                TypeKind.SHORT: pa.int16(),
-                TypeKind.INT: pa.int32(),
-                TypeKind.LONG: pa.int64(),
-            }[kind]
-            dense = pa.array(vals.astype(pa_type.to_pandas_dtype()), type=pa_type)
+            dense = pa.array(vals.astype(np_type, copy=False), type=pa_type)
         elif kind in (TypeKind.FLOAT, TypeKind.DOUBLE):
             np_t = np.dtype("<f4") if kind == TypeKind.FLOAT else np.dtype("<f8")
             raw = self._raw_window(type_id, StreamKind.DATA, cur, nd * np_t.itemsize)
@@ -841,6 +969,8 @@ class _StripeDecoder:
                     ids = self._ints_window(
                         type_id, StreamKind.DATA, cur, nd, signed=False
                     )
+                    if lazy and nd == rows and kind == TypeKind.STRING:
+                        return self._lazy_stride(type_id, ids, dict_arr, pa.string())
                 dense = dict_arr.take(pa.array(ids, type=pa.int64())).cast(pa.string())
             else:
                 lengths = self._ints_window(
@@ -1277,7 +1407,9 @@ class DwrfFile:
         self._point_decoders: dict = {}
         # decoded strides of all point lookups on this handle, keyed
         # (token, stripe, type_id, s_idx, kept struct fields) -> pa.Array
-        # (_cached_column). The serving steady state re-reads a hot
+        # or, for a NULL-free DICTIONARY stride, its ids over the stripe
+        # dictionary (_DictStride; _cached_column). The serving steady
+        # state re-reads a hot
         # working set, and under concurrent clients EVERY thread used to
         # re-decode the same stride (the r8-measured 9.8 ms/lookup at 32
         # clients vs 1.8 ms/row batched); with the arrays cached a repeat
@@ -1863,7 +1995,11 @@ class DwrfFile:
         rows are read through the point-read path that read_row and
         read_rows_at share (_point_window): the stripe directory locates
         them without scanning, and each touched row-index stride is read
-        once, through the handle's stride cache, and kept as one slice."""
+        once, through the handle's stride cache, and kept as one slice. A
+        stride the range covers whole is read from the cache but, on a
+        miss, not inserted: a long read leaves the strides that serve
+        point reads in place. Every piece is Arrow (a lazy dictionary
+        stride's is one numpy gather or one take over its dictionary)."""
         tops, include_ids = self._projection(columns)
         schema = self.schema if columns is None else self.projected_schema(columns)
         parts: list[list[pa.Array]] = [[] for _ in tops]
@@ -1873,8 +2009,12 @@ class DwrfFile:
                 i, s_idx, off, rows = self._locate(r)
                 n = min(rows - off, end - r)
                 dec = self._point_decoder(i, include_ids)
-                for p, arr in zip(parts, self._point_window(dec, i, s_idx, tops)):
-                    p.append(arr.slice(off, n))
+                arrays = self._point_window(dec, i, s_idx, tops, keep=n < rows)
+                for p, arr in zip(parts, arrays):
+                    if type(arr) is _DictStride:
+                        p.append(arr.to_arrow(slice(off, off + n)))
+                    else:
+                        p.append(arr.slice(off, n))
                 r += n
         return _join(parts, schema)
 
@@ -1899,7 +2039,8 @@ class DwrfFile:
         handle cycle, and a handle the lookup LRU drops would close its
         file only when the cyclic GC ran. With verify_checksums=True the
         stripe's CRCs are checked once per handle before its first point
-        read."""
+        read. A decoder that leaves the LRU takes the lazy dictionary
+        strides (_DictStride) of its stripe out of the stride cache."""
         if self._verify_on_read:
             self._verify_stripe_on_read(stripe_index)
         key = (
@@ -1918,11 +2059,22 @@ class DwrfFile:
             include_ids,
             prefetch=False,
         )
+        evicted: set[int] = set()  # stripes whose decoder left the LRU
         with self._lock:
             dec = self._point_decoders.pop(key, None) or built
             self._point_decoders[key] = dec
             while len(self._point_decoders) > 8:  # cap: stripes x projections
-                self._point_decoders.pop(next(iter(self._point_decoders)))
+                gone = next(iter(self._point_decoders))
+                del self._point_decoders[gone]
+                evicted.add(gone[0])
+        if evicted:
+            # a lazy stride reads its decoder's dictionary: the lazy
+            # strides of those stripes leave too, so every dictionary the
+            # cache keeps alive is a live decoder's, which cache_bytes counts
+            token = self._token
+            self._strides.remove_if(
+                lambda k, v: k[0] == token and k[1] in evicted and type(v) is _DictStride
+            )
         return dec
 
     def cache_bytes(self) -> dict[str, int]:
@@ -1933,7 +2085,9 @@ class DwrfFile:
         the blocks of all handles, at most _StripeDecoder._BLK_CACHE_BUDGET
         per process; see block_cache_bytes), whole decompressed streams
         (row indexes, dictionary streams, whole-stripe fallbacks) and
-        decoded stripe dictionaries."""
+        decoded stripe dictionaries, each counted once: a lazy dictionary
+        stride (_DictStride) counts its ids under "strides" and reads the
+        dictionary of its decoder."""
         with self._lock:
             decs = list(self._point_decoders.values())
         out = {
@@ -1941,18 +2095,24 @@ class DwrfFile:
             "blocks": sum(_BLOCKS.owned(d._token) for d in decs),
         }
         out["streams"] = sum(a.nbytes for d in decs for a in list(d._cache.values()))
-        out["dictionaries"] = sum(
-            a.nbytes for d in decs for a in list(d._dicts.values())
-        )
+        out["dictionaries"] = sum(d.dictionary_bytes() for d in decs)
         return out
 
     def _cached_column(
-        self, dec, i: int, tid: int, s_idx: int, stride: int, n_rows: int
-    ) -> pa.Array:
+        self, dec, i: int, tid: int, s_idx: int, stride: int, n_rows: int,
+        keep: bool = True,
+    ) -> pa.Array | _DictStride:
         """_point_window's read of one column through the handle's stride
-        cache (an array LRU: a hot stride skips the decode), keyed by the
-        stride (-1: the whole stripe) and, only where the projection prunes
-        the column's subtree, the ids it keeps of it."""
+        cache (an LRU of decoded strides: a hot stride skips the decode),
+        keyed by the stride (-1: the whole stripe) and, only where the
+        projection prunes the column's subtree, the ids it keeps of it. A
+        cached stride of a NULL-free DICTIONARY SHORT/INT/LONG/STRING
+        column is a _DictStride, charged for its ids only; every other
+        stride is its Arrow array. With keep=False (a stride read_rows
+        reads whole) a miss is decoded to Arrow and not inserted, so a
+        long read leaves the serving working set alone; a whole-stripe
+        decode is inserted either way, since every stride of its stripe
+        reads it."""
         kept = None
         if dec.decode_ids is not None:
             sub = frozenset(subtree_ids(self.types, tid))
@@ -1962,7 +2122,7 @@ class DwrfFile:
         arr = cache.get(key)
         if arr is None:
             try:
-                arr = dec.decode_stride_column(tid, s_idx, stride, n_rows)
+                arr = dec.decode_stride_column(tid, s_idx, stride, n_rows, lazy=keep)
             except NoStridePositions:
                 key = (self._token, i, tid, -1, kept)
                 whole = cache.get(key)
@@ -1970,7 +2130,8 @@ class DwrfFile:
                     whole = dec.decode_column(tid, n_rows)
                     cache.put(key, whole, whole.nbytes, stride_cache_budget())
                 return whole.slice(s_idx * stride, stride)
-            arr = cache.put(key, arr, arr.nbytes, stride_cache_budget())
+            if keep:
+                arr = cache.put(key, arr, arr.nbytes, stride_cache_budget())
         return arr
 
     def _stride_rows(self, stripe_index: int) -> int:
@@ -1992,22 +2153,26 @@ class DwrfFile:
         n_rows = self.footer.stripes[i].numberOfRows
         return i, s_idx, off, min(stride, n_rows - s_idx * stride)
 
-    def _point_window(self, dec, i: int, s_idx: int, tops, have=None) -> list:
+    def _point_window(
+        self, dec, i: int, s_idx: int, tops, have=None, keep: bool = True
+    ) -> list:
         """The point-read primitive of read_row, read_rows, read_rows_at
         and lookup_keys: the array of each projected column (name, type
         id) of `tops` over the rows of stride s_idx of stripe i, decoded
-        by the point decoder `dec`. A column seeks to the stride through
-        its ROW_INDEX positions; one without them (UNION, files without a
-        row index) decodes the whole stripe, sliced to the stride. Both go
-        through the handle's stride cache (_cached_column). `have` maps a
-        type id to the stride's array the caller already holds."""
+        by the point decoder `dec`: an Arrow array, or a _DictStride whose
+        rows a gather looks up. A column seeks to the stride through its
+        ROW_INDEX positions; one without them (UNION, files without a row
+        index) decodes the whole stripe, sliced to the stride. Both go
+        through the handle's stride cache (_cached_column; `keep` False
+        reads it without inserting strides). `have` maps a type id to the
+        stride's array the caller already holds."""
         n_rows = self.footer.stripes[i].numberOfRows
         stride = self._stride_rows(i)
         out = []
         for _name, tid in tops:
             arr = have.get(tid) if have else None
             if arr is None:
-                arr = self._cached_column(dec, i, tid, s_idx, stride, n_rows)
+                arr = self._cached_column(dec, i, tid, s_idx, stride, n_rows, keep)
             out.append(arr)
         return out
 
@@ -2039,7 +2204,12 @@ class DwrfFile:
             i, s_idx, off, _ = self._locate(row_number)
             dec = self._point_decoder(i, include_ids)
             arrays = self._point_window(dec, i, s_idx, tops)
-        return {name: arr[off].as_py() for (name, _), arr in zip(tops, arrays)}
+        return {
+            name: arr.values[arr.ids[off : off + 1]].tolist()[0]
+            if type(arr) is _DictStride
+            else arr[off].as_py()
+            for (name, _), arr in zip(tops, arrays)
+        }
 
     def read_rows_at(
         self, row_numbers, columns: list[str] | None = None

@@ -14,7 +14,15 @@ Prints one line per run (its seed, `correct`, `failed`, the stolen-CPU
 share the workload reports, and the end-to-end metrics), then, for every
 end-to-end metric of BENCHMARK.json, each side's median and
 interquartile range, the change of the medians, and in how many pairs B
-was better than A. `--json` also writes every run to a file. Changes
+was better than A. `--report f1,f2,...` summarizes fields of the
+workload's own report line the same way, so a serving change shows which
+request kind moved:
+
+    python3 scripts/ab_pairs.py <rev_a> <rev_b> --workload lookup --pairs 10 \
+        --report key_lookup_ms_p50,row_lookup_ms_p50,requests_per_s,cpu_ms_per_op
+
+A report field is better higher when it is a rate (its name ends in
+`_per_s`), else lower. `--json` also writes every run to a file. Changes
 nothing in either revision.
 """
 
@@ -57,8 +65,9 @@ def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     except (IndexError, ValueError, KeyError):
         tail = (proc.stderr or proc.stdout)[-2000:]
         print(f"run failed (exit {proc.returncode}):\n{tail}", file=sys.stderr)
-        return {"correct": False, "failed": None, "metrics": {}, "steal": None}
+        return {"correct": False, "failed": None, "metrics": {}, "steal": None, "report": {}}
     out["steal"] = report.get("steal_share", report.get("setup_steal_share"))
+    out["report"] = report
     return out
 
 
@@ -67,6 +76,28 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
         return xs[0], xs[0], xs[0]
     q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, q2, q3
+
+
+def summarize(label: str, values: dict[tuple[str, int], float], better: str) -> None:
+    """Print each side's median and interquartile range of `values`, keyed
+    (side, pair), the change of the medians, and in how many pairs B was
+    better than A."""
+    by: dict[str, dict[int, float]] = {"A": {}, "B": {}}
+    for (side, pair), v in values.items():
+        by[side][pair] = v
+    if not by["A"] or not by["B"]:
+        print(f"  {label}: no values")
+        return
+    qa, qb = quartiles(sorted(by["A"].values())), quartiles(sorted(by["B"].values()))
+    pairs = sorted(set(by["A"]) & set(by["B"]))
+    sign = -1 if better == "lower" else 1
+    wins = sum(sign * (by["B"][p] - by["A"][p]) > 0 for p in pairs)
+    change = (qb[1] - qa[1]) / qa[1] * 100 if qa[1] else float("nan")
+    print(
+        f"  {label}: A {qa[1]:.4g} ({qa[0]:.4g}-{qa[2]:.4g})  "
+        f"B {qb[1]:.4g} ({qb[0]:.4g}-{qb[2]:.4g})  "
+        f"{change:+.1f}%  B better in {wins}/{len(pairs)}"
+    )
 
 
 def main() -> int:
@@ -78,6 +109,9 @@ def main() -> int:
     ap.add_argument("--seconds", type=float, default=10.0)
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
     ap.add_argument("--json", help="write every run to this file")
+    ap.add_argument(
+        "--report", help="comma-separated fields of the workload's report line to summarize"
+    )
     args = ap.parse_args()
 
     tmp = tempfile.mkdtemp(prefix="ab_pairs_")
@@ -112,25 +146,21 @@ def main() -> int:
 
     print(f"\n{args.workload}: {args.rev_a} (A) -> {args.rev_b} (B), {args.pairs} pairs")
     for m in e2e:
-        name = m["name"]
-        by: dict[str, dict[int, float]] = {"A": {}, "B": {}}
-        for r in runs:
-            if name in r["metrics"]:
-                by[r["side"]][r["pair"]] = r["metrics"][name]["value"]
-        if not by["A"] or not by["B"]:
-            print(f"  {name}: no values")
-            continue
-        qa, qb = quartiles(sorted(by["A"].values())), quartiles(sorted(by["B"].values()))
-        pairs = sorted(set(by["A"]) & set(by["B"]))
-        better = (lambda a, b: b < a) if m["better"] == "lower" else (lambda a, b: b > a)
-        wins = sum(better(by["A"][p], by["B"][p]) for p in pairs)
-        change = (qb[1] - qa[1]) / qa[1] * 100 if qa[1] else float("nan")
-        print(
-            f"  {name} ({m['better']} is better, bound {m['bound']:.0%}): "
-            f"A {qa[1]:.4g} ({qa[0]:.4g}-{qa[2]:.4g})  "
-            f"B {qb[1]:.4g} ({qb[0]:.4g}-{qb[2]:.4g})  "
-            f"{change:+.1f}%  B better in {wins}/{len(pairs)}"
-        )
+        values = {
+            (r["side"], r["pair"]): r["metrics"][m["name"]]["value"]
+            for r in runs
+            if m["name"] in r["metrics"]
+        }
+        summarize(f"{m['name']} ({m['better']} is better, bound {m['bound']:.0%})",
+                  values, m["better"])
+    for name in filter(None, (args.report or "").split(",")):
+        values = {
+            (r["side"], r["pair"]): r["report"][name]
+            for r in runs
+            if isinstance(r["report"].get(name), (int, float))
+        }
+        better = "higher" if name.endswith("_per_s") else "lower"
+        summarize(f"report {name} ({better} is better)", values, better)
     ok = all(r["correct"] and r["failed"] == 0 for r in runs)
     print(f"  every run correct with 0 failed: {ok}")
     if args.json:

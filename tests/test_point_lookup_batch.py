@@ -19,7 +19,8 @@ import pytest
 
 from hive_dwrf_spark.format import DwrfFile, lookup, write_arrow_table
 from hive_dwrf_spark.format.lookup import lookup_keys
-from hive_dwrf_spark.format.reader import _LruCache, stride_cache_budget
+from hive_dwrf_spark.format.constants import ColumnEncodingKind, StreamKind
+from hive_dwrf_spark.format.reader import _DictStride, _LruCache, stride_cache_budget
 
 
 def _nested_table(n: int) -> pa.Table:
@@ -1161,23 +1162,36 @@ def test_threads_share_handle_caches(mixed_file, monkeypatch, blocks):
     nothing raises, no block-cache byte count, in total or per decoder,
     loses an update, and the blocks of every dropped decoder leave the
     cache, also of those dropped while another thread held its lock."""
+    projections = [None, ["i", "s"], ["txt", "d", "st"], ["f", "lst", "m"]]
+    _threads_share_handle_caches(mixed_file, projections, monkeypatch, blocks)
+
+
+def test_threads_share_lazy_dictionary_strides(dict_file, monkeypatch, blocks):
+    """The same over lazy dictionary strides, whose dictionary views each
+    decoder builds once for every thread."""
+    projections = [None, ["sh", "st"], ["lg", "dt", "rec"], ["in", "nl", "sd"]]
+    _threads_share_handle_caches(dict_file, projections, monkeypatch, blocks)
+
+
+def _threads_share_handle_caches(path, projections, monkeypatch, blocks):
+    """test_threads_share_handle_caches over the 3 stripes of 2,000 rows
+    of `path`, with 4 `projections`."""
     import gc
 
     from hive_dwrf_spark.format import reader as reader_mod
 
     monkeypatch.setenv("SPARK_GRAFT_STRIDE_CACHE_MB", "1")
     monkeypatch.setattr(reader_mod._StripeDecoder, "_BLK_CACHE_BUDGET", 16 * 1024)
-    projections = [None, ["i", "s"], ["txt", "d", "st"], ["f", "lst", "m"]]
     rng = np.random.default_rng(3)
     requests = [
         (cols, [int(r) for r in stripe * 2_000 + rng.integers(0, 2_000, 12)])
         for stripe in range(3)
         for cols in projections
     ]
-    with DwrfFile(mixed_file) as f:
+    with DwrfFile(path) as f:
         serial = [f.read_rows_at(ids, columns=cols) for cols, ids in requests]
 
-    shared = DwrfFile(mixed_file)
+    shared = DwrfFile(path)
     built: set[int] = set()  # tokens of the decoders built
     point_decoder = shared._point_decoder
 
@@ -1368,3 +1382,241 @@ def test_stride_inside_one_block_inflates_one_block(tmp_path, monkeypatch):
             got = dec.decode_stride_column(1, s, stride, n)
             assert got.to_pylist() == vals[s * stride : (s + 1) * stride].tolist()
             assert len(inflated) == 1, (s, pos[s], inflated)
+
+
+def _dict_table(n: int) -> pa.Table:
+    """DICTIONARY SHORT, INT, LONG and STRING columns the point reads keep
+    as lazy strides, next to the cases that stay materialized: NULLs in
+    a few strides (the column's other strides stay lazy), a date column,
+    stride dictionaries (singletons next to NULLs) and a struct whose
+    children are dictionary-encoded."""
+    r = np.arange(n)
+    return pa.table(
+        {
+            "sh": pa.array((r * 7) % 41, type=pa.int16()),
+            "in": pa.array((r * 13) % 300 - 150, type=pa.int32()),
+            "lg": pa.array((r // 3) * 1_000_003, type=pa.int64()),
+            "st": pa.array([f"w{x % 53}" for x in r]),
+            "nl": pa.array([None if x % 997 == 0 else x % 37 for x in r], type=pa.int64()),
+            "dt": pa.array((r % 29).astype(np.int32), type=pa.date32()),
+            "sd": pa.array(
+                [None if x % 13 == 0 else f"u{x}" if x % 5 == 0 else f"c{x % 7}" for x in r]
+            ),
+            "rec": pa.array(
+                [{"a": x % 5, "b": f"x{x % 3}"} for x in r],
+                type=pa.struct([("a", pa.int64()), ("b", pa.string())]),
+            ),
+        }
+    )
+
+
+_DICT_OPTIONS = dict(
+    stripe_rows=2_000,
+    row_index_stride=250,
+    compression_block_size=2_048,
+    stride_dictionaries=True,
+    entropy_threshold=0,  # keep every string dictionary the ratio admits
+)
+
+
+@pytest.fixture(scope="module")
+def dict_file(tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("dicts") / "d.dwrf")
+    write_arrow_table(path, _dict_table(6_000), **_DICT_OPTIONS)
+    return path
+
+
+def _lazy_columns(f: DwrfFile) -> dict[str, set[bool]]:
+    """Column name -> whether each of its cached strides is lazy."""
+    names = {tid: name for name, tid in f._projection(None)[0]}
+    out: dict[str, set[bool]] = {}
+    for key, (arr, _) in f._strides.entries.items():
+        out.setdefault(names[key[2]], set()).add(type(arr) is _DictStride)
+    return out
+
+
+class TestLazyDictionaryStrides:
+    """The point reads cache a NULL-free stride of a top-level DICTIONARY
+    SHORT/INT/LONG/STRING column as ids over the stripe dictionary
+    (_DictStride) and look up only the rows they gather; every read
+    equals a full read, values and schema."""
+
+    def test_which_strides_are_lazy(self, dict_file):
+        with DwrfFile(dict_file) as f:
+            dec = f._point_decoder(0, None)
+            sd = f._top_level_id("sd")
+            assert dec.has_stream(sd, StreamKind.IN_DICTIONARY)
+            for name in ("sh", "in", "lg", "st", "nl", "dt"):
+                enc = dec.encodings[f._top_level_id(name)]
+                assert enc.kind == ColumnEncodingKind.DICTIONARY, name
+            f.read_rows_at(list(range(0, 6_000, 125)))
+            lazy = _lazy_columns(f)
+        for name in ("sh", "in", "lg", "st"):
+            assert lazy[name] == {True}, name
+        # NULLs at rows 0, 997, ...: those strides materialize, the rest not
+        assert lazy["nl"] == {True, False}
+        for name in ("dt", "sd", "rec"):
+            assert lazy[name] == {False}, name
+
+    @pytest.mark.parametrize("case", sorted(_ids(6_000)))
+    @pytest.mark.parametrize("columns", [None, ["st", "rec.b", "lg", "dt", "nl"]])
+    def test_point_reads_equal_full_read(self, dict_file, case, columns):
+        ids = _ids(6_000)[case]
+        with DwrfFile(dict_file) as f:
+            _assert_point_reads(f, ids, columns)
+            _assert_point_reads(f, ids, columns)  # from the cached strides
+
+    @pytest.fixture(scope="class")
+    def dict_dir(self, tmp_path_factory):
+        d = str(tmp_path_factory.mktemp("dict_dir"))
+        t = _dict_table(8_000)
+        for n, part in enumerate((t.slice(0, 4_000), t.slice(4_000))):
+            write_arrow_table(os.path.join(d, f"part-{n}.dwrf"), part, **_DICT_OPTIONS)
+        return d
+
+    @pytest.mark.parametrize(
+        "key_column, keys",
+        [
+            ("sh", [0, 7, 40, 99]),
+            ("in", [-150, 3, 149, 150, 10**12]),
+            ("lg", [0, 1_000_003 * 1_333, 1_000_003 * 2_666 + 1, 1_000_003 * 2_666]),
+            ("st", ["w0", "w52", "w9", "nope"]),
+            ("nl", [0, 36, 5]),
+            ("lg", [1_000_003 * 7]),
+        ],
+    )
+    def test_lookup_keys_equal_full_read(self, dict_dir, key_column, keys, monkeypatch):
+        with DwrfFile(os.path.join(dict_dir, "part-0.dwrf")) as f:
+            full_schema = f.schema
+        want = _reference(dict_dir, key_column, keys)
+        assert want.num_rows > 0
+        # sorted dictionaries: every lazy key stride is matched by ids
+        materialized: list[int] = []
+        to_arrow = _DictStride.to_arrow
+        monkeypatch.setattr(
+            _DictStride, "to_arrow", lambda *a: materialized.append(1) or to_arrow(*a)
+        )
+        got = lookup_keys(dict_dir, key_column, keys)
+        assert not materialized
+        assert got.schema == full_schema
+        assert got.equals(want)
+        cols = ["rec", "st", "dt", "in"]
+        assert lookup_keys(dict_dir, key_column, keys, columns=cols).equals(want.select(cols))
+
+    def test_ids_are_narrowest_and_charged_alone(self, tmp_path):
+        """A lazy stride's ids take the narrowest unsigned type for its
+        stripe dictionary, and its cache entry is charged their bytes;
+        the stripe dictionary is counted once under "dictionaries",
+        however many strides read it."""
+        r = np.arange(100_000)
+        t = pa.table(
+            {
+                "u8": pa.array(r % 200, type=pa.int64()),
+                "u16": pa.array((r * 7) % 1_000, type=pa.int64()),
+                "u32": pa.array(r % 66_000, type=pa.int64()),
+                "s": pa.array([f"v{x % 300}" for x in r]),
+            }
+        )
+        path = str(tmp_path / "w.dwrf")
+        write_arrow_table(path, t, row_index_stride=10_000)
+        with DwrfFile(path) as f:
+            assert len(f.footer.stripes) == 1
+            assert f.read_rows_at([5]).equals(t.take([5]))
+            dicts = f.cache_bytes()["dictionaries"]
+            dec = f._point_decoder(0, None)
+            assert dicts == dec.dictionary_bytes() > 0
+            f.read_rows_at(list(range(0, 100_000, 9_999)))
+            assert f.cache_bytes()["dictionaries"] == dicts
+            widths = {"u8": np.uint8, "u16": np.uint16, "u32": np.uint32, "s": np.uint16}
+            names = {tid: name for name, tid in f._projection(None)[0]}
+            entries = list(f._strides.entries.items())
+            assert len(entries) == 4 * 10
+            for key, (arr, charged) in entries:
+                assert type(arr) is _DictStride
+                assert arr.ids.dtype == widths[names[key[2]]]
+                assert charged == arr.nbytes == arr.ids.nbytes == 10_000 * arr.ids.itemsize
+            assert f.cache_bytes()["strides"] == sum(c for _, (_, c) in entries)
+            _assert_cache_counts(f._strides)
+
+    def test_dropped_decoder_takes_its_lazy_strides(self, tmp_path):
+        """A lazy stride reads its decoder's dictionary. When the decoder
+        leaves the handle's 8-decoder LRU, the lazy strides of its stripe
+        leave the cache, so each dictionary a cached stride keeps alive
+        is a live decoder's, which cache_bytes counts; materialized
+        strides stay."""
+        r = np.arange(40_000)
+        t = pa.table(
+            {
+                "k": pa.array((r * 7_919) % 2_000, type=pa.int64()),
+                "v": pa.array(r, type=pa.int64()),
+            }
+        )
+        path = str(tmp_path / "stripes.dwrf")
+        write_arrow_table(path, t, stripe_rows=4_000, row_index_stride=1_000)
+        with DwrfFile(path) as f:
+            for s in range(10):
+                row = s * 4_000 + 5
+                assert f.read_rows_at([row]).equals(t.take([row]))
+            decs = list(f._point_decoders.values())
+            assert len(decs) == 8
+            lazy = {k[1]: v for k, (v, _) in f._strides.entries.items() if type(v) is _DictStride}
+            assert sorted(lazy) == list(range(2, 10))
+            views = {id(d._views[1][0]) for d in decs}
+            assert {id(v.values) for v in lazy.values()} == views
+            assert f.cache_bytes()["dictionaries"] == sum(d.dictionary_bytes() for d in decs)
+            assert len(f._strides.entries) == 10 + 8
+            _assert_cache_counts(f._strides)
+
+    def test_unsorted_int_dictionary(self, tmp_path, monkeypatch):
+        """A foreign writer may leave an int dictionary unsorted: the ids
+        of such a stride are matched by value, not by searchsorted."""
+        from hive_dwrf_spark.format import writer as writer_mod
+
+        sorted_unique_inverse = writer_mod._sorted_unique_inverse
+
+        def descending(vals):
+            u, ids = sorted_unique_inverse(vals)
+            return u[::-1].copy(), len(u) - 1 - ids
+
+        monkeypatch.setattr(writer_mod, "_sorted_unique_inverse", descending)
+        rng = np.random.default_rng(9)
+        t = pa.table(
+            {
+                "k": pa.array(rng.integers(0, 400, 3_000), type=pa.int64()),
+                "v": pa.array(np.arange(3_000), type=pa.int64()),
+            }
+        )
+        d = str(tmp_path / "unsorted")
+        os.makedirs(d)
+        path = os.path.join(d, "part-0.dwrf")
+        write_arrow_table(path, t, stripe_rows=1_500, row_index_stride=250)
+        ids = [2_999, 0, 17, 1_500, 17, 640]
+        with DwrfFile(path) as f:
+            dec = f._point_decoder(0, None)
+            assert dec.encodings[1].kind == ColumnEncodingKind.DICTIONARY
+            assert f.read_rows_at(ids).equals(t.take(ids))
+            stride = f._point_window(dec, 0, 0, [("k", 1)])[0]
+            assert type(stride) is _DictStride and not stride.ascending
+            assert stride.key_ids([1, 2]) is None
+        for keys in ([5], [0, 1, 2, 399], list(range(0, 400, 7))):
+            want = t.filter(pa.compute.is_in(t["k"], value_set=pa.array(keys)))
+            assert lookup_keys(d, "k", keys).equals(want), keys
+
+    def test_whole_file_read_rows_keeps_cached_strides(self, dict_file):
+        """read_rows reads the strides it covers whole through the stride
+        cache without inserting them, and builds no lazy stride for
+        them: the strides cached for point reads stay, and nothing new
+        joins them."""
+        with DwrfFile(dict_file) as f:
+            f.read_rows_at([10, 2_600, 5_999])
+            held = dict(f._strides.entries)
+            assert held
+            assert f.read_rows(0, f.num_rows).equals(f.read())
+            assert dict(f._strides.entries) == held
+            # a range inside one stride reads part of it: that stride is kept
+            f.read_rows(1_010, 5)
+            assert len(f._strides.entries) > len(held)
+        with DwrfFile(dict_file) as f:
+            assert f.read_rows(0, f.num_rows).equals(f.read())
+            assert not f._strides.entries
+            assert not any(dec._views for dec in f._point_decoders.values())
