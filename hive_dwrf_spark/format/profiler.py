@@ -11,13 +11,19 @@ READ/WRITE wall totals. Like the reference it is disabled by default
 when off.
 
 Counters are per-process (each Spark executor worker accumulates its
-own), reentrant-safe (nested phases of the same kind count wall time
-once — the reference tracks this with its started/ended arrays), and
-reported as ``{phase: {"seconds": float, "calls": int}}``.
+own) and summed over the threads that read or write: a profiled read
+runs on the same stripe and column pools as an unprofiled one. Nesting
+is tracked per thread, so nested phases of the same kind count wall
+time once (the reference tracks this with its started/ended arrays),
+and the counters are updated under one lock. Reported as
+``{phase: {"seconds": float, "calls": int}}``; a phase's seconds are
+summed over its threads, so a pooled read's phases may add up to more
+than its wall time.
 """
 
 from __future__ import annotations
 
+import threading
 import time
 from contextlib import contextmanager
 
@@ -38,12 +44,22 @@ PHASES = (
 class Profiler:
     def __init__(self) -> None:
         self.enabled = bool(env_int("DWRF_PROFILE", 0))
+        self._lock = threading.Lock()
         self.reset()
 
     def reset(self) -> None:
-        self.seconds = dict.fromkeys(PHASES, 0.0)
-        self.calls = dict.fromkeys(PHASES, 0)
-        self._depth = dict.fromkeys(PHASES, 0)
+        with self._lock:
+            self.seconds = dict.fromkeys(PHASES, 0.0)
+            self.calls = dict.fromkeys(PHASES, 0)
+            self._local = threading.local()
+
+    @property
+    def _depth(self) -> dict[str, int]:
+        """The calling thread's nesting depth per phase."""
+        depth = getattr(self._local, "depth", None)
+        if depth is None:
+            depth = self._local.depth = dict.fromkeys(PHASES, 0)
+        return depth
 
     def enable(self) -> None:
         self.enabled = True
@@ -58,23 +74,27 @@ class Profiler:
         if not self.enabled:
             yield
             return
-        self._depth[name] += 1
-        outermost = self._depth[name] == 1
+        depth = self._depth
+        depth[name] += 1
+        outermost = depth[name] == 1
         t0 = time.perf_counter() if outermost else 0.0
         try:
             yield
         finally:
             if outermost:
-                self.seconds[name] += time.perf_counter() - t0
-                self.calls[name] += 1
-            self._depth[name] -= 1
+                took = time.perf_counter() - t0
+                with self._lock:
+                    self.seconds[name] += took
+                    self.calls[name] += 1
+            depth[name] -= 1
 
     def report(self) -> dict[str, dict[str, float | int]]:
-        return {
-            p: {"seconds": self.seconds[p], "calls": self.calls[p]}
-            for p in PHASES
-            if self.calls[p]
-        }
+        with self._lock:
+            return {
+                p: {"seconds": self.seconds[p], "calls": self.calls[p]}
+                for p in PHASES
+                if self.calls[p]
+            }
 
 
 #: module-level singleton, mirroring the reference's static instance

@@ -73,14 +73,13 @@ def _validity_buffer(present: np.ndarray | None):
     return pa.py_buffer(np.packbits(present, bitorder="little").tobytes())
 
 
-def _large_utf8(lengths: np.ndarray, data: bytes) -> pa.Array:
-    """A large_utf8 array of the values of `lengths` laid end to end in
-    `data`."""
+def _offsets_array(lengths: np.ndarray, data, type_=pa.large_utf8()) -> pa.Array:
+    """A `type_` (large_utf8 or large_binary) array of the values of
+    `lengths` laid end to end in the buffer `data`, which Arrow takes
+    without a copy."""
     offsets = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lengths)])
     return pa.Array.from_buffers(
-        pa.large_utf8(),
-        len(lengths),
-        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data)],
+        type_, len(lengths), [None, pa.py_buffer(offsets), pa.py_buffer(data)]
     )
 
 
@@ -183,7 +182,7 @@ def _join(parts: list[list], schema: pa.Schema) -> pa.Table:
 
 class NoStridePositions(Exception):
     """Raised when a column carries no usable ROW_INDEX seek positions
-    (nested type, stride-dictionary column, or a legacy file) — the
+    (a UNION subtree, or a file written without a row index) — the
     caller falls back to whole-stripe decode."""
 
 
@@ -244,50 +243,187 @@ def _corrupt_guard(ctx: str):
     return guard()
 
 
-#: type kinds the stride-bounded decoder handles (matches the writer's
-#: position-spec coverage; UNION falls back to full decode — branch value
-#: positions would need per-stride per-branch counts the reference also
-#: does not record)
-_STRIDE_DECODABLE = {
-    TypeKind.BOOLEAN,
-    TypeKind.BYTE,
-    TypeKind.SHORT,
-    TypeKind.INT,
-    TypeKind.LONG,
-    TypeKind.FLOAT,
-    TypeKind.DOUBLE,
-    TypeKind.STRING,
-    TypeKind.BINARY,
-    TypeKind.TIMESTAMP,
-    TypeKind.LIST,
-    TypeKind.MAP,
-    TypeKind.STRUCT,
+#: Arrow type of each integer kind
+_INT_TYPES = {
+    TypeKind.SHORT: pa.int16(),
+    TypeKind.INT: pa.int32(),
+    TypeKind.LONG: pa.int64(),
 }
 
 
-class _PosCursor:
-    """Sequential consumer of a RowIndexEntry's positions list (the
-    stream-by-stream layout DwrfWriter._resolve_positions writes)."""
+class _WholeReader:
+    """The streams of one column, read whole: the stream reader of the
+    whole-stripe decode (_StripeDecoder.decode_column). Each stream is
+    decompressed once into the decoder's stream memo (stream()) and
+    decoded from its start; raw() is a view into that memo, so float and
+    string values reach Arrow without a copy."""
 
-    def __init__(self, vals: list, compressed: bool):
-        self.vals = vals
+    seeks = False
+
+    def __init__(self, dec: "_StripeDecoder", type_id: int):
+        self.dec, self.col = dec, type_id
+
+    def child(self, type_id: int) -> "_WholeReader":
+        return _WholeReader(self.dec, type_id)
+
+    def bits(self, kind: StreamKind, n: int) -> np.ndarray:
+        return codecs.decode_bits(self.dec.stream(self.col, kind), n)[0]
+
+    def bytes(self, kind: StreamKind, n: int) -> np.ndarray:
+        return codecs.decode_byte_rle(self.dec.stream(self.col, kind), n)[0]
+
+    def ints(self, kind: StreamKind, n: int, signed: bool) -> np.ndarray:
+        return codecs.decode_int_rle(self.dec.stream(self.col, kind), n, signed)[0]
+
+    def raw(self, kind: StreamKind, nbytes: int) -> np.ndarray:
+        if not nbytes:
+            return np.zeros(0, dtype=np.uint8)
+        return self.dec.stream(self.col, kind)[:nbytes]
+
+
+class _SeekReader:
+    """The streams of one column over one row-index stride: the stream
+    reader of the stride seek (_StripeDecoder.decode_stride_column). It
+    consumes the stride's RowIndexEntry positions in the stream-by-stream
+    layout DwrfWriter._resolve_positions writes, in the order its methods
+    are called; each child column reads its OWN entry
+    (LazyListTreeReader.java:101-107). Only the compressed blocks covering
+    the stride are inflated (_StripeDecoder._block) and only its RLE
+    groups are decoded — RecordReaderImpl.java:494-543 seekToRow +
+    RunLengthIntegerReader.java:94-126 skip semantics. raw() returns a
+    copy: a stride the point reads cache must not hold a view into a
+    decompressed block, which would keep the whole block alive while the
+    stride cache charges the stride only its slice. A column without
+    positions for the stride (no ROW_INDEX: a file written without one)
+    raises NoStridePositions at its first read."""
+
+    seeks = True
+
+    def __init__(self, dec: "_StripeDecoder", type_id: int, s_idx: int):
+        self.dec, self.col, self.s_idx = dec, type_id, s_idx
+        self.compressed = dec.r.compression != CompressionKind.NONE
+        self.vals: list[int] | None = None
         self.i = 0
-        self.compressed = compressed
 
-    def take(self, k: int) -> list:
-        if self.i + k > len(self.vals):
+    def child(self, type_id: int) -> "_SeekReader":
+        return _SeekReader(self.dec, type_id, self.s_idx)
+
+    def _positions(self) -> list[int]:
+        if self.vals is None:
+            ri = self.dec.row_index(self.col)
+            if ri is None or self.s_idx >= len(ri.entry):
+                raise NoStridePositions(self.col)
+            self.vals = [int(v) for v in ri.entry[self.s_idx].positions]
+        return self.vals
+
+    def _take(self, k: int) -> list[int]:
+        vals = self._positions()
+        if self.i + k > len(vals):
             raise NoStridePositions("positions exhausted")
-        out = self.vals[self.i : self.i + k]
         self.i += k
-        return out
+        return vals[self.i - k : self.i]
 
-    def instream(self):
+    def _instream(self) -> tuple[int | None, int]:
         """(block offset | None, uncompressed offset)."""
         if self.compressed:
-            blk, off = self.take(2)
+            blk, off = self._take(2)
             return blk, off
-        (off,) = self.take(1)
-        return None, off
+        return None, self._take(1)[0]
+
+    def bits(self, kind: StreamKind, n: int) -> np.ndarray:
+        blk, off = self._instream()
+        skip, bit = self._take(2)
+        nbytes = (bit + n + 7) // 8
+        packed = self._byte_rle(kind, blk, off, skip + nbytes)[skip:]
+        return np.unpackbits(packed)[bit : bit + n].astype(bool)
+
+    def bytes(self, kind: StreamKind, n: int) -> np.ndarray:
+        blk, off = self._instream()
+        (skip,) = self._take(1)
+        return self._byte_rle(kind, blk, off, skip + n)[skip:]
+
+    def ints(self, kind: StreamKind, n: int, signed: bool) -> np.ndarray:
+        blk, off = self._instream()
+        (skip,) = self._take(1)
+        total = skip + n
+
+        def decode(buf):
+            ac = codecs.int_rle_aligned_count(buf, total)
+            return codecs.decode_int_rle(buf, ac, signed)[0]
+
+        # RLE v1 worst case ~11 B/value (10-byte varint + headers), plus a
+        # group-alignment tail of at most 129 further values
+        return self._rle(kind, blk, off, total * 11 + 1600, decode)[skip:total]
+
+    def raw(self, kind: StreamKind, nbytes: int) -> np.ndarray:
+        blk, off = self._instream()
+        if not nbytes:
+            return np.zeros(0, dtype=np.uint8)
+        return self._window(kind, blk, off, nbytes).copy()
+
+    def side_dictionary(self) -> pa.Array:
+        """The stride's side dictionary of a stride-dictionary column
+        (LazyStringDictionaryTreeReader.loadStrideDictionary): its
+        STRIDE_DICTIONARY window and STRIDE_DICTIONARY_LENGTH run, whose
+        positions come next, then its size."""
+        size = self._positions()[self.dec._stride_dict_size_index(self.col)]
+        at = self._instream()
+        lengths = self.ints(StreamKind.STRIDE_DICTIONARY_LENGTH, size, signed=False)
+        self._take(1)  # the size, read above
+        data = self._window(StreamKind.STRIDE_DICTIONARY, *at, int(lengths.sum()))
+        return _offsets_array(lengths, data.tobytes())
+
+    def _byte_rle(self, kind, blk, off, total) -> np.ndarray:
+        def decode(buf):
+            ac = codecs.byte_rle_aligned_count(buf, total)
+            return codecs.decode_byte_rle(buf, ac)[0][:total]
+
+        return self._rle(kind, blk, off, total + total // 64 + 256, decode)
+
+    def _rle(self, kind, blk, off, bound, decode):
+        """decode(window) over the RLE run starting at (blk, off), where
+        `bound` bytes always hold the values wanted. The window is the rest
+        of the starting block; it reaches into the next block only when
+        decode runs off that block's end (ValueError), and then joins at
+        most `bound` bytes, not the whole blocks."""
+        rng_len = self.dec._ranges[(self.col, int(kind))][1]
+        if blk is None or blk >= rng_len:
+            # uncompressed, or a position at the stream's end (no values)
+            return decode(self._window(kind, blk, off, bound))
+        part, nxt = self.dec._block(self.col, kind, blk)
+        first = part[off : off + bound]
+        try:
+            return decode(first)
+        except ValueError:
+            if len(first) == bound or nxt >= rng_len:
+                raise
+            # the run goes on in the next block
+            return decode(self._window(kind, blk, off, bound))
+
+    def _window(self, kind, blk, off, need) -> np.ndarray:
+        """`need` bytes of the decompressed stream (fewer at its end) from
+        uncompressed offset `off` of the block at compressed offset `blk`.
+        Only the blocks the window spans are read and inflated, and only
+        the window's own bytes are joined; an uncompressed stream (blk
+        None) reads just the window."""
+        dec = self.dec
+        rng_off, rng_len = dec._ranges[(self.col, int(kind))]
+        if blk is None:
+            return dec._raw_slice(rng_off + off, max(0, min(need, rng_len - off)))
+        parts: list[np.ndarray] = []
+        p, skip, have = blk, off, 0
+        while have < need and p < rng_len:
+            part, p = dec._block(self.col, kind, p)
+            if skip >= len(part):
+                skip -= len(part)
+                continue
+            piece = part[skip : skip + need - have]
+            skip = 0
+            parts.append(piece)
+            have += len(piece)
+        if not parts:
+            return np.zeros(0, dtype=np.uint8)
+        return parts[0] if len(parts) == 1 else np.concatenate(parts)
 
 
 def _prune_field(types, ids: set[int], field: pa.Field, tid: int) -> pa.Field:
@@ -500,7 +636,8 @@ class _StripeDecoder:
         self._ri_cache: dict[int, proto.RowIndex] = {}
         self._bounds: dict[int, tuple[list, list]] = {}
         # decoded stripe dictionaries (type id -> values), read-only once
-        # built: a stride miss on a DICTIONARY column would otherwise
+        # built and read by the whole-stripe decode and every stride seek
+        # alike: a stride miss on a DICTIONARY column would otherwise
         # re-decode the whole DICTIONARY_DATA stream. _views holds what
         # the lazy strides (_DictStride) of a column read of its
         # dictionary: (values a numpy gather indexes, ascending)
@@ -514,9 +651,6 @@ class _StripeDecoder:
         # lookup already inflated — measured ~50% of read_row wall time on
         # the sf0.1 lookup table. They leave the cache with the decoder.
         self._token = _BLOCKS.owner(self)
-        # per-thread decode scratch (present mask handoff to stride-dict
-        # decode) so columns can decode concurrently
-        self._tls = threading.local()
         wanted = (
             self._wanted_ranges(include_ids, body_len) if prefetch else []
         )
@@ -628,13 +762,7 @@ class _StripeDecoder:
             hit = self._bounds[column] = (mins, maxs)
         return hit
 
-    # -- stride-bounded decode (ROW_INDEX seek positions) ----------------------
-    # Consumes the per-stride positions the writer records
-    # (WriterImpl.java:317-328 PositionRecorder parity; see
-    # DwrfWriter._resolve_positions for the layout): only the compressed
-    # blocks covering the stride are decompressed and only the stride's
-    # RLE groups are decoded — RecordReaderImpl.java:494-543 seekToRow +
-    # RunLengthIntegerReader.java:94-126 skip semantics.
+    # -- stride-bounded reads (ROW_INDEX seek positions, _SeekReader) ---------
 
     def _block(self, col: int, kind: StreamKind, p: int) -> tuple[np.ndarray, int]:
         """(decompressed block, offset of the next block) for the block
@@ -678,57 +806,12 @@ class _StripeDecoder:
         budget = self._BLK_CACHE_BUDGET
         return _BLOCKS.put(ck, (part, p + framed), part.nbytes, budget)
 
-    def _window(self, col, kind, blk, off, need) -> np.ndarray:
-        """`need` bytes of the decompressed stream (fewer at its end) from
-        uncompressed offset `off` of the block at compressed offset `blk`.
-        Only the blocks the window spans are read and inflated, and only
-        the window's own bytes are joined; an uncompressed stream (blk
-        None) reads just the window."""
-        rng_off, rng_len = self._ranges[(col, int(kind))]
-        if blk is None:
-            off = int(off)
-            return self._raw_slice(rng_off + off, max(0, min(need, rng_len - off)))
-        parts: list[np.ndarray] = []
-        p, skip, have = int(blk), int(off), 0
-        while have < need and p < rng_len:
-            part, p = self._block(col, kind, p)
-            if skip >= len(part):
-                skip -= len(part)
-                continue
-            piece = part[skip : skip + need - have]
-            skip = 0
-            parts.append(piece)
-            have += len(piece)
-        if not parts:
-            return np.zeros(0, dtype=np.uint8)
-        return parts[0] if len(parts) == 1 else np.concatenate(parts)
-
-    def _rle_window(self, col, kind, blk, off, bound, decode):
-        """decode(window) over the RLE run starting at (blk, off), where
-        `bound` bytes always hold the values wanted. The window is the rest
-        of the starting block; it reaches into the next block only when
-        decode runs off that block's end (ValueError), and then joins at
-        most `bound` bytes, not the whole blocks."""
-        rng_len = self._ranges[(col, int(kind))][1]
-        if blk is None or int(blk) >= rng_len:
-            # uncompressed, or a position at the stream's end (no values)
-            return decode(self._window(col, kind, blk, off, bound))
-        part, nxt = self._block(col, kind, int(blk))
-        first = part[int(off) : int(off) + bound]
-        try:
-            return decode(first)
-        except ValueError:
-            if len(first) == bound or nxt >= rng_len:
-                raise
-            # the run goes on in the next block
-            return decode(self._window(col, kind, blk, off, bound))
-
     def _string_dictionary(self, type_id: int, n_dict: int) -> pa.Array:
         """The stripe dictionary of a DICTIONARY string column."""
         key_lengths, _ = codecs.decode_int_rle(
             self.stream(type_id, StreamKind.LENGTH), n_dict, signed=False
         )
-        return _large_utf8(
+        return _offsets_array(
             key_lengths, self.stream(type_id, StreamKind.DICTIONARY_DATA).tobytes()
         )
 
@@ -771,133 +854,93 @@ class _StripeDecoder:
             v.nbytes for v in views
         )
 
-    def _ints_window(self, col, kind, cur, count, signed):
-        blk, off = cur.instream()
-        (skip,) = cur.take(1)
-        return self._ints_at(col, kind, blk, off, skip, count, signed)
-
-    def _ints_at(self, col, kind, blk, off, skip, count, signed):
-        total = skip + count
-
-        def decode(buf):
-            ac = codecs.int_rle_aligned_count(buf, total)
-            return codecs.decode_int_rle(buf, ac, signed)[0]
-
-        # RLE v1 worst case ~11 B/value (10-byte varint + headers), plus a
-        # group-alignment tail of at most 129 further values
-        vals = self._rle_window(col, kind, blk, off, total * 11 + 1600, decode)
-        return vals[skip : skip + count]
-
-    def _byte_rle_at(self, col, kind, blk, off, total):
-        def decode(buf):
-            ac = codecs.byte_rle_aligned_count(buf, total)
-            return codecs.decode_byte_rle(buf, ac)[0]
-
-        return self._rle_window(col, kind, blk, off, total + total // 64 + 256, decode)
-
-    def _bytes_window(self, col, kind, cur, count):
-        blk, off = cur.instream()
-        (skip,) = cur.take(1)
-        return self._byte_rle_at(col, kind, blk, off, skip + count)[skip : skip + count]
-
-    def _bits_window(self, col, kind, cur, count):
-        blk, off = cur.instream()
-        skip, bit = cur.take(2)
-        nbytes = (bit + count + 7) // 8
-        raw = self._byte_rle_at(col, kind, blk, off, skip + nbytes)
-        return np.unpackbits(raw[skip : skip + nbytes])[bit : bit + count].astype(bool)
-
-    def _raw_window(self, col, kind, cur, need):
-        blk, off = cur.instream()
-        return self._window(col, kind, blk, off, need)
-
     def _stride_dict_size_index(self, type_id: int) -> int:
         """Index of the per-stride side-dictionary SIZE within a
-        stride-dictionary column's RowIndexEntry positions.
-
-        Two layouts exist: our writer's compact [size] (1 position), and
-        the reference's full seek layout, where
-        LazyStringDictionaryTreeReader.loadIndeces (reference :120-139)
-        consumes, in order: PRESENT bitfield (InStream + byte-skip +
-        bit-pos) if nullable, STRIDE_DICTIONARY raw InStream,
-        STRIDE_DICTIONARY_LENGTH int-RLE (InStream + value-skip), THEN the
-        size — an InStream is 1 position uncompressed, 2 compressed
-        (InStream.java:123-131, :212-220)."""
+        stride-dictionary column's RowIndexEntry positions: the reference's
+        full seek layout, where LazyStringDictionaryTreeReader.loadIndeces
+        (reference :120-139) consumes, in order: PRESENT bitfield
+        (InStream + byte-skip + bit-pos) if nullable, STRIDE_DICTIONARY raw
+        InStream, STRIDE_DICTIONARY_LENGTH int-RLE (InStream + value-skip),
+        THEN the size — an InStream is 1 position uncompressed, 2
+        compressed (InStream.java:123-131, :212-220)."""
         ins = 2 if self.r.compression != CompressionKind.NONE else 1
         idx = ins + (ins + 1)  # STRIDE_DICTIONARY + STRIDE_DICTIONARY_LENGTH
         if self.has_stream(type_id, StreamKind.PRESENT):
             idx += ins + 2  # PRESENT bitfield: InStream + byte-skip + bit
         return idx
 
+    # -- column decode ---------------------------------------------------------
+
+    def decode_column(self, type_id: int, n_rows: int) -> pa.Array:
+        """The stripe's `n_rows` rows of `type_id`, every stream read
+        whole."""
+        with profiler.phase("decoding"):
+            return self._decode(type_id, n_rows, _WholeReader(self, type_id))
+
     def decode_stride_column(
         self, type_id: int, s_idx: int, stride: int, n_rows: int, lazy: bool = False
     ) -> pa.Array | _DictStride:
         """Decode rows [s_idx*stride, min((s_idx+1)*stride, n_rows)) of a
         top-level column using its recorded seek positions, recursing into
-        nested children (each child consumes its OWN RowIndexEntry, the
-        LazyListTreeReader.java:101-107 pattern). Raises NoStridePositions
-        when a column in the subtree has none (UNION branches, legacy
-        files) — callers fall back to the whole-stripe decode. With
-        `lazy`, a NULL-free stride of a DICTIONARY SHORT/INT/LONG/STRING
-        column comes back as a _DictStride (see _decode_stride_at)."""
+        nested children. Raises NoStridePositions when a column in the
+        subtree has none (a UNION, a file without a row index) — callers
+        fall back to the whole-stripe decode. With `lazy` (a column
+        without a date annotation, read for the point reads' stride
+        cache), a stride without NULLs of a DICTIONARY-encoded SHORT, INT,
+        LONG or STRING column (not a stride-dictionary one) is a
+        _DictStride: its ids over the stripe dictionary that _dictionary
+        memoizes, so the cache holds ids, not values."""
         rows = min(stride, n_rows - s_idx * stride)
         lazy = lazy and type_id not in self.r.date_ids
-        return self._decode_stride_at(type_id, s_idx, rows, lazy)
+        return self._decode(type_id, rows, _SeekReader(self, type_id, s_idx), lazy)
 
-    def _decode_stride_at(
-        self, type_id: int, s_idx: int, rows: int, lazy: bool = False
-    ) -> pa.Array | _DictStride:
-        """The stride of `rows` rows at stride s_idx of `type_id`, as an
-        Arrow array. With `lazy` (a top-level column without a date
-        annotation, read for the point reads' stride cache), a stride
-        without NULLs of a DICTIONARY-encoded SHORT, INT, LONG or STRING
-        column (not a stride-dictionary one) is a _DictStride instead: its
-        ids over the stripe dictionary that _dictionary memoizes, so the
-        cache holds ids, not values. Every other stride (NULLs, a date,
-        stride dictionaries, nested children) is materialized."""
+    def _decode(self, type_id: int, rows: int, rd, lazy: bool = False):
+        """The one per-type decode of both the whole-stripe scan and the
+        stride seek (LazyTreeReader.java:300-365: one reader per type
+        serves next() and seekToRow): `rows` rows of `type_id`, whose
+        streams the stream reader `rd` reads (_WholeReader or
+        _SeekReader), as an Arrow array, or a _DictStride with `lazy`."""
         t = self.r.types[type_id]
         kind = TypeKind(t.kind)
-        if kind not in _STRIDE_DECODABLE:
+        if kind == TypeKind.UNION and rd.seeks:
+            # branch value positions would need per-stride per-branch
+            # counts, which the reference does not record either
             raise NoStridePositions(type_id)
         if rows <= 0:
             return self._empty(type_id)
-        ri = self.row_index(type_id)
-        if ri is None or s_idx >= len(ri.entry):
-            if kind == TypeKind.STRUCT and not self.has_stream(
-                type_id, StreamKind.PRESENT
-            ):
-                # a never-null struct writes no streams of its own, hence
-                # no ROW_INDEX — only its children carry positions
-                pos_vals: list[int] = []
-            else:
-                raise NoStridePositions(type_id)
-        else:
-            pos_vals = [int(v) for v in ri.entry[s_idx].positions]
-        cur = _PosCursor(pos_vals, self.r.compression != CompressionKind.NONE)
+        if not rd.seeks and self.has_stream(type_id, StreamKind.IN_DICTIONARY):
+            # A14 stride dictionaries: each stride's side dictionary loads
+            # from its own positions, so the stripe is its strides in turn
+            stride = self.r.footer.rowIndexStride
+            try:
+                return pa.concat_arrays(
+                    [
+                        self._decode(
+                            type_id,
+                            min(stride, rows - lo),
+                            _SeekReader(self, type_id, lo // stride),
+                        )
+                        for lo in range(0, rows, stride)
+                    ]
+                )
+            except NoStridePositions as e:
+                raise DwrfCorruptError(
+                    f"column {type_id}: stride dictionaries without seek positions"
+                ) from e
         if self.has_stream(type_id, StreamKind.PRESENT):
-            present = self._bits_window(type_id, StreamKind.PRESENT, cur, rows)
+            present = rd.bits(StreamKind.PRESENT, rows)
             nd = int(present.sum())
         else:
-            present = None
-            nd = rows
+            present, nd = None, rows
         enc = self.encodings[type_id]
         if nd == 0:
             dense = self._empty(type_id)
         elif kind == TypeKind.BOOLEAN:
-            dense = pa.array(
-                self._bits_window(type_id, StreamKind.DATA, cur, nd), type=pa.bool_()
-            )
+            dense = pa.array(rd.bits(StreamKind.DATA, nd), type=pa.bool_())
         elif kind == TypeKind.BYTE:
-            dense = pa.array(
-                self._bytes_window(type_id, StreamKind.DATA, cur, nd).view(np.int8),
-                type=pa.int8(),
-            )
-        elif kind in (TypeKind.SHORT, TypeKind.INT, TypeKind.LONG):
-            pa_type = {
-                TypeKind.SHORT: pa.int16(),
-                TypeKind.INT: pa.int32(),
-                TypeKind.LONG: pa.int64(),
-            }[kind]
+            dense = pa.array(rd.bytes(StreamKind.DATA, nd).view(np.int8), type=pa.int8())
+        elif kind in _INT_TYPES:
+            pa_type = _INT_TYPES[kind]
             np_type = pa_type.to_pandas_dtype()
             if enc.kind == int(ColumnEncodingKind.DICTIONARY):
                 dict_vals = self._dictionary(
@@ -908,378 +951,86 @@ class _StripeDecoder:
                         signed=True,
                     )[0].astype(np_type, copy=False),
                 )
-                ids = self._ints_window(type_id, StreamKind.DATA, cur, nd, signed=False)
+                ids = rd.ints(StreamKind.DATA, nd, signed=False)
                 if lazy and nd == rows:
                     return self._lazy_stride(type_id, ids, dict_vals, pa_type)
                 vals = dict_vals[ids]
             else:
-                vals = self._ints_window(type_id, StreamKind.DATA, cur, nd, signed=True)
+                vals = rd.ints(StreamKind.DATA, nd, signed=True)
+            # copy=False: LONG values (int64 from the RLE decoder) hand
+            # their buffer to Arrow without a copy
             dense = pa.array(vals.astype(np_type, copy=False), type=pa_type)
         elif kind in (TypeKind.FLOAT, TypeKind.DOUBLE):
-            np_t = np.dtype("<f4") if kind == TypeKind.FLOAT else np.dtype("<f8")
-            raw = self._raw_window(type_id, StreamKind.DATA, cur, nd * np_t.itemsize)
-            dense = pa.array(
-                np.frombuffer(raw.tobytes(), dtype=np_t, count=nd),
-                type=pa.float32() if kind == TypeKind.FLOAT else pa.float64(),
-            )
+            is_float = kind == TypeKind.FLOAT
+            np_t = np.dtype("<f4") if is_float else np.dtype("<f8")
+            # a view of raw(): of the whole stream, or of a seek's copy
+            vals = np.frombuffer(rd.raw(StreamKind.DATA, nd * np_t.itemsize), np_t, nd)
+            dense = pa.array(vals, type=pa.float32() if is_float else pa.float64())
         elif kind in (TypeKind.STRING, TypeKind.BINARY):
+            pa_type = pa.string() if kind == TypeKind.STRING else pa.binary()
             if enc.kind == int(ColumnEncodingKind.DICTIONARY):
                 n_dict = enc.dictionarySize
                 dict_arr = self._dictionary(
                     type_id, lambda: self._string_dictionary(type_id, n_dict)
                 )
                 if self.has_stream(type_id, StreamKind.IN_DICTIONARY):
-                    # A14 stride dictionaries, seek path: this stride's
-                    # side dictionary loads from its own positions
-                    # (LazyStringDictionaryTreeReader.loadStrideDictionary)
-                    # — SD raw offset, SDL rle coords, side-dict SIZE —
-                    # then ids/bits windows; singleton ids index the side
-                    # dict directly since the window IS one stride
-                    sd_blk, sd_off = cur.instream()
-                    sdl_blk, sdl_off = cur.instream()
-                    (sdl_skip,) = cur.take(1)
-                    (sd_size,) = cur.take(1)
-                    sd_lengths = self._ints_at(
-                        type_id,
-                        StreamKind.STRIDE_DICTIONARY_LENGTH,
-                        sdl_blk,
-                        sdl_off,
-                        sdl_skip,
-                        sd_size,
-                        signed=False,
-                    )
-                    sd_raw = self._window(
-                        type_id,
-                        StreamKind.STRIDE_DICTIONARY,
-                        sd_blk,
-                        sd_off,
-                        int(sd_lengths.sum()),
-                    )
-                    ids = self._ints_window(
-                        type_id, StreamKind.DATA, cur, nd, signed=False
-                    )
-                    in_dict = self._bits_window(
-                        type_id, StreamKind.IN_DICTIONARY, cur, nd
-                    )
+                    # a seek (see above): an IN_DICTIONARY bit per value
+                    # picks the stripe dictionary or the stride's own
+                    side = rd.side_dictionary()
+                    ids = rd.ints(StreamKind.DATA, nd, signed=False)
+                    in_dict = rd.bits(StreamKind.IN_DICTIONARY, nd)
                     ids = np.where(in_dict, ids, n_dict + ids)
-                    dict_arr = pa.concat_arrays(
-                        [dict_arr, _large_utf8(sd_lengths, sd_raw.tobytes())]
-                    )
+                    dict_arr = pa.concat_arrays([dict_arr, side])
                 else:
-                    ids = self._ints_window(
-                        type_id, StreamKind.DATA, cur, nd, signed=False
-                    )
+                    ids = rd.ints(StreamKind.DATA, nd, signed=False)
                     if lazy and nd == rows and kind == TypeKind.STRING:
-                        return self._lazy_stride(type_id, ids, dict_arr, pa.string())
-                dense = dict_arr.take(pa.array(ids, type=pa.int64())).cast(pa.string())
+                        return self._lazy_stride(type_id, ids, dict_arr, pa_type)
+                dense = dict_arr.take(pa.array(ids, type=pa.int64())).cast(pa_type)
             else:
-                lengths = self._ints_window(
-                    type_id, StreamKind.LENGTH, cur, nd, signed=False
-                )
-                need = int(lengths.sum())
-                data = self._raw_window(type_id, StreamKind.DATA, cur, need)
-                offsets = np.concatenate(
-                    [np.zeros(1, dtype=np.int64), np.cumsum(lengths)]
-                )
-                is_str = kind == TypeKind.STRING
-                dense = pa.Array.from_buffers(
-                    pa.large_utf8() if is_str else pa.large_binary(),
-                    nd,
-                    [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data.tobytes())],
-                ).cast(pa.string() if is_str else pa.binary())
+                lengths = rd.ints(StreamKind.LENGTH, nd, signed=False)
+                data = rd.raw(StreamKind.DATA, int(lengths.sum()))
+                big = pa.large_utf8() if kind == TypeKind.STRING else pa.large_binary()
+                # Arrow's buffer is raw() itself: the string payload (the
+                # widest stream in a text table) is not copied again
+                dense = _offsets_array(lengths, data, big).cast(pa_type)
         elif kind == TypeKind.TIMESTAMP:
-            secs = self._ints_window(type_id, StreamKind.DATA, cur, nd, signed=True)
-            packed = self._ints_window(
-                type_id, StreamKind.NANO_DATA, cur, nd, signed=False
-            )
-            nanos = _unpack_nanos(packed.view(np.uint64))
+            secs = rd.ints(StreamKind.DATA, nd, signed=True) + TIMESTAMP_BASE_SECONDS
+            nanos = _unpack_nanos(rd.ints(StreamKind.NANO_DATA, nd, signed=False))
             if type_id in self.r.ns_timestamp_ids:
-                ns = (secs + TIMESTAMP_BASE_SECONDS) * 1_000_000_000 + nanos
+                ns = secs * 1_000_000_000 + nanos
                 dense = pa.array(ns.view("datetime64[ns]"), type=pa.timestamp("ns"))
             else:
-                us = (secs + TIMESTAMP_BASE_SECONDS) * 1_000_000 + nanos // 1000
+                us = secs * 1_000_000 + nanos // 1000
                 dense = pa.array(us.view("datetime64[us]"), type=pa.timestamp("us"))
-        elif kind == TypeKind.LIST:
-            lengths = self._ints_window(
-                type_id, StreamKind.LENGTH, cur, nd, signed=False
-            )
-            child = self._decode_stride_at(
-                t.subtypes[0], s_idx, int(lengths.sum())
-            )
-            offsets = np.concatenate(
-                [np.zeros(1, dtype=np.int32), np.cumsum(lengths, dtype=np.int32)]
-            )
-            dense = pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int32()), child
-            )
-        elif kind == TypeKind.MAP:
-            lengths = self._ints_window(
-                type_id, StreamKind.LENGTH, cur, nd, signed=False
-            )
+        elif kind in (TypeKind.LIST, TypeKind.MAP):
+            lengths = rd.ints(StreamKind.LENGTH, nd, signed=False)
             child_n = int(lengths.sum())
-            keys = self._decode_stride_at(t.subtypes[0], s_idx, child_n)
-            items = self._decode_stride_at(t.subtypes[1], s_idx, child_n)
             offsets = np.concatenate(
                 [np.zeros(1, dtype=np.int32), np.cumsum(lengths, dtype=np.int32)]
             )
-            dense = pa.MapArray.from_arrays(
-                pa.array(offsets, type=pa.int32()), keys, items
-            )
+            kids = [self._decode(s, child_n, rd.child(s)) for s in t.subtypes]
+            cls = pa.ListArray if kind == TypeKind.LIST else pa.MapArray
+            dense = cls.from_arrays(pa.array(offsets, type=pa.int32()), *kids)
         elif kind == TypeKind.STRUCT:
             fields = self._struct_fields(t)
             dense = pa.StructArray.from_arrays(
-                [self._decode_stride_at(s, s_idx, nd) for _, s in fields],
+                [self._decode(s, nd, rd.child(s)) for _, s in fields],
                 names=[nm for nm, _ in fields],
             )
-        else:
-            raise NoStridePositions(type_id)
-        out = dense if present is None else _scatter(dense, present)
-        if type_id in self.r.date_ids:
-            out = out.cast(pa.date32())
-        return out
-
-    # -- column decode ---------------------------------------------------------
-
-    def decode_column(self, type_id: int, n_rows: int) -> pa.Array:
-        with profiler.phase("decoding"):
-            return self._decode_column_impl(type_id, n_rows)
-
-    def _decode_column_impl(self, type_id: int, n_rows: int) -> pa.Array:
-        t = self.r.types[type_id]
-        kind = TypeKind(t.kind)
-        if self.has_stream(type_id, StreamKind.PRESENT):
-            present, _ = codecs.decode_bits(
-                self.stream(type_id, StreamKind.PRESENT), n_rows
+        else:  # UNION, read whole
+            tags = rd.bytes(StreamKind.DATA, nd)
+            branches = [
+                _scatter(self._decode(s, int((tags == i).sum()), rd.child(s)), tags == i)
+                for i, s in enumerate(t.subtypes)
+            ]
+            dense = pa.StructArray.from_arrays(
+                [pa.array(tags.view(np.int8), type=pa.int8())] + branches,
+                names=["tag"] + [f"field{i}" for i in range(len(t.subtypes))],
             )
-            n_values = int(present.sum())
-        else:
-            present = None
-            n_values = n_rows
-        # stride-dictionary decode needs the dense->row mapping of the
-        # column being decoded (top-level only; consumed before recursion);
-        # thread-local so concurrent column decodes don't race
-        self._tls.present_mask = present
-        self._tls.present_rows = n_rows
-
-        if n_values == 0:
-            dense = self._empty(type_id)
-            if present is None:
-                return dense
-            return _scatter(dense, present)
-
-        handler = {
-            TypeKind.BOOLEAN: self._decode_boolean,
-            TypeKind.BYTE: self._decode_byte,
-            TypeKind.SHORT: self._decode_int,
-            TypeKind.INT: self._decode_int,
-            TypeKind.LONG: self._decode_int,
-            TypeKind.FLOAT: self._decode_float,
-            TypeKind.DOUBLE: self._decode_float,
-            TypeKind.STRING: self._decode_string,
-            TypeKind.BINARY: self._decode_binary,
-            TypeKind.TIMESTAMP: self._decode_timestamp,
-            TypeKind.LIST: self._decode_list,
-            TypeKind.MAP: self._decode_map,
-            TypeKind.STRUCT: self._decode_struct,
-            TypeKind.UNION: self._decode_union,
-        }[kind]
-        dense = handler(type_id, n_values)
         out = dense if present is None else _scatter(dense, present)
         if type_id in self.r.date_ids:
             out = out.cast(pa.date32())  # stored as INT days-since-epoch
         return out
-
-    def _decode_boolean(self, type_id, n):
-        bits, _ = codecs.decode_bits(self.stream(type_id, StreamKind.DATA), n)
-        return pa.array(bits, type=pa.bool_())
-
-    def _decode_byte(self, type_id, n):
-        vals, _ = codecs.decode_byte_rle(self.stream(type_id, StreamKind.DATA), n)
-        return pa.array(vals.view(np.int8), type=pa.int8())
-
-    def _decode_int(self, type_id, n):
-        enc = self.encodings[type_id]
-        if enc.kind == int(ColumnEncodingKind.DICTIONARY):
-            dict_vals, _ = codecs.decode_int_rle(
-                self.stream(type_id, StreamKind.DICTIONARY_DATA),
-                enc.dictionarySize,
-                signed=True,
-            )
-            ids, _ = codecs.decode_int_rle(
-                self.stream(type_id, StreamKind.DATA), n, signed=False
-            )
-            vals = dict_vals[ids]
-        else:
-            vals, _ = codecs.decode_int_rle(
-                self.stream(type_id, StreamKind.DATA), n, signed=True
-            )
-        kind = TypeKind(self.r.types[type_id].kind)
-        pa_type = {
-            TypeKind.SHORT: pa.int16(),
-            TypeKind.INT: pa.int32(),
-            TypeKind.LONG: pa.int64(),
-        }[kind]
-        np_type = {
-            TypeKind.SHORT: np.int16,
-            TypeKind.INT: np.int32,
-            TypeKind.LONG: np.int64,
-        }[kind]
-        # copy=False: LONG columns (already int64 from the RLE decoder)
-        # hand their buffer to Arrow without a duplicate pass
-        return pa.array(vals.astype(np_type, copy=False), type=pa_type)
-
-    def _decode_float(self, type_id, n):
-        kind = TypeKind(self.r.types[type_id].kind)
-        np_t = np.dtype("<f4") if kind == TypeKind.FLOAT else np.dtype("<f8")
-        buf = self.stream(type_id, StreamKind.DATA)
-        # zero-copy reinterpret of the decompressed stream (tobytes() here
-        # duplicated every float column's bytes — measured ~10% of a full
-        # lineitem read); slice first so the view length is exact
-        vals = np.ascontiguousarray(buf[: n * np_t.itemsize]).view(np_t)
-        return pa.array(
-            vals, type=pa.float32() if kind == TypeKind.FLOAT else pa.float64()
-        )
-
-    def _string_like(self, type_id, n, pa_type):
-        enc = self.encodings[type_id]
-        if enc.kind == int(ColumnEncodingKind.DICTIONARY):
-            n_dict = enc.dictionarySize
-            key_lengths, _ = codecs.decode_int_rle(
-                self.stream(type_id, StreamKind.LENGTH), n_dict, signed=False
-            )
-            key_data = self.stream(type_id, StreamKind.DICTIONARY_DATA).tobytes()
-            ids, _ = codecs.decode_int_rle(
-                self.stream(type_id, StreamKind.DATA), n, signed=False
-            )
-            if self.has_stream(type_id, StreamKind.IN_DICTIONARY):
-                # A14 stride dictionaries: IN_DICTIONARY bit selects stripe
-                # vs per-stride side dictionary; ids index whichever was
-                # picked. Rebuild one combined dictionary (stripe keys then
-                # all stride keys in stride order) and rebase stride ids.
-                in_dict, _ = codecs.decode_bits(
-                    self.stream(type_id, StreamKind.IN_DICTIONARY), n
-                )
-                ri = self.row_index(type_id)
-                sidx = self._stride_dict_size_index(type_id)
-                sizes = np.array(
-                    [
-                        (
-                            e.positions[0]
-                            if len(e.positions) == 1
-                            else e.positions[sidx]
-                        )
-                        if e.positions
-                        else 0
-                        for e in ri.entry
-                    ],
-                    dtype=np.int64,
-                )
-                total = int(sizes.sum())
-                sd_lengths, _ = codecs.decode_int_rle(
-                    self.stream(type_id, StreamKind.STRIDE_DICTIONARY_LENGTH),
-                    total,
-                    signed=False,
-                )
-                sd_data = (
-                    self.stream(type_id, StreamKind.STRIDE_DICTIONARY).tobytes()
-                    if self.has_stream(type_id, StreamKind.STRIDE_DICTIONARY)
-                    else b""
-                )
-                stride = self.r.footer.rowIndexStride
-                present = getattr(self._tls, "present_mask", None)
-                rows_of_dense = (
-                    np.flatnonzero(present)
-                    if present is not None
-                    else np.arange(n, dtype=np.int64)
-                )
-                stride_offsets = np.concatenate(
-                    [np.zeros(1, dtype=np.int64), np.cumsum(sizes)[:-1]]
-                )
-                stride_of_dense = rows_of_dense // stride
-                ids = np.where(
-                    in_dict, ids, n_dict + stride_offsets[stride_of_dense] + ids
-                )
-                key_lengths = np.concatenate([key_lengths, sd_lengths])
-                key_data = key_data + sd_data
-                n_dict += total
-            key_offsets = np.concatenate(
-                [np.zeros(1, dtype=np.int64), np.cumsum(key_lengths)]
-            )
-            dict_arr = pa.Array.from_buffers(
-                pa.large_utf8(),
-                n_dict,
-                [
-                    None,
-                    pa.py_buffer(key_offsets.tobytes()),
-                    pa.py_buffer(key_data),
-                ],
-            )
-            return dict_arr.take(pa.array(ids, type=pa.int64())).cast(pa_type)
-        lengths, _ = codecs.decode_int_rle(
-            self.stream(type_id, StreamKind.LENGTH), n, signed=False
-        )
-        data = (
-            self.stream(type_id, StreamKind.DATA)
-            if self.has_stream(type_id, StreamKind.DATA)
-            else np.zeros(0, dtype=np.uint8)
-        )
-        offsets = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lengths)])
-        big = pa.large_utf8() if pa_type == pa.string() else pa.large_binary()
-        # py_buffer over the numpy memory directly — tobytes() duplicated
-        # the whole string payload (the widest stream in a text table)
-        arr = pa.Array.from_buffers(
-            big,
-            n,
-            [
-                None,
-                pa.py_buffer(memoryview(offsets)),
-                pa.py_buffer(memoryview(np.ascontiguousarray(data))),
-            ],
-        )
-        return arr.cast(pa_type)
-
-    def _decode_string(self, type_id, n):
-        return self._string_like(type_id, n, pa.string())
-
-    def _decode_binary(self, type_id, n):
-        return self._string_like(type_id, n, pa.binary())
-
-    def _decode_timestamp(self, type_id, n):
-        secs, _ = codecs.decode_int_rle(
-            self.stream(type_id, StreamKind.DATA), n, signed=True
-        )
-        packed, _ = codecs.decode_int_rle(
-            self.stream(type_id, StreamKind.NANO_DATA), n, signed=False
-        )
-        nanos = _unpack_nanos(packed.view(np.uint64))
-        if type_id in self.r.ns_timestamp_ids:
-            ns = (secs + TIMESTAMP_BASE_SECONDS) * 1_000_000_000 + nanos
-            return pa.array(ns.view("datetime64[ns]"), type=pa.timestamp("ns"))
-        us = (secs + TIMESTAMP_BASE_SECONDS) * 1_000_000 + nanos // 1000
-        return pa.array(us.view("datetime64[us]"), type=pa.timestamp("us"))
-
-    def _decode_list(self, type_id, n):
-        lengths, _ = codecs.decode_int_rle(
-            self.stream(type_id, StreamKind.LENGTH), n, signed=False
-        )
-        child_n = int(lengths.sum())
-        child = self.decode_column(self.r.types[type_id].subtypes[0], child_n)
-        offsets = np.concatenate(
-            [np.zeros(1, dtype=np.int32), np.cumsum(lengths, dtype=np.int32)]
-        )
-        return pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), child)
-
-    def _decode_map(self, type_id, n):
-        lengths, _ = codecs.decode_int_rle(
-            self.stream(type_id, StreamKind.LENGTH), n, signed=False
-        )
-        child_n = int(lengths.sum())
-        keys = self.decode_column(self.r.types[type_id].subtypes[0], child_n)
-        items = self.decode_column(self.r.types[type_id].subtypes[1], child_n)
-        offsets = np.concatenate(
-            [np.zeros(1, dtype=np.int32), np.cumsum(lengths, dtype=np.int32)]
-        )
-        return pa.MapArray.from_arrays(pa.array(offsets, type=pa.int32()), keys, items)
 
     def _struct_fields(self, t) -> list[tuple[str, int]]:
         """(name, type id) of the fields of struct `t` the projection keeps."""
@@ -1295,23 +1046,6 @@ class _StripeDecoder:
         if self.decode_ids is not None:
             f = _prune_field(self.r.types, self.decode_ids, f, type_id)
         return pa.array([], type=f.type)
-
-    def _decode_struct(self, type_id, n):
-        fields = self._struct_fields(self.r.types[type_id])
-        children = [self.decode_column(s, n) for _, s in fields]
-        return pa.StructArray.from_arrays(children, names=[nm for nm, _ in fields])
-
-    def _decode_union(self, type_id, n):
-        t = self.r.types[type_id]
-        tags_np, _ = codecs.decode_byte_rle(self.stream(type_id, StreamKind.DATA), n)
-        children = []
-        for i, s in enumerate(t.subtypes):
-            branch_n = int((tags_np == i).sum())
-            branch = self.decode_column(s, branch_n)
-            children.append(_scatter(branch, tags_np == i))
-        tag_arr = pa.array(tags_np.view(np.int8), type=pa.int8())
-        names = ["tag"] + [f"field{i}" for i in range(len(t.subtypes))]
-        return pa.StructArray.from_arrays([tag_arr] + children, names=names)
 
 
 # --- filter evaluation against statistics --------------------------------------
@@ -1883,10 +1617,11 @@ class DwrfFile:
         # stripe; a per-task column pool would oversubscribe). For the
         # whole-file read() of a single-stripe file it is a measured ~1.6x
         # win since the r5 native kernels — ctypes RLE decode and zlib both
-        # release the GIL, and the decoder's stream cache / TLS scratch
-        # were built thread-safe. (An earlier all-numpy decoder measured
-        # SLOWER under a column pool; the C kernels changed that.)
-        if parallel_columns and len(selected) > 1 and not profiler.enabled:
+        # release the GIL, and the decoder's memos and the profiler are
+        # thread-safe (a profiled read keeps both pools). An earlier
+        # all-numpy decoder measured SLOWER under a column pool; the C
+        # kernels changed that.
+        if parallel_columns and len(selected) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
             workers = min(len(selected), os.cpu_count() or 4, 12)
@@ -1948,8 +1683,8 @@ class DwrfFile:
         # runs, and nesting pools (~3 x 12 threads) oversubscribes the
         # host for GIL-released decode work that is cache-friendlier done
         # per-stripe (matches read_stripe's documented policy)
-        par_cols = n_stripes == 1 and not profiler.enabled
-        if n_stripes > 1 and not profiler.enabled:
+        par_cols = n_stripes == 1
+        if n_stripes > 1:
             # Decode stripes on a small thread pool: the hot paths (ctypes
             # RLE decode, zlib, pread) all release the GIL, so this scales
             # like the C++ parquet reader's internal parallelism. Spark's

@@ -26,8 +26,10 @@ TreeWriter fan-out). Encoding policy per column per stripe:
   (reader.decode_stride_column). Stride-dictionary columns write the
   reference's FULL layout (LazyStringDictionaryTreeReader.loadIndeces
   order: [PRESENT] STRIDE_DICTIONARY, STRIDE_DICTIONARY_LENGTH, side-dict
-  SIZE, DATA, IN_DICTIONARY); nested columns record none (whole-stripe
-  fallback).
+  SIZE, DATA, IN_DICTIONARY). The children of a LIST, MAP or STRUCT
+  record their own entries at the values their parent's stride starts
+  at (LazyListTreeReader.java:101-107); UNION branches record none, so
+  a UNION is read whole-stripe.
 """
 
 from __future__ import annotations

@@ -43,61 +43,9 @@ def register(spark) -> None:
 
     apply_runtime_confs(spark)
     ensure_shipped(spark)
-    _install_auto_broadcast()
     if not getattr(spark, "_hive_dwrf_registered", False):
         spark.dataSource.register(DwrfDataSource)
         spark._hive_dwrf_registered = True
     from .udtf import register_udtfs
 
     register_udtfs(spark)
-
-
-def _install_auto_broadcast() -> None:
-    """Make the footer-statistics broadcast hint AMBIENT for plain
-    ``spark.read.format("dwrf").load(path)`` reads, gated by the session
-    conf ``spark.dwrf.autoBroadcast`` (default off).
-
-    Why a reader wrapper: Spark's Python DataSource API has no
-    SupportsReportStatistics equivalent, so every Python-source scan
-    carries spark.sql.defaultSizeInBytes (Long.Max) into planning and a
-    KB-scale DWRF dimension NEVER auto-broadcasts — the reference's host
-    planner gets rawDataSize from the footer for free
-    (ReaderImpl.java:204-260). ``broadcast_if_small`` closes the gap for
-    callers who know to invoke it; this wrapper applies the same decision
-    inside DataFrameReader.load so unmodified reads benefit. The conf is
-    consulted AT EACH LOAD (toggling it mid-session works), the wrapper
-    changes nothing when the conf is off, and the decision itself is the
-    one a stats-reporting source would have produced: hint iff footer
-    raw_bytes clears the session's autoBroadcastJoinThreshold. Installed
-    once process-wide by register(); idempotent. When Spark ships a stats
-    hook for Python sources this becomes a no-op shim."""
-    from pyspark.sql.readwriter import DataFrameReader
-
-    if getattr(DataFrameReader, "_dwrf_auto_broadcast", False):
-        return
-    orig_format = DataFrameReader.format
-    orig_load = DataFrameReader.load
-
-    def _format(self, source):
-        # classic DataFrameReader keeps the format only on the JVM side;
-        # record it so load() can recognize dwrf reads
-        self._dwrf_source = source
-        return orig_format(self, source)
-
-    def _load(self, path=None, format=None, schema=None, **options):
-        df = orig_load(self, path, format=format, schema=schema, **options)
-        source = format or getattr(self, "_dwrf_source", None)
-        if source == "dwrf" and isinstance(path, str):
-            session = df.sparkSession
-            enabled = str(
-                session.conf.get("spark.dwrf.autoBroadcast", "false")
-            ).lower()
-            if enabled == "true":
-                from .stats import broadcast_if_small
-
-                df = broadcast_if_small(df, path)
-        return df
-
-    DataFrameReader.format = _format
-    DataFrameReader.load = _load
-    DataFrameReader._dwrf_auto_broadcast = True

@@ -7,8 +7,9 @@ multiplicative and positive, so the min estimates code cost):
   2. t_zlib     — raw zlib floor: decompress every compressed block of
                   every stream of the DWRF file, NO decode, serial
                   (matches a Spark task: one core per stripe-split)
-  3. t_full     — DwrfFile.read() (serial: profiler enabled disables the
-                  column pool so the comparison is per-core like a task)
+  3. t_full     — every stripe through DwrfFile.read_stripe, one after
+                  another (serial, per-core like a task; read() would
+                  decode on its stripe and column pools)
   4. decode     = t_full - t_zlib -> our RLE/assembly cost above the floor
 
 Usage: python scripts/decode_gap.py [parquet_path] [reps]
@@ -41,7 +42,6 @@ def main() -> int:
 
     from hive_dwrf_spark.format import DwrfFile, write_arrow_table
     from hive_dwrf_spark.format.constants import CompressionKind
-    from hive_dwrf_spark.format.profiler import profiler
 
     parquet = (
         sys.argv[1]
@@ -80,15 +80,13 @@ def main() -> int:
     t_zlib = best_of(zlib_floor, reps)
     t_parquet = best_of(lambda: pq.read_table(parquet), reps)
 
-    profiler.enable()  # forces the serial (per-core, Spark-task-like) path
-
     def full_read():
         with DwrfFile(dwrf_path) as f:
-            f.read()
+            for i in range(len(f.footer.stripes)):
+                f.read_stripe(i)
 
     full_read()
     t_full = best_of(full_read, reps)
-    profiler.disable()
 
     out = {
         "table": os.path.basename(parquet),

@@ -645,43 +645,6 @@ def test_broadcast_if_small_fixes_dwrf_join_strategy(dwrf_spark, tmp_path):
     )
 
 
-def test_auto_broadcast_conf_makes_hint_ambient(dwrf_spark, tmp_path):
-    """With spark.dwrf.autoBroadcast=true, a PLAIN
-    spark.read.format("dwrf").load(path) join flips SortMergeJoin ->
-    BroadcastHashJoin with no explicit broadcast_if_small call anywhere —
-    the ambient form of the footer-stats workaround. Conf off (the
-    default) leaves reads untouched."""
-    from hive_dwrf_spark.tables import load
-
-    spark = dwrf_spark
-    dim_path = str(tmp_path / "nation_dwrf")
-    fact_path = str(tmp_path / "customer_dwrf")
-    load(spark, SF_SMOKE, "nation").write.format("dwrf").option(
-        "path", dim_path
-    ).mode("append").save()
-    load(spark, SF_SMOKE, "customer").write.format("dwrf").option(
-        "path", fact_path
-    ).mode("append").save()
-
-    def plain_join_plan():
-        fact = spark.read.format("dwrf").load(fact_path)
-        dim = spark.read.format("dwrf").load(dim_path)
-        j = fact.join(dim, fact.c_nationkey == dim.n_nationkey)
-        return j._jdf.queryExecution().sparkPlan().toString()
-
-    try:
-        spark.conf.set("spark.dwrf.autoBroadcast", "false")
-        assert "BroadcastHashJoin" not in plain_join_plan()
-        spark.conf.set("spark.dwrf.autoBroadcast", "true")
-        assert "BroadcastHashJoin" in plain_join_plan()
-        # non-dwrf reads are untouched by the wrapper
-        pq = str(tmp_path / "plain_parquet")
-        spark.range(10).write.mode("overwrite").parquet(pq)
-        assert spark.read.format("parquet").load(pq).count() == 10
-    finally:
-        spark.conf.set("spark.dwrf.autoBroadcast", "false")
-
-
 def test_broadcast_refuses_without_raw_size(dwrf_spark, tmp_path):
     """A footer with no rawDataSize (foreign writer) must NOT fall back
     to compressed file size — that would reinstate the compressed-vs-

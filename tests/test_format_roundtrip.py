@@ -471,13 +471,11 @@ class TestUnionType:
     struct<tag: int8, field0, field1> declared via the union_columns
     writer option."""
 
-    def test_union_roundtrip(self, tmp_path):
-        import numpy as np
-        import pyarrow as pa
-
-        from hive_dwrf_spark.format import DwrfFile
+    @staticmethod
+    def _union_file(tmp_path, **opts):
+        """(path, tags, longs, strs) of a 5000-row file whose column "u"
+        is a UNION<long, string>, in stripes of 2000 rows."""
         from hive_dwrf_spark.format.writer import DwrfWriter
-        from hive_dwrf_spark.format.constants import TypeKind
 
         n = 5000
         rng = np.random.RandomState(3)
@@ -496,10 +494,19 @@ class TestUnionType:
         )
         table = pa.table({"k": pa.array(range(n), type=pa.int64()), "u": u})
         path = str(tmp_path / "union.dwrf")
-        w = DwrfWriter(path, table.schema, union_columns={"u"}, stripe_rows=2000)
+        w = DwrfWriter(
+            path, table.schema, union_columns={"u"}, stripe_rows=2000, **opts
+        )
         w.write_table(table)
         w.close()
+        return path, tags, longs, strs
 
+    def test_union_roundtrip(self, tmp_path):
+        from hive_dwrf_spark.format import DwrfFile
+        from hive_dwrf_spark.format.constants import TypeKind
+
+        path, tags, longs, strs = self._union_file(tmp_path)
+        n = len(tags)
         with DwrfFile(path) as f:
             # the footer really contains a UNION node, not a struct
             kinds = {TypeKind(t.kind) for t in f.types}
@@ -510,6 +517,27 @@ class TestUnionType:
         assert got.field("tag").to_pylist() == list(tags)
         assert got.field("field0").to_pylist() == longs.to_pylist()
         assert got.field("field1").to_pylist() == strs.to_pylist()
+
+    def test_union_point_reads_take_whole_stripe_fallback(self, tmp_path):
+        """read_row and read_rows_at on the union file, at stripe and
+        stride edges, equal read(): a UNION has no seek positions, so each
+        stride of it is sliced from one cached whole-stripe decode."""
+        from hive_dwrf_spark.format import DwrfFile
+
+        path, _, _, _ = self._union_file(tmp_path, row_index_stride=700)
+        rows = [0, 699, 700, 1399, 1400, 1999, 2000, 2699, 2700, 3999, 4000, 4999]
+        with DwrfFile(path) as f:
+            full = f.read()
+            expect = full.take(rows)
+            assert f.read_rows_at(rows).equals(expect)
+            assert f.read_rows_at(rows[::-1]).equals(full.take(rows[::-1]))
+            for r, want in zip(rows, expect.to_pylist()):
+                assert f.read_row(r) == want, r
+            u = f._top_level_id("u")
+            # the UNION's entries are whole stripes (stride -1), one per
+            # stripe read; the long column's are strides
+            assert {k[1] for k in f._strides.entries if k[2] == u and k[3] == -1} == {0, 1, 2}
+            assert not [k for k in f._strides.entries if k[2] == u and k[3] != -1]
 
     def test_union_followed_by_date_and_ts_keeps_logical_types(self, tmp_path):
         """Regression: logical-type annotation ids (dwrf.date.ids /
@@ -1466,6 +1494,100 @@ def test_stride_seek_matches_full_decode_nested(tmp_path):
             ]
             whole = pa.concat_arrays([p.cast(parts[0].type) for p in parts])
             assert whole.to_pylist() == full.column(name).to_pylist(), name
+
+
+def _every_kind_table(n: int, stride: int) -> pa.Table:
+    """A column of every type kind, NULLs in each. The NULLs sit in the
+    even strides only, so the odd strides of a DICTIONARY column are
+    NULL-free and decode lazily."""
+    rng = np.random.RandomState(11)
+    null = [(i // stride) % 2 == 0 and i % 5 == 0 for i in range(n)]
+
+    def col(vals, type_):
+        return pa.array([None if m else v for m, v in zip(null, vals)], type=type_)
+
+    def ints(lo, hi):
+        return rng.randint(lo, hi, n, dtype=np.int64).tolist()
+
+    secs = ints(-(10**9), 2 * 10**9)
+    nanos = ints(0, 10**9)
+    return pa.table(
+        {
+            "bool": col((rng.rand(n) < 0.5).tolist(), pa.bool_()),
+            "byte": col(ints(-128, 128), pa.int8()),
+            "short_direct": col(ints(-(2**15), 2**15), pa.int16()),
+            "short_dict": col(ints(-9, 9), pa.int16()),
+            "int_direct": col(ints(-(2**31), 2**31), pa.int32()),
+            "int_dict": col(ints(0, 30), pa.int32()),
+            "long_direct": col(ints(-(2**62), 2**62), pa.int64()),
+            "long_dict": col([v * 10**12 for v in ints(-20, 20)], pa.int64()),
+            "float": col(rng.rand(n).astype(np.float32).tolist(), pa.float32()),
+            "double": col((rng.rand(n) * 1e6).tolist(), pa.float64()),
+            "str_direct": col([f"v{i}-{v}" for i, v in enumerate(ints(0, 10**9))], pa.string()),
+            "str_dict": col([f"key{v}" for v in ints(0, 40)], pa.string()),
+            "binary": col([bytes(rng.bytes(v)) for v in ints(0, 12)], pa.binary()),
+            "ts_us": col([s * 10**6 + ns // 1000 for s, ns in zip(secs, nanos)], pa.timestamp("us")),
+            "ts_ns": col([s * 10**9 + ns for s, ns in zip(secs, nanos)], pa.timestamp("ns")),
+            "date": col(ints(-(10**5), 10**5), pa.date32()),
+            "map": col(
+                [
+                    [(f"k{j}", None if (i + j) % 4 == 0 else i * j) for j in range(i % 3)]
+                    for i in range(n)
+                ],
+                pa.map_(pa.string(), pa.int64()),
+            ),
+        }
+    )
+
+
+@pytest.mark.parametrize("compression", ["zlib", "none"])
+def test_stride_seek_matches_full_decode_every_kind(tmp_path, compression):
+    """decode_stride_column over every stride reassembles exactly the
+    whole-stripe decode, and both the source, for a column of every type
+    kind (direct and DICTIONARY integers and strings among them): under
+    ZLIB with small compression blocks, so windows cross blocks, and
+    uncompressed, where a stream offset is one position. A DICTIONARY
+    column also decodes lazily: its NULL-free strides come back as
+    _DictStride and are compared through to_arrow()."""
+    from hive_dwrf_spark.format.constants import ColumnEncodingKind, CompressionKind
+    from hive_dwrf_spark.format.reader import _DictStride, _StripeDecoder
+
+    n, stride = 5_000, 1_000
+    table = _every_kind_table(n, stride)
+    path = str(tmp_path / "kinds.dwrf")
+    write_arrow_table(
+        path,
+        table,
+        stripe_rows=n,
+        row_index_stride=stride,
+        compression=compression,
+        compression_block_size=1_024,
+        entropy_threshold=0,
+    )
+    with DwrfFile(path) as f:
+        assert (f.compression == CompressionKind.NONE) == (compression == "none")
+        full = f.read()
+        dec = _StripeDecoder(f, f.footer.stripes[0])
+        lazy_strides = 0
+        for name in table.schema.names:
+            expect = table.column(name).to_pylist()
+            assert full.column(name).to_pylist() == expect, name
+            tid = f._top_level_id(name)
+            is_dict = dec.encodings[tid].kind == int(ColumnEncodingKind.DICTIONARY)
+            if name.endswith(("_dict", "_direct")):
+                assert is_dict == name.endswith("_dict"), name
+            for lazy in (False, True) if is_dict else (False,):
+                parts = []
+                for s in range(n // stride):
+                    part = dec.decode_stride_column(tid, s, stride, n, lazy=lazy)
+                    if type(part) is _DictStride:
+                        lazy_strides += 1
+                        part = part.to_arrow()
+                    parts.append(part)
+                got = pa.concat_arrays(parts).to_pylist()
+                assert got == expect, (name, lazy)
+        # the odd strides of the four DICTIONARY columns
+        assert lazy_strides == 4 * 2
 
 
 def test_nullable_stride_dict_seek_and_rebuild_parity(tmp_path):

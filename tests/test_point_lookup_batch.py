@@ -1339,6 +1339,42 @@ def test_point_reads_hold_no_compressed_bytes(tmp_path, monkeypatch, blocks):
     f.close()
 
 
+def test_cached_raw_strides_hold_copies(tmp_path, blocks):
+    """A cached stride of a FLOAT, DOUBLE or direct STRING column owns a
+    copy of its bytes, not a view into a decompressed block of the block
+    cache: a view would keep the whole block alive after the block cache
+    dropped it, while the stride cache charges the stride its slice
+    only."""
+    n = 4_000
+    rng = np.random.default_rng(3)
+    table = pa.table(
+        {
+            "f": pa.array(rng.random(n).astype(np.float32)),
+            "d": pa.array(rng.random(n)),
+            "s": pa.array([f"direct-{i}-{v}" for i, v in enumerate(rng.integers(0, 1 << 40, n))]),
+        }
+    )
+    path = str(tmp_path / "raw.dwrf")
+    write_arrow_table(
+        path, table, row_index_stride=1_000, compression_block_size=64 * 1024
+    )
+    rows = [1_500, 2_500]
+    with DwrfFile(path) as f:
+        assert f.read_rows_at(rows).equals(table.take(rows))
+        dec = next(iter(f._point_decoders.values()))
+        assert dec.encodings[f._top_level_id("s")].kind == int(ColumnEncodingKind.DIRECT)
+        spans = [
+            (part.ctypes.data, part.ctypes.data + part.nbytes)
+            for (part, _), _ in blocks.entries.values()
+        ]
+        cached = [arr for arr, _ in f._strides.entries.values()]
+        assert spans and len(cached) == 2 * 3  # 2 strides x 3 columns
+        for arr in cached:
+            for buf in arr.buffers():
+                if buf is not None and buf.size:
+                    assert not any(lo <= buf.address < hi for lo, hi in spans), arr.type
+
+
 def test_stride_inside_one_block_inflates_one_block(tmp_path, monkeypatch):
     """A stride whose bytes lie inside one compressed block inflates that
     block alone, also where the worst-case RLE window for its row count

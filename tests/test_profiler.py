@@ -4,6 +4,8 @@ nesting counts wall time once."""
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pyarrow as pa
 
@@ -34,7 +36,7 @@ def test_disabled_by_default_counts_nothing(tmp_path):
     assert profiler.report() == {}
 
 
-def test_phases_counted_once_per_nesting(tmp_path):
+def test_phases_counted_once_per_nesting(tmp_path, monkeypatch):
     profiler.reset()
     profiler.enable()
     try:
@@ -48,11 +50,22 @@ def test_phases_counted_once_per_nesting(tmp_path):
         assert rep["write"]["seconds"] >= rep["encoding"]["seconds"]
         assert rep["write"]["seconds"] >= rep["compression"]["seconds"]
 
+        # a profiled read is the same read: its stripes decode on the
+        # stripe pool, as they do unprofiled
+        stripe_threads = set()
+        read_stripe = DwrfFile.read_stripe
+
+        def recording(self, *args, **kwargs):
+            stripe_threads.add(threading.get_ident())
+            return read_stripe(self, *args, **kwargs)
+
+        monkeypatch.setattr(DwrfFile, "read_stripe", recording)
         profiler.reset()
         with DwrfFile(path) as f:
             got = f.read()
         rep = profiler.report()
         assert got.num_rows == 20000
+        assert stripe_threads and threading.get_ident() not in stripe_threads
         for phase in ("read", "decompression", "decoding", "deserialization"):
             assert rep[phase]["calls"] > 0, phase
         assert rep["read"]["seconds"] >= rep["decoding"]["seconds"]
@@ -79,3 +92,40 @@ def test_reentrant_depth_restored_on_error():
     finally:
         profiler.disable()
         profiler.reset()
+
+
+def test_threads_lose_no_counts():
+    """8 threads (more than the cores) nest phases concurrently, with
+    frequent thread switches: every outermost phase is counted once, and
+    every thread's nesting depth returns to zero."""
+    import sys
+
+    per_thread = 300
+    depths = []
+
+    def work():
+        for _ in range(per_thread):
+            with profiler.phase("read"):
+                with profiler.phase("decoding"):
+                    with profiler.phase("decoding"):
+                        pass
+        depths.append(dict(profiler._depth))
+
+    profiler.reset()
+    profiler.enable()
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+        rep = profiler.report()
+    finally:
+        sys.setswitchinterval(old)
+        profiler.disable()
+        profiler.reset()
+    assert rep["read"]["calls"] == rep["decoding"]["calls"] == 8 * per_thread
+    assert len(depths) == 8 and all(not any(d.values()) for d in depths)
